@@ -1,7 +1,9 @@
 """End-to-end census ETL plan: the reference's main() re-expressed as a
 composable Spark pipeline (SURVEY.md §3.1 → §3.4).
 
-    request_specs → fetch (mapInPandas, parallel) → dead-letter split
+    request_specs (rows built on the driver)
+      → fetch (one Spark job: at most nproc mapInPandas tasks, concurrent
+        requests inside each) → dead-letter split
       → wire decode → normalize columns → mapping rename → align
       → union-by-name (implicit: decode emits one aligned frame)
       → cast_clean typed tier → layout write
@@ -22,7 +24,11 @@ from clean_census_acs_data_spark.sources import census as C
 from clean_census_acs_data_spark.sources import rest as R
 from clean_census_acs_data_spark.sources.audit import append_audit
 from clean_census_acs_data_spark import transforms as T
-from clean_census_acs_data_spark.session import _ab_nocache, tracked_cache
+from clean_census_acs_data_spark.session import (
+    _ab_nocache,
+    register_shared_memo,
+    tracked_cache,
+)
 
 # Session-level memo of fetched RESPONSE frames, keyed on everything
 # that shapes the wire bytes (r12, guide §1.2 step 1). Two registry
@@ -34,8 +40,11 @@ from clean_census_acs_data_spark.session import _ab_nocache, tracked_cache
 # fetch output a production pipeline persists before decode anyway.
 # Keyed on applicationId so a new session never sees a stale frame;
 # disabled under the cold-A/B no-cache env (cache-vs-recompute
-# comparisons must not be subsidized).
+# comparisons must not be subsidized). Registered as a shared memo:
+# teardown_shared_memos() drops its handles, and the checkpoint blocks
+# no other frame still references are freed.
 _RESPONSES_MEMO: dict = {}
+register_shared_memo(_RESPONSES_MEMO)
 
 
 def run_census_pipeline(
@@ -87,7 +96,7 @@ def run_census_pipeline(
     specs = C.request_specs(
         spark, year=year, chunk_size=chunk_size,
         datasets={table_name: request_cfg},
-    ).where(f"table_name = '{table_name}'")
+    )
     memo_key = (
         spark.sparkContext.applicationId,
         table_name,

@@ -379,6 +379,7 @@ def teardown_shared_memos() -> int:
 
     n = 0
     bad: list[str] = []
+    dropped_checkpoints = False
     for memo, handles in _SHARED_MEMO_REGISTRY:
         for v in list(memo.values()):
             for df in handles(v):
@@ -397,16 +398,21 @@ def teardown_shared_memos() -> int:
                     # localCheckpoint-backed memo values have no
                     # storage level set, their unpersist is a no-op
                     # (the checkpointed RDD is released by clearing
-                    # the memo reference, via the ContextCleaner)
+                    # the memo reference, via the ContextCleaner once
+                    # the JVM GC requested below collects it)
                     lvl = df.storageLevel
                     df.unpersist()
                     if lvl.useMemory or lvl.useDisk:
                         n += 1
+                    else:
+                        dropped_checkpoints = True
                 except (Py4JError, AttributeError):
                     # session already stopped (py4j error or a torn-down
                     # JVM handle) — nothing to free
                     pass
         memo.clear()
+    if dropped_checkpoints:
+        _collect_dropped_checkpoints()
     if bad:
         raise TypeError(
             "register_shared_memo handles fn yielded non-DataFrame "
@@ -414,6 +420,28 @@ def teardown_shared_memos() -> int:
             "torn down — fix the registration"
         )
     return n
+
+
+def _collect_dropped_checkpoints() -> None:
+    """One Python and one JVM GC, so that Spark's ContextCleaner frees
+    the blocks of local checkpoints nothing references any more (without
+    it they wait for spark.cleaner.periodicGC.interval, 30 min by
+    default). The Python GC frees DataFrames held only by reference
+    cycles; py4j then releases their JVM handles asynchronously, so a
+    checkpoint dropped just now may only go at the next teardown's GC."""
+    import gc
+
+    from py4j.protocol import Py4JError
+    from pyspark import SparkContext
+
+    sc = SparkContext._active_spark_context
+    if sc is None:
+        return
+    gc.collect()
+    try:
+        sc._jvm.System.gc()
+    except Py4JError:
+        pass  # session already stopped
 
 
 def reap_tracked_caches() -> int:

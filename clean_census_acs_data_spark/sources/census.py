@@ -22,7 +22,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 FIXTURE_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures")
 MAPPING_CSV = os.path.join(FIXTURE_DIR, "census_field_mapping.csv")
@@ -152,35 +151,29 @@ def request_specs(
 ) -> DataFrame:
     """The request universe as a DataFrame: one row per (logical table,
     state chunk) — the reference's 4×17=68 serial calls become 68
-    input partitions-worth of parallel fetch work. Columns:
-    table_name, dataset, year, get_vars (csv), state_chunk (csv).
+    rows of parallel fetch work. Columns: table_name, dataset, year,
+    get_vars (csv), chunk_id, state_chunk (csv).
 
-    Built with DataFrame ops (row 45's chunk_list as floor(rank/size))
-    so the same code scales to arbitrarily many request cells."""
-    from pyspark.sql.window import Window
-
+    The rows are config, not data (tables × ceil(51 / chunk_size)), so
+    they are built on the driver: row 45's chunk_list over the sorted
+    FIPS codes, chunk_id = position // chunk_size. Building the frame
+    runs no Spark job."""
     datasets = datasets or DATASETS
-    states = spark.createDataFrame(
-        [(s,) for s in STATE_FIPS], "state_fips string"
-    ).withColumn(
-        "chunk_id",
-        F.floor((F.row_number().over(Window.orderBy("state_fips")) - 1) / chunk_size),
-    )
-    chunks = states.groupBy("chunk_id").agg(
-        F.concat_ws(",", F.sort_array(F.collect_list("state_fips"))).alias("state_chunk")
-    )
-    tables = spark.createDataFrame(
+    fips = sorted(STATE_FIPS)
+    chunks = [",".join(fips[i : i + chunk_size]) for i in range(0, len(fips), chunk_size)]
+    return spark.createDataFrame(
         [
-            (name, cfg["dataset"], ",".join(["NAME"] + list(dict.fromkeys(cfg["variables"]))))
+            (name, cfg["dataset"], year, _get_vars(cfg), chunk_id, chunk)
             for name, cfg in datasets.items()
+            for chunk_id, chunk in enumerate(chunks)
         ],
-        "table_name string, dataset string, get_vars string",
+        "table_name string, dataset string, year int, get_vars string, "
+        "chunk_id bigint, state_chunk string",
     )
-    return (
-        tables.crossJoin(chunks)
-        .withColumn("year", F.lit(year))
-        .select("table_name", "dataset", "year", "get_vars", "chunk_id", "state_chunk")
-    )
+
+
+def _get_vars(cfg: dict) -> str:
+    return ",".join(["NAME"] + list(dict.fromkeys(cfg["variables"])))
 
 
 def zcta_request_specs(
@@ -194,7 +187,7 @@ def zcta_request_specs(
     datasets = datasets or DATASETS
     return spark.createDataFrame(
         [
-            (name, cfg["dataset"], ",".join(["NAME"] + list(dict.fromkeys(cfg["variables"]))), year, 0, "")
+            (name, cfg["dataset"], _get_vars(cfg), year, 0, "")
             for name, cfg in datasets.items()
         ],
         "table_name string, dataset string, get_vars string, year int, chunk_id int, state_chunk string",

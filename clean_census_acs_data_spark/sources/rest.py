@@ -2,11 +2,14 @@
 
 The reference fetches 68 (dataset, state-chunk) slices serially on the
 driver with a 10 s sleep each (Test_census_tract.py:342-344 — a ≥680 s
-floor). Here the specs are a DataFrame repartitioned across executors
-and fetched concurrently inside ``mapInPandas``; per-partition token
-buckets keep the aggregate request rate at or below the reference's,
-while wall-clock drops by ~the partition count (SURVEY.md §4 "scan
-parallelism").
+floor). Here one table's specs are fetched by ONE Spark job: the spec
+frame is narrowed (no shuffle) to at most ``defaultParallelism`` tasks,
+and each task runs its requests on a thread pool, so ``num_partitions``
+requests are in flight at once across the job (SURVEY.md §4 "scan
+parallelism"). A request is network wait, not CPU, so threads overlap
+it without paying a Spark job or a Python task per request. Each task
+has one token bucket shared by its threads, so the aggregate request
+rate stays at or below tasks ÷ ``min_interval_s``.
 
 Semantics preserved from the reference:
 
@@ -22,6 +25,12 @@ Semantics preserved from the reference:
   finest granularity you can and quarantine what still fails
   (SURVEY.md §4 "design away")
 
+Beyond the reference: a 2xx whose body is not a JSON array (a body cut
+short in transit) is retried like an HTTP error, and once the retries
+are spent it is dead-lettered with status 502 and error
+``malformed body`` — it never decodes to zero rows. A 204 No Content
+(the API's answer for an empty result) stays a valid empty response.
+
 The fetch function is injectable (``fetcher=``) so tests run a
 deterministic fake with no network; the default uses stdlib urllib
 (executors may not have `requests`).
@@ -30,17 +39,25 @@ deterministic fake with no network; the default uses stdlib urllib
 from __future__ import annotations
 
 import json
+import threading
 import time
 from collections.abc import Callable, Iterator
+from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime, timezone
 
 import pandas as pd
+from pyspark import TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType, StringType, IntegerType
 
 # (status, headers, body_text) — body is the raw JSON array-of-arrays text
 FetchFn = Callable[[str, dict[str, str]], tuple[int, dict[str, str], str]]
+
+# A 2xx whose body never parsed as a JSON array, after every retry: the
+# upstream answered, but not with a usable response ("bad gateway").
+MALFORMED_STATUS = 502
+MALFORMED_ERROR = "malformed body"
 
 RESPONSE_SCHEMA = StructType(
     [
@@ -95,72 +112,110 @@ def fetch_responses(
 ) -> DataFrame:
     """Execute every request spec on executors; one output row per spec
     with status/body/audit columns (audit recorded for every attempt's
-    final state, success or not). ``min_interval_s`` is a per-partition
-    token bucket — with P partitions the aggregate rate is ≤ P/interval,
-    the knob that reproduces (or relaxes) the reference's 10 s throttle.
+    final state, success or not).
+
+    ``num_partitions`` (default 17, the reference's chunks per dataset)
+    is the number of requests in flight across the job. The specs are
+    coalesced, without a shuffle, to ``min(num_partitions,
+    defaultParallelism)`` tasks, and each task runs its share of the
+    in-flight requests on a thread pool. ``min_interval_s`` is a token
+    bucket per task, shared by that task's threads: with T tasks the
+    aggregate rate is ≤ T/interval, the knob that reproduces (or
+    relaxes) the reference's 10 s throttle.
     """
     fetcher = fetcher or default_urllib_fetcher
-    n_parts = num_partitions or 17  # the reference's 17 chunks/dataset
+    width = num_partitions or 17  # the reference's 17 chunks/dataset
+    n_tasks = min(width, specs.sparkSession.sparkContext.defaultParallelism)
+
+    def fetch_one(row, take_slot) -> dict:
+        url = build_census_url(int(row.year), row.dataset, base=base_url)
+        params = {"get": row.get_vars, "for": geo_for}
+        if geo_in_states:
+            # tract queries scope by state (Test_census_tract.py:
+            # 162-164); ZCTA queries fetch all at once with no
+            # `in=` clause (test_final_zcta.py:97-101)
+            params["in"] = f"state:{row.state_chunk}"
+        if api_key:
+            params["key"] = api_key  # census_get key injection (:115-116)
+        status, headers, body, err = 0, {}, None, None
+        attempts = 0
+        for attempt in range(max_attempts):
+            attempts = attempt + 1
+            take_slot()  # token bucket (reference row 44)
+            try:
+                status, headers, body = fetcher(url, params)
+            except Exception as e:  # transport error → retryable
+                status, headers, body, err = -1, {}, None, str(e)[:200]
+            if 200 <= status < 300:
+                if status == 204 or _is_json_array(body):
+                    err = None
+                    break
+                err = MALFORMED_ERROR  # a 2xx cut short → retryable
+            else:
+                err = err or (body or "")[:200]  # resp.text[:200] (:368)
+            # exponential backoff, capped (tenacity analog, :138-142)
+            time.sleep(min(backoff_cap_s, backoff_base_s * (2**attempt)))
+        else:
+            if 200 <= status < 300:  # retries spent on malformed bodies
+                status = MALFORMED_STATUS  # dead-letter it, never decode it
+        # audit-before-status-check ordering (:118-119): record the
+        # attempt outcome whether or not it succeeded
+        ratelimit = {
+            k: v for k, v in headers.items() if k.lower().startswith("x-ratelimit")
+        }  # header prefix filter (:92)
+        return {
+            "table_name": row.table_name,
+            "dataset": row.dataset,
+            "year": int(row.year),
+            "state_chunk": row.state_chunk,
+            "url": url,
+            "status": status,
+            "attempts": attempts,
+            "body": body if 200 <= status < 300 else None,
+            "error": err,
+            "audit_timestamp": datetime.now(timezone.utc).isoformat(),
+            "audit_headers": json.dumps(ratelimit, ensure_ascii=False),
+            "audit_params": json.dumps(
+                {k: v for k, v in params.items() if k != "key"},
+                ensure_ascii=False,
+            ),
+        }
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        last_call = 0.0
-        for pdf in batches:
-            out = []
-            for row in pdf.itertuples(index=False):
-                url = build_census_url(int(row.year), row.dataset, base=base_url)
-                params = {"get": row.get_vars, "for": geo_for}
-                if geo_in_states:
-                    # tract queries scope by state (Test_census_tract.py:
-                    # 162-164); ZCTA queries fetch all at once with no
-                    # `in=` clause (test_final_zcta.py:97-101)
-                    params["in"] = f"state:{row.state_chunk}"
-                if api_key:
-                    params["key"] = api_key  # census_get key injection (:115-116)
-                status, headers, body, err = 0, {}, None, None
-                attempts = 0
-                for attempt in range(max_attempts):
-                    attempts = attempt + 1
-                    wait = last_call + min_interval_s - time.monotonic()
-                    if wait > 0:
-                        time.sleep(wait)  # token bucket (reference row 44)
-                    last_call = time.monotonic()
-                    try:
-                        status, headers, body = fetcher(url, params)
-                    except Exception as e:  # transport error → retryable
-                        status, headers, body, err = -1, {}, None, str(e)[:200]
-                    if 200 <= status < 300:
-                        err = None
-                        break
-                    err = err or (body or "")[:200]  # resp.text[:200] (:368)
-                    # exponential backoff, capped (tenacity analog, :138-142)
-                    time.sleep(min(backoff_cap_s, backoff_base_s * (2**attempt)))
-                # audit-before-status-check ordering (:118-119): record the
-                # attempt outcome whether or not it succeeded
-                ratelimit = {
-                    k: v for k, v in headers.items() if k.lower().startswith("x-ratelimit")
-                }  # header prefix filter (:92)
-                out.append(
-                    {
-                        "table_name": row.table_name,
-                        "dataset": row.dataset,
-                        "year": int(row.year),
-                        "state_chunk": row.state_chunk,
-                        "url": url,
-                        "status": status,
-                        "attempts": attempts,
-                        "body": body if 200 <= status < 300 else None,
-                        "error": err,
-                        "audit_timestamp": datetime.now(timezone.utc).isoformat(),
-                        "audit_headers": json.dumps(ratelimit, ensure_ascii=False),
-                        "audit_params": json.dumps(
-                            {k: v for k, v in params.items() if k != "key"},
-                            ensure_ascii=False,
-                        ),
-                    }
-                )
-            yield pd.DataFrame(out, columns=[f.name for f in RESPONSE_SCHEMA.fields])
+        rows = [row for pdf in batches for row in pdf.itertuples(index=False)]
+        if not rows:
+            return
+        # this task's share of the in-flight width (n_tasks <= width, so
+        # every share is >= 1); the n_tasks shares sum to exactly `width`
+        pid = TaskContext.get().partitionId()
+        threads = min(len(rows), width // n_tasks + (pid < width % n_tasks))
+        lock = threading.Lock()
+        next_slot = 0.0
 
-    return specs.repartition(n_parts).mapInPandas(run, RESPONSE_SCHEMA)
+        def take_slot() -> None:
+            # reserve the next start slot under the lock, sleep outside it
+            nonlocal next_slot
+            if min_interval_s <= 0:
+                return
+            with lock:
+                now = time.monotonic()
+                slot = max(now, next_slot)
+                next_slot = slot + min_interval_s
+            if slot > now:
+                time.sleep(slot - now)
+
+        with ThreadPoolExecutor(max_workers=threads) as pool:
+            out = list(pool.map(lambda row: fetch_one(row, take_slot), rows))
+        yield pd.DataFrame(out, columns=[f.name for f in RESPONSE_SCHEMA.fields])
+
+    return specs.coalesce(n_tasks).mapInPandas(run, RESPONSE_SCHEMA)
+
+
+def _is_json_array(body: str | None) -> bool:
+    try:
+        return isinstance(json.loads(body), list)
+    except (TypeError, ValueError):
+        return False
 
 
 def split_dead_letters(responses: DataFrame) -> tuple[DataFrame, DataFrame]:

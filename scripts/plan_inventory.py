@@ -74,8 +74,8 @@ def main() -> None:
         "(Exch), broadcast-hash joins (BHJ), sort-merge joins (SMJ),",
         "broadcast-nested-loop joins (BNLJ — legitimate only for the",
         "documented 1-row/tiny-frame crosses), cartesian products (0",
-        "everywhere except the census pipelines' 4×17 request-universe",
-        "METADATA cross — config rows, not data), heap top-k (TopK),",
+        "everywhere except `kendall_tau_rankings`' 1-row n_items scalar",
+        "cross), heap top-k (TopK),",
         "window group limit (WGL), windows,",
         "generators (Gen), object-hash aggs (ObjAgg), hash aggs (HAgg).",
         "Streaming entries execute through the streaming engine and are",

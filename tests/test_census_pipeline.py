@@ -185,3 +185,207 @@ def test_observation_metrics_without_recompute(spark):
     metrics = obs.get
     assert metrics["n_rows"] == n_action
     assert metrics["n_tagged"] == n_action
+
+
+# --------------------------------------------------------------------------
+# request specs and the fetch layer
+# --------------------------------------------------------------------------
+
+# (chunk_id, state_chunk) of the window/groupBy build request_specs used
+# to run in Spark (row_number over the sorted FIPS codes, floor(rank /
+# chunk_size), collect_list per chunk); the driver-built rows must match.
+_CHUNKS = {
+    3: [
+        (0, "01,02,04"), (1, "05,06,08"), (2, "09,10,11"), (3, "12,13,15"),
+        (4, "16,17,18"), (5, "19,20,21"), (6, "22,23,24"), (7, "25,26,27"),
+        (8, "28,29,30"), (9, "31,32,33"), (10, "34,35,36"), (11, "37,38,39"),
+        (12, "40,41,42"), (13, "44,45,46"), (14, "47,48,49"), (15, "50,51,53"),
+        (16, "54,55,56"),
+    ],
+    5: [
+        (0, "01,02,04,05,06"), (1, "08,09,10,11,12"), (2, "13,15,16,17,18"),
+        (3, "19,20,21,22,23"), (4, "24,25,26,27,28"), (5, "29,30,31,32,33"),
+        (6, "34,35,36,37,38"), (7, "39,40,41,42,44"), (8, "45,46,47,48,49"),
+        (9, "50,51,53,54,55"), (10, "56"),
+    ],
+}
+
+
+def _jobs_in_group(spark, group: str, action) -> list[int]:
+    """Run ``action`` under a job group; return the group's job ids."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("chunk_size", [3, 5])
+def test_request_specs_pinned_and_jobless(spark, chunk_size):
+    specs = []
+    jobs = _jobs_in_group(
+        spark,
+        f"request_specs_{chunk_size}",
+        lambda: specs.append(C.request_specs(spark, chunk_size=chunk_size)),
+    )
+    assert jobs == []  # built on the driver: no Spark job
+    got = sorted(tuple(r) for r in specs[0].select("table_name", "chunk_id", "state_chunk").collect())
+    assert got == sorted((t, i, c) for t in C.DATASETS for i, c in _CHUNKS[chunk_size])
+    assert specs[0].schema.simpleString() == (
+        "struct<table_name:string,dataset:string,year:int,get_vars:string,"
+        "chunk_id:bigint,state_chunk:string>"
+    )
+
+
+def _logging_fetcher(log_path: str, *, latency_s: float = 0.05, truncate: dict | None = None):
+    """The fake census API behind a fixed latency. Every call appends
+    ``state_chunk, partition, start, end`` to ``log_path`` with one
+    write() on an O_APPEND descriptor, so lines from concurrent threads
+    and workers never interleave. ``truncate`` maps a state code to the
+    number of first attempts whose 200 body is cut in half (for every
+    chunk that contains it). A nested function, so Spark pickles it by
+    value."""
+    import os
+    import time
+
+    truncate = truncate or {}
+    attempts: dict[str, int] = {}  # per task: one task owns each request
+
+    def fetch(url, params):
+        from pyspark import TaskContext
+
+        start = time.time()
+        time.sleep(latency_s)
+        status, headers, body = fake_census_fetcher(url, params)
+        chunk = params["in"].removeprefix("state:")
+        attempts[chunk] = attempts.get(chunk, 0) + 1
+        if any(st in chunk.split(",") and attempts[chunk] <= n for st, n in truncate.items()):
+            body = body[: len(body) // 2]
+        line = f"{chunk}\t{TaskContext.get().partitionId()}\t{start:.6f}\t{time.time():.6f}\n"
+        fd = os.open(log_path, os.O_WRONLY | os.O_APPEND | os.O_CREAT, 0o644)
+        try:
+            os.write(fd, line.encode())
+        finally:
+            os.close(fd)
+        return status, headers, body
+
+    return fetch
+
+
+def _read_fetch_log(path) -> list[tuple[str, int, float, float]]:
+    if not path.exists():
+        return []
+    rows = [ln.split("\t") for ln in path.read_text().splitlines()]
+    return [(c, int(p), float(s), float(e)) for c, p, s, e in rows]
+
+
+def _dp02_specs(spark):
+    return C.request_specs(spark, datasets={"dp02": C.DATASETS["dp02"]})
+
+
+def test_fetch_is_one_job_of_overlapping_requests(spark, tmp_path):
+    from clean_census_acs_data_spark.sources import rest as R
+
+    log = tmp_path / "fetch.log"
+    fetcher = _logging_fetcher(str(log))
+    specs = _dp02_specs(spark)
+    jobs = _jobs_in_group(
+        spark,
+        "fetch_one_job",
+        lambda: R.fetch_responses(specs, fetcher=fetcher, backoff_base_s=0.001)
+        .localCheckpoint(eager=True),
+    )
+    sc = spark.sparkContext
+    assert len(jobs) == 1
+    tasks = sum(
+        sc.statusTracker().getStageInfo(s).numTasks
+        for s in sc.statusTracker().getJobInfo(jobs[0]).stageIds
+    )
+    assert tasks <= min(17, sc.defaultParallelism)
+    calls = _read_fetch_log(log)
+    assert len(calls) == 17 + 4  # the state-05 chunk fails all 5 attempts
+    assert _peak_inflight(calls) > 1
+    if tasks < 17:
+        # fewer tasks than requests: the overlap comes from each task's
+        # thread pool, not only from tasks running side by side
+        assert max(_peak_inflight([c for c in calls if c[1] == p]) for p in range(tasks)) > 1
+
+
+def _peak_inflight(calls) -> int:
+    """Sweep the calls' start/end events for the peak number in flight."""
+    events = sorted([(s, 1) for _, _, s, _ in calls] + [(e, -1) for _, _, _, e in calls])
+    inflight = peak = 0
+    for _, d in events:
+        inflight += d
+        peak = max(peak, inflight)
+    return peak
+
+
+def test_fetch_token_bucket_spaces_starts_within_a_task(spark, tmp_path):
+    from clean_census_acs_data_spark.sources import rest as R
+
+    log = tmp_path / "fetch.log"
+    interval = 0.5
+    specs = _dp02_specs(spark).where("state_chunk NOT LIKE '%05%'")
+    R.fetch_responses(
+        specs, fetcher=_logging_fetcher(str(log), latency_s=0.01), min_interval_s=interval
+    ).localCheckpoint(eager=True)
+    starts: dict[int, list[float]] = {}
+    for _, part, s, _ in _read_fetch_log(log):
+        starts.setdefault(part, []).append(s)
+    assert sum(map(len, starts.values())) == 16
+    for part, ts in starts.items():
+        ts.sort()
+        gaps = [b - a for a, b in zip(ts, ts[1:])]
+        # slack for a thread waking late from its reserved slot
+        assert all(g >= interval - 0.1 for g in gaps), (part, gaps)
+
+
+def test_truncated_body_is_retried_then_dead_lettered(spark, tmp_path):
+    from clean_census_acs_data_spark.sources import rest as R
+
+    log = tmp_path / "fetch.log"
+    # the 01,02,04 chunk is truncated on its first attempt only, the
+    # 16,17,18 chunk on every attempt
+    fetcher = _logging_fetcher(str(log), latency_s=0.0, truncate={"02": 1, "16": 99})
+    specs = _dp02_specs(spark).where("state_chunk IN ('01,02,04', '16,17,18')")
+    responses = R.fetch_responses(
+        specs, fetcher=fetcher, max_attempts=3, backoff_base_s=0.001
+    ).localCheckpoint(eager=True)
+    by_chunk = {r["state_chunk"]: r for r in responses.collect()}
+    retried = by_chunk["01,02,04"]
+    assert (retried["status"], retried["attempts"], retried["error"]) == (200, 2, None)
+    assert isinstance(json.loads(retried["body"]), list)
+    broken = by_chunk["16,17,18"]
+    assert (broken["status"], broken["attempts"], broken["error"]) == (
+        R.MALFORMED_STATUS, 3, R.MALFORMED_ERROR,
+    )
+    assert broken["body"] is None
+    ok, dead = R.split_dead_letters(responses)
+    assert [r["state_chunk"] for r in dead.collect()] == ["16,17,18"]
+    decoded = R.decode_wire(ok, ["NAME"] + C.DATASETS["dp02"]["variables"])
+    assert decoded.count() == 3 * 2  # the retried chunk: 3 states x 2 tracts
+    attempts: dict[str, int] = {}
+    for chunk, *_ in _read_fetch_log(log):
+        attempts[chunk] = attempts.get(chunk, 0) + 1
+    assert attempts == {"01,02,04": 2, "16,17,18": 3}
+
+
+def test_teardown_releases_the_response_memo(spark, tmp_path):
+    from clean_census_acs_data_spark import session as S
+    from clean_census_acs_data_spark.plans import census_pipeline as CP
+
+    log = tmp_path / "fetch.log"
+    fetcher = _logging_fetcher(str(log), latency_s=0.0)
+    run_census_pipeline(spark, table_name="dp02", fetcher=fetcher)
+    first = len(_read_fetch_log(log))
+    assert first == 17 + 4
+    run_census_pipeline(spark, table_name="dp02", fetcher=fetcher)
+    assert len(_read_fetch_log(log)) == first  # memo hit: no new calls
+    S.teardown_shared_memos()
+    assert not CP._RESPONSES_MEMO
+    run_census_pipeline(spark, table_name="dp02", fetcher=fetcher)
+    assert len(_read_fetch_log(log)) == 2 * first  # fetched again

@@ -94,16 +94,13 @@ def test_window_topk_group_limit(plans):
 
 def test_no_degenerate_joins_anywhere(plans):
     # deliberate exceptions: similarity queries cross-join a broadcast
-    # 1-row query vector; the census request universe is a 4×17 config
-    # cross (metadata, not data); gap_fill crosses users with a broadcast
+    # 1-row query vector; gap_fill crosses users with a broadcast
     # 1-row min/max bounds frame to build the resample spine
     allowed_cross = {
         "similarity_topk",
         "similarity_lsh_topk",
         "similarity_ivf_topk",  # broadcast 8-row centroid table + 1-row query
         "embedding_cosine_neardup",
-        "census_pipeline_e2e",
-        "census_preflight_pipeline",
         "gap_fill_forward",
         "tpch_q22_idle_customers",  # broadcast 1-row scalar-subquery threshold
         "dq_constraint_checks",  # cross of four 1-row check reports
