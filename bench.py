@@ -117,6 +117,13 @@ class _SkipRoundArtifact(Exception):
     """Internal: non-canonical SF — skip the round-keyed write."""
 
 
+def canonical_cpus(value: str) -> bool:
+    """True when a SPARK_GRAFT_CPUS value names the canonical core
+    count. A value that does not parse as a plain integer ("8x", " 8",
+    "") is not canonical: the run's core count is then unknown."""
+    return value.isdigit() and int(value) == CANONICAL_BENCH_CPUS
+
+
 def pinned_ratio_vs_prev(
     prev_full: dict, timings: dict[str, float], secondary: dict[str, float]
 ) -> float | None:
@@ -705,7 +712,7 @@ def main() -> None:
             )
             raise _SkipRoundArtifact
         bench_cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        if bench_cpus.isdigit() and int(bench_cpus) != CANONICAL_BENCH_CPUS:
+        if not canonical_cpus(bench_cpus):
             print(
                 f"bench: cpus={bench_cpus} is not the canonical core "
                 f"count ({CANONICAL_BENCH_CPUS}); skipping the "

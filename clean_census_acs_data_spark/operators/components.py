@@ -1,29 +1,114 @@
 """Connected components over the near-duplicate pair graph — the step
 that turns pairwise dedup verdicts into canonical-document clusters
 (every large-scale dedup pipeline ends with this: group near-dup pairs
-into components, keep one representative per component).
+into components, keep one representative per component). Every vertex
+is labeled with the minimum id in its component; min is order-free,
+so the result is deterministic and oracle-checkable against a
+recursive-CTE transitive closure.
 
-Algorithm: min-label propagation. Every vertex starts labeled with its
-own id; each round it takes the min of its label and its neighbors'
-labels; at fixpoint every vertex in a component carries the component's
-minimum id. Deterministic by construction (min is order-free), so the
-result is oracle-checkable against a recursive-CTE transitive closure.
+The algorithm is chosen by the size of the edge list:
 
-Scale notes: each round is one join + one aggregation on the edge list
-(shuffle keyed by vertex). Rounds needed = graph diameter — near-dup
-components are tiny and star-shaped (an original and its variants), so
-2-3 rounds suffice. For adversarial graphs (long chains) the
-large-star/small-star algorithm (Kiveris et al., "Connected Components
-in MapReduce and Beyond") halves diameter per round; this
-implementation keeps the simple form and caps iterations explicitly,
-failing loudly rather than silently returning a non-fixpoint.
+- Up to ``_DRIVER_MAX_EDGES`` edges, one Spark job collects the edge
+  list to the driver and numpy labels it exactly (``_driver_components``:
+  min-label hooking plus pointer jumping over dense vertex indices).
+  Near-dup graphs are usually this small, and there an iterative
+  DataFrame algorithm is all job latency: at bench scale the rounds
+  took 26 jobs to label ~450 edges.
+- Above the bound, the distributed rounds run. ``connected_components``
+  is min-label propagation with pointer jumping, O(log diameter)
+  rounds of one join + one aggregation each.
+  ``connected_components_two_phase`` is the large-star/small-star
+  algorithm (Kiveris et al., "Connected Components in MapReduce and
+  Beyond"), O(log² n) rounds touching only the edge list. Both cap
+  their rounds and fail loudly rather than return a non-fixpoint.
+
+Both paths return the same rows with the same column names and types.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType, StructField, StructType
+
 from clean_census_acs_data_spark.session import tracked_cache
+
+# Largest edge list labeled on the driver. At the bound the driver holds
+# the collected edges (16 MB of int64 Arrow), a few numpy index arrays
+# of that size and the labeled output as a local relation. On a random
+# graph of 1M edges over 800k vertices (local[4]) the pass raised the
+# Python process's peak RSS by about 100 MB and the JVM's by about
+# 0.9 GB; the distributed rounds on the same graph raised the JVM's by
+# about 5 GB.
+_DRIVER_MAX_EDGES = 1_000_000
+
+
+def _min_labels(u: np.ndarray, v: np.ndarray, n: int) -> np.ndarray:
+    """Index of the smallest vertex in each vertex's component, for
+    vertices ``0..n-1`` linked by the edges ``(u[i], v[i])``.
+
+    ``lab`` is a parent-pointer forest with ``lab[x] <= x``. Each round
+    hooks the larger root of every edge whose endpoints still have
+    different roots onto the smaller one (min-label propagation between
+    roots), then pointer-jumps until every vertex points at its root.
+    Roots only ever merge, so an edge inside one tree is dropped for
+    good; the loop ends when no edge crosses two trees, and each tree's
+    root is then its minimum vertex."""
+    lab = np.arange(n)
+    while True:
+        lu, lv = lab[u], lab[v]
+        live = lu != lv
+        if not live.any():
+            return lab
+        u, v, lu, lv = u[live], v[live], lu[live], lv[live]
+        np.minimum.at(lab, np.maximum(lu, lv), np.minimum(lu, lv))
+        while True:
+            jumped = lab[lab]
+            if np.array_equal(jumped, lab):
+                break
+            lab = jumped
+
+
+def _driver_components(edges: DataFrame, src: str, dst: str) -> DataFrame | None:
+    """(doc_id, component_id) for ``edges`` computed on the driver, or
+    None when the edge list has more than ``_DRIVER_MAX_EDGES`` rows (or
+    non-integral ids) and the distributed rounds must run.
+
+    One Spark job: the collect of at most ``_DRIVER_MAX_EDGES + 1``
+    edges. Above the bound that collect is one extra evaluation of
+    ``edges`` before the rounds, so a caller with a costly lineage
+    should pass a materialized edge list, as standard_components does.
+    The result is a local DataFrame with the rounds' schema and
+    NULL semantics: an edge with a NULL endpoint links nothing, its
+    non-NULL endpoint is still a vertex, and all NULL endpoints together
+    give one (NULL, NULL) row."""
+    both = edges.select(F.col(src).alias("v")).union(edges.select(F.col(dst).alias("v")))
+    field = both.schema["v"]
+    if not isinstance(field.dataType, IntegralType):
+        return None
+    t = (
+        edges.select(
+            F.col(src).cast(field.dataType).alias("a"),
+            F.col(dst).cast(field.dataType).alias("b"),
+        )
+        .limit(_DRIVER_MAX_EDGES + 1)
+        .toArrow()
+    )
+    if t.num_rows > _DRIVER_MAX_EDGES:
+        return None
+    a, b = t.column("a"), t.column("b")
+    linked = pc.and_(pc.is_valid(a), pc.is_valid(b))
+    ids = np.unique(np.concatenate([pc.drop_null(a).to_numpy(), pc.drop_null(b).to_numpy()]))
+    u = np.searchsorted(ids, a.filter(linked).to_numpy())
+    v = np.searchsorted(ids, b.filter(linked).to_numpy())
+    cols = {"doc_id": pa.array(ids), "component_id": pa.array(ids[_min_labels(u, v, len(ids))])}
+    if a.null_count or b.null_count:
+        cols = {k: pa.concat_arrays([c, pa.nulls(1, c.type)]) for k, c in cols.items()}
+    schema = StructType([StructField(k, field.dataType, field.nullable) for k in cols])
+    return edges.sparkSession.createDataFrame(pa.table(cols), schema=schema)
 
 
 def connected_components(
@@ -37,6 +122,10 @@ def connected_components(
     """(vertex, component) for every vertex in ``edges``; component id =
     min vertex id reachable. Vertices not in any edge are absent (they
     are trivially their own component).
+
+    Edge lists of at most ``_DRIVER_MAX_EDGES`` rows are labeled on the
+    driver in one Spark job; ``max_iters`` and ``checkpoint_dir`` apply
+    only above that bound, to the distributed rounds.
 
     ``checkpoint_dir``: when set, per-round lineage truncation uses
     *reliable* ``.checkpoint()`` into that directory (HDFS/S3 on a
@@ -53,6 +142,9 @@ def connected_components(
     9.86/11.08/11.96; incremental 5.01/5.76/6.15 vs 5.15/6.11/6.30.
     The r12 convergence fusion stands; the driver readings were a
     box heat window."""
+    local = _driver_components(edges, src, dst)
+    if local is not None:
+        return local
     spark = edges.sparkSession
     if checkpoint_dir is not None:
         spark.sparkContext.setCheckpointDir(checkpoint_dir)
@@ -63,13 +155,15 @@ def connected_components(
         # convergence diff), so with plain caching the LOGICAL plan
         # doubles per round — by round ~20 the optimizer itself OOMs.
         # O(1) plan per iteration is the mandatory discipline for any
-        # iterative DataFrame algorithm. ``eager=False`` returns a
-        # LAZY checkpoint: the first action over it materializes the
-        # blocks — the r13 action fusion below rides the convergence
-        # count on that materialization, one job per round instead of
-        # two (checkpoint job + count job).
+        # iterative DataFrame algorithm. ``eager=False`` returns a LAZY
+        # local checkpoint: the first action over it persists the
+        # blocks, which the action fusion below relies on. A reliable
+        # checkpoint is always eager: a lazy one writes its files in a
+        # job of its own after the first action, recomputing the round
+        # (the RDD is not persisted), while the eager write computes it
+        # once and later actions read the files.
         if checkpoint_dir is not None:
-            return df.checkpoint(eager=eager)
+            return df.checkpoint(eager=True)
         return df.localCheckpoint(eager=eager)
 
     # undirected: materialize both directions once; cached because every
@@ -124,13 +218,15 @@ def connected_components(
         if it == 0:
             labels = _truncate(new_labels).select("v", "label")
             continue
-        # r13 action fusion: the checkpoint is LAZY and the convergence
-        # count's job is what materializes it — one driver action per
-        # round instead of two (at bench scale each CC round was two
-        # ~0.2 s job latencies on a KB-sized frame; at 100 TB this is
-        # one pass over the labels instead of two). The count reads
-        # every partition (count aggregates all), so the checkpoint is
-        # fully materialized before `labels` is consumed next round.
+        # r13 action fusion, localCheckpoint only: the checkpoint is
+        # LAZY and the convergence count's job is what materializes it —
+        # one driver action per round instead of two (at bench scale
+        # each round was two ~0.2 s job latencies on a KB-sized frame;
+        # at 100 TB one pass over the labels instead of two). The count
+        # reads every partition, so the checkpoint is fully materialized
+        # before `labels` is consumed next round. With checkpoint_dir
+        # set the checkpoint is eager (see _truncate): a write job, then
+        # the count over the written files.
         new_labels = _truncate(new_labels, eager=False)
         changed = (
             new_labels.where(F.col("label") != F.col("old_label")).count()
@@ -166,6 +262,8 @@ def _is_star_forest(cur: DataFrame) -> bool:
     return root_as_child.isEmpty()
 
 
+
+
 def connected_components_two_phase(
     edges: DataFrame,
     *,
@@ -175,9 +273,9 @@ def connected_components_two_phase(
 ) -> DataFrame:
     """Connected components via the alternating LARGE-STAR / SMALL-STAR
     algorithm (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC'14) — the module docstring's long-promised alternative
-    to min-label propagation. Per phase, every node u with neighborhood
-    Γ(u) and m = min(Γ(u) ∪ {u}):
+    Beyond", SoCC'14) — the distributed alternative to min-label
+    propagation. Per phase, every node u with neighborhood Γ(u) and
+    m = min(Γ(u) ∪ {u}):
 
     - large-star: re-attach every STRICTLY LARGER neighbor to m —
       emit (x, m) for x ∈ Γ(u), x > u
@@ -194,33 +292,44 @@ def connected_components_two_phase(
     touching only the EDGE LIST (no separate label table), the shape
     MapReduce-era CC jobs shipped.
 
+    The canonical edge list (self-loops and NULL endpoints dropped by
+    the ``u != v`` filter) goes to the driver when it has at most
+    ``_DRIVER_MAX_EDGES`` rows; ``max_iters`` applies only above that
+    bound, to the rounds.
+
     Spark shape per phase: one symmetrize (projection union), one
     groupBy(u).min (partial-agg shuffle on vertex id), one equi-join
     back to the symmetrized edges, one distinct — all whole-stage
-    codegen; the edge list is localCheckpoint-ed per phase (O(1) plan
-    depth, the iterative-DataFrame discipline). Convergence is an
-    edge-set signature (count + bit_xor of xxhash64) compare —
-    CONFIRMED exactly by a star-forest structure check when the
-    signature matches (ADVICE r10: hash collisions must not end the
-    loop early), see _is_star_forest.
+    codegen. Convergence is an edge-set signature (count + bit_xor of
+    xxhash64) compare — CONFIRMED exactly by a star-forest structure
+    check when the signature matches (ADVICE r10: hash collisions must
+    not end the loop early), see _is_star_forest.
 
-    r13 action fusion (the connected_components device): the per-phase
-    checkpoints are LAZY and the per-round signature aggregate is the
-    job that materializes them — the signature's scan computes
-    small-star over large-star over the previous round's blocks, so
-    one driver action replaces three per round (two eager checkpoint
-    jobs + the signature collect). At 100 TB this is one pass over the
-    edge list per round instead of three.
+    r13 action fusion (the connected_components device): both phases'
+    local checkpoints are LAZY and the per-round signature aggregate is
+    the one job that computes them — one driver action per round
+    instead of three (two eager checkpoint jobs + the signature
+    collect). With ``spark.checkpoint.checkpointAllMarkedAncestors``
+    at its default (false) that job checkpoints only small-star's RDD,
+    the topmost marked one: large-star's blocks are persisted as they
+    are computed but its lineage is not truncated. Small-star's
+    checkpoint alone keeps the plan depth O(1) per round.
     """
-    # canonical (lo, hi) undirected edge list, self-loops dropped;
-    # lazy — the initial _signature below materializes it
+    # canonical (lo, hi) undirected edge list, self-loops dropped
     e = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .where(F.col("u") != F.col("v"))
         .select(F.least("u", "v").alias("lo"), F.greatest("u", "v").alias("hi"))
         .distinct()
-        .localCheckpoint(eager=False)
     )
+    local = _driver_components(e, "lo", "hi")
+    if local is not None:
+        return local.select(
+            F.col("doc_id").cast("long").alias("doc_id"),
+            F.col("component_id").cast("long").alias("component_id"),
+        )
+    # lazy — the initial _signature below materializes it
+    e = e.localCheckpoint(eager=False)
     # original vertex set — the output must cover every edge-touching
     # vertex (roots stop appearing on the child side at convergence).
     # Lazy: reads the INITIAL e checkpoint (materialized by the first
@@ -265,10 +374,10 @@ def connected_components_two_phase(
             )
         # m = min(Γ(a) ∪ {a}) ≤ every emitted partner, so (m, x) is
         # already canonical; x == m rows are self-loops — drop them.
-        # Lazy checkpoint: materialized by the round's signature job
-        # (large-star's blocks by small-star's scan when that runs
-        # first — either way each phase's result is persisted exactly
-        # once, by the first job that reads it).
+        # Lazy checkpoint, computed by the round's signature job: the
+        # job persists both phases' blocks once each, and checkpoints
+        # (truncates the lineage of) small-star's RDD only — see the
+        # docstring.
         return out.where(F.col("lo") != F.col("hi")).distinct().localCheckpoint(
             eager=False
         )

@@ -589,12 +589,15 @@ def standard_undirected_edges(
 
 def standard_components(spark, sf_dir: str) -> DataFrame:
     """Connected-component labels over the standard ≥0.5 pair graph,
-    cached per (session, sf_dir): the iterative min-label propagation
-    is the most expensive shared sub-derivation in the dedup family
-    (components → survivor selection → cluster triage → leakage-safe
-    split all start from these labels). Cached labels are exactly the
-    persisted cluster-assignment table a production dedup maintains
-    (incremental_components_maintenance is its delta path)."""
+    cached per (session, sf_dir): components → survivor selection →
+    cluster triage → leakage-safe split all start from these labels.
+    On the test scales the pair graph is far below
+    connected_components' driver bound, so the labels come from one
+    collect and a numpy pass on the driver; past the bound they come
+    from the distributed min-label rounds, then the most expensive
+    shared sub-derivation in the dedup family. Cached labels are
+    exactly the persisted cluster-assignment table a production dedup
+    maintains (incremental_components_maintenance is its delta path)."""
     from clean_census_acs_data_spark.operators.components import (
         connected_components,
     )

@@ -189,7 +189,10 @@ def hodges_lehmann_location(spark: SparkSession, sf_dir: str) -> DataFrame:
         import numpy as np
         import pandas as pd
 
-        a = np.sort(pdf["cents"].to_numpy(np.int64))
+        # NULL cents are not observations (collect_list drops them too)
+        a = np.sort(pdf["cents"].dropna().to_numpy(np.int64))
+        if not len(a):
+            return pd.DataFrame({"nk": [], "np": [], "s": []})
         sums = np.add.outer(a, a)[np.triu_indices(len(a))]
         k = (len(sums) + 1) // 2
         s = int(np.partition(sums, k - 1)[k - 1])

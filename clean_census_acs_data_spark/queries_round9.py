@@ -1868,6 +1868,13 @@ _CASCADE_NORM = (
     "trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', ''), "
     "' +', ' '))"
 )
+# The same normalization in DuckDB, whose regexp_replace replaces only
+# the first match unless given the 'g' flag (Spark's replaces every
+# match, and its 4th argument is a start position, not flags).
+_CASCADE_NORM_DUCKDB = (
+    "trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'), "
+    "' +', ' ', 'g'))"
+)
 
 
 def _cascade_oracle() -> str:
@@ -1877,7 +1884,7 @@ def _cascade_oracle() -> str:
 WITH base AS ({_PLANTED_DOCS}),
 s1 AS (SELECT MIN(doc_id) AS doc_id, text FROM base GROUP BY text),
 s2 AS (SELECT MIN(doc_id) AS doc_id
-       FROM s1 GROUP BY {_CASCADE_NORM}),
+       FROM s1 GROUP BY {_CASCADE_NORM_DUCKDB}),
 pairs AS (SELECT doc_a, doc_b FROM ({_MINHASH_ORACLE.strip()})
           WHERE jaccard >= 0.8),
 s3 AS (

@@ -398,3 +398,21 @@ def test_seal_round_keyed_stamp_requires_canonical_cpus():
     assert src.count("raise _SkipRoundArtifact") >= 2
     # the artifact records the core count it was taken at
     assert '"cpus"' in src
+
+
+def test_round_keyed_stamp_refuses_unparsed_cpus():
+    """The canonical-CPU guard refuses the round-keyed write unless
+    SPARK_GRAFT_CPUS parses as an integer equal to the canonical count:
+    a value such as "8x" or "" leaves the run's core count unknown."""
+    import importlib.util
+    import os
+
+    spec = importlib.util.spec_from_file_location(
+        "bench_mod_cpus", os.path.join(os.path.dirname(__file__), "..", "bench.py")
+    )
+    bench = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(bench)
+
+    assert bench.canonical_cpus("32")
+    for value in ("8", "8x", " 8", " 32", "", "32.0"):
+        assert not bench.canonical_cpus(value), value

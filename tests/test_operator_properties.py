@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import pandas as pd
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -317,6 +317,10 @@ def test_components_match_union_find(spark):
     assert got == want
 
 
+def test_components_match_union_find_rounds(spark, cc_rounds):
+    test_components_match_union_find(spark)
+
+
 def test_components_long_chain_converges(spark):
     """A 300-node path is the adversarial case for plain label
     propagation (needs 299 rounds); pointer jumping must close it
@@ -327,6 +331,61 @@ def test_components_long_chain_converges(spark):
     df = spark.createDataFrame(edges, ["doc_a", "doc_b"])
     got = {r.doc_id: r.component_id for r in connected_components(df).collect()}
     assert got == {v: 0 for v in range(301)}
+
+
+def test_components_long_chain_converges_rounds(spark, cc_rounds):
+    test_components_long_chain_converges(spark)
+
+
+_VERTEX = st.one_of(st.none(), st.integers(0, 12))
+
+
+@given(edges=st.lists(st.tuples(_VERTEX, _VERTEX), max_size=24))
+@example(edges=[])
+@example(edges=[(1, None), (2, 3), (None, 4), (5, 5)])
+@settings(max_examples=8, deadline=None)
+def test_components_driver_path_equals_rounds(spark, edges):
+    """Both connected-components functions give the same rows and
+    schema on the driver path as on the distributed rounds, on edge
+    lists with duplicates, reversed edges, self-loops and NULL
+    endpoints (small ids over a small range make all of them common),
+    and on the empty list."""
+    from clean_census_acs_data_spark.operators import components
+
+    def rows(out):
+        return sorted(map(tuple, out.collect()), key=repr)
+
+    df = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    for fn in (
+        components.connected_components,
+        components.connected_components_two_phase,
+    ):
+        driver = fn(df)
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(components, "_DRIVER_MAX_EDGES", -1)
+            rounds = fn(df)
+        assert driver.schema == rounds.schema, fn.__name__
+        assert rows(driver) == rows(rounds), fn.__name__
+
+
+def test_components_small_graph_is_one_job(spark):
+    """Below the driver bound connected_components runs exactly one
+    Spark job: the collect of the edge list."""
+    from clean_census_acs_data_spark.operators.components import connected_components
+
+    sc = spark.sparkContext
+    df = spark.range(40).select(
+        (F.col("id") % 30).alias("doc_a"), (F.col("id") * 7 % 30).alias("doc_b")
+    )
+    group = "cc-small-graph-one-job"
+    sc.setJobGroup(group, group)
+    try:
+        out = connected_components(df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert out.count() == 30
 
 
 # ---------------------------------------------------------------------------
@@ -360,9 +419,11 @@ def test_ann_scores_agree_with_brute_force(spark):
             assert r.cosine == exact[r.vec_id], (name, r.vec_id)  # bit-equal
 
 
-def test_components_reliable_checkpoint_dir(spark, tmp_path):
+def test_components_reliable_checkpoint_dir(spark, tmp_path, cc_rounds):
     """Same result through the reliable .checkpoint() path (the 100-TB
-    durability option, VERDICT r1 #4) as through localCheckpoint."""
+    durability option, VERDICT r1 #4) as through localCheckpoint. The
+    checkpoint dir is only used by the distributed rounds, so the test
+    forces them."""
     from clean_census_acs_data_spark.operators.components import connected_components
 
     edges = [(i, i + 1) for i in range(50)] + [(100, 200), (200, 300)]

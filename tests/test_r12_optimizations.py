@@ -354,6 +354,10 @@ def test_cc_fused_convergence_exact_on_chain_and_forest(spark):
     assert got == want
 
 
+def test_cc_fused_convergence_exact_on_chain_and_forest_rounds(spark, cc_rounds):
+    test_cc_fused_convergence_exact_on_chain_and_forest(spark)
+
+
 def test_hodges_lehmann_inrow_matches_pair_join(spark):
     """hodges_lehmann_location's r12 in-row Walsh-pair selection
     (collect_list → upper-triangle transform → array_sort →

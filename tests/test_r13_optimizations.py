@@ -53,3 +53,30 @@ def test_hodges_groupedmap_matches_jvm_inrow_fold(spark):
         (f.name, f.dataType) for f in old.schema.fields
     ]
     assert sorted(map(tuple, new.collect())) == sorted(map(tuple, old.collect()))
+
+
+def test_hodges_groupedmap_skips_null_cents(spark, tmp_path):
+    """A nation whose customers include NULL balances gives the same row
+    as that nation with those customers removed; a nation with only NULL
+    balances gives no row, as if it had no customers."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rows = [(1, 10.0), (1, 2.5), (1, None), (1, 7.25), (1, None), (2, 3.0), (3, None)]
+    for name, keep in (("with_nulls", rows), ("without", [r for r in rows if r[1] is not None])):
+        (tmp_path / name).mkdir()
+        pq.write_table(
+            pa.table(
+                {
+                    "c_custkey": pa.array(range(len(keep)), pa.int64()),
+                    "c_nationkey": pa.array([r[0] for r in keep], pa.int32()),
+                    "c_acctbal": pa.array([r[1] for r in keep], pa.float64()),
+                }
+            ),
+            tmp_path / name / "customer.parquet",
+        )
+    hl = QUERIES["hodges_lehmann_location"]
+    got = sorted(map(tuple, hl(spark, str(tmp_path / "with_nulls")).collect()))
+    want = sorted(map(tuple, hl(spark, str(tmp_path / "without")).collect()))
+    assert [r[0] for r in want] == [1, 2]
+    assert got == want

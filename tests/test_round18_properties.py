@@ -19,6 +19,10 @@ def test_two_phase_components_match_label_propagation(spark):
     assert a and a == b
 
 
+def test_two_phase_components_match_label_propagation_rounds(spark, cc_rounds):
+    test_two_phase_components_match_label_propagation(spark)
+
+
 def test_two_phase_components_long_chain(spark):
     """The algorithm's selling point: a path graph (diameter = n−1)
     converges in O(log² n) star rounds — and to the right answer."""
@@ -38,6 +42,10 @@ def test_two_phase_components_long_chain(spark):
     assert all(got[i] == 0 for i in range(n))
     assert got[1000] == 1000 and got[1001] == 1000
     assert len(got) == n + 2
+
+
+def test_two_phase_components_long_chain_rounds(spark, cc_rounds):
+    test_two_phase_components_long_chain(spark)
 
 
 def test_is_star_forest_exact_confirmation(spark):
