@@ -110,7 +110,7 @@ def ngram_decontaminate(
     # (per-doc totals and the eval-overlap join), but Spark's exchange
     # reuse shares the distinct's shuffle between them — the r8 cache
     # only added an eager fill barrier and a write, a net COLD loss
-    # (scripts/cold_ab.py, 2×2 interleaved at sf0.1: cache 5.43/6.29 s
+    # (fresh process per rep, 2×2 interleaved at sf0.1: cache 5.43/6.29 s
     # vs nocache 4.34/4.20 s, 0.73×). At 100 TB the contamination index
     # is a PERSISTED table, not an executor-memory cache, so the
     # production shape is unchanged by this decision.

@@ -79,8 +79,6 @@ def minhash_lsh_pairs(
     bands: int = 4,
     shingle_n: int = 3,
     threshold: float = 0.5,
-    shingle_tbl: DataFrame | None = None,
-    sig_tbl: DataFrame | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash LSH.
 
@@ -92,81 +90,67 @@ def minhash_lsh_pairs(
        would go here if a degenerate key appeared)
     4. verify: exact Jaccard over distinct shingle sets; keep ≥ threshold
 
-    ``shingle_tbl`` optionally injects a pre-materialized (doc, sh)
-    stage (standard_shingle_table) so the shingle pass is shared across
-    the session instead of rebuilt per call; ``docs``/``shingle_n`` are
-    ignored when it is given. ``sig_tbl`` likewise injects a
-    pre-materialized signature table (doc, mh0..mh{{num_hashes−1}},
-    standard_minhash_signatures): without it, the band self-join's two
-    sides each re-derive the md5+remix pass over every shingle — the
-    kernel's single most expensive projection, run twice (r12 plan
-    audit: two full `transform(sh, md5…)` subtrees, no reuse between
-    the join sides). Requires ``shingle_tbl`` (same derivation source).
-
     Returns (doc_a, doc_b, jaccard) with doc_a < doc_b.
     """
+    # shingle table computed once and cached: reused by the two sides
+    # of the candidate self-join and the two verification probes. At
+    # 100 TB this is the materialized signature/shingle stage every
+    # LSH dedup pipeline persists.
+    sh_tbl = _shingle_frame(
+        docs, id_col=id_col, text_col=text_col, shingle_n=shingle_n
+    ).transform(tracked_cache)
+    # materialize the cache NOW: four downstream subtrees (both sides
+    # of the band self-join, both verification probes) consume sh_tbl
+    # inside one job — with a lazy cache their stages run concurrently
+    # and each recomputes the shingle+md5 pass (~4× the dominant
+    # cost). At 100 TB this stage is persisted to storage, not
+    # executor memory.
+    sh_tbl.count()
+    sig = _signature_frame(sh_tbl, num_hashes)
+    return _lsh_pairs(sh_tbl, sig, num_hashes=num_hashes, bands=bands, threshold=threshold)
+
+
+def _shingle_frame(
+    docs: DataFrame, *, id_col: str = "doc_id", text_col: str = "text", shingle_n: int = 3
+) -> DataFrame:
+    """(doc, sh): the distinct word-``shingle_n``-shingle set of every
+    doc with at least one shingle. Uncached; callers cache it."""
     from clean_census_acs_data_spark.io import spread
 
-    rows_per_band = num_hashes // bands
-    if shingle_tbl is not None:
-        # caller supplies the session-shared materialized shingle stage
-        # (standard_shingle_table) — already cached + eagerly counted.
-        # The injected table REPLACES the shingling stage entirely, so
-        # shingling parameters passed alongside it would be silently
-        # ignored — reject the combination rather than return pairs
-        # computed from a different corpus/shingle-n than the caller
-        # asked for (ADVICE r9).
-        if shingle_n != 3 or id_col != "doc_id" or text_col != "text":
-            raise ValueError(
-                "shingle_tbl replaces the shingling stage: it cannot be "
-                "combined with non-default shingle_n/id_col/text_col "
-                f"(got shingle_n={shingle_n}, id_col={id_col!r}, "
-                f"text_col={text_col!r}); build the table with those "
-                "parameters instead, or omit shingle_tbl"
-            )
-        sh_tbl = shingle_tbl
-    else:
-        # parallelize the md5-shingling stage across all cores regardless
-        # of source file layout (single-row-group local files scan as ≤2
-        # splits)
-        docs = spread(docs)
-        toks = tokens(F.col(text_col))
-        sh = F.array_distinct(shingles(toks, shingle_n))
-        # shingle table computed once and cached: reused by the two sides
-        # of the candidate self-join and the two verification probes. At
-        # 100 TB this is the materialized signature/shingle stage every
-        # LSH dedup pipeline persists. Filter on the cheap equivalent
-        # predicate (n-shingles exist ⟺ ≥ n tokens) BEFORE the
-        # projection — a post-projection size(sh) filter gets pushed
-        # down and re-evaluates the whole shingle subtree per row (r12,
-        # see standard_shingle_table).
-        sh_tbl = (
-            docs.where(F.size(tokens(F.col(text_col))) >= shingle_n)
-            .select(F.col(id_col).alias("doc"), sh.alias("sh"))
-            .transform(tracked_cache)
-        )
-        # materialize the cache NOW: four downstream subtrees (both sides
-        # of the band self-join, both verification probes) consume sh_tbl
-        # inside one job — with a lazy cache their stages run concurrently
-        # and each recomputes the shingle+md5 pass (~4× the dominant
-        # cost). At 100 TB this stage is persisted to storage, not
-        # executor memory.
-        sh_tbl.count()
-    if sig_tbl is not None:
-        if shingle_tbl is None or num_hashes != 8:
-            raise ValueError(
-                "sig_tbl must come from the same shared derivation as "
-                "shingle_tbl (pass both) and carries exactly 8 minhashes "
-                f"(got shingle_tbl={'set' if shingle_tbl is not None else 'None'}, "
-                f"num_hashes={num_hashes})"
-            )
-        sig = sig_tbl
-    else:
-        hv = F.transform(F.col("sh"), lambda s: md5_long(s) % F.lit(MINHASH_M))
-        sig = sh_tbl.select("doc", hv.alias("hv")).select(
-            "doc", *minhash_signature_from_hashes(F.col("hv"), num_hashes)
-        )
+    # parallelize the md5-shingling stage across all cores regardless
+    # of source file layout (single-row-group local files scan as ≤2
+    # splits)
+    docs = spread(docs)
+    toks = tokens(F.col(text_col))
+    sh = F.array_distinct(shingles(toks, shingle_n))
+    # r12 (guide §1.2 per-task work): filter BEFORE the projection on
+    # the cheap equivalent predicate — `size(sh) > 0 ⟺ size(tokens) ≥
+    # n` (n-shingles exist iff ≥n tokens; distinct keeps ≥1). A
+    # post-projection `size(sh) > 0` filter was pushed below the
+    # projection by the optimizer, so every row evaluated the WHOLE
+    # shingle subtree twice (filter + project) — measured 1.9–2.6 s →
+    # 0.47–0.59 s for the stage at sf0.1, rows identical (exceptAll ∅
+    # both ways).
+    return docs.where(F.size(tokens(F.col(text_col))) >= shingle_n).select(
+        F.col(id_col).alias("doc"), sh.alias("sh")
+    )
 
+
+def _signature_frame(sh_tbl: DataFrame, num_hashes: int = 8) -> DataFrame:
+    """(doc, mh0..mh{num_hashes-1}) over a shingle table. Uncached;
+    callers cache it."""
+    hv = F.transform(F.col("sh"), lambda s: md5_long(s) % F.lit(MINHASH_M))
+    return sh_tbl.select("doc", hv.alias("hv")).select(
+        "doc", *minhash_signature_from_hashes(F.col("hv"), num_hashes)
+    )
+
+
+def _lsh_pairs(
+    sh_tbl: DataFrame, sig: DataFrame, *, num_hashes: int, bands: int, threshold: float
+) -> DataFrame:
+    """Band → candidate self-join → exact-Jaccard verify over a shingle
+    table and its signatures (steps 2-4 of minhash_lsh_pairs)."""
+    rows_per_band = num_hashes // bands
     band_cols = [
         F.concat_ws(
             "#", *[F.col(f"mh{b * rows_per_band + r}") for r in range(rows_per_band)]
@@ -437,27 +421,13 @@ def standard_shingle_table(spark, sf_dir: str) -> DataFrame:
     stage of a dedup pipeline is persisted once and every audit reads
     it, nobody re-shingles 100 TB per report. Session-SHARED on
     purpose, so NOT tracked_cache (reap-exempt, like the pair table)."""
-    from clean_census_acs_data_spark.io import load_table, spread
+    from clean_census_acs_data_spark.io import load_table
 
     key = (spark.sparkContext.applicationId, sf_dir)
     tbl = _STD_SHINGLES_MEMO.get(key)
     if tbl is None:
-        docs = spread(plant_near_dups(load_table(spark, sf_dir, "documents")))
-        toks = tokens(F.col("text"))
-        sh = F.array_distinct(shingles(toks, 3))
-        # r12 (guide §1.2 per-task work): filter BEFORE the projection
-        # on the cheap equivalent predicate — `size(sh) > 0 ⟺
-        # size(tokens) ≥ 3` (3-shingles exist iff ≥3 tokens; distinct
-        # keeps ≥1). The former `.where(F.size("sh") > 0)` was pushed
-        # below the projection by the optimizer, so every row evaluated
-        # the WHOLE shingle subtree twice (filter + project) — measured
-        # 1.9–2.6 s → 0.47–0.59 s for the stage at sf0.1, rows
-        # identical (exceptAll ∅ both ways).
-        tbl = (
-            docs.where(F.size(tokens(F.col("text"))) >= 3)
-            .select(F.col("doc_id").alias("doc"), sh.alias("sh"))
-            .cache()
-        )
+        docs = plant_near_dups(load_table(spark, sf_dir, "documents"))
+        tbl = _shingle_frame(docs).cache()
         tbl.count()  # eager: fan-out consumers must not race the fill
         _STD_SHINGLES_MEMO[key] = tbl
     return tbl
@@ -474,13 +444,7 @@ def standard_minhash_signatures(spark, sf_dir: str) -> DataFrame:
     key = (spark.sparkContext.applicationId, sf_dir)
     sig = _STD_SIG_MEMO.get(key)
     if sig is None:
-        sh_tbl = standard_shingle_table(spark, sf_dir)
-        hv = F.transform(F.col("sh"), lambda s: md5_long(s) % F.lit(MINHASH_M))
-        sig = (
-            sh_tbl.select("doc", hv.alias("hv"))
-            .select("doc", *minhash_signature_from_hashes(F.col("hv"), 8))
-            .cache()
-        )
+        sig = _signature_frame(standard_shingle_table(spark, sf_dir)).cache()
         sig.count()
         _STD_SIG_MEMO[key] = sig
     return sig
@@ -504,34 +468,28 @@ def standard_near_dup_pairs(
     every consumer re-derives from raw text. Filtering the cached
     superset is row-identical to computing at the caller's threshold
     directly (the threshold is the final WHERE of minhash_lsh_pairs)."""
-    from clean_census_acs_data_spark.io import load_table
-
     key = (spark.sparkContext.applicationId, sf_dir)
     pairs = _STD_PAIRS_MEMO.get(key)
     if pairs is None:
-        docs = plant_near_dups(load_table(spark, sf_dir, "documents"))
         # the superset is dimension-sized (collisions, not corpus), but
         # uncoalesced it inherits ~2x shuffle partitions from the band
         # union — every consumer then pays 64 scan tasks per cached
         # read. One tiny extra shuffle down to 8 partitions here makes
         # all ~12 downstream iterative/join consumers cheap; at 100 TB
         # this is the compaction step before persisting the pair table.
+        # r12: the shared signature cache feeds BOTH band-join sides —
+        # a kernel-local signature pass would run the md5+remix pass
+        # over every shingle once per side (the kernel's dominant
+        # projection, duplicated in the plan). The sig fill is paid
+        # once per session and reused by the audit entries (parameter
+        # sweep, estimate audit, provenance) that already consume it.
         pairs = (
-            minhash_lsh_pairs(
-                docs,
+            _lsh_pairs(
+                standard_shingle_table(spark, sf_dir),
+                standard_minhash_signatures(spark, sf_dir),
                 num_hashes=8,
                 bands=4,
-                shingle_n=3,
                 threshold=0.0,
-                shingle_tbl=standard_shingle_table(spark, sf_dir),
-                # r12: the shared signature cache feeds BOTH band-join
-                # sides — without it each side re-ran the md5+remix
-                # pass over every shingle (the kernel's dominant
-                # projection, duplicated in the plan). The sig fill is
-                # paid once per session and reused by the audit
-                # entries (parameter sweep, estimate audit,
-                # provenance) that already consume this memo.
-                sig_tbl=standard_minhash_signatures(spark, sf_dir),
             )
             .repartition(8)
             .cache()

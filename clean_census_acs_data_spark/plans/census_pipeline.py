@@ -24,11 +24,7 @@ from clean_census_acs_data_spark.sources import census as C
 from clean_census_acs_data_spark.sources import rest as R
 from clean_census_acs_data_spark.sources.audit import append_audit
 from clean_census_acs_data_spark import transforms as T
-from clean_census_acs_data_spark.session import (
-    _ab_nocache,
-    register_shared_memo,
-    tracked_cache,
-)
+from clean_census_acs_data_spark.session import register_shared_memo
 
 # Session-level memo of fetched RESPONSE frames, keyed on everything
 # that shapes the wire bytes (r12, guide §1.2 step 1). Two registry
@@ -38,11 +34,11 @@ from clean_census_acs_data_spark.session import (
 # holds an eager localCheckpoint — the same session-shared-memo
 # discipline as the knn/minhash stages, and exactly the materialized
 # fetch output a production pipeline persists before decode anyway.
-# Keyed on applicationId so a new session never sees a stale frame;
-# disabled under the cold-A/B no-cache env (cache-vs-recompute
-# comparisons must not be subsidized). Registered as a shared memo:
-# teardown_shared_memos() drops its handles, and the checkpoint blocks
-# no other frame still references are freed.
+# Tract and ZCTA responses share it (the geography clause is part of
+# the key). Keyed on applicationId so a new session never sees a stale
+# frame. Registered as a shared memo: teardown_shared_memos() drops its
+# handles, and the checkpoint blocks no other frame still references
+# are freed.
 _RESPONSES_MEMO: dict = {}
 register_shared_memo(_RESPONSES_MEMO)
 
@@ -97,22 +93,36 @@ def run_census_pipeline(
         spark, year=year, chunk_size=chunk_size,
         datasets={table_name: request_cfg},
     )
-    memo_key = (
-        spark.sparkContext.applicationId,
-        table_name,
-        year,
-        chunk_size,
-        fetcher,
-        tuple(request_cfg.get("variables", ())),
+    memo_key = (table_name, year, chunk_size, tuple(request_cfg.get("variables", ())))
+    return _run_table(
+        spark, specs, memo_key, cfg,
+        fetcher=fetcher, audit_path=audit_path, cast_measures=cast_measures,
     )
-    responses = None if _ab_nocache() else _RESPONSES_MEMO.get(memo_key)
+
+
+def _run_table(
+    spark: SparkSession,
+    specs: DataFrame,
+    memo_key: tuple,
+    cfg: dict,
+    *,
+    fetcher: R.FetchFn | None,
+    audit_path: str | None,
+    cast_measures: bool,
+    geo_for: str = "tract:*",
+    geo_in_states: bool = True,
+) -> tuple[DataFrame, DataFrame]:
+    """The one table body of both pipelines: memoised fetch → audit →
+    dead-letter split → wire decode → normalize → mapping rename →
+    align → cast_clean. ``memo_key`` names the request universe of
+    ``specs``; the geography clause and the fetcher complete the key."""
+    key = (spark.sparkContext.applicationId, *memo_key, geo_for, fetcher)
+    responses = _RESPONSES_MEMO.get(key)
     if responses is None:
-        responses = R.fetch_responses(specs, fetcher=fetcher)
-        if _ab_nocache():
-            responses = responses.transform(tracked_cache)
-        else:
-            responses = responses.localCheckpoint(eager=True)
-            _RESPONSES_MEMO[memo_key] = responses
+        responses = R.fetch_responses(
+            specs, fetcher=fetcher, geo_for=geo_for, geo_in_states=geo_in_states
+        ).localCheckpoint(eager=True)
+        _RESPONSES_MEMO[key] = responses
     if audit_path:
         append_audit(responses, audit_path)
     ok, dead = R.split_dead_letters(responses)
@@ -258,27 +268,10 @@ def run_zcta_pipeline(
     `zip code tabulation area` probed from the response (its header
     name contains spaces — kept verbatim through normalization)."""
     cfg = C.DATASETS[table_name]
-    specs = C.zcta_request_specs(spark, year=year).where(f"table_name = '{table_name}'")
-    responses = R.fetch_responses(
-        specs,
-        fetcher=fetcher,
-        geo_for="zip code tabulation area:*",
-        geo_in_states=False,
-        num_partitions=4,
-    ).transform(tracked_cache)
-    if audit_path:
-        append_audit(responses, audit_path)
-    ok, dead = R.split_dead_letters(responses)
-
-    expected = ["NAME"] + list(dict.fromkeys(cfg["variables"]))
-    decoded = R.decode_wire(ok, expected).drop("state_fips")
-
-    mapping = C.load_mapping_dict(spark)
-    out = T.normalize_columns(decoded)
-    out = T.apply_mapping(out, mapping)
-    labels = [mapping.get(v, v) for v in expected]
-    out = T.align_schema(out, ["TABLE_NAME"] + labels)
-    if cast_measures:
-        measure_labels = [mapping[v] for v in cfg["variables"] if v in mapping]
-        out = T.cast_clean(out, {c: "long" for c in measure_labels})
-    return out, dead
+    specs = C.zcta_request_specs(spark, year=year, datasets={table_name: cfg})
+    out, dead = _run_table(
+        spark, specs, (table_name, year, tuple(cfg["variables"])), cfg,
+        fetcher=fetcher, audit_path=audit_path, cast_measures=cast_measures,
+        geo_for="zip code tabulation area:*", geo_in_states=False,
+    )
+    return out.drop("STATE_FIPS"), dead

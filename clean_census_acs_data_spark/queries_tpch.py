@@ -624,7 +624,7 @@ def tpch_q2_min_price_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("unit_cents_raw"),
     )
     # NOT cached: offers feeds the per-part minimum AND the final match
-    # join, but the COLD first-rep A/B (scripts/cold_ab.py, 2×2
+    # join, but the COLD first-rep A/B (fresh process per rep, 2×2
     # interleaved at sf0.1: cache 4.43/5.00 s vs nocache 3.42/3.51 s,
     # 0.74×) shows exchange reuse already shares the agg's shuffle
     # between the two consumers — the r8 cache only added a fill

@@ -20,6 +20,7 @@ Re-expresses the reference's hard-coded config as data:
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -75,29 +76,6 @@ def load_mapping_dict(spark: SparkSession) -> dict[str, str]:
         return build_mapping(
             [(r["api_code"], r["label"]) for r in csv.DictReader(f)]
         )
-
-
-def preflight_available_variables(
-    fetcher,
-    *,
-    year: int,
-    dataset: str,
-    variables: list[str],
-    base_url: str = "https://api.census.gov/data",
-) -> tuple[list[str], list[str]]:
-    """variables.json metadata pre-flight (reference
-    ``filter_available_variables``, Test_census_tract.py:125-133): fetch
-    ``{base}/{year}/{dataset}/variables.json`` and split the configured
-    list into (available, dropped). One metadata-sized driver-side call
-    per dataset path — never a data fetch. Without this, a variable
-    retired in a vintage rollover 400s every chunk of its dataset into
-    the dead-letter table; with it the request never carries the retired
-    variable. Unlike the reference (silent drop), the dropped list is
-    returned so callers can surface a diagnostic."""
-    available = _fetch_available_vars(fetcher, year=year, dataset=dataset, base_url=base_url)
-    keep = [v for v in variables if v in available]
-    dropped = [v for v in variables if v not in available]
-    return keep, dropped
 
 
 def _fetch_available_vars(
@@ -158,9 +136,32 @@ def request_specs(
     they are built on the driver: row 45's chunk_list over the sorted
     FIPS codes, chunk_id = position // chunk_size. Building the frame
     runs no Spark job."""
-    datasets = datasets or DATASETS
-    fips = sorted(STATE_FIPS)
-    chunks = [",".join(fips[i : i + chunk_size]) for i in range(0, len(fips), chunk_size)]
+    chunks = [",".join(c) for c in _chunks(STATE_FIPS, chunk_size)]
+    return _spec_frame(spark, datasets or DATASETS, year, chunks)
+
+
+def zcta_request_specs(
+    spark: SparkSession,
+    *,
+    year: int = 2017,
+    datasets: dict[str, dict] | None = None,
+) -> DataFrame:
+    """The ZCTA request universe: ONE single-shot request per dataset
+    (test_final_zcta.py:191-193 — all ZCTAs at once, no chunking), i.e.
+    one chunk with an empty state list."""
+    return _spec_frame(spark, datasets or DATASETS, year, [""])
+
+
+def _chunks(seq: Sequence[str], n: int) -> list[list[str]]:
+    """chunk_list(seq, n) (Test_census_tract.py:329-331): consecutive
+    runs of ``n``, the last one shorter."""
+    return [list(seq[i : i + n]) for i in range(0, len(seq), n)]
+
+
+def _spec_frame(
+    spark: SparkSession, datasets: dict[str, dict], year: int, chunks: list[str]
+) -> DataFrame:
+    """One spec row per (table, state chunk), built on the driver."""
     return spark.createDataFrame(
         [
             (name, cfg["dataset"], year, _get_vars(cfg), chunk_id, chunk)
@@ -174,21 +175,3 @@ def request_specs(
 
 def _get_vars(cfg: dict) -> str:
     return ",".join(["NAME"] + list(dict.fromkeys(cfg["variables"])))
-
-
-def zcta_request_specs(
-    spark: SparkSession,
-    *,
-    year: int = 2017,
-    datasets: dict[str, dict] | None = None,
-) -> DataFrame:
-    """The ZCTA request universe: ONE single-shot request per dataset
-    (test_final_zcta.py:191-193 — all ZCTAs at once, no chunking)."""
-    datasets = datasets or DATASETS
-    return spark.createDataFrame(
-        [
-            (name, cfg["dataset"], _get_vars(cfg), year, 0, "")
-            for name, cfg in datasets.items()
-        ],
-        "table_name string, dataset string, get_vars string, year int, chunk_id int, state_chunk string",
-    ).select("table_name", "dataset", "year", "get_vars", "chunk_id", "state_chunk")

@@ -21,8 +21,13 @@ Wire semantics preserved:
   the DSv2 contract; the reference instead appends them, which a fixed
   schema cannot express: documented divergence).
 - per-state tagging via state_fips (:169).
-- retry w/ exponential backoff on non-2xx (:138-142), fail-or-skip
-  policy per partition replacing the chunk→state fallback (:364-390).
+- the same connector as sources/rest.py in its retry and dead-letter
+  policy: each partition's request goes through rest's one retry loop
+  (exponential capped backoff on non-2xx and transport errors,
+  :138-142; a 2xx whose body is not a JSON array is retried, then
+  treated as HTTP 502; a 204 is a valid empty result). A request that
+  still fails follows the fail-or-skip policy per partition, replacing
+  the chunk→state fallback (:364-390).
 
 The fetch function is injectable via the string option
 ``fetcher`` = "module:callable" so tests run the deterministic offline
@@ -32,8 +37,7 @@ fake (fake_census.py) with zero network.
 from __future__ import annotations
 
 import json
-import time
-from collections.abc import Iterator, Sequence
+from collections.abc import Iterator
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -45,7 +49,9 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StringType, StructField, StructType
 
-DEFAULT_STATES = [f"{i:02d}" for i in range(1, 57) if i not in (3, 7, 14, 43, 52)]
+from clean_census_acs_data_spark.sources import census as C
+from clean_census_acs_data_spark.sources import rest as R
+
 GEO_COLS = ("state", "county", "tract")
 
 
@@ -54,10 +60,6 @@ def _resolve_fetcher(spec: str):
 
     mod, _, fn = spec.partition(":")
     return getattr(importlib.import_module(mod), fn)
-
-
-def _chunks(seq: Sequence[str], n: int) -> list[list[str]]:
-    return [list(seq[i : i + n]) for i in range(0, len(seq), n)]
 
 
 class CensusChunkPartition(InputPartition):
@@ -72,7 +74,7 @@ class CensusRestReader(DataSourceReader):
         self.dataset = options.get("dataset", "acs/acs5/profile")
         self.get_vars = options["get_vars"].split(",")
         states = options.get("states")
-        self.states = states.split(",") if states else DEFAULT_STATES
+        self.states = states.split(",") if states else C.STATE_FIPS
         self.chunk_size = int(options.get("chunk_size", "3"))
         self.fetcher_spec = options.get(
             "fetcher", "clean_census_acs_data_spark.sources.rest:default_urllib_fetcher"
@@ -107,11 +109,11 @@ class CensusRestReader(DataSourceReader):
         # "scan parallelism": the single biggest speedup available).
         # Called after pushFilters, so a pruned state universe yields
         # fewer fetch tasks.
-        return [CensusChunkPartition(c) for c in _chunks(self.states, self.chunk_size)]
+        return [CensusChunkPartition(c) for c in C._chunks(self.states, self.chunk_size)]
 
     def read(self, partition: CensusChunkPartition) -> Iterator[tuple]:
         fetcher = _resolve_fetcher(self.fetcher_spec)
-        url = f"{self.base_url}/{self.year}/{self.dataset}"
+        url = R.build_census_url(self.year, self.dataset, base=self.base_url)
         params = {
             "get": ",".join(self.get_vars),
             "for": "tract:*",
@@ -119,21 +121,18 @@ class CensusRestReader(DataSourceReader):
         }
         if self.api_key:
             params["key"] = self.api_key
-        status, body = 0, None
-        for attempt in range(self.max_attempts):
-            try:
-                status, _headers, body = fetcher(url, params)
-            except Exception:
-                status = -1
-            if 200 <= status < 300:
-                break
-            time.sleep(self.backoff_base_s * (2**attempt))
+        status, _headers, body, _err, _attempts = R._get_with_retry(
+            fetcher, url, params,
+            max_attempts=self.max_attempts, backoff_base_s=self.backoff_base_s,
+        )
         if not (200 <= status < 300):
             if self.on_error == "skip":
                 return  # dead-letter policy: drop the partition, keep the scan
             raise RuntimeError(
                 f"census fetch failed for states {partition.states}: HTTP {status}"
             )
+        if status == 204:
+            return  # No Content: an empty result, not an error
         data = json.loads(body)
         header, rows = data[0], data[1:]
         idx = {name: i for i, name in enumerate(header)}

@@ -31,6 +31,11 @@ are spent it is dead-lettered with status 502 and error
 ``malformed body`` — it never decodes to zero rows. A 204 No Content
 (the API's answer for an empty result) stays a valid empty response.
 
+The per-request retry loop (``_get_with_retry``) is the only one in
+``sources/``: the ``census_rest`` DataSource reader
+(sources/census_datasource.py) calls it too, so both connectors share
+one retry, malformed-body and dead-letter policy.
+
 The fetch function is injectable (``fetcher=``) so tests run a
 deterministic fake with no network; the default uses stdlib urllib
 (executors may not have `requests`).
@@ -137,27 +142,10 @@ def fetch_responses(
             params["in"] = f"state:{row.state_chunk}"
         if api_key:
             params["key"] = api_key  # census_get key injection (:115-116)
-        status, headers, body, err = 0, {}, None, None
-        attempts = 0
-        for attempt in range(max_attempts):
-            attempts = attempt + 1
-            take_slot()  # token bucket (reference row 44)
-            try:
-                status, headers, body = fetcher(url, params)
-            except Exception as e:  # transport error → retryable
-                status, headers, body, err = -1, {}, None, str(e)[:200]
-            if 200 <= status < 300:
-                if status == 204 or _is_json_array(body):
-                    err = None
-                    break
-                err = MALFORMED_ERROR  # a 2xx cut short → retryable
-            else:
-                err = err or (body or "")[:200]  # resp.text[:200] (:368)
-            # exponential backoff, capped (tenacity analog, :138-142)
-            time.sleep(min(backoff_cap_s, backoff_base_s * (2**attempt)))
-        else:
-            if 200 <= status < 300:  # retries spent on malformed bodies
-                status = MALFORMED_STATUS  # dead-letter it, never decode it
+        status, headers, body, err, attempts = _get_with_retry(
+            fetcher, url, params, max_attempts=max_attempts,
+            backoff_base_s=backoff_base_s, backoff_cap_s=backoff_cap_s, take_slot=take_slot,
+        )
         # audit-before-status-check ordering (:118-119): record the
         # attempt outcome whether or not it succeeded
         ratelimit = {
@@ -209,6 +197,48 @@ def fetch_responses(
         yield pd.DataFrame(out, columns=[f.name for f in RESPONSE_SCHEMA.fields])
 
     return specs.coalesce(n_tasks).mapInPandas(run, RESPONSE_SCHEMA)
+
+
+def _get_with_retry(
+    fetcher: FetchFn,
+    url: str,
+    params: dict[str, str],
+    *,
+    max_attempts: int,
+    backoff_base_s: float,
+    backoff_cap_s: float = 60.0,
+    take_slot: Callable[[], None] | None = None,
+) -> tuple[int, dict[str, str], str | None, str | None, int]:
+    """One census request with retries: the loop behind both connectors
+    (``fetch_responses`` and the ``census_rest`` DataSource reader).
+    Returns (status, headers, body, error, attempts).
+
+    A transport error counts as status -1 and is retried, as is any
+    non-2xx (tenacity @retry analog, Test_census_tract.py:138-142). A
+    2xx whose body is not a JSON array is retried with error
+    ``malformed body`` and becomes ``MALFORMED_STATUS`` once the
+    attempts are spent; a 204 is a valid empty response. Backoff is
+    exponential and capped at ``backoff_cap_s``; ``take_slot`` (the
+    caller's token bucket) runs before every attempt."""
+    status, headers, body, err = 0, {}, None, None
+    for attempt in range(max_attempts):
+        if take_slot is not None:
+            take_slot()  # token bucket (reference row 44)
+        try:
+            status, headers, body = fetcher(url, params)
+        except Exception as e:  # transport error → retryable
+            status, headers, body, err = -1, {}, None, str(e)[:200]
+        if 200 <= status < 300:
+            if status == 204 or _is_json_array(body):
+                return status, headers, body, None, attempt + 1
+            err = MALFORMED_ERROR  # a 2xx cut short → retryable
+        else:
+            err = err or (body or "")[:200]  # resp.text[:200] (:368)
+        # exponential backoff, capped (tenacity analog, :138-142)
+        time.sleep(min(backoff_cap_s, backoff_base_s * (2**attempt)))
+    if 200 <= status < 300:  # retries spent on malformed bodies
+        status = MALFORMED_STATUS  # dead-letter it, never decode it
+    return status, headers, body, err, max_attempts
 
 
 def _is_json_array(body: str | None) -> bool:

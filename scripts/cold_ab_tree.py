@@ -1,9 +1,8 @@
 """Tree-parameterized cold single-entry runner for CROSS-ROUND A/B.
 
-scripts/cold_ab.py answers "does this entry's cache help or hurt,
-cold?" within ONE tree; this tool answers "did round N regress this
-entry vs round M?" by pointing the same fresh-process cold measurement
-at ANY checked-out tree (e.g. a `git worktree add /tmp/r8tree <sha>`).
+Answers "did round N regress this entry vs round M?" by pointing one
+fresh-process cold measurement at ANY checked-out tree (e.g. a
+`git worktree add /tmp/r8tree <sha>`).
 One fresh process per invocation: q1 warmup (JVM + parquet footers),
 then each named entry once with the bench's noop-sink terminal action.
 

@@ -293,22 +293,6 @@ def test_knn_memo_teardown_frees_internal_cache(spark):
     assert not sel.storageLevel.useMemory
 
 
-def test_minhash_lsh_rejects_shingle_tbl_param_conflict(spark):
-    """ADVICE r9: an injected shingle_tbl replaces the shingling stage,
-    so pairing it with non-default shingle params must raise instead of
-    silently returning pairs from a different corpus/shingle-n."""
-    import pytest
-
-    from clean_census_acs_data_spark.operators import dedup as D
-
-    sf = "/root/testdata/sf0.001"
-    tbl = D.standard_shingle_table(spark, sf)
-    with pytest.raises(ValueError, match="shingle_tbl"):
-        D.minhash_lsh_pairs(None, shingle_tbl=tbl, shingle_n=5)
-    with pytest.raises(ValueError, match="shingle_tbl"):
-        D.minhash_lsh_pairs(None, shingle_tbl=tbl, id_col="other")
-
-
 def test_shingle_and_signature_memos_are_shared_and_reap_exempt(spark):
     """Round-9 memos: the shingle and signature stages are session-
     shared (reap-exempt) and return the SAME DataFrame handle per

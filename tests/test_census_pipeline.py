@@ -13,11 +13,12 @@ from pyspark.sql import functions as F
 
 from clean_census_acs_data_spark.plans.census_pipeline import (
     run_census_pipeline,
+    run_zcta_pipeline,
     write_warehouse_layout,
 )
 from clean_census_acs_data_spark.sources import census as C
 from clean_census_acs_data_spark.sources.audit import read_audit
-from clean_census_acs_data_spark.sources.fake_census import fake_census_fetcher
+from clean_census_acs_data_spark.sources.fake_census import fake_census_fetcher, fake_zcta_fetcher
 
 
 @pytest.fixture(scope="module")
@@ -240,8 +241,10 @@ def test_request_specs_pinned_and_jobless(spark, chunk_size):
     )
 
 
-def _logging_fetcher(log_path: str, *, latency_s: float = 0.05, truncate: dict | None = None):
-    """The fake census API behind a fixed latency. Every call appends
+def _logging_fetcher(
+    log_path: str, *, latency_s: float = 0.05, truncate: dict | None = None, fake=fake_census_fetcher
+):
+    """The fake census API (``fake``) behind a fixed latency. Every call appends
     ``state_chunk, partition, start, end`` to ``log_path`` with one
     write() on an O_APPEND descriptor, so lines from concurrent threads
     and workers never interleave. ``truncate`` maps a state code to the
@@ -259,8 +262,8 @@ def _logging_fetcher(log_path: str, *, latency_s: float = 0.05, truncate: dict |
 
         start = time.time()
         time.sleep(latency_s)
-        status, headers, body = fake_census_fetcher(url, params)
-        chunk = params["in"].removeprefix("state:")
+        status, headers, body = fake(url, params)
+        chunk = params.get("in", "").removeprefix("state:")
         attempts[chunk] = attempts.get(chunk, 0) + 1
         if any(st in chunk.split(",") and attempts[chunk] <= n for st, n in truncate.items()):
             body = body[: len(body) // 2]
@@ -374,18 +377,23 @@ def test_truncated_body_is_retried_then_dead_lettered(spark, tmp_path):
     assert attempts == {"01,02,04": 2, "16,17,18": 3}
 
 
-def test_teardown_releases_the_response_memo(spark, tmp_path):
+@pytest.mark.parametrize(
+    "run, fake, calls",
+    [(run_census_pipeline, fake_census_fetcher, 17 + 4), (run_zcta_pipeline, fake_zcta_fetcher, 1)],
+    ids=["tract", "zcta"],
+)
+def test_teardown_releases_the_response_memo(spark, tmp_path, run, fake, calls):
     from clean_census_acs_data_spark import session as S
     from clean_census_acs_data_spark.plans import census_pipeline as CP
 
     log = tmp_path / "fetch.log"
-    fetcher = _logging_fetcher(str(log), latency_s=0.0)
-    run_census_pipeline(spark, table_name="dp02", fetcher=fetcher)
+    fetcher = _logging_fetcher(str(log), latency_s=0.0, fake=fake)
+    run(spark, table_name="dp02", fetcher=fetcher)
     first = len(_read_fetch_log(log))
-    assert first == 17 + 4
-    run_census_pipeline(spark, table_name="dp02", fetcher=fetcher)
+    assert first == calls
+    run(spark, table_name="dp02", fetcher=fetcher)
     assert len(_read_fetch_log(log)) == first  # memo hit: no new calls
     S.teardown_shared_memos()
     assert not CP._RESPONSES_MEMO
-    run_census_pipeline(spark, table_name="dp02", fetcher=fetcher)
+    run(spark, table_name="dp02", fetcher=fetcher)
     assert len(_read_fetch_log(log)) == 2 * first  # fetched again

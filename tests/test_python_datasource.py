@@ -1,16 +1,20 @@
 """Python Data Source connector (sources/census_datasource.py):
 partition planning = state chunks, NULL-fill schema alignment,
-dead-letter skip policy, retry exhaustion failure."""
+dead-letter skip policy, retry exhaustion failure, truncated and
+No Content bodies."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
+from clean_census_acs_data_spark.sources.census import _chunks
 from clean_census_acs_data_spark.sources.census_datasource import (
     CensusRestDataSource,
-    _chunks,
     register_census_datasource,
 )
+from clean_census_acs_data_spark.sources.fake_census import fake_census_fetcher
 
 FAKE = "clean_census_acs_data_spark.sources.fake_census:fake_census_fetcher"
 
@@ -75,6 +79,51 @@ def test_retry_exhaustion_fails_task(spark):
     df = _read(spark, states="05", chunk_size=1)  # default on_error=fail
     with pytest.raises(Exception, match="HTTP 500|census fetch failed"):
         df.collect()
+
+
+def wire_fault_fetcher(url, params):
+    """The fake census API with a wire fault picked by the dataset path
+    (the last URL segment): ``trunc-once`` cuts the 200 body in half on
+    the first call, ``trunc-always`` on every call, ``no-content``
+    answers 204 with an empty body. The base URL is a directory: every
+    call appends one line to ``calls.log`` there."""
+    base, mode = url.rsplit("/", 2)[0], url.rsplit("/", 1)[1]
+    log = os.path.join(base, "calls.log")
+    with open(log, "a") as f:
+        f.write(mode + "\n")
+    with open(log) as f:
+        calls = sum(line.strip() == mode for line in f)
+    if mode == "no-content":
+        return 204, {}, ""
+    status, headers, body = fake_census_fetcher(url, params)
+    if mode == "trunc-always" or (mode == "trunc-once" and calls == 1):
+        body = body[: len(body) // 2]
+    return status, headers, body
+
+
+def test_wire_faults_follow_the_shared_retry_policy(spark, tmp_path):
+    def read(dataset, **overrides):
+        return _read(
+            spark, dataset=dataset, base_url=str(tmp_path), states="06", chunk_size=1,
+            fetcher="tests.test_python_datasource:wire_fault_fetcher", **overrides,
+        ).collect()
+
+    def calls(mode):
+        with open(tmp_path / "calls.log") as f:
+            return sum(line.strip() == mode for line in f)
+
+    # truncated on the first attempt only: retried, delivered by call 2
+    rows = read("trunc-once")
+    assert sorted(r.tract for r in rows) == ["000000", "000001"]
+    assert {r.state_fips for r in rows} == {"06"} and calls("trunc-once") == 2
+    # truncated on every attempt: a 502 that follows the on_error policy
+    assert read("trunc-always", on_error="skip") == []
+    assert calls("trunc-always") == 2  # max_attempts
+    with pytest.raises(Exception, match="HTTP 502"):
+        read("trunc-always")
+    # 204 No Content: an empty result, not an error (on_error=fail)
+    assert read("no-content") == []
+    assert calls("no-content") == 1
 
 
 def test_datasource_name():
