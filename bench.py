@@ -12,12 +12,22 @@ secondary), then an ULTRA-COMPACT final line (< ~1200 chars:
 Each query is executed to completion with a cheap terminal action
 (count via write-nothing collect of agg) — we time the full pipeline
 including scan, shuffle, and aggregation, not plan construction.
+
+Every run writes the complete per-query map, each entry's host steal
+seconds and the drift ratios against the newest round-keyed artifact
+to the rolling BENCH_FULL.json. It also writes BENCH_FULL_r{N}.json
+(N from $SPARK_GRAFT_ROUND, else one past the newest BENCH_r*.json)
+unless round_stamp_refusal() names a reason not to, which is printed
+to stderr: the first canonical-SF, canonical-CPU stamp of an open
+round is final, and re-stamping means deleting that file in a commit.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
+import re
 import sys
 import time
 
@@ -28,6 +38,7 @@ from clean_census_acs_data_spark.session import (  # noqa: E402
     reap_tracked_caches,
 )
 from clean_census_acs_data_spark.queries import QUERIES  # noqa: E402
+from perfbench.host import cpu_times  # noqa: E402
 
 
 def _storage_bytes(spark) -> int:
@@ -49,12 +60,12 @@ def median_ratio_vs_prev(
 ) -> float | None:
     """Median per-entry time ratio (this run / previous round's run).
 
-    The r8 box-drift gauge (SURVEY §4) as a computed artifact field:
-    entries the round did NOT touch move uniformly with the machine, so
-    the MEDIAN ratio over all common entries estimates environment
-    drift robustly — the touched minority cannot move the median.
-    Entries faster than 0.2 s in the prior round are excluded (timer
-    noise dominates their ratio). Returns None when too few overlap."""
+    A recorded box-drift reading (SURVEY §4); it gates nothing. Entries
+    the round did NOT touch move uniformly with the machine, so the
+    MEDIAN ratio over all common entries estimates environment drift
+    robustly — the touched minority cannot move the median. Entries
+    faster than 0.2 s in the prior round are excluded (timer noise
+    dominates their ratio). Returns None when too few overlap."""
     prev_map = {**prev_full.get("queries", {}), **prev_full.get("secondary", {})}
     cur_map = {**timings, **secondary}
     ratios = [
@@ -71,12 +82,9 @@ def median_ratio_vs_prev(
 # Box-skew sentinels (VERDICT r9 ask #3): trivial, plan-fingerprint-
 # stable relational entries untouched since r1/r2 (pinned by
 # tests/test_plans.py), each sub-second on a quiet box. Their median
-# ratio vs the prior round's artifact isolates MACHINE skew from code
-# change: nothing in a normal round touches these plans, so a pinned
-# gauge over ~1.3 means the box is hot and the artifact would misstate
-# the round (the committed r9 artifact was 1.7× skewed while its
-# all-entry median gauge read only 1.16 — heavy entries with real
-# variance drowned the signal).
+# ratio vs the prior round's artifact is recorded next to each entry's
+# host steal seconds; it gates no write, because a 4-6x hot run once
+# read 1.089 on it while the all-entry median read 0.999.
 PINNED_SENTINELS = [
     "scan_project_filter",
     "broadcast_join_dim",
@@ -95,11 +103,6 @@ PINNED_SENTINELS = [
     "mode_per_group",
 ]
 
-# Refuse to stamp a ROUND-KEYED artifact when the pinned gauge says the
-# box is >1.3× the prior round's — a skewed round artifact poisons
-# every future round's comparisons (VERDICT r9 'What's wrong #2').
-PINNED_SKEW_BOUND = 1.3
-
 # The SF at which round-keyed BENCH_FULL_r{N}.json artifacts are valid
 # as cross-round baselines; other scales write only the rolling file.
 CANONICAL_BENCH_SF = 0.1
@@ -107,14 +110,10 @@ CANONICAL_BENCH_SF = 0.1
 # Likewise the core count (r13): the driver's scaling probe re-runs
 # bench at SPARK_GRAFT_CPUS=8, and in r12 that post-close 8-core pass
 # hit the round-inference path and landed as BENCH_FULL_r13.json —
-# an 8-core stamp is not a valid 32-core baseline, and every r13 gauge
+# an 8-core stamp is not a valid 32-core baseline, and every r13 ratio
 # would have been computed against it. Non-canonical core counts write
 # only the rolling file.
 CANONICAL_BENCH_CPUS = 32
-
-
-class _SkipRoundArtifact(Exception):
-    """Internal: non-canonical SF — skip the round-keyed write."""
 
 
 def canonical_cpus(value: str) -> bool:
@@ -131,9 +130,10 @@ def pinned_ratio_vs_prev(
 
     Unlike median_ratio_vs_prev (all common entries — robust to a
     touched minority but diluted by heavy entries' real variance),
-    this gauge uses exclusively trivial never-touched plans, so it
-    reads pure box skew. Sentinels faster than 0.15 s in the prior
-    artifact are excluded (timer noise); needs ≥ 5 overlapping."""
+    this reading uses exclusively trivial never-touched plans. It is
+    recorded data and gates nothing. Sentinels faster than 0.15 s in
+    the prior artifact are excluded (timer noise); needs ≥ 5
+    overlapping."""
     prev_map = {**prev_full.get("queries", {}), **prev_full.get("secondary", {})}
     cur_map = {**timings, **secondary}
     ratios = [
@@ -148,97 +148,35 @@ def pinned_ratio_vs_prev(
     return round(statistics.median(ratios), 4)
 
 
-def refuse_round_artifact(
-    pinned_ratio: float | None, baseline_stamp_ratio: float | None = None
-) -> bool:
-    """True when the box is too skewed to stamp a round artifact.
+def round_stamp_refusal(
+    here: str, sf: float | str, cpus: str, cur: int
+) -> str | None:
+    """Why BENCH_FULL_r{cur}.json in ``here`` must not be written, or
+    None to write it.
 
-    ``baseline_stamp_ratio`` is the prior artifact's OWN pinned gauge at
-    the moment it was FORCE-stamped past this guard (recorded by the
-    ADVICE r10 fix). A forced baseline was measured on a box that read
-    ``baseline_stamp_ratio``× its predecessor, so a current gauge of r
-    against it is really r × baseline_stamp_ratio against the last
-    honestly-stamped round — chain through the poisoned link instead of
-    letting it make the gauge read <1.0× forever (never refusing) or
-    refuse honest runs."""
-    if pinned_ratio is None:
-        return False
-    effective = pinned_ratio * (baseline_stamp_ratio or 1.0)
-    return effective > PINNED_SKEW_BOUND
-
-
-def effective_pinned_gauge(stamp: dict) -> float | None:
-    """The stamp's box-skew gauge chained back to the last HONEST round.
-
-    For a FORCE-stamped artifact that is ``forced_stamp_pinned_ratio``
-    (recorded already-chained by the ADVICE r10 fix). A seal-only
-    force on an honest box records NO multiplier by that rule, so when
-    the key is absent we fall through to the honest chain below —
-    otherwise such a stamp would gauge as None and refuse every future
-    unforced supersede, including a strictly better honest rerun
-    (r12 review finding). For an honest stamp it is
-    ``pinned_ratio_vs_prev`` times the prior link's forced multiplier
-    (``ratio_prev_stamp_ratio``) when the comparison baseline itself
-    was forced. None when no gauge was recorded."""
-    if stamp.get("forced_stamp") and stamp.get("forced_stamp_pinned_ratio"):
-        return stamp.get("forced_stamp_pinned_ratio")
-    pinned = stamp.get("pinned_ratio_vs_prev")
-    if pinned is None:
-        return None
-    return pinned * (stamp.get("ratio_prev_stamp_ratio") or 1.0)
-
-
-# Quiet-band UPPER bound for the stamp seal rule below: a pinned gauge
-# inside this band certifies the box ran at honest, comparable speed.
-# The bound is one-sided ON PURPOSE: gauges < 1 mean the box was FASTER
-# than the baseline stamp's — also honest; only a slow box (> 1.15)
-# misstates the round.
-SEAL_QUIET_BAND = 1.15
-
-
-def seal_supersede_ok(
-    sealed: dict,
-    new_effective_pinned: float | None,
-    *,
-    sealed_cost: float | None = None,
-    new_cost: float | None = None,
-) -> bool:
-    """VERDICT r11 #1: may a new stamp overwrite an EXISTING round-keyed
-    artifact without FORCE?
-
-    The r11 loophole: the seal guard only fired when the round number
-    came from the ENV, so the driver's post-close bench hit the
-    round-INFERENCE path and silently overwrote the sealed honest
-    27.49 s stamp (pinned gauge 1.043) with a 1.19×-hot 37.30 s one.
-    Unknown gauges on either side refuse: we cannot prove the new stamp
-    is the better one.
-
-    r13 rule (VERDICT r12 'What's wrong #2' / ask #3): **the FIRST
-    quiet-band stamp of a round is FINAL.** The r12 extension let the
-    lowest gauge-normalized total cost win within the quiet band, which
-    made re-running the bench strictly improving — a min over N noisy
-    draws is a biased-low order statistic no matter how principled the
-    tiebreak (the sealed r12 stamp was the best of seven runs spanning
-    32.3–46.4 s). Now: a sealed stamp whose effective pinned gauge is
-    inside the quiet band (≤ SEAL_QUIET_BAND) refuses EVERY unforced
-    supersede — cheaper reruns included. Only a stamp taken on a
-    demonstrably skewed box (gauge outside the band) may be replaced,
-    and only by a stamp whose gauge is no further from 1.0 (log
-    distance) — the r11 recovery rule, unchanged. ``sealed_cost`` /
-    ``new_cost`` are accepted for caller compatibility but no longer
-    participate in the decision."""
-    del sealed_cost, new_cost  # r13: cost preference removed (biased-low)
-    if not new_effective_pinned or new_effective_pinned <= 0.0:
-        return False
-    old = effective_pinned_gauge(sealed)
-    if not old or old <= 0.0:
-        return False
-    import math
-
-    if old <= SEAL_QUIET_BAND:
-        # first quiet stamp wins — rerunning must not be improving
-        return False
-    return abs(math.log(new_effective_pinned)) <= abs(math.log(old)) + 1e-9
+    Round-keyed stamps are cross-round baselines, so only a run at the
+    canonical SF and core count may take one, and only while round
+    ``cur`` is open (no BENCH_r{cur}.json yet — once it exists the code
+    tree has moved on). The first such stamp is final: an existing
+    stamp is never overwritten, so re-running the bench cannot pick
+    the fastest of several draws."""
+    if sf != CANONICAL_BENCH_SF:
+        return f"sf={sf} is not the canonical round scale ({CANONICAL_BENCH_SF})"
+    if not canonical_cpus(cpus):
+        return (
+            f"cpus={cpus!r} is not the canonical core count "
+            f"({CANONICAL_BENCH_CPUS})"
+        )
+    for closed in (f"BENCH_r{cur:02d}.json", f"BENCH_r{cur}.json"):
+        if os.path.exists(os.path.join(here, closed)):
+            return f"round {cur} is closed ({closed} exists)"
+    stamp = f"BENCH_FULL_r{cur:02d}.json"
+    if os.path.exists(os.path.join(here, stamp)):
+        return (
+            f"{stamp} already exists (the first canonical stamp of a round "
+            "is final; delete it in a commit to re-stamp)"
+        )
+    return None
 
 
 HEADLINE = [
@@ -566,18 +504,24 @@ def main() -> None:
         warmup_init["parallel_detail_overlapping"] = detail
 
     storage_after: dict[str, int] = {}
+    # host steal seconds (all CPUs) during each entry's timed window:
+    # direct evidence of box heat, read from /proc/stat rather than
+    # inferred from sentinel timings
+    steal_s: dict[str, float] = {}
 
     def run(names: list[str]) -> dict[str, float]:
         timings: dict[str, float] = {}
         for name in names:
             if name not in QUERIES:
                 continue
+            steal0 = cpu_times()[1]
             t0 = time.perf_counter()
             df = QUERIES[name](spark, sf_dir)
             # noop sink: materializes every output column (count() would
             # let Catalyst prune the projections and under-measure)
             df.write.format("noop").mode("overwrite").save()
             timings[name] = round(time.perf_counter() - t0, 4)
+            steal_s[name] = round(cpu_times()[1] - steal0, 2)
             # Reap entry-LOCAL caches after the clock stops — the
             # graded number is the query, the unpersist is harness
             # hygiene (ADVICE r8: accumulated blocks pressure storage
@@ -630,29 +574,22 @@ def main() -> None:
         # per-entry cache-storage occupancy AFTER that entry's reap:
         # separates cache-leak pressure from box drift (VERDICT r8 #2b)
         "storage_after_bytes": storage_after,
+        "steal_s": steal_s,
+        "steal_total_s": round(sum(steal_s.values()), 2),
     }
-    # box-drift gauge vs the newest committed prior-round artifact
-    # (VERDICT r8 ask #5): median per-entry ratio over common keys
+    # drift ratios vs the newest round-keyed artifact (VERDICT r8 ask
+    # #5), recorded for the reader; they gate no write
+    here = os.path.dirname(os.path.abspath(__file__))
+    # only round-keyed names participate (r13: a stray file like
+    # BENCH_FULL_8core_r12.json matches the glob but not the pattern)
+    prevs = sorted(
+        (int(m.group(1)), p)
+        for p in glob.glob(os.path.join(here, "BENCH_FULL_r*.json"))
+        if (m := re.search(r"BENCH_FULL_r(\d+)\.json$", p))
+    )
     try:
-        import glob as _glob
-        import re as _re
-
-        here0 = os.path.dirname(os.path.abspath(__file__))
-        # only round-keyed names participate (r13: a stray file like
-        # BENCH_FULL_8core_r12.json matching the glob but not the
-        # round pattern must not AttributeError the whole gauge block)
-        prevs = sorted(
-            (
-                p
-                for p in _glob.glob(os.path.join(here0, "BENCH_FULL_r*.json"))
-                if _re.search(r"r(\d+)\.json$", p)
-            ),
-            key=lambda p: int(
-                _re.search(r"r(\d+)\.json$", p).group(1)
-            ),
-        )
         if prevs:
-            with open(prevs[-1]) as f:
+            with open(prevs[-1][1]) as f:
                 prev_full = json.load(f)
             # ratios only mean something at the SAME scale factor
             if prev_full.get("sf") == sf_val:
@@ -662,203 +599,48 @@ def main() -> None:
                 full["pinned_ratio_vs_prev"] = pinned_ratio_vs_prev(
                     prev_full, timings, secondary
                 )
-                full["ratio_prev_artifact"] = os.path.basename(prevs[-1])
-                # ADVICE r10: a FORCE-stamped baseline was itself
-                # measured on a skewed box; carry its stamp-time gauge
-                # so the refusal chains ratios back to the last honest
-                # round instead of trusting the poisoned link.
-                if prev_full.get("forced_stamp"):
-                    full["ratio_prev_forced"] = True
-                    full["ratio_prev_stamp_ratio"] = prev_full.get(
-                        "forced_stamp_pinned_ratio"
-                    )
-                    print(
-                        "bench: WARNING — comparison baseline "
-                        f"{os.path.basename(prevs[-1])} was FORCE-stamped "
-                        f"(stamp-time pinned gauge "
-                        f"{prev_full.get('forced_stamp_pinned_ratio')}); "
-                        "gauge ratios are normalized through it",
-                        file=sys.stderr,
-                    )
-    except (OSError, ValueError, AttributeError):
+                full["ratio_prev_artifact"] = os.path.basename(prevs[-1][1])
+    except (OSError, ValueError):
         pass
-    # Persist the COMPLETE per-query map to a committed artifact: the
-    # driver's stdout tail drops the long line's head, so BENCH_r04/r05
-    # shared ZERO comparable secondary keys and per-query regressions in
-    # the secondary set were invisible round-over-round (VERDICT r5
-    # 'What's missing #4'). The file survives truncation by not being
-    # stdout. Also written round-keyed (BENCH_FULL_r{N}.json, N inferred
-    # from the driver's BENCH_r* artifacts) so scripts/bench_diff.py has
-    # a committed prior-round map to diff against (VERDICT r6 ask #4 —
-    # the rolling file alone is overwritten every close).
-    try:
-        import glob as _glob
+    # Persist the COMPLETE per-query map to a file: a 2000-char stdout
+    # tail capture drops the long line's head, so BENCH_r04/r05 shared ZERO
+    # comparable secondary keys and per-query regressions in the
+    # secondary set were invisible round-over-round (VERDICT r5 'What's
+    # missing #4'). The rolling BENCH_FULL.json is rewritten by every
+    # run; the round-keyed BENCH_FULL_r{N}.json is the committed
+    # cross-round baseline scripts/bench_diff.py diffs against.
 
-        here = os.path.dirname(os.path.abspath(__file__))
-        with open(os.path.join(here, "BENCH_FULL.json"), "w") as f:
-            json.dump(full, f, indent=1, sort_keys=True)
-        # Round-keyed artifacts exist to be cross-round baselines, and
-        # ratios only mean anything at the canonical bench scale — a
-        # smoke run at another SF (e.g. sf0.001 to validate the CLI)
-        # must never occupy a round slot: in r11 exactly that happened
-        # (inference stamped the smoke as BENCH_FULL_r11.json; the real
-        # sf0.1 run was then seal-blocked and its gauges read null).
-        if sf_val != CANONICAL_BENCH_SF:
-            print(
-                f"bench: sf={sf_val} is not the canonical round scale "
-                f"({CANONICAL_BENCH_SF}); skipping the round-keyed "
-                "artifact (rolling BENCH_FULL.json written).",
-                file=sys.stderr,
-            )
-            raise _SkipRoundArtifact
-        bench_cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        if not canonical_cpus(bench_cpus):
-            print(
-                f"bench: cpus={bench_cpus} is not the canonical core "
-                f"count ({CANONICAL_BENCH_CPUS}); skipping the "
-                "round-keyed artifact (rolling BENCH_FULL.json written).",
-                file=sys.stderr,
-            )
-            raise _SkipRoundArtifact
-        # Explicit round wins (ADVICE r7: if the driver's BENCH_r{N}
-        # artifact for the IN-PROGRESS round already exists when bench
-        # runs, max+1 inference mislabels the full artifact as the NEXT
-        # round); inference is only the fallback.
-        env_round = os.environ.get("SPARK_GRAFT_ROUND", "")
-        if env_round.isdigit():
-            cur = int(env_round)
-        else:
-            rounds = [
-                int(os.path.basename(p)[len("BENCH_r"):-len(".json")])
-                for p in _glob.glob(os.path.join(here, "BENCH_r*.json"))
-                if os.path.basename(p)[len("BENCH_r"):-len(".json")].isdigit()
-            ]
-            cur = (max(rounds) + 1) if rounds else 1
-        round_path = os.path.join(here, f"BENCH_FULL_r{cur:02d}.json")
-        # An existing round-keyed artifact is a SEAL no matter how the
-        # round number was derived (VERDICT r11 #1: the old env-only
-        # guard let the round-INFERENCE path overwrite the honest r11
-        # stamp with a 1.19×-hot one). Unforced overwrite is allowed
-        # only when the new stamp's gauge is demonstrably no worse —
-        # keep whichever stamp has the better pinned gauge.
-        force = os.environ.get("SPARK_GRAFT_ROUND_FORCE", "") == "1"
-        # Guard order matters: the SEAL guard wins so its message is
-        # never shadowed by the skew one — otherwise a hot box would
-        # print only the skew hint, whose FORCE suggestion bypasses
-        # BOTH guards at once and clobbers a sealed prior-round
-        # artifact with skewed timings.
-        seal_blocked = False
-        round_closed = False
-        if os.path.exists(round_path):
-            try:
-                with open(round_path) as f:
-                    sealed_prev = json.load(f)
-            except (OSError, ValueError):
-                sealed_prev = {}
-            # Round/code identity first (r12 review finding: the
-            # gauge-only rule regressed the ADVICE r8 stale-env
-            # protection): once the driver has recorded BENCH_r{cur}
-            # the round is CLOSED — the code tree has moved on, so a
-            # better gauge proves nothing about comparability. A stale
-            # SPARK_GRAFT_ROUND=11 in round 12 on a quiet box would
-            # otherwise relabel round-12-code timings as round 11.
-            # The gauge contest is for same-round re-stamps only
-            # (driver's post-close bench runs BEFORE BENCH_r{N} lands).
-            round_closed = os.path.exists(
-                os.path.join(here, f"BENCH_r{cur:02d}.json")
-            ) or os.path.exists(os.path.join(here, f"BENCH_r{cur}.json"))
-
-            def _stamp_cost(stamp: dict) -> float | None:
-                v, s = stamp.get("value"), stamp.get("secondary_total")
-                if isinstance(v, (int, float)) and isinstance(s, (int, float)):
-                    return float(v) + float(s)
-                return None
-
-            seal_blocked = round_closed or not seal_supersede_ok(
-                sealed_prev,
-                effective_pinned_gauge(full),
-                sealed_cost=_stamp_cost(sealed_prev),
-                new_cost=_stamp_cost(full),
-            )
-        skew_blocked = refuse_round_artifact(
-            full.get("pinned_ratio_vs_prev"), full.get("ratio_prev_stamp_ratio")
-        )
-        if seal_blocked and not force:
-            reason = (
-                f"round {cur} is CLOSED (driver BENCH_r{cur:02d}.json "
-                "exists; the current code tree is a later round)"
-                if round_closed
-                else (
-                    f"new pinned gauge {effective_pinned_gauge(full)} is "
-                    "not better than the sealed stamp's "
-                    f"{effective_pinned_gauge(sealed_prev)} (and within the "
-                    "quiet band the gauge-normalized total cost "
-                    f"{_stamp_cost(full)} / {effective_pinned_gauge(full)} "
-                    "does not beat the sealed "
-                    f"{_stamp_cost(sealed_prev)} / "
-                    f"{effective_pinned_gauge(sealed_prev)})"
-                )
-            )
-            print(
-                f"bench: refusing to overwrite sealed {round_path} — "
-                f"{reason} (set SPARK_GRAFT_ROUND_FORCE=1 to override)",
-                file=sys.stderr,
-            )
-        elif skew_blocked and not force:
-            # Box-skew refusal (VERDICT r9 ask #3): the pinned trivial
-            # sentinels — plans no round touches — ran >1.3× the prior
-            # artifact, so stamping a round artifact now would misstate
-            # the ROUND by the BOX (the r9 artifact read 1.66× slower
-            # on a machine the judge measured at 0.97×). The rolling
-            # BENCH_FULL.json above is still written (data, not a
-            # seal); rerun on a quiet box to stamp the round. The
-            # FORCE hint is safe HERE because the seal guard above
-            # already passed (no prior-round file at risk).
-            print(
-                "bench: box skew detected — pinned sentinel gauge "
-                f"{full['pinned_ratio_vs_prev']}x vs prior round "
-                f"(bound {PINNED_SKEW_BOUND}x); refusing to write "
-                f"{os.path.basename(round_path)}. Rerun on a quiet box "
-                "(or set SPARK_GRAFT_ROUND_FORCE=1 to override).",
-                file=sys.stderr,
-            )
-        else:
-            # Announce a supersede only HERE, after BOTH guards passed
-            # (r12 review finding: printing it before the skew guard
-            # claimed an overwrite the guard then refused).
-            if os.path.exists(round_path) and not force:
-                print(
-                    f"bench: superseding {os.path.basename(round_path)} — "
-                    f"new pinned gauge {effective_pinned_gauge(full)} is no "
-                    f"worse than the sealed stamp's "
-                    f"{effective_pinned_gauge(sealed_prev)}",
-                    file=sys.stderr,
-                )
-            if force and (seal_blocked or skew_blocked):
-                # ADVICE r10: FORCE bypassed a guard — record it INSIDE
-                # the artifact so every later round that uses this file
-                # as its comparison baseline knows. The skew multiplier
-                # forced_stamp_pinned_ratio is recorded ONLY when the
-                # SKEW guard was the one bypassed, and as the EFFECTIVE
-                # ratio (chained through any prior forced baseline):
-                # - a seal-only force on an honest box must NOT poison
-                #   later gauges (its honest ratio multiplied in would
-                #   under- or over-refuse later rounds), so it records
-                #   no multiplier;
-                # - two consecutive forced stamps must keep the chain
-                #   anchored at the last HONEST round, so the recorded
-                #   ratio already includes the prior link's multiplier.
-                full["forced_stamp"] = True
-                if skew_blocked:
-                    full["forced_stamp_pinned_ratio"] = round(
-                        (full.get("pinned_ratio_vs_prev") or 1.0)
-                        * (full.get("ratio_prev_stamp_ratio") or 1.0),
-                        4,
-                    )
-            with open(round_path, "w") as f:
+    def write_artifact(name: str) -> None:
+        try:
+            with open(os.path.join(here, name), "w") as f:
                 json.dump(full, f, indent=1, sort_keys=True)
-    except (OSError, _SkipRoundArtifact):
-        pass
+        except OSError as exc:
+            print(f"bench: could not write {name}: {exc}", file=sys.stderr)
+
+    write_artifact("BENCH_FULL.json")
+    # Explicit round wins (ADVICE r7: if the BENCH_r{N} artifact for
+    # the IN-PROGRESS round already exists when bench runs, max+1 inference mislabels the artifact as the NEXT round);
+    # inference is only the fallback.
+    env_round = os.environ.get("SPARK_GRAFT_ROUND", "")
+    if env_round.isdigit():
+        cur = int(env_round)
+    else:
+        rounds = [
+            int(os.path.basename(p)[len("BENCH_r"):-len(".json")])
+            for p in glob.glob(os.path.join(here, "BENCH_r*.json"))
+            if os.path.basename(p)[len("BENCH_r"):-len(".json")].isdigit()
+        ]
+        cur = (max(rounds) + 1) if rounds else 1
+    reason = round_stamp_refusal(
+        here, sf_val, os.environ.get("SPARK_GRAFT_CPUS", "32"), cur
+    )
+    if reason is None:
+        write_artifact(f"BENCH_FULL_r{cur:02d}.json")
+    else:
+        print(
+            f"bench: not writing BENCH_FULL_r{cur:02d}.json: {reason}",
+            file=sys.stderr,
+        )
     # Penultimate line: compact-but-diffable (headline map + top-20
     # slowest secondary). May exceed the driver's tail window — that is
     # fine, the verdict numbers live on the LAST line below.

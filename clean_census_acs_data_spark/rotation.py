@@ -266,8 +266,10 @@ _LAST_CHANGE_CACHE: dict[tuple[str, str], int] = {}
 # attestation commit. Resolution failures degrade to "changed"
 # (conservative: an entry is re-attested too early, never too late).
 
-_MOD_INDEX_CACHE: dict[tuple[str, str], dict | None] = {}
-_REACH_CACHE: dict[tuple[str, str], frozenset[tuple[str, str]]] = {}
+# keyed (repo, commit, relpath) and (repo, module, def); rotation_order()
+# drops the WORKTREE entries at the start of every call
+_MOD_INDEX_CACHE: dict[tuple[str, str, str], dict | None] = {}
+_REACH_CACHE: dict[tuple[str, str, str], frozenset[tuple[str, str]]] = {}
 
 
 def _index_source(repo: str, commit: str, relpath: str) -> str | None:
@@ -280,7 +282,7 @@ def _index_source(repo: str, commit: str, relpath: str) -> str | None:
 
 
 def _refs_and_imports(node, anchor: list[str]) -> tuple[set[str], dict[str, str]]:
-    """All names / one-level attribute chains referenced inside
+    """All names / dotted attribute chains (``a.b.c``) referenced inside
     ``node``, plus package-internal imports declared inside it
     (function-local deferred imports are idiomatic here)."""
     import ast
@@ -290,8 +292,14 @@ def _refs_and_imports(node, anchor: list[str]) -> tuple[set[str], dict[str, str]
     for sub in ast.walk(node):
         if isinstance(sub, ast.Name):
             refs.add(sub.id)
-        elif isinstance(sub, ast.Attribute) and isinstance(sub.value, ast.Name):
-            refs.add(f"{sub.value.id}.{sub.attr}")
+        elif isinstance(sub, ast.Attribute):
+            chain = [sub.attr]
+            base = sub.value
+            while isinstance(base, ast.Attribute):
+                chain.append(base.attr)
+                base = base.value
+            if isinstance(base, ast.Name):
+                refs.add(".".join([base.id, *reversed(chain)]))
         elif isinstance(sub, ast.Import):
             for a in sub.names:
                 if a.name == PKG or a.name.startswith(PKG + "."):
@@ -318,7 +326,7 @@ def _module_index(repo: str, commit: str, relpath: str) -> dict | None:
     when the file is missing or unparseable at that commit."""
     import ast
 
-    key = (commit, relpath)
+    key = (repo, commit, relpath)
     if key in _MOD_INDEX_CACHE:
         return _MOD_INDEX_CACHE[key]
     src = _index_source(repo, commit, relpath)
@@ -360,12 +368,21 @@ def _module_index(repo: str, commit: str, relpath: str) -> dict | None:
     return idx
 
 
+# def-name placeholder for a dotted reference into a package module that
+# names no top-level def there: the entry depends on the whole module
+_WHOLE_MODULE = "*"
+
+
 def _reach(repo: str, mod_name: str, fn_name: str, mod_rel: dict[str, str]) -> frozenset[tuple[str, str]]:
     """(module name, def name) nodes statically reachable from
     ``mod_name.fn_name`` in the CURRENT worktree, following same-module
-    references, ``from pkg.m import f`` names and ``m.f`` attribute
-    chains through package-internal imports."""
-    key = (mod_name, fn_name)
+    references, ``from pkg.m import f`` names and dotted attribute
+    chains (``D.f``, ``pkg.operators.dedup.f``) through package-internal
+    imports. A chain resolves to the def named right after its longest
+    prefix that is a package module; when that module has no such
+    top-level def the node is ``(module, _WHOLE_MODULE)``, which
+    callers count as changed whenever the module's file changed."""
+    key = (repo, mod_name, fn_name)
     if key in _REACH_CACHE:
         return _REACH_CACHE[key]
     seen: set[tuple[str, str]] = set()
@@ -384,22 +401,30 @@ def _reach(repo: str, mod_name: str, fn_name: str, mod_rel: dict[str, str]) -> f
             continue
         imports = {**idx["imports"], **d["imports"]}
         for ref in d["refs"]:
-            if "." in ref:
-                a, b = ref.split(".", 1)
-                t = imports.get(a)
-                if t in mod_rel:  # module alias: m.f
-                    stack.append((t, b))
-                elif t and t.rsplit(".", 1)[0] in mod_rel:
-                    # from-imported OBJECT then attribute on it
-                    m2, o2 = t.rsplit(".", 1)
-                    stack.append((m2, o2))
-            else:
-                t = imports.get(ref)
-                if t and t not in mod_rel and t.rsplit(".", 1)[0] in mod_rel:
-                    m2, o2 = t.rsplit(".", 1)
-                    stack.append((m2, o2))
-                elif ref in idx["defs"]:
+            head, _, rest = ref.partition(".")
+            t = imports.get(head)
+            if t is None:
+                if not rest and ref in idx["defs"]:
                     stack.append((mod, ref))
+                continue
+            # the imported target plus the attribute chain on it, cut at
+            # its longest package-module prefix: m.f, pkg.sub.m.f and a
+            # from-imported object's attributes all land on (m, f)
+            full = f"{t}.{rest}" if rest else t
+            if full in mod_rel:
+                continue  # the module object itself
+            parts = full.split(".")
+            for k in range(len(parts) - 1, 0, -1):
+                m2 = ".".join(parts[:k])
+                if m2 not in mod_rel:
+                    continue
+                name2 = parts[k]
+                if rest:
+                    idx2 = _module_index(repo, "WORKTREE", mod_rel[m2])
+                    if not idx2 or name2 not in idx2["defs"]:
+                        name2 = _WHOLE_MODULE
+                stack.append((m2, name2))
+                break
     out = frozenset(seen)
     _REACH_CACHE[key] = out
     return out
@@ -447,6 +472,13 @@ def rotation_order(
     latest: dict[str, dict] | None = None,
 ) -> list[str]:
     """Order ``names`` per the five tiers in the module docstring."""
+    # everything read from the worktree is re-read per call, so a
+    # long-lived process sees edits made between calls
+    for key in [k for k in _MOD_INDEX_CACHE if k[1] == "WORKTREE"]:
+        del _MOD_INDEX_CACHE[key]
+    _REACH_CACHE.clear()
+    _CHANGED_CACHE.clear()
+    _LAST_CHANGE_CACHE.clear()
     if latest is None:
         try:
             latest = latest_rows(repo)
@@ -553,6 +585,9 @@ def rotation_order(
             rel2 = mod_rel.get(m2)
             if not rel2 or rel2 not in ch:
                 continue  # file identical since attestation
+            if name2 == _WHOLE_MODULE:
+                diffs.add(rel2)  # unresolved dotted reference into it
+                continue
             widx = _module_index(repo, "WORKTREE", rel2)
             oidx = _module_index(repo, commit, rel2)
             nd = (widx or {}).get("defs", {}).get(name2)

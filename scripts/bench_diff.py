@@ -1,13 +1,16 @@
-"""Diff two BENCH_FULL.json artifacts (or a git ref's committed copy
-vs the working tree) and print per-query regressions — the
+"""Diff two BENCH_FULL artifacts and print per-query regressions — the
 round-over-round secondary-timing comparison VERDICT r5 asked to make
 possible (bench.py's FINAL line carries the top-20; this script reads
 the COMPLETE maps).
 
 Usage:
-  python scripts/bench_diff.py                 # HEAD vs working tree
-  python scripts/bench_diff.py <refA> <refB>   # two git refs
+  python scripts/bench_diff.py                 # newest BENCH_FULL_r*.json vs BENCH_FULL.json
+  python scripts/bench_diff.py fileA           # fileA vs BENCH_FULL.json
   python scripts/bench_diff.py fileA fileB     # two json files
+
+BENCH_FULL.json is the rolling artifact every bench run rewrites in the
+repo root; the round-keyed BENCH_FULL_r{N}.json stamps are the
+committed record, and the newest is chosen by its parsed round number.
 
 A query is flagged when it is BOTH ≥0.5 s and ≥40% slower — uniform
 sub-half-second drift across many queries is machine-load smear, not a
@@ -16,21 +19,30 @@ regression (the r6 close saw exactly that pattern and re-ran clean).
 
 from __future__ import annotations
 
+import glob
 import json
-import subprocess
+import os
+import re
 import sys
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-def load(spec: str) -> dict:
-    if spec == "WORKTREE":
-        with open("BENCH_FULL.json") as fh:
-            return json.load(fh)
-    try:
-        with open(spec) as fh:
-            return json.load(fh)
-    except FileNotFoundError:
-        out = subprocess.check_output(["git", "show", f"{spec}:BENCH_FULL.json"])
-        return json.loads(out)
+
+def newest_stamp(root: str) -> str:
+    """Path of the round-keyed BENCH_FULL_r{N}.json with the largest N."""
+    stamps = [
+        (int(m.group(1)), p)
+        for p in glob.glob(os.path.join(root, "BENCH_FULL_r*.json"))
+        if (m := re.search(r"BENCH_FULL_r(\d+)\.json$", p))
+    ]
+    if not stamps:
+        sys.exit(f"bench_diff: no BENCH_FULL_r*.json in {root}")
+    return max(stamps)[1]
+
+
+def load(path: str) -> dict:
+    with open(path) as fh:
+        return json.load(fh)
 
 
 def qmap(d: dict) -> dict[str, float]:
@@ -39,14 +51,13 @@ def qmap(d: dict) -> dict[str, float]:
     return m
 
 
-def main() -> None:
-    args = sys.argv[1:]
+def main(argv: list[str] | None = None) -> None:
+    args = sys.argv[1:] if argv is None else argv
+    rolling = os.path.join(ROOT, "BENCH_FULL.json")
     if len(args) == 0:
-        a_spec, b_spec = "HEAD", "WORKTREE"
+        a_spec, b_spec = newest_stamp(ROOT), rolling
     elif len(args) == 1:
-        # one arg = "compare that ref/file against the working tree"
-        # (the old padding filled HEAD into slot B, inverting intent)
-        a_spec, b_spec = args[0], "WORKTREE"
+        a_spec, b_spec = args[0], rolling
     else:
         a_spec, b_spec = args[:2]
     a, b = load(a_spec), load(b_spec)

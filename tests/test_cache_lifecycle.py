@@ -11,6 +11,7 @@ reap.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from clean_census_acs_data_spark import session as S
 
@@ -97,10 +98,10 @@ def test_median_ratio_vs_prev_gauge():
     assert bench.median_ratio_vs_prev({"queries": {}}, {"a": 1.0}, {}) is None
 
 
-def test_pinned_ratio_gauge_and_skew_refusal():
-    """VERDICT r9 #3: the pinned sentinel gauge reads pure box skew
-    (trivial untouched plans only) and gates the round-keyed artifact
-    write at PINNED_SKEW_BOUND."""
+def test_pinned_ratio_vs_prev_gauge():
+    """VERDICT r9 #3: the pinned sentinel ratio reads only trivial
+    untouched plans, so heavy entries cannot move it. It is recorded in
+    the artifact and gates no write."""
     import importlib.util
     import os
 
@@ -117,19 +118,8 @@ def test_pinned_ratio_gauge_and_skew_refusal():
     cur = {k: 0.55 for k in pins}
     cur["dedup_ngram_jaccard"] = 40.0
     assert bench.pinned_ratio_vs_prev(prev, cur, {}) == 1.1
-    assert not bench.refuse_round_artifact(1.1)
-    # skewed box: sentinels 1.5x -> refuse
+    # skewed box: sentinels 1.5x
     assert bench.pinned_ratio_vs_prev(prev, {k: 0.75 for k in pins}, {}) == 1.5
-    assert bench.refuse_round_artifact(1.5)
-    assert not bench.refuse_round_artifact(None)  # no prior artifact: stamp
-    assert not bench.refuse_round_artifact(bench.PINNED_SKEW_BOUND)  # bound inclusive
-    # ADVICE r10: a FORCE-stamped baseline (its own gauge recorded at
-    # stamp time) chains into the refusal — a 0.9x gauge against a
-    # baseline stamped at 1.6x is really 1.44x vs the last honest round
-    assert bench.refuse_round_artifact(0.9, 1.6)
-    # and an honest run against an honest baseline is unchanged
-    assert not bench.refuse_round_artifact(0.9, None)
-    assert not bench.refuse_round_artifact(1.1, 1.0)
     # sub-0.15s prior sentinels are timer noise -> excluded -> None
     prev_small = {"queries": {k: 0.01 for k in pins}, "secondary": {}}
     assert bench.pinned_ratio_vs_prev(prev_small, {k: 1.0 for k in pins}, {}) is None
@@ -137,98 +127,6 @@ def test_pinned_ratio_gauge_and_skew_refusal():
     from clean_census_acs_data_spark.queries import QUERIES
 
     assert all(k in QUERIES for k in pins)
-
-
-def test_seal_guard_covers_inferred_round_path():
-    """VERDICT r11 #1: the seal guard must protect an EXISTING
-    round-keyed artifact regardless of whether the round number came
-    from SPARK_GRAFT_ROUND or from inference — the r11 driver bench hit
-    the inference path and overwrote the sealed honest 27.49 s stamp
-    (pinned 1.043) with a 1.19×-hot 37.30 s one. Unforced overwrite is
-    allowed only when the new stamp's effective pinned gauge is no
-    worse (log distance from 1.0) than the sealed stamp's."""
-    import importlib.util
-    import os
-
-    spec = importlib.util.spec_from_file_location(
-        "bench_mod3", os.path.join(os.path.dirname(__file__), "..", "bench.py")
-    )
-    bench = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bench)
-
-    honest = {"pinned_ratio_vs_prev": 1.043}
-    hot = {"pinned_ratio_vs_prev": 1.1885}
-    # the exact r11 incident: hot run against the sealed honest stamp
-    assert not bench.seal_supersede_ok(honest, bench.effective_pinned_gauge(hot))
-    # the recovery direction: honest rerun supersedes a hot stamp
-    assert bench.seal_supersede_ok(hot, bench.effective_pinned_gauge(honest))
-    # r13: a sealed QUIET stamp is final — even an exact-tie rerun is
-    # refused (rerunning the bench must never be improving)
-    assert not bench.seal_supersede_ok(honest, 1.043)
-    # unknown gauges on either side refuse — can't prove better
-    assert not bench.seal_supersede_ok(honest, None)
-    assert not bench.seal_supersede_ok({}, 1.0)
-    assert not bench.seal_supersede_ok({"pinned_ratio_vs_prev": None}, 1.0)
-    # a FORCE-stamped seal compares through its recorded effective gauge
-    forced = {"forced_stamp": True, "forced_stamp_pinned_ratio": 1.6}
-    assert bench.seal_supersede_ok(forced, 1.2)
-    assert not bench.seal_supersede_ok(forced, 1.7)
-    # an honest stamp measured against a forced baseline chains too:
-    # 0.9 × 1.6 = 1.44 effective
-    chained = {"pinned_ratio_vs_prev": 0.9, "ratio_prev_stamp_ratio": 1.6}
-    assert bench.effective_pinned_gauge(chained) == 0.9 * 1.6
-    assert bench.seal_supersede_ok(chained, 1.2)
-    assert not bench.seal_supersede_ok(chained, 1.5)
-    # sub-1.0 sealed gauges are QUIET (the band is one-sided): final
-    fast_box = {"pinned_ratio_vs_prev": 0.85}
-    assert not bench.seal_supersede_ok(fast_box, 1.1)
-    assert not bench.seal_supersede_ok(fast_box, 1.25)
-    # the decision site no longer keys on how the round was derived
-    with open(os.path.join(os.path.dirname(__file__), "..", "bench.py")) as f:
-        src = f.read()
-    assert "env_round.isdigit() and os.path.exists(round_path)" not in src
-    assert "seal_supersede_ok(" in src
-    # r12 review finding: a seal-only FORCE stamp (honest box, no
-    # forced_stamp_pinned_ratio recorded by the r10 rule) must gauge
-    # through its honest pinned chain, not None — otherwise a strictly
-    # better honest rerun is refused forever.
-    seal_only_forced = {"forced_stamp": True, "pinned_ratio_vs_prev": 1.12}
-    assert bench.effective_pinned_gauge(seal_only_forced) == 1.12
-    # ...and 1.12 is inside the quiet band, so the stamp is final (r13)
-    assert not bench.seal_supersede_ok(seal_only_forced, 1.01)
-    assert not bench.seal_supersede_ok(seal_only_forced, 1.3)
-    # ...and chained through a forced baseline like any honest stamp
-    seal_only_chained = {
-        "forced_stamp": True,
-        "pinned_ratio_vs_prev": 1.05,
-        "ratio_prev_stamp_ratio": 1.2,
-    }
-    assert bench.effective_pinned_gauge(seal_only_chained) == 1.05 * 1.2
-    # a forced stamp with NO gauge at all still refuses (can't compare)
-    assert bench.effective_pinned_gauge({"forced_stamp": True}) is None
-    assert not bench.seal_supersede_ok({"forced_stamp": True}, 1.0)
-
-
-def test_seal_guard_refuses_closed_rounds_unconditionally():
-    """r12 review finding: the gauge-only supersede rule regressed the
-    stale-env protection — SPARK_GRAFT_ROUND left at a CLOSED round on
-    a quiet box would relabel current-round-code timings as the old
-    round. Once the driver's BENCH_r{N}.json exists, round N is closed
-    and its BENCH_FULL_r{N} is immutable without FORCE; the gauge
-    contest applies only to same-round re-stamps (the driver's
-    post-close bench runs before BENCH_r{N} lands)."""
-    import os
-
-    with open(os.path.join(os.path.dirname(__file__), "..", "bench.py")) as f:
-        src = f.read()
-    # the identity check exists and wins over the gauge contest
-    assert "round_closed" in src
-    assert 'f"BENCH_r{cur:02d}.json"' in src
-    assert "round_closed or not seal_supersede_ok(" in src
-    # the supersede announcement moved after both guards (no longer
-    # printed before the skew guard can still refuse the write)
-    before_guards = src.index("skew_blocked = refuse_round_artifact")
-    assert "superseding" not in src[:before_guards]
 
 
 def test_teardown_shared_memos_unpersists_and_clears(spark):
@@ -316,74 +214,6 @@ def test_shingle_and_signature_memos_are_shared_and_reap_exempt(spark):
     assert n_sig == n_sh
 
 
-def test_seal_first_quiet_stamp_is_final():
-    """r13 measurement fix (VERDICT r12 'What's wrong #2' / ask #3):
-    the r12 rule let the lowest gauge-normalized total cost win within
-    the quiet band, which made re-running the bench strictly improving
-    — the sealed r12 stamp was the BEST of seven same-code runs
-    spanning 32.3–46.4 s, a biased-low order statistic. Now the FIRST
-    quiet-band stamp is final: no unforced supersede, cost arguments
-    ignored; only a stamp taken on a skewed box (gauge outside the
-    band) may be replaced, by the r11 gauge-distance recovery rule."""
-    import importlib.util
-    import os
-
-    spec = importlib.util.spec_from_file_location(
-        "bench_mod4", os.path.join(os.path.dirname(__file__), "..", "bench.py")
-    )
-    bench = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bench)
-
-    quiet = {
-        "pinned_ratio_vs_prev": 0.9813,
-        "value": 46.434,
-        "secondary_total": 485.9005,
-    }
-    # the r12 min-of-seven mechanism is dead: a cheaper quiet rerun no
-    # longer supersedes a sealed quiet stamp, costs or not
-    assert not bench.seal_supersede_ok(
-        quiet, 0.9468, sealed_cost=532.3345, new_cost=411.5
-    )
-    assert not bench.seal_supersede_ok(quiet, 0.99)
-    assert not bench.seal_supersede_ok(quiet, 1.0)
-    # sub-1.0 sealed gauges count as quiet too (one-sided band)
-    assert not bench.seal_supersede_ok(
-        {"pinned_ratio_vs_prev": 0.857}, 1.0, sealed_cost=500.0, new_cost=300.0
-    )
-    # a sealed stamp OUTSIDE the band is replaceable, but only by a
-    # gauge no further from 1.0 (the r11 recovery rule) — cost cannot
-    # buy a win in either direction
-    skewed = {"pinned_ratio_vs_prev": 1.1885, "value": 40.0, "secondary_total": 400.0}
-    assert bench.seal_supersede_ok(skewed, 1.043)
-    assert bench.seal_supersede_ok(skewed, 1.043, sealed_cost=440.0, new_cost=999.0)
-    assert not bench.seal_supersede_ok(skewed, 1.3, sealed_cost=440.0, new_cost=1.0)
-    # unknown gauges on either side still refuse
-    assert not bench.seal_supersede_ok(skewed, None)
-    assert not bench.seal_supersede_ok({}, 1.0)
-
-
-def test_seal_round_keyed_stamp_requires_canonical_cpus():
-    """r13: the driver's scaling probe re-runs bench at
-    SPARK_GRAFT_CPUS=8; in r12 that post-close 8-core pass hit the
-    round-inference path and occupied BENCH_FULL_r13.json — an 8-core
-    stamp is not a valid 32-core cross-round baseline. bench.py now
-    skips the round-keyed artifact (rolling file only) at any
-    non-canonical core count, exactly like the non-canonical-SF guard,
-    and records the run's cpus in the artifact."""
-    import os
-
-    with open(os.path.join(os.path.dirname(__file__), "..", "bench.py")) as f:
-        src = f.read()
-    assert "CANONICAL_BENCH_CPUS = 32" in src
-    # the guard raises the same skip used by the SF guard, after it
-    sf_guard = src.index("is not the canonical round scale")
-    cpu_guard = src.index("is not the canonical core")
-    assert cpu_guard > sf_guard
-    assert src.count("raise _SkipRoundArtifact") >= 2
-    # the artifact records the core count it was taken at
-    assert '"cpus"' in src
-
-
 def test_round_keyed_stamp_refuses_unparsed_cpus():
     """The canonical-CPU guard refuses the round-keyed write unless
     SPARK_GRAFT_CPUS parses as an integer equal to the canonical count:
@@ -400,3 +230,42 @@ def test_round_keyed_stamp_refuses_unparsed_cpus():
     assert bench.canonical_cpus("32")
     for value in ("8", "8x", " 8", " 32", "", "32.0"):
         assert not bench.canonical_cpus(value), value
+
+
+def _bench_module():
+    import importlib.util
+    import os
+
+    spec = importlib.util.spec_from_file_location(
+        "bench_mod_stamp", os.path.join(os.path.dirname(__file__), "..", "bench.py")
+    )
+    bench = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(bench)
+    return bench
+
+
+@pytest.mark.parametrize(
+    "sf, cpus, files, reason",
+    [
+        (0.001, "32", [], "sf=0.001 is not the canonical round scale"),
+        (0.1, "8", [], "cpus='8' is not the canonical core count"),
+        (0.1, "32", ["BENCH_r07.json"], "round 7 is closed (BENCH_r07.json exists)"),
+        (0.1, "32", ["BENCH_r7.json"], "round 7 is closed (BENCH_r7.json exists)"),
+        (0.1, "32", ["BENCH_FULL_r07.json"], "BENCH_FULL_r07.json already exists"),
+        (0.1, "32", ["BENCH_r06.json", "BENCH_FULL_r06.json"], None),
+    ],
+    ids=["sf", "cpus", "closed-padded", "closed-unpadded", "stamped", "write"],
+)
+def test_round_stamp_refusal(tmp_path, sf, cpus, files, reason):
+    """One rule decides the round-keyed write: refuse a non-canonical SF
+    or core count, a closed round (its BENCH_r{N}.json exists, padded
+    or not) and an existing stamp — the first canonical stamp of
+    an open round is final. Earlier rounds' files do not block round 7."""
+    bench = _bench_module()
+    for name in files:
+        (tmp_path / name).write_text("{}")
+    got = bench.round_stamp_refusal(str(tmp_path), sf, cpus, 7)
+    if reason is None:
+        assert got is None
+    else:
+        assert got is not None and got.startswith(reason), got

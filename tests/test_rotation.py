@@ -400,7 +400,50 @@ def test_duplicate_registration_raises():
             raise AssertionError
 
 
-def test_function_level_reach_and_change_detection():
+def _write_tree(root, files: dict[str, str]) -> None:
+    for rel, text in files.items():
+        path = root / rel
+        path.parent.mkdir(parents=True, exist_ok=True)
+        path.write_text(text)
+
+
+def _fake_package(root) -> dict[str, str]:
+    """A small copy of the package layout under ``root``, where
+    ``q.entry`` reaches ``operators.dedup.fn`` only through the dotted
+    chain of a non-aliased ``import pkg.operators.dedup``; returns its
+    module -> relpath map."""
+    from clean_census_acs_data_spark.rotation import PKG
+
+    _write_tree(root, {
+        f"{PKG}/__init__.py": "",
+        f"{PKG}/operators/__init__.py": "",
+        f"{PKG}/operators/dedup.py": (
+            "def fn(x):\n    return helper(x)\n\n\n"
+            "def helper(x):\n    return x\n"
+        ),
+        f"{PKG}/p.py": (
+            "def plain(x):\n    return x\n\n\n"
+            "def touched(x):\n    return 1\n"
+        ),
+        f"{PKG}/q.py": (
+            "def entry(x):\n"
+            f"    import {PKG}.operators.dedup\n\n"
+            f"    return {PKG}.operators.dedup.fn(x)\n\n\n"
+            "def entry_gone(x):\n"
+            f"    import {PKG}.operators.dedup\n\n"
+            f"    return {PKG}.operators.dedup.gone(x)\n"
+        ),
+    })
+    return {
+        PKG: os.path.join(PKG, "__init__.py"),
+        f"{PKG}.operators": os.path.join(PKG, "operators", "__init__.py"),
+        f"{PKG}.operators.dedup": os.path.join(PKG, "operators", "dedup.py"),
+        f"{PKG}.p": os.path.join(PKG, "p.py"),
+        f"{PKG}.q": os.path.join(PKG, "q.py"),
+    }
+
+
+def test_function_level_reach_and_change_detection(tmp_path):
     """r13 (VERDICT r12 ask #7): the tier-4 window starves without a
     function-level change map — file-granular 'changed since
     attestation' covered 260/396 entries and the prior round's actual
@@ -433,6 +476,76 @@ def test_function_level_reach_and_change_detection():
     # a bogus commit is unreadable -> index None -> callers treat as
     # changed (conservative), never raise
     assert rot._module_index(repo, "0000000", rel) is None
+    # (c) a full dotted chain through a non-aliased `import pkg.sub.mod`
+    #     reaches the def it names and that def's own callees; a chain
+    #     naming no def there depends on the whole module
+    fake_rel = _fake_package(tmp_path)
+    dedup = f"{rot.PKG}.operators.dedup"
+    r = rot._reach(str(tmp_path), f"{rot.PKG}.q", "entry", fake_rel)
+    assert (dedup, "fn") in r and (dedup, "helper") in r
+    r = rot._reach(str(tmp_path), f"{rot.PKG}.q", "entry_gone", fake_rel)
+    assert (dedup, rot._WHOLE_MODULE) in r
+
+
+def test_dotted_chain_change_lands_in_the_precise_tier(tmp_path, monkeypatch):
+    """A def changed since attestation and reached only through
+    ``pkg.operators.dedup.fn(...)`` makes its entry implementation-
+    changed (tier 4a), ahead of an entry whose file merely changed
+    around it (tier 4b) — and edits made after a first rotation_order()
+    call in the same process are seen by the next one."""
+    import subprocess
+
+    from clean_census_acs_data_spark import rotation as rot
+
+    fake_rel = _fake_package(tmp_path)
+    (tmp_path / "CORRECTNESS_r01.json").write_text("{}")
+    git = ["git", "-C", str(tmp_path), "-c", "user.name=t", "-c", "user.email=t@t"]
+    subprocess.run([*git, "init", "-q"], check=True)
+    subprocess.run([*git, "add", "-A"], check=True)
+    subprocess.run([*git, "commit", "-q", "-m", "attested"], check=True)
+    pkg_files = {m: str(tmp_path / rel) for m, rel in fake_rel.items()}
+    closure = {f"{rot.PKG}.q": {f"{rot.PKG}.operators.dedup"}}
+    monkeypatch.setattr(rot, "_module_dep_closure", lambda: (closure, pkg_files))
+    queries = {}
+    for name, mod in (("plain", "p"), ("entry", "q")):
+        path = tmp_path / fake_rel[f"{rot.PKG}.{mod}"]
+        ns = {"__name__": f"{rot.PKG}.{mod}"}
+        exec(compile(path.read_text(), str(path), "exec"), ns)
+        queries[name] = ns[name]
+    latest = {n: {"hash_match": True, "round": 1} for n in queries}
+
+    def order():
+        return rot.rotation_order(["plain", "entry"], set(queries), queries,
+                                  repo=str(tmp_path), latest=latest)
+
+    assert order() == ["plain", "entry"]  # nothing changed: registry order
+    p_path = tmp_path / fake_rel[f"{rot.PKG}.p"]
+    dedup_path = tmp_path / fake_rel[f"{rot.PKG}.operators.dedup"]
+    p_path.write_text(p_path.read_text().replace("return 1", "return 2"))
+    dedup_path.write_text(dedup_path.read_text().replace("helper(x)\n", "helper(x) + 0\n", 1))
+    assert order() == ["entry", "plain"]
+
+
+def test_index_caches_key_on_repo_and_see_worktree_edits(tmp_path):
+    """Two repos sharing a relpath index and reach independently, and a
+    worktree edit made between two rotation_order() calls is seen."""
+    from clean_census_acs_data_spark import rotation as rot
+
+    rel = os.path.join(rot.PKG, "m.py")
+    mod_rel = {f"{rot.PKG}.m": rel}
+    a, b = tmp_path / "a", tmp_path / "b"
+    _write_tree(a, {rel: "def f():\n    return g()\n\n\ndef g():\n    return 1\n"})
+    _write_tree(b, {rel: "def f():\n    return 1\n\n\ndef h():\n    return 2\n"})
+    assert set(rot._module_index(str(a), "WORKTREE", rel)["defs"]) == {"f", "g"}
+    assert set(rot._module_index(str(b), "WORKTREE", rel)["defs"]) == {"f", "h"}
+    node_g = (f"{rot.PKG}.m", "g")
+    assert node_g in rot._reach(str(a), f"{rot.PKG}.m", "f", mod_rel)
+    assert node_g not in rot._reach(str(b), f"{rot.PKG}.m", "f", mod_rel)
+    # b's f now calls h: the next rotation_order() drops the stale
+    # worktree index and reach entries
+    _write_tree(b, {rel: "def f():\n    return h()\n\n\ndef h():\n    return 2\n"})
+    rot.rotation_order([], set(), {}, repo=str(b), latest={})
+    assert (f"{rot.PKG}.m", "h") in rot._reach(str(b), f"{rot.PKG}.m", "f", mod_rel)
 
 
 def test_rotation_precise_tier_fronts_prior_round_rewrites():
