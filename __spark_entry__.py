@@ -38,16 +38,16 @@ def _rotation_order(names: list[str]) -> list[str]:
     rotated never-attested entries into the window; by r10 close every
     entry carried a driver attestation, so from r11 the rotation is
     CHANGE-AWARE (VERDICT r10 ask #3): never-attested / red entries
-    still front, then attested entries whose implementing module
-    changed since the round that attested them (git-diff against the
-    commit that landed that round's artifact), then oldest-attested
-    first. Full tier rules + git fallback:
+    still front, then attested entries whose code fingerprint differs
+    from the one recorded for their newest attested round in
+    ATTESTED_FINGERPRINTS.json, then the rest, oldest-attested first.
+    Full tier rules and the missing-map fallback:
     clean_census_acs_data_spark.rotation.
     """
     from clean_census_acs_data_spark import rotation as _rot
 
     here = os.path.dirname(os.path.abspath(__file__))
-    return _rot.rotation_order(names, _q.ORACLES, _q.QUERIES, repo=here)
+    return _rot.rotation_order(names, _q.ORACLES, repo=here)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -12,6 +12,11 @@ BENCH_FULL.json is the rolling artifact every bench run rewrites in the
 repo root; the round-keyed BENCH_FULL_r{N}.json stamps are the
 committed record, and the newest is chosen by its parsed round number.
 
+Two artifacts measured at different scale factors, or both stamped with
+different CPU counts, are not comparable: the script prints both values
+and exits non-zero before diffing. Stamps without a ``cpus`` field
+(r07-r12) compare on ``sf`` alone.
+
 A query is flagged when it is BOTH ≥0.5 s and ≥40% slower — uniform
 sub-half-second drift across many queries is machine-load smear, not a
 regression (the r6 close saw exactly that pattern and re-ran clean).
@@ -61,6 +66,9 @@ def main(argv: list[str] | None = None) -> None:
     else:
         a_spec, b_spec = args[:2]
     a, b = load(a_spec), load(b_spec)
+    for key in ("sf", "cpus"):
+        if key in a and key in b and a[key] != b[key]:
+            sys.exit(f"bench_diff: {key} differs: {a[key]} ({a_spec}) vs {b[key]} ({b_spec})")
     am, bm = qmap(a), qmap(b)
     print(
         f"headline: {a.get('value')} ({a_spec}) -> {b.get('value')} ({b_spec});"

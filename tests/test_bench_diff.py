@@ -18,10 +18,10 @@ def _bench_diff():
     return mod
 
 
-def _artifact(path, value, queries, secondary=None):
-    path.write_text(
-        json.dumps({"value": value, "queries": queries, "secondary": secondary or {}})
-    )
+def _artifact(path, value, queries, secondary=None, **stamp):
+    path.write_text(json.dumps(
+        {"value": value, "queries": queries, "secondary": secondary or {}, **stamp}
+    ))
     return str(path)
 
 
@@ -50,3 +50,32 @@ def test_no_arguments_diffs_newest_stamp_against_rolling(tmp_path, monkeypatch, 
     assert out.startswith("headline: 10.0 (")
     assert "BENCH_FULL_r10.json) -> 11.0 (" in out
     assert "no per-query regressions" in out
+
+
+def test_refuses_artifacts_from_different_scale_factors(tmp_path, capsys):
+    import pytest
+
+    bd = _bench_diff()
+    a = _artifact(tmp_path / "a.json", 10.0, {"q1": 1.0}, sf=0.1)
+    b = _artifact(tmp_path / "b.json", 1.0, {"q1": 0.1}, sf=0.001)
+    with pytest.raises(SystemExit) as exc:
+        bd.main([a, b])
+    assert exc.value.code not in (0, None)
+    assert "sf differs: 0.1" in str(exc.value) and "0.001" in str(exc.value)
+    assert "headline" not in capsys.readouterr().out
+
+
+def test_refuses_different_cpu_counts_but_not_a_missing_one(tmp_path, capsys):
+    import pytest
+
+    bd = _bench_diff()
+    a = _artifact(tmp_path / "a.json", 10.0, {"q1": 1.0}, sf=0.1, cpus=32)
+    b = _artifact(tmp_path / "b.json", 12.0, {"q1": 1.0}, sf=0.1, cpus=8)
+    with pytest.raises(SystemExit) as exc:
+        bd.main([a, b])
+    assert exc.value.code not in (0, None)
+    assert "cpus differs: 32" in str(exc.value) and "8" in str(exc.value)
+    # stamps r07-r12 carry no cpus field: that side compares on sf alone
+    old = _artifact(tmp_path / "old.json", 9.0, {"q1": 1.0}, sf=0.1)
+    bd.main([old, a])
+    assert capsys.readouterr().out.startswith("headline: 9.0")

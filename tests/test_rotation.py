@@ -236,61 +236,71 @@ def _all_green(rnd: int) -> dict[str, dict]:
     }
 
 
-def test_rotation_fronts_changed_modules(monkeypatch):
-    """VERDICT r10 ask #3: with every entry attested green, entries
-    whose implementing file changed since their attestation round's
-    commit must front the window, ahead of unchanged entries."""
+def _map_rows(latest: dict[str, dict], fps: dict[str, str]) -> dict[str, dict]:
+    """Fingerprint-map rows recording ``fps`` at each entry's latest round."""
+    return {n: {"round": row["round"], "fp": fps.get(n)} for n, row in latest.items()}
+
+
+def _write_map(root, rows: dict[str, dict]) -> None:
     from clean_census_acs_data_spark import rotation as rot
 
+    (root / rot.MAP_FILE).write_text(
+        json.dumps({"python": rot.PYTHON, "entries": rows})
+    )
+
+
+def test_rotation_fronts_changed_modules(tmp_path):
+    """VERDICT r10 ask #3: with every entry attested green, entries
+    whose implementing code changed since their attestation round must
+    front the window, ahead of unchanged entries. Here a copy of the
+    package redefines one operator in operators/components.py."""
+    import shutil
+
     import pytest
+
+    from clean_census_acs_data_spark import rotation as rot
 
     probe = "components_large_star"
     if probe not in QUERIES:
         pytest.skip(f"{probe} left the registry — pick a new probe")
-    probe_file = next(
-        f
-        for f in rot.entry_files(QUERIES)[probe]
-        if f.endswith("operators/components.py")
+    shutil.copytree(
+        os.path.join(REPO, rot.PKG), tmp_path / rot.PKG,
+        ignore=shutil.ignore_patterns("__pycache__"),
     )
-    monkeypatch.setattr(rot, "round_commit", lambda repo, rnd: "deadbeef")
-    monkeypatch.setattr(
-        rot, "changed_since", lambda repo, c: frozenset({probe_file})
+    components = tmp_path / rot.PKG / "operators" / "components.py"
+    components.write_text(
+        components.read_text()
+        + "\n\ndef connected_components_two_phase(*args, **kwargs):\n    return None\n"
     )
-    order = rot.rotation_order(
-        list(QUERIES), ORACLES, QUERIES, latest=_all_green(5)
-    )
+    latest = _all_green(5)
+    before = rot.fingerprints(REPO)
+    _write_map(tmp_path, _map_rows(latest, before))
+    after = rot.fingerprints(str(tmp_path))
+    changed = {n for n in QUERIES if before[n] != after[n]}
+    order = rot.rotation_order(list(QUERIES), ORACLES, repo=str(tmp_path), latest=latest)
     assert sorted(order) == sorted(QUERIES)
-    changed = {
-        n for n, fs in rot.entry_files(QUERIES).items() if probe_file in fs
-    }
-    # every file-closure-changed entry fronts ahead of unchanged ones
-    assert changed and set(order[: len(changed)]) == changed, (
-        "changed-module entries must front"
-    )
-    # r13 refinement: within the changed block, entries whose code
-    # actually REACHES a changed def (function-level analysis) come
-    # before entries that merely share a module-closure file — the
-    # probe calls into operators/components.py directly, so it must
-    # precede any changed-tier entry that does not reach it
-    assert order.index(probe) < len(changed)
+    # the probe calls into the redefined operator; entries that never
+    # reach it stay unchanged, so the tier discriminates
+    assert probe in changed and len(changed) < len(QUERIES)
+    assert set(order[: len(changed)]) == changed, "changed entries must front"
 
 
 def test_rotation_oldest_attested_first_when_nothing_changed(monkeypatch):
-    """With no file changes, attested ORACLE-BACKED entries order
+    """With no code changes, attested ORACLE-BACKED entries order
     oldest-round-first (registry order within a round); rows-only
     entries sort after every oracle-backed one regardless of age
     (VERDICT r11 #3 — re-sampling one can only return no_oracle, so it
     must never occupy a hash-checkable window slot)."""
     from clean_census_acs_data_spark import rotation as rot
 
-    monkeypatch.setattr(rot, "round_commit", lambda repo, rnd: "deadbeef")
-    monkeypatch.setattr(rot, "changed_since", lambda repo, c: frozenset())
     names = list(QUERIES)
     latest = _all_green(5)
     # stamp alternating rounds: odd registry positions attested LATER
     for i, n in enumerate(names):
         latest[n]["round"] = 5 if i % 2 == 0 else 9
-    order = rot.rotation_order(names, ORACLES, QUERIES, latest=latest)
+    rows = _map_rows(latest, rot.fingerprints(REPO))
+    monkeypatch.setattr(rot, "attested_map", lambda repo: rows)
+    order = rot.rotation_order(names, ORACLES, latest=latest)
     oracle_part = [n for n in order if n in ORACLES]
     rows_only_part = [n for n in order if n not in ORACLES]
     assert order == oracle_part + rows_only_part, (
@@ -319,17 +329,13 @@ def test_rotation_rows_only_never_beats_oracle_in_changed_tier(monkeypatch):
     if not rows_only:
         pytest.skip("registry has no rows-only entries")
     probe = rows_only[0]
-    # every implementing file changed -> everything lands in the changed
-    # tier; the rows-only probe is attested far earlier than the rest
-    monkeypatch.setattr(rot, "round_commit", lambda repo, rnd: "deadbeef")
-    monkeypatch.setattr(
-        rot,
-        "changed_since",
-        lambda repo, c: frozenset().union(*rot.entry_files(QUERIES).values()),
-    )
+    # every recorded fingerprint is stale -> everything lands in the
+    # changed tier; the rows-only probe is attested far earlier
     latest = _all_green(9)
     latest[probe]["round"] = 1  # oldest by far
-    order = rot.rotation_order(list(QUERIES), ORACLES, QUERIES, latest=latest)
+    rows = _map_rows(latest, {n: "0" * 40 for n in QUERIES})
+    monkeypatch.setattr(rot, "attested_map", lambda repo: rows)
+    order = rot.rotation_order(list(QUERIES), ORACLES, latest=latest)
     assert sorted(order) == sorted(QUERIES)
     assert order.index(probe) >= len(ORACLES), (
         "a rows-only entry must sort after every oracle-backed entry "
@@ -337,51 +343,71 @@ def test_rotation_rows_only_never_beats_oracle_in_changed_tier(monkeypatch):
     )
 
 
-def test_rotation_survives_git_unavailable(monkeypatch):
-    """Git failure (driver box without git, shallow copy without .git)
-    degrades to oldest-attested-first — never an exception, still a
-    permutation."""
+def test_rotation_survives_missing_fingerprint_map(tmp_path):
+    """No map (a checkout without it), an unreadable one, or one written
+    under another Python minor version degrades to oldest-attested-first
+    — never an exception, still a permutation."""
     from clean_census_acs_data_spark import rotation as rot
 
-    monkeypatch.setattr(rot, "_git", lambda repo, *a: None)
-    rot.clear_caches()
-    try:
-        names = list(QUERIES)
-        latest = _all_green(7)
-        order = rot.rotation_order(names, ORACLES, QUERIES, latest=latest)
-        assert sorted(order) == sorted(QUERIES)
-        # same round everywhere -> registry order, oracle-backed first
-        # (rows-only window slots can only return no_oracle; VERDICT r11 #3)
-        expect = [n for n in names if n in ORACLES] + [
-            n for n in names if n not in ORACLES
-        ]
+    names = list(QUERIES)
+    latest = _all_green(7)
+    # same round everywhere -> registry order, oracle-backed first
+    # (rows-only window slots can only return no_oracle; VERDICT r11 #3)
+    expect = [n for n in names if n in ORACLES] + [
+        n for n in names if n not in ORACLES
+    ]
+    other_python = {"python": "2.7", "entries": _map_rows(latest, {})}
+    for body in (None, "{not json", json.dumps(other_python)):
+        if body is not None:
+            (tmp_path / rot.MAP_FILE).write_text(body)
+        order = rot.rotation_order(names, ORACLES, repo=str(tmp_path), latest=latest)
         assert order == expect
-    finally:
-        rot.clear_caches()
 
 
-def test_entry_files_cover_defining_and_deferred_imports():
-    """The entry->files map must include the defining module AND
-    deferred (function-local) in-package imports, and must exclude hub
-    files shared by more than half the registry (io/session would mark
-    everything changed every round)."""
+def test_queries_order_is_the_same_without_subprocess(monkeypatch):
+    """The rotation reads files only: with every subprocess failing
+    (a driver box without git) queries() returns the same order."""
+    import subprocess
+
+    expect = list(entrymod.queries())
+
+    def _no_processes(*args, **kwargs):
+        raise OSError("no processes")
+
+    monkeypatch.setattr(subprocess, "run", _no_processes)
+    monkeypatch.setattr(subprocess, "Popen", _no_processes)
+    assert list(entrymod.queries()) == expect
+
+
+def test_committed_map_matches_its_round_tree():
+    """The rows of the newest round in ATTESTED_FINGERPRINTS.json equal
+    a fresh stamp of that round's git tree. A driver artifact newer than
+    the map only makes entries "changed" — it never reddens this test."""
+    import importlib.util
+    import subprocess
+
+    import pytest
+
     from clean_census_acs_data_spark import rotation as rot
 
-    files = rot.entry_files(QUERIES)
-    assert set(files) == set(QUERIES)
-    cls = files.get("components_large_star", frozenset())
-    if cls:
-        # deferred import inside the entry body (queries_round18.py:647)
-        assert any(f.endswith("operators/components.py") for f in cls)
-        assert any(f.endswith("queries_round18.py") for f in cls)
-    hub_cut = len(QUERIES) // 2
-    freq: dict[str, int] = {}
-    for fs in files.values():
-        for f in fs:
-            freq[f] = freq.get(f, 0) + 1
-    assert all(c <= hub_cut for c in freq.values())
-    assert not any(f.endswith("/io.py") or f.endswith("/session.py")
-                   for fs in files.values() for f in fs)
+    spec = importlib.util.spec_from_file_location(
+        "stamp_fingerprints", os.path.join(REPO, "scripts", "stamp_fingerprints.py")
+    )
+    stamp = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(stamp)
+    with open(os.path.join(REPO, rot.MAP_FILE)) as f:
+        doc = json.load(f)
+    if doc["python"] != rot.PYTHON:
+        pytest.skip(f"map written under Python {doc['python']}")
+    rnd = max(row["round"] for row in doc["entries"].values())
+    try:
+        commit = stamp.round_commit(REPO, rnd)
+    except (OSError, subprocess.SubprocessError):
+        pytest.skip("git unavailable")
+    if commit is None:
+        pytest.skip(f"no commit added CORRECTNESS_r{rnd:02d}.json")
+    committed = {n: row for n, row in doc["entries"].items() if row["round"] == rnd}
+    assert stamp.round_rows(REPO, rnd, list(committed)) == committed
 
 
 def test_duplicate_registration_raises():
@@ -407,11 +433,12 @@ def _write_tree(root, files: dict[str, str]) -> None:
         path.write_text(text)
 
 
-def _fake_package(root) -> dict[str, str]:
-    """A small copy of the package layout under ``root``, where
-    ``q.entry`` reaches ``operators.dedup.fn`` only through the dotted
-    chain of a non-aliased ``import pkg.operators.dedup``; returns its
-    module -> relpath map."""
+def _fake_package(root) -> None:
+    """A small copy of the package layout under ``root``. Entry ``entry``
+    reaches ``operators.dedup.fn`` and its ``helper`` only through the
+    dotted chain of a function-local ``import pkg.operators.dedup``;
+    ``entry_gone``'s chain names no def there; ``plain`` reaches only
+    itself."""
     from clean_census_acs_data_spark.rotation import PKG
 
     _write_tree(root, {
@@ -422,157 +449,158 @@ def _fake_package(root) -> dict[str, str]:
             "def helper(x):\n    return x\n"
         ),
         f"{PKG}/p.py": (
+            "@register(\"plain\")\n"
             "def plain(x):\n    return x\n\n\n"
             "def touched(x):\n    return 1\n"
         ),
         f"{PKG}/q.py": (
+            "@register(\"entry\")\n"
             "def entry(x):\n"
             f"    import {PKG}.operators.dedup\n\n"
             f"    return {PKG}.operators.dedup.fn(x)\n\n\n"
+            "@register(\"entry_gone\")\n"
             "def entry_gone(x):\n"
             f"    import {PKG}.operators.dedup\n\n"
             f"    return {PKG}.operators.dedup.gone(x)\n"
         ),
     })
-    return {
-        PKG: os.path.join(PKG, "__init__.py"),
-        f"{PKG}.operators": os.path.join(PKG, "operators", "__init__.py"),
-        f"{PKG}.operators.dedup": os.path.join(PKG, "operators", "dedup.py"),
-        f"{PKG}.p": os.path.join(PKG, "p.py"),
-        f"{PKG}.q": os.path.join(PKG, "q.py"),
-    }
+
+
+def _edit(path, old: str, new: str) -> None:
+    text = path.read_text()
+    assert old in text
+    path.write_text(text.replace(old, new, 1))
 
 
 def test_function_level_reach_and_change_detection(tmp_path):
-    """r13 (VERDICT r12 ask #7): the tier-4 window starves without a
-    function-level change map — file-granular 'changed since
-    attestation' covered 260/396 entries and the prior round's actual
-    rewrites never reached the 50-slot window. The static reachability
-    analysis must (a) follow the package's real import idioms to the
-    operator function an entry calls into, and (b) report an entry
-    unchanged when its reached defs are AST-identical at the
-    attestation commit (dump comparison — file moves/comments don't
-    count)."""
-    import os
-
+    """r13 (VERDICT r12 ask #7): file-granular 'changed since
+    attestation' covered 260/396 entries, so the change signal is the
+    defs an entry reaches. The static reachability analysis must (a)
+    follow the package's real import idioms to the operator function an
+    entry calls into, (b) index each def by its AST dump and skip an
+    unparseable module instead of raising, and (c) resolve full dotted
+    chains through a non-aliased ``import pkg.sub.mod``."""
     from clean_census_acs_data_spark import rotation as rot
 
-    _, pkg_files = rot._module_dep_closure()
-    repo = rot._REPO
-    mod_rel = {m: os.path.relpath(p, repo) for m, p in pkg_files.items()}
     # (a) cross-module reach through `from ..operators import dedup as D`
     #     + `D.standard_components(...)` + its internal call chain
-    r = rot._reach(
-        repo, "clean_census_acs_data_spark.queries_ext", "dedup_components", mod_rel
-    )
-    assert ("clean_census_acs_data_spark.operators.components",
-            "connected_components") in r
-    assert ("clean_census_acs_data_spark.operators.dedup",
-            "standard_components") in r
-    # (b) worktree-vs-worktree comparison: identical by construction
-    rel = mod_rel["clean_census_acs_data_spark.operators.components"]
-    idx = rot._module_index(repo, "WORKTREE", rel)
-    assert idx and idx["defs"]["connected_components"]["dump"]
-    # a bogus commit is unreadable -> index None -> callers treat as
-    # changed (conservative), never raise
-    assert rot._module_index(repo, "0000000", rel) is None
-    # (c) a full dotted chain through a non-aliased `import pkg.sub.mod`
-    #     reaches the def it names and that def's own callees; a chain
-    #     naming no def there depends on the whole module
-    fake_rel = _fake_package(tmp_path)
+    index = rot._package_index(rot._REPO)
+    r = rot._reach(index, f"{rot.PKG}.queries_ext", "dedup_components")
+    assert (f"{rot.PKG}.operators.components", "connected_components") in r
+    assert (f"{rot.PKG}.operators.dedup", "standard_components") in r
+    # (b) every reached node is an indexed def with a non-empty dump
+    assert all(index[m]["defs"][n]["dump"] for m, n in r)
+    _fake_package(tmp_path)
+    (tmp_path / rot.PKG / "broken.py").write_text("def broken(:\n")
+    fake = rot._package_index(str(tmp_path))
+    assert f"{rot.PKG}.broken" not in fake and f"{rot.PKG}.q" in fake
+    # (c) a full dotted chain reaches the def it names and that def's
+    #     own callees; a chain naming no def there reaches every def of
+    #     the module
     dedup = f"{rot.PKG}.operators.dedup"
-    r = rot._reach(str(tmp_path), f"{rot.PKG}.q", "entry", fake_rel)
+    r = rot._reach(fake, f"{rot.PKG}.q", "entry")
     assert (dedup, "fn") in r and (dedup, "helper") in r
-    r = rot._reach(str(tmp_path), f"{rot.PKG}.q", "entry_gone", fake_rel)
-    assert (dedup, rot._WHOLE_MODULE) in r
+    r = rot._reach(fake, f"{rot.PKG}.q", "entry_gone")
+    assert {(dedup, "fn"), (dedup, "helper")} <= r
 
 
-def test_dotted_chain_change_lands_in_the_precise_tier(tmp_path, monkeypatch):
+def test_dotted_chain_change_lands_in_the_precise_tier(tmp_path):
     """A def changed since attestation and reached only through
-    ``pkg.operators.dedup.fn(...)`` makes its entry implementation-
-    changed (tier 4a), ahead of an entry whose file merely changed
-    around it (tier 4b) — and edits made after a first rotation_order()
-    call in the same process are seen by the next one."""
-    import subprocess
-
+    ``pkg.operators.dedup.fn(...)`` makes its entry changed, ahead of an
+    entry whose file merely changed around it — and edits made after a
+    first rotation_order() call in the same process are seen by the
+    next one."""
     from clean_census_acs_data_spark import rotation as rot
 
-    fake_rel = _fake_package(tmp_path)
-    (tmp_path / "CORRECTNESS_r01.json").write_text("{}")
-    git = ["git", "-C", str(tmp_path), "-c", "user.name=t", "-c", "user.email=t@t"]
-    subprocess.run([*git, "init", "-q"], check=True)
-    subprocess.run([*git, "add", "-A"], check=True)
-    subprocess.run([*git, "commit", "-q", "-m", "attested"], check=True)
-    pkg_files = {m: str(tmp_path / rel) for m, rel in fake_rel.items()}
-    closure = {f"{rot.PKG}.q": {f"{rot.PKG}.operators.dedup"}}
-    monkeypatch.setattr(rot, "_module_dep_closure", lambda: (closure, pkg_files))
-    queries = {}
-    for name, mod in (("plain", "p"), ("entry", "q")):
-        path = tmp_path / fake_rel[f"{rot.PKG}.{mod}"]
-        ns = {"__name__": f"{rot.PKG}.{mod}"}
-        exec(compile(path.read_text(), str(path), "exec"), ns)
-        queries[name] = ns[name]
-    latest = {n: {"hash_match": True, "round": 1} for n in queries}
+    _fake_package(tmp_path)
+    latest = {n: {"hash_match": True, "round": 1} for n in ("plain", "entry")}
+    _write_map(tmp_path, _map_rows(latest, rot.fingerprints(str(tmp_path))))
 
     def order():
-        return rot.rotation_order(["plain", "entry"], set(queries), queries,
+        return rot.rotation_order(["plain", "entry"], {"plain", "entry"},
                                   repo=str(tmp_path), latest=latest)
 
     assert order() == ["plain", "entry"]  # nothing changed: registry order
-    p_path = tmp_path / fake_rel[f"{rot.PKG}.p"]
-    dedup_path = tmp_path / fake_rel[f"{rot.PKG}.operators.dedup"]
-    p_path.write_text(p_path.read_text().replace("return 1", "return 2"))
-    dedup_path.write_text(dedup_path.read_text().replace("helper(x)\n", "helper(x) + 0\n", 1))
+    _edit(tmp_path / rot.PKG / "p.py", "return 1", "return 2")
+    _edit(tmp_path / rot.PKG / "operators" / "dedup.py", "helper(x)\n", "helper(x) + 0\n")
     assert order() == ["entry", "plain"]
 
 
 def test_index_caches_key_on_repo_and_see_worktree_edits(tmp_path):
     """Two repos sharing a relpath index and reach independently, and a
-    worktree edit made between two rotation_order() calls is seen."""
+    worktree edit made between two calls is seen (nothing is cached)."""
     from clean_census_acs_data_spark import rotation as rot
 
     rel = os.path.join(rot.PKG, "m.py")
-    mod_rel = {f"{rot.PKG}.m": rel}
     a, b = tmp_path / "a", tmp_path / "b"
-    _write_tree(a, {rel: "def f():\n    return g()\n\n\ndef g():\n    return 1\n"})
-    _write_tree(b, {rel: "def f():\n    return 1\n\n\ndef h():\n    return 2\n"})
-    assert set(rot._module_index(str(a), "WORKTREE", rel)["defs"]) == {"f", "g"}
-    assert set(rot._module_index(str(b), "WORKTREE", rel)["defs"]) == {"f", "h"}
+    head = "@register(\"e\")\ndef f():\n"
+    _write_tree(a, {rel: head + "    return g()\n\n\ndef g():\n    return 1\n"})
+    _write_tree(b, {rel: head + "    return 1\n\n\ndef h():\n    return 2\n"})
+    ia, ib = rot._package_index(str(a)), rot._package_index(str(b))
+    assert set(ia[f"{rot.PKG}.m"]["defs"]) == {"f", "g"}
+    assert set(ib[f"{rot.PKG}.m"]["defs"]) == {"f", "h"}
     node_g = (f"{rot.PKG}.m", "g")
-    assert node_g in rot._reach(str(a), f"{rot.PKG}.m", "f", mod_rel)
-    assert node_g not in rot._reach(str(b), f"{rot.PKG}.m", "f", mod_rel)
-    # b's f now calls h: the next rotation_order() drops the stale
-    # worktree index and reach entries
-    _write_tree(b, {rel: "def f():\n    return h()\n\n\ndef h():\n    return 2\n"})
-    rot.rotation_order([], set(), {}, repo=str(b), latest={})
-    assert (f"{rot.PKG}.m", "h") in rot._reach(str(b), f"{rot.PKG}.m", "f", mod_rel)
+    assert node_g in rot._reach(ia, f"{rot.PKG}.m", "f")
+    assert node_g not in rot._reach(ib, f"{rot.PKG}.m", "f")
+    # b's f now calls h: the next pass sees it, and the fingerprint moves
+    before = rot.fingerprints(str(b))["e"]
+    _write_tree(b, {rel: head + "    return h()\n\n\ndef h():\n    return 2\n"})
+    ib = rot._package_index(str(b))
+    assert (f"{rot.PKG}.m", "h") in rot._reach(ib, f"{rot.PKG}.m", "f")
+    assert rot.fingerprints(str(b))["e"] != before
 
 
-def test_rotation_precise_tier_fronts_prior_round_rewrites():
-    """End-to-end on the real git history: entries whose implementation
-    the r12 optimization round actually rewrote (connected-components
-    consumers, the in-row Walsh hodges rewrite) must land in the
-    first-50 driver window, ahead of entries that merely share a
-    registry module with changed code. Expectation DERIVED from the
-    artifacts (the r3/r4 post-close discipline): once the driver
-    attests an entry hash-green in round ≥ 13 — i.e. after the rewrite
-    — it is legitimately demoted and the assertion no longer applies."""
+def test_fingerprint_sees_edits_behind_deferred_imports(tmp_path):
+    """Editing a def that an entry reaches only through a function-local
+    import changes that entry's fingerprint and no other's."""
     from clean_census_acs_data_spark import rotation as rot
 
-    latest = rot.latest_rows()
-    order = entrymod._rotation_order(list(QUERIES))
-    win = set(order[:50])
-    for probe in (
-        "dedup_components",
-        "incremental_components_maintenance",
-        "hodges_lehmann_location",
-        "doremi_domain_weights",
-    ):
-        if probe not in QUERIES:
-            continue
-        row = latest.get(probe)
-        if row is None or not row.get("hash_match"):
-            continue  # re-attest tier owns it — ordering asserted there
-        if row.get("round", 0) >= 13:
-            continue  # attested post-rewrite — demotion is correct
-        assert probe in win, f"{probe} missed the driver window"
+    _fake_package(tmp_path)
+    before = rot.fingerprints(str(tmp_path))
+    assert set(before) == {"plain", "entry", "entry_gone"}
+    _edit(tmp_path / rot.PKG / "operators" / "dedup.py", "    return x\n", "    return -x\n")
+    after = rot.fingerprints(str(tmp_path))
+    assert after["entry"] != before["entry"]
+    assert after["plain"] == before["plain"]
+
+
+def _two_entry_package(root, helper_home: str) -> None:
+    """Entries ``a`` (reaches ``helper`` via a module-level from-import)
+    and ``b`` (reaches nothing else), with ``helper`` in ``helper_home``."""
+    from clean_census_acs_data_spark.rotation import PKG
+
+    _write_tree(root, {
+        f"{PKG}/__init__.py": "",
+        f"{PKG}/{helper_home}.py": "def helper(x):\n    return x + 1\n",
+        f"{PKG}/q.py": (
+            f"from .{helper_home} import helper\n\n\n"
+            "@register(\"a\")\ndef a(x):\n    return helper(x)\n\n\n"
+            "@register(\"b\")\ndef b(x):\n    return x\n"
+        ),
+    })
+
+
+def test_edited_reached_def_moves_entry_from_unchanged_to_changed(tmp_path):
+    """``a`` is attested later than ``b``, so while both are unchanged
+    it sorts second; an edit to the helper it reaches moves it into
+    the changed tier, ahead of ``b``."""
+    from clean_census_acs_data_spark import rotation as rot
+
+    _two_entry_package(tmp_path, "helpers")
+    latest = {"a": {"hash_match": True, "round": 9}, "b": {"hash_match": True, "round": 4}}
+    _write_map(tmp_path, _map_rows(latest, rot.fingerprints(str(tmp_path))))
+    assert rot.rotation_order(["a", "b"], {"a", "b"}, str(tmp_path), latest) == ["b", "a"]
+    _edit(tmp_path / rot.PKG / "helpers.py", "x + 1", "x + 2")
+    assert rot.rotation_order(["a", "b"], {"a", "b"}, str(tmp_path), latest) == ["a", "b"]
+
+
+def test_moving_an_unchanged_def_keeps_the_fingerprint(tmp_path):
+    """Module paths are not hashed: moving ``helper`` to another module
+    (and pointing the import at it) leaves every fingerprint as it was."""
+    from clean_census_acs_data_spark import rotation as rot
+
+    _two_entry_package(tmp_path / "before", "helpers")
+    _two_entry_package(tmp_path / "after", "util")
+    before = rot.fingerprints(str(tmp_path / "before"))
+    after = rot.fingerprints(str(tmp_path / "after"))
+    assert set(before) == {"a", "b"} and after == before
