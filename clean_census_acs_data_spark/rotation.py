@@ -16,9 +16,11 @@ Tiers 1-3 keep registry order. Tiers 4 and 5 sort oracle-backed first
 (a rows-only slot can only return no_oracle), then oldest attestation,
 then registry order.
 
-A fingerprint is the sha1 of the sorted ``ast.dump``s of the top-level
-defs an entry's ``@register`` def statically reaches; module paths are
-not hashed, so moving an unchanged def keeps it. The map is written by
+A fingerprint is the sha1 of the sorted distinct ``ast.dump``s of the
+top-level defs an entry's ``@register`` def statically reaches. Module
+paths are not hashed, neither where a def lives nor the package module a
+def imports from, so moving an unchanged def keeps it. A name a module
+binds by import (a re-export) is followed to the def it names. The map is written by
 ``scripts/stamp_fingerprints.py`` from each round's git tree. A missing
 or unreadable map, or one from another Python minor version (whose
 ``ast.dump`` differs), counts every attested entry as changed.
@@ -96,6 +98,20 @@ def _refs_and_imports(node, package: list[str]) -> tuple[set[str], dict[str, str
     return refs, imports
 
 
+def _blank_package_imports(node, package: list[str]):
+    """``node`` with the module path of every import of a package module
+    blanked, so a def keeps its dump when what it imports moves; the
+    reach walk still follows the import to the def it names."""
+    for sub in ast.walk(node):
+        if isinstance(sub, ast.ImportFrom) and (sub.level or (sub.module or "").startswith(PKG)):
+            sub.module, sub.level = None, 0
+        elif isinstance(sub, ast.Import):
+            for a in sub.names:
+                if a.name.startswith(PKG):
+                    a.name = ""
+    return node
+
+
 def _module_index(src: str, package: list[str]) -> dict:
     """One module's top-level defs/classes/assigns (name -> ``ast.dump``,
     references, local imports), its module-level imports, and its
@@ -105,7 +121,11 @@ def _module_index(src: str, package: list[str]) -> dict:
     entries: dict[str, str] = {}
     for node in ast.parse(src).body:
         if isinstance(node, (ast.Import, ast.ImportFrom)):
-            imports.update(_refs_and_imports(node, package)[1])
+            bound = _refs_and_imports(node, package)[1]
+            imports.update(bound)
+            # a re-exported name is a def whose one reference is its target
+            for name in bound:
+                defs[name] = {"dump": "", "refs": {name}, "imports": {}}
             continue
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
             names = [node.name]
@@ -119,7 +139,7 @@ def _module_index(src: str, package: list[str]) -> dict:
         else:
             continue
         refs, local = _refs_and_imports(node, package)
-        dump = ast.dump(node)
+        dump = ast.dump(_blank_package_imports(node, package))
         for name in names:
             # a name bound twice keeps both statements' dumps
             d = defs.setdefault(name, {"dump": "", "refs": set(), "imports": {}})
@@ -198,7 +218,7 @@ def fingerprints(root: str) -> dict[str, str]:
         out: dict[str, str] = {}
         for mod, idx in index.items():
             for entry, fn in idx["entries"].items():
-                dumps = sorted(index[m]["defs"][n]["dump"] for m, n in _reach(index, mod, fn))
+                dumps = sorted({index[m]["defs"][n]["dump"] for m, n in _reach(index, mod, fn)} - {""})
                 out[entry] = hashlib.sha1("\n".join(dumps).encode()).hexdigest()
         return out
     finally:

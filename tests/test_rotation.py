@@ -604,3 +604,59 @@ def test_moving_an_unchanged_def_keeps_the_fingerprint(tmp_path):
     before = rot.fingerprints(str(tmp_path / "before"))
     after = rot.fingerprints(str(tmp_path / "after"))
     assert set(before) == {"a", "b"} and after == before
+
+
+def test_fingerprint_follows_re_exported_names(tmp_path):
+    """``transforms/__init__.py`` binds ``apply_mapping`` only by import;
+    an edit to the def it re-exports changes the fingerprint of the
+    census pipeline entries that call ``T.apply_mapping``."""
+    import shutil
+
+    from clean_census_acs_data_spark import rotation as rot
+
+    shutil.copytree(
+        os.path.join(REPO, rot.PKG), tmp_path / rot.PKG,
+        ignore=shutil.ignore_patterns("__pycache__"),
+    )
+    before = rot.fingerprints(str(tmp_path))
+    _edit(
+        tmp_path / rot.PKG / "transforms" / "normalize.py",
+        "mapping.get(c, c)) for c in df.columns])",
+        "mapping.get(c, c)) for c in reversed(df.columns)])",
+    )
+    after = rot.fingerprints(str(tmp_path))
+    assert after["census_pipeline_e2e"] != before["census_pipeline_e2e"]
+    assert after["q1_pricing_summary"] == before["q1_pricing_summary"]
+
+
+def _local_import_package(root, helper_home: str, helper_name: str = "helper") -> None:
+    """Entry ``a`` reaches ``helper`` only through a function-local
+    ``from .<helper_home> import ...``."""
+    from clean_census_acs_data_spark.rotation import PKG
+
+    _write_tree(root, {
+        f"{PKG}/__init__.py": "",
+        f"{PKG}/{helper_home}.py": (
+            "def helper(x):\n    return x + 1\n\n\n"
+            "def other(x):\n    return x + 2\n"
+        ),
+        f"{PKG}/q.py": (
+            "@register(\"a\")\ndef a(x):\n"
+            f"    from .{helper_home} import {helper_name}\n\n"
+            f"    return {helper_name}(x)\n"
+        ),
+    })
+
+
+def test_moving_a_def_behind_a_local_import_keeps_the_fingerprint(tmp_path):
+    """The module path of an import inside a def is not hashed: moving
+    the def it imports (and pointing the import at the new module)
+    keeps the fingerprint, while importing a different def changes it."""
+    from clean_census_acs_data_spark import rotation as rot
+
+    _local_import_package(tmp_path / "before", "helpers")
+    _local_import_package(tmp_path / "after", "util")
+    _local_import_package(tmp_path / "other", "helpers", "other")
+    before = rot.fingerprints(str(tmp_path / "before"))
+    assert rot.fingerprints(str(tmp_path / "after")) == before
+    assert rot.fingerprints(str(tmp_path / "other"))["a"] != before["a"]
