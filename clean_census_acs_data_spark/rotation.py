@@ -64,8 +64,11 @@ def latest_rows(repo: str = _REPO) -> dict[str, dict]:
 
 def _refs_and_imports(node, package: list[str]) -> tuple[set[str], dict[str, str]]:
     """All names / dotted attribute chains (``a.b.c``) referenced inside
-    ``node``, and the imports declared inside it (bound name -> target)."""
+    ``node``, and the imports declared inside it (bound name -> target).
+    A name ``node`` binds anywhere inside it (an argument, an assignment
+    target) is a local, not a reference to a module-level name."""
     refs: set[str] = set()
+    local: set[str] = set()
     imports: dict[str, str] = {}
     stack = [node]
     while stack:  # ast.walk, without its two generator layers per node
@@ -77,7 +80,9 @@ def _refs_and_imports(node, package: list[str]) -> tuple[set[str], dict[str, str
             elif isinstance(v, ast.AST):
                 stack.append(v)
         if isinstance(sub, ast.Name):
-            refs.add(sub.id)
+            (refs if isinstance(sub.ctx, ast.Load) else local).add(sub.id)
+        elif isinstance(sub, ast.arg):
+            local.add(sub.arg)
         elif isinstance(sub, ast.Attribute):
             chain = [sub.attr]
             base = sub.value
@@ -95,7 +100,7 @@ def _refs_and_imports(node, package: list[str]) -> tuple[set[str], dict[str, str
             mod = ".".join(base + ([sub.module] if sub.module else []))
             for a in sub.names:
                 imports[a.asname or a.name] = f"{mod}.{a.name}"
-    return refs, imports
+    return {r for r in refs if r.partition(".")[0] not in local}, imports
 
 
 def _blank_package_imports(node, package: list[str]):

@@ -660,3 +660,23 @@ def test_moving_a_def_behind_a_local_import_keeps_the_fingerprint(tmp_path):
     before = rot.fingerprints(str(tmp_path / "before"))
     assert rot.fingerprints(str(tmp_path / "after")) == before
     assert rot.fingerprints(str(tmp_path / "other"))["a"] != before["a"]
+
+
+def test_a_local_name_is_not_a_reference(tmp_path):
+    """A def's own local that shares a module-level name (here an
+    argument and an assignment named ``helper``) does not reach that
+    name: editing ``helper`` leaves the entry's fingerprint alone."""
+    from clean_census_acs_data_spark import rotation as rot
+
+    _write_tree(tmp_path, {
+        f"{rot.PKG}/__init__.py": "",
+        f"{rot.PKG}/helpers.py": "def helper(x):\n    return x + 1\n",
+        f"{rot.PKG}/q.py": (
+            "from .helpers import helper\n\n\n"
+            "@register(\"a\")\ndef a(x):\n    helper = x + 1\n    return helper\n\n\n"
+            "@register(\"b\")\ndef b(helper):\n    return helper\n"
+        ),
+    })
+    before = rot.fingerprints(str(tmp_path))
+    _edit(tmp_path / rot.PKG / "helpers.py", "x + 1", "x + 2")
+    assert rot.fingerprints(str(tmp_path)) == before
