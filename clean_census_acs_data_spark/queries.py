@@ -1,864 +1,39 @@
-"""Oracle-checked query catalog (SURVEY.md §2C) — the driver contract.
+"""The query catalog: importing this module registers every entry.
 
-Every entry in ``QUERIES`` is a callable ``(spark, sf_dir) -> DataFrame``
-with a matching ANSI-SQL oracle in ``ORACLES`` that DuckDB runs on the
-same parquet tables. The driver compares row count + schema +
-order-insensitive value hash, so results must be *bit-deterministic*
-across engines. The discipline (see functions/__init__.py docstring):
+``QUERIES`` and ``ORACLES`` live in ``registry``; each domain module
+below registers its entries into them on import, in the order listed,
+which is the registry order. Each domain module also imports on its
+own.
 
-- Never SUM/AVG raw doubles (summation order differs between engines).
-  Aggregate exact integers (money → cents, integral doubles → long).
-- Derive ratios post-aggregation with a single double division —
-  IEEE-deterministic on identical inputs.
-- Per-row double arithmetic written with identical association order on
-  both sides.
-- Window orderings made total with a unique-key tiebreak so row_number
-  is deterministic.
-- Alias every computed column identically on both sides (driver sorts
-  columns by name before hashing).
-
-Scale notes are inline per query: each states why the plan survives
-100 TB (broadcast vs shuffle choice, pushdown, partial aggregation).
+- ``queries_relational`` — scans, joins, set ops, scalar packs, SQL and
+  Python-API surfaces, layout, formats, CDC and data-quality checks
+- ``queries_tpch`` — the TPC-H planner shapes
+- ``queries_census`` — the paper's pipeline: rename/align/clean and the
+  census ETL end to end
+- ``queries_analytics`` — window functions and business analytics
+- ``queries_sketches`` — mergeable sketches and their audits
+- ``queries_vectors`` — embeddings, ANN, similarity search, retrieval
+  scoring and evaluation
+- ``queries_dedup`` — exact, fuzzy and near-duplicate detection
+- ``queries_corpus`` — training-data curation and multimodal features
+- ``queries_stats`` — estimators and statistical tests
+- ``queries_events`` — event-time series, sessions, intervals
+- ``queries_streaming`` — entries run by Structured Streaming
+- ``queries_text`` — tokenization, language models, text features
+- ``queries_graph`` — graph algorithms over the near-dup pair graph
 """
 
-from __future__ import annotations
-
-from collections.abc import Callable
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-from clean_census_acs_data_spark.io import load_table
-from clean_census_acs_data_spark.session import ensure_engine_conf
-from clean_census_acs_data_spark.functions import cents, as_long
-from clean_census_acs_data_spark import transforms as T
-
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-ORACLES: dict[str, str] = {}
-
-
-def register(name: str, oracle: str | None = None):
-    def deco(fn):
-        # A dict assignment would silently REPLACE an existing entry —
-        # in round 10 a new fusion entry registered under round-10's
-        # rrf_fusion_topk and shadowed a driver-attested operator until
-        # the registry count came up one short. Name collisions are
-        # always a bug here; fail at import time, where the traceback
-        # names the offending module.
-        if name in QUERIES:
-            raise ValueError(
-                f"duplicate query registration: {name!r} is already "
-                f"registered (by {QUERIES[name].__wrapped__.__module__}); "
-                "pick a distinct entry name"
-            )
-
-        def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-            ensure_engine_conf(spark)
-            return fn(spark, sf_dir)
-
-        wrapped.__name__ = name
-        wrapped.__doc__ = fn.__doc__
-        wrapped.__wrapped__ = fn  # expose the defining function
-        QUERIES[name] = wrapped
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return wrapped
-
-    return deco
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
-# ---------------------------------------------------------------------------
-# §2C-8 hash_agg — flagship (TPC-H Q1 shape). SURVEY.md §7 Phase 1.
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "q1_pricing_summary",
-    oracle="""
-    SELECT
-      l_returnflag,
-      l_linestatus,
-      CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT)                     AS sum_qty,
-      CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS BIGINT)  AS sum_base_cents,
-      CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)) AS BIGINT)
-                                                                          AS sum_disc_cents,
-      CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * (1 + l_tax) * 100) AS BIGINT)) AS BIGINT)
-                                                                          AS sum_charge_cents,
-      CAST(SUM(CAST(l_quantity AS BIGINT)) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)
-                                                                          AS avg_qty,
-      COUNT(*)                                                            AS count_order
-    FROM lineitem
-    WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-    GROUP BY l_returnflag, l_linestatus
-    """,
-)
-def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pricing-summary hash aggregate: scan→filter→project→partial agg→
-    final agg. Scale: filter + 7-column projection reach the parquet scan
-    (pushdown); partial aggregation (map-side combine) means the shuffle
-    carries only |groups|×partitions rows — 4 groups, so bytes shuffled
-    are ~zero regardless of input size. Survives 100 TB trivially."""
-    li = _t(spark, sf_dir, "lineitem").where(
-        F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp")
-    )
-    disc = F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount"))
-    charge = disc * (F.lit(1) + F.col("l_tax"))
-    return (
-        li.groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(as_long("l_quantity")).alias("sum_qty"),
-            F.sum(cents("l_extendedprice")).alias("sum_base_cents"),
-            F.sum(F.round(disc * 100).cast("long")).alias("sum_disc_cents"),
-            F.sum(F.round(charge * 100).cast("long")).alias("sum_charge_cents"),
-            (
-                F.sum(as_long("l_quantity")).cast("double")
-                / F.count(F.lit(1)).cast("double")
-            ).alias("avg_qty"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# §2C-1 scan_project_filter (SURVEY.md §2A rows 16-18)
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "scan_project_filter",
-    oracle="""
-    SELECT
-      l_orderkey,
-      l_linenumber,
-      l_quantity,
-      CAST(ROUND(l_extendedprice * 100) AS BIGINT) AS extprice_cents,
-      l_extendedprice * (1 - l_discount)           AS revenue
-    FROM lineitem
-    WHERE l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
-      AND l_shipdate <  TIMESTAMP '1998-01-01 00:00:00'
-      AND l_discount >= CAST(0.05 AS DOUBLE) AND l_discount <= CAST(0.07 AS DOUBLE)
-      AND l_quantity < CAST(24 AS DOUBLE)
-    """,
-)
-def scan_project_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pushdown-friendly scan: predicates and the 6-column projection both
-    reach the parquet reader (PushedFilters / ReadSchema in .explain) —
-    the Spark analog of the reference's source-side get=/for=/in= params
-    (Test_census_tract.py:161-164). Narrow plan, zero shuffles."""
-    li = _t(spark, sf_dir, "lineitem")
-    return (
-        li.where(
-            (F.col("l_shipdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1998-01-01 00:00:00").cast("timestamp"))
-            & (F.col("l_discount") >= 0.05)
-            & (F.col("l_discount") <= 0.07)
-            & (F.col("l_quantity") < 24)
-        )
-        .select(
-            "l_orderkey",
-            "l_linenumber",
-            "l_quantity",
-            cents("l_extendedprice").alias("extprice_cents"),
-            (F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount"))).alias("revenue"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# §2C-2 rename_normalize (SURVEY.md §2A rows 7-8)
-# ---------------------------------------------------------------------------
-
-_PART_MAPPING = {
-    "P_PARTKEY": "partkey",
-    "P_NAME": "part_name",
-    "P_BRAND": "brand",
-    "P_TYPE": "part_type",
-}
-
-
-@register(
-    "rename_normalize",
-    oracle="""
-    SELECT p_partkey AS partkey, p_name AS part_name,
-           p_brand AS brand, p_type AS part_type
-    FROM part
-    """,
-)
-def rename_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """normalize_columns (replace('-','_').upper().strip(),
-    Test_census_tract.py:352) then metadata-driven rename with identity
-    fallback (:354) via the transform library. Pure projection — compiles
-    to a column alias list, zero runtime cost at any scale."""
-    part = _t(spark, sf_dir, "part")
-    renamed = T.apply_mapping(T.normalize_columns(part), _PART_MAPPING)
-    return renamed.select("partkey", "part_name", "brand", "part_type")
-
-
-# ---------------------------------------------------------------------------
-# §2C-3 schema_align_union (SURVEY.md §2A rows 10, 23)
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "schema_align_union",
-    oracle="""
-    SELECT o_orderkey, o_custkey, o_totalprice,
-           CAST(NULL AS VARCHAR) AS o_orderpriority
-    FROM orders WHERE o_orderstatus = 'O'
-    UNION ALL
-    SELECT o_orderkey, o_custkey, CAST(NULL AS DOUBLE) AS o_totalprice,
-           o_orderpriority
-    FROM orders WHERE o_orderstatus = 'F'
-    """,
-)
-def schema_align_union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two heterogeneous projections NULL-filled and name-union'd — the
-    reference's per-chunk align + pd.concat (Test_census_tract.py:171-175,
-    396-398). unionByName is a narrow op: each branch keeps its
-    partitioning, no shuffle at any scale."""
-    orders = _t(spark, sf_dir, "orders")
-    o_open = orders.where(F.col("o_orderstatus") == "O").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    o_done = orders.where(F.col("o_orderstatus") == "F").select(
-        "o_orderkey", "o_custkey", "o_orderpriority"
-    )
-    aligned_open = T.align_schema(
-        o_open, ["o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"]
-    )
-    return T.union_all([aligned_open, o_done]).select(
-        "o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"
-    )
-
-
-# ---------------------------------------------------------------------------
-# §2C-4 cast_clean (SURVEY.md §1.2; COPY EMPTYASNULL/BLANKSASNULL)
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "cast_clean",
-    oracle="""
-    WITH raw AS (
-      SELECT
-        CAST(c_custkey AS VARCHAR) AS custkey_s,
-        CASE WHEN c_custkey % 7 = 0 THEN '  ' ELSE c_mktsegment END AS segment_s,
-        CASE WHEN c_custkey % 11 = 0 THEN '-888888888'
-             ELSE CAST(CAST(ROUND(c_acctbal * 100) AS BIGINT) AS VARCHAR) END AS acctbal_s
-      FROM customer
-    )
-    SELECT
-      CAST(custkey_s AS BIGINT)                                    AS custkey,
-      NULLIF(TRIM(segment_s), '')                                  AS segment,
-      CAST(CASE WHEN TRIM(acctbal_s) IN ('-888888888','-999999999','-666666666','-222222222')
-                THEN NULL ELSE NULLIF(TRIM(acctbal_s), '') END AS BIGINT) AS acctbal_cents
-    FROM raw
-    """,
-)
-def cast_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The typed tier over all-string ingest: blanks → NULL (COPY
-    EMPTYASNULL BLANKSASNULL, Test_census_tract.py:277), ACS sentinel
-    codes → NULL, then explicit casts (SURVEY.md §1.2). The all-string
-    frame is synthesized from `customer` so the oracle sees identical
-    input. Pure row-local projection — scales linearly, no shuffle."""
-    c = _t(spark, sf_dir, "customer")
-    raw = c.select(
-        F.col("c_custkey").cast("string").alias("custkey_s"),
-        F.when(F.col("c_custkey") % 7 == 0, F.lit("  "))
-        .otherwise(F.col("c_mktsegment"))
-        .alias("segment_s"),
-        F.when(F.col("c_custkey") % 11 == 0, F.lit("-888888888"))
-        .otherwise(cents("c_acctbal").cast("string"))
-        .alias("acctbal_s"),
-    )
-    cleaned = T.cast_clean(
-        raw, {"custkey_s": "long", "segment_s": "string", "acctbal_s": "long"}
-    )
-    return cleaned.select(
-        F.col("custkey_s").alias("custkey"),
-        F.col("segment_s").alias("segment"),
-        F.col("acctbal_s").alias("acctbal_cents"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# §2C-5 broadcast_join_dim
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "broadcast_join_dim",
-    oracle="""
-    SELECT r_name, n_name,
-           COUNT(*) AS n_customers,
-           CAST(SUM(CAST(ROUND(c_acctbal * 100) AS BIGINT)) AS BIGINT) AS acctbal_cents
-    FROM customer
-    JOIN nation ON c_nationkey = n_nationkey
-    JOIN region ON n_regionkey = r_regionkey
-    GROUP BY r_name, n_name
-    """,
-)
-def broadcast_join_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-hop dim join, the data-level form of the reference's
-    code→label dict lookup (Test_census_tract.py:354). Both dims are
-    marked broadcast: at 100 TB the customer side streams through
-    map-side hash joins with zero shuffle; only the 25×5-group aggregate
-    shuffles (a few hundred bytes after partial agg)."""
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
-    return (
-        c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .groupBy("r_name", "n_name")
-        .agg(
-            F.count(F.lit(1)).alias("n_customers"),
-            F.sum(cents("c_acctbal")).alias("acctbal_cents"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# §2C-6 sortmerge_join_fact
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "sortmerge_join_fact",
-    oracle="""
-    SELECT o_orderpriority,
-           COUNT(*) AS n_lineitems,
-           CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)) AS BIGINT)
-             AS revenue_cents
-    FROM lineitem
-    JOIN orders ON l_orderkey = o_orderkey
-    WHERE o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
-    GROUP BY o_orderpriority
-    """,
-)
-def sortmerge_join_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fact-fact join on the natural key. `merge` hint pins sort-merge —
-    the right strategy when both sides are large (at 100 TB neither
-    lineitem nor orders broadcasts). The o_orderdate filter prunes orders
-    *before* the shuffle; AQE converts to broadcast at small SFs
-    automatically if the filtered side fits. Co-partitioning note: with
-    both tables bucketed by orderkey this join becomes shuffle-free."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders").where(
-        F.col("o_orderdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp")
-    )
-    rev = F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount"))
-    return (
-        li.join(o.hint("merge"), li.l_orderkey == o.o_orderkey)
-        .groupBy("o_orderpriority")
-        .agg(
-            F.count(F.lit(1)).alias("n_lineitems"),
-            F.sum(F.round(rev * 100).cast("long")).alias("revenue_cents"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# §2C-7 semi / anti joins (SURVEY.md §2A rows 19, 22)
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "semi_join",
-    oracle="""
-    SELECT c_custkey, c_name FROM customer
-    WHERE EXISTS (SELECT 1 FROM orders
-                  WHERE o_custkey = c_custkey AND o_orderstatus = 'O')
-    """,
-)
-def semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Availability semi-join (the reference's requested∩available var
-    filter, Test_census_tract.py:133, as a data op). left_semi never
-    materializes the probe side's payload — at scale the orders side is
-    reduced to its join key before the shuffle."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").where(F.col("o_orderstatus") == "O")
-    return c.join(o, c.c_custkey == o.o_custkey, "left_semi").select("c_custkey", "c_name")
-
-
-@register(
-    "anti_join",
-    oracle="""
-    SELECT c_custkey, c_name FROM customer
-    WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-    """,
-)
-def anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unmapped-detection anti-join (Test_census_tract.py:356-359 as a
-    data op): customers with no orders."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    return c.join(o, c.c_custkey == o.o_custkey, "left_anti").select("c_custkey", "c_name")
-
-
-# ---------------------------------------------------------------------------
-# §2C-8 agg with exact distinct
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "agg_distinct",
-    oracle="""
-    SELECT o_orderpriority,
-           COUNT(*) AS n_orders,
-           COUNT(DISTINCT o_custkey) AS n_customers
-    FROM orders
-    GROUP BY o_orderpriority
-    """,
-)
-def agg_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hash agg with exact COUNT(DISTINCT): Spark plans expand+two-phase
-    aggregation; partial distinct on (priority, custkey) keeps the
-    shuffle proportional to distinct pairs, not input rows."""
-    o = _t(spark, sf_dir, "orders")
-    return o.groupBy("o_orderpriority").agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        F.countDistinct("o_custkey").alias("n_customers"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# §2C-9 rollup / cube
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "rollup_geo",
-    oracle="""
-    SELECT r_name, n_name,
-           CAST(GROUPING(r_name, n_name) AS BIGINT) AS gid,
-           COUNT(*) AS n_customers,
-           CAST(SUM(CAST(ROUND(c_acctbal * 100) AS BIGINT)) AS BIGINT) AS acctbal_cents
-    FROM customer
-    JOIN nation ON c_nationkey = n_nationkey
-    JOIN region ON n_regionkey = r_regionkey
-    GROUP BY ROLLUP (r_name, n_name)
-    """,
-)
-def rollup_geo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Geography-hierarchy totals (region→nation→grand total), the
-    state→county→tract rollup shape from the census domain. Spark plans
-    Expand + single hash agg — one shuffle of |groups|·(levels) rows."""
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
-    joined = c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey).join(
-        F.broadcast(r), n.n_regionkey == r.r_regionkey
-    )
-    return joined.rollup("r_name", "n_name").agg(
-        F.grouping_id().cast("long").alias("gid"),
-        F.count(F.lit(1)).alias("n_customers"),
-        F.sum(cents("c_acctbal")).alias("acctbal_cents"),
-    )
-
-
-@register(
-    "cube_flags",
-    oracle="""
-    SELECT l_returnflag, l_linestatus,
-           CAST(GROUPING(l_returnflag, l_linestatus) AS BIGINT) AS gid,
-           CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty,
-           COUNT(*) AS n_rows
-    FROM lineitem
-    GROUP BY CUBE (l_returnflag, l_linestatus)
-    """,
-)
-def cube_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUBE over the two lineitem flags — all 4 grouping sets in one
-    Expand+agg pass."""
-    li = _t(spark, sf_dir, "lineitem")
-    return li.cube("l_returnflag", "l_linestatus").agg(
-        F.grouping_id().cast("long").alias("gid"),
-        F.sum(as_long("l_quantity")).alias("sum_qty"),
-        F.count(F.lit(1)).alias("n_rows"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# §2C-10 windows
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "window_rank",
-    oracle="""
-    SELECT * FROM (
-      SELECT c_custkey, c_nationkey, c_acctbal,
-             ROW_NUMBER() OVER (PARTITION BY c_nationkey
-                                ORDER BY c_acctbal DESC, c_custkey) AS rn,
-             RANK()       OVER (PARTITION BY c_nationkey
-                                ORDER BY c_acctbal DESC, c_custkey) AS rnk
-      FROM customer
-    ) WHERE rn <= 3
-    """,
-)
-def window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-3 customers by balance within each nation. The window ordering
-    includes the unique custkey tiebreak → row_number is deterministic.
-    One shuffle on the partition key; rank filter applied post-window
-    (Spark 3.5+ pushes rn<=k into a WindowGroupLimit, keeping per-key
-    state at k rows at any scale)."""
-    from pyspark.sql.window import Window
-
-    c = _t(spark, sf_dir, "customer")
-    w = Window.partitionBy("c_nationkey").orderBy(F.desc("c_acctbal"), F.asc("c_custkey"))
-    return (
-        c.select(
-            "c_custkey",
-            "c_nationkey",
-            "c_acctbal",
-            F.row_number().over(w).alias("rn"),
-            F.rank().over(w).alias("rnk"),
-        )
-        .where(F.col("rn") <= 3)
-    )
-
-
-@register(
-    "window_running",
-    oracle="""
-    SELECT o_custkey, o_orderkey, o_orderdate,
-           CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) OVER (
-             PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-           ) AS BIGINT) AS running_cents,
-           CAST(COUNT(*) OVER (
-             PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-           ) AS BIGINT) AS n_orders_so_far
-    FROM orders
-    """,
-)
-def window_running(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Running totals per customer. Summand is exact integer cents so the
-    running sum is order-exact; ordering is total (orderdate, unique
-    orderkey). ROWS frame = O(1) state per row."""
-    from pyspark.sql.window import Window
-
-    o = _t(spark, sf_dir, "orders")
-    w = (
-        Window.partitionBy("o_custkey")
-        .orderBy("o_orderdate", "o_orderkey")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return o.select(
-        "o_custkey",
-        "o_orderkey",
-        "o_orderdate",
-        F.sum(cents("o_totalprice")).over(w).alias("running_cents"),
-        F.count(F.lit(1)).over(w).alias("n_orders_so_far"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# §2C-11 top-k
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "topk_orders",
-    oracle="""
-    SELECT o_orderkey, o_custkey, o_totalprice
-    FROM orders
-    ORDER BY o_totalprice DESC, o_orderkey
-    LIMIT 10
-    """,
-)
-def topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Global top-10 with unique tiebreak. Spark plans
-    TakeOrderedAndProject: each task keeps a k-row heap, driver merges k
-    per partition — no global sort, no full shuffle, at any scale."""
-    o = _t(spark, sf_dir, "orders")
-    return (
-        o.select("o_orderkey", "o_custkey", "o_totalprice")
-        .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
-        .limit(10)
-    )
-
-
-# ---------------------------------------------------------------------------
-# §2C-12 set ops
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "set_intersect",
-    oracle="""
-    SELECT o_custkey FROM orders WHERE o_orderstatus = 'O'
-    INTERSECT
-    SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
-    """,
-)
-def set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Customers with both open and finished orders (set semantics)."""
-    o = _t(spark, sf_dir, "orders")
-    return (
-        o.where(F.col("o_orderstatus") == "O")
-        .select("o_custkey")
-        .intersect(o.where(F.col("o_orderstatus") == "F").select("o_custkey"))
-    )
-
-
-@register(
-    "set_except",
-    oracle="""
-    SELECT o_custkey FROM orders WHERE o_orderstatus = 'O'
-    EXCEPT
-    SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
-    """,
-)
-def set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Customers with open but no finished orders."""
-    o = _t(spark, sf_dir, "orders")
-    return (
-        o.where(F.col("o_orderstatus") == "O")
-        .select("o_custkey")
-        .subtract(o.where(F.col("o_orderstatus") == "F").select("o_custkey"))
-    )
-
-
-@register(
-    "set_ops_all",
-    oracle="""
-    WITH i AS (
-      SELECT o_custkey FROM orders WHERE o_orderstatus = 'O'
-      INTERSECT ALL
-      SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
-    ),
-    e AS (
-      SELECT o_custkey FROM orders WHERE o_orderstatus = 'O'
-      EXCEPT ALL
-      SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
-    )
-    SELECT 'intersect_all' AS op, o_custkey, COUNT(*) AS n FROM i GROUP BY o_custkey
-    UNION ALL
-    SELECT 'except_all' AS op, o_custkey, COUNT(*) AS n FROM e GROUP BY o_custkey
-    """,
-)
-def set_ops_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bag-semantics set ops (INTERSECT ALL / EXCEPT ALL): multiplicity
-    = min / difference of per-side counts, which DISTINCT-flavored set
-    ops destroy. Grouped output keeps the driver hash order-free."""
-    o = _t(spark, sf_dir, "orders")
-    open_k = o.where(F.col("o_orderstatus") == "O").select("o_custkey")
-    fin_k = o.where(F.col("o_orderstatus") == "F").select("o_custkey")
-    i = open_k.intersectAll(fin_k).groupBy("o_custkey").agg(F.count(F.lit(1)).alias("n"))
-    e = open_k.exceptAll(fin_k).groupBy("o_custkey").agg(F.count(F.lit(1)).alias("n"))
-    return i.select(F.lit("intersect_all").alias("op"), "o_custkey", "n").unionByName(
-        e.select(F.lit("except_all").alias("op"), "o_custkey", "n")
-    )
-
-
-# ---------------------------------------------------------------------------
-# §2C-13 scalar packs (SURVEY.md §2A rows 24-32)
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "string_scalars",
-    oracle="""
-    SELECT p_partkey,
-           UPPER(p_name)                          AS name_upper,
-           TRIM(p_brand)                          AS brand_trim,
-           REPLACE(p_type, ' ', '_')              AS type_underscored,
-           LPAD(CAST(p_size AS VARCHAR), 3, '0')  AS size_padded,
-           SUBSTRING(p_name, 1, 10)               AS name_prefix,
-           CONCAT_WS(',', p_brand, p_type)        AS brand_type,
-           CAST(LENGTH(p_name) AS BIGINT)         AS name_len
-    FROM part
-    """,
-)
-def string_scalars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reference's string-scalar surface (upper/trim/replace/
-    zero-pad/substring/join-with-delimiter, rows 24-28, 32) as one
-    projection. All JVM built-ins inside whole-stage codegen."""
-    p = _t(spark, sf_dir, "part")
-    return p.select(
-        "p_partkey",
-        F.upper("p_name").alias("name_upper"),
-        F.trim("p_brand").alias("brand_trim"),
-        F.translate(F.col("p_type"), " ", "_").alias("type_underscored"),
-        F.lpad(F.col("p_size").cast("string"), 3, "0").alias("size_padded"),
-        F.substring("p_name", 1, 10).alias("name_prefix"),
-        F.concat_ws(",", "p_brand", "p_type").alias("brand_type"),
-        F.length("p_name").cast("long").alias("name_len"),
-    )
-
-
-@register(
-    "date_scalars",
-    oracle="""
-    SELECT o_orderkey,
-           CAST(YEAR(o_orderdate) AS INTEGER)    AS order_year,
-           CAST(MONTH(o_orderdate) AS INTEGER)   AS order_month,
-           CAST(DAY(o_orderdate) AS INTEGER)     AS order_day,
-           CAST(QUARTER(o_orderdate) AS INTEGER) AS order_quarter,
-           DATE_TRUNC('month', o_orderdate)      AS month_start,
-           o_orderdate + INTERVAL 30 DAY         AS due_ts
-    FROM orders
-    """,
-)
-def date_scalars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Date/timestamp scalar pack (reference rows 30-31 analog).
-    Session timezone is pinned to UTC (ensure_engine_conf) so extraction
-    matches the oracle's naive-timestamp semantics."""
-    o = _t(spark, sf_dir, "orders")
-    return o.select(
-        "o_orderkey",
-        F.year("o_orderdate").alias("order_year"),
-        F.month("o_orderdate").alias("order_month"),
-        F.dayofmonth("o_orderdate").alias("order_day"),
-        F.quarter("o_orderdate").alias("order_quarter"),
-        F.date_trunc("month", F.col("o_orderdate")).alias("month_start"),
-        (F.col("o_orderdate") + F.expr("INTERVAL 30 DAYS")).alias("due_ts"),
-    )
-
-
-@register(
-    "json_scalars",
-    oracle="""
-    SELECT event_id, event_type,
-           CAST(json_extract_string(props, '$.k') AS BIGINT) AS k_val
-    FROM events
-    """,
-)
-def json_scalars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JSON extraction from the events props column (the reference's
-    json.dumps audit columns, row 29, in reverse)."""
-    e = _t(spark, sf_dir, "events")
-    return e.select(
-        "event_id",
-        "event_type",
-        F.get_json_object("props", "$.k").cast("long").alias("k_val"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# extension tier: dedup + text (SURVEY.md §2C-14)
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "dedup_exact",
-    oracle="""
-    SELECT MIN(doc_id) AS doc_id, COUNT(*) AS n_copies
-    FROM documents
-    GROUP BY text
-    """,
-)
-def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact dedup as a deterministic group-by (keep lowest doc_id per
-    identical text) rather than dropDuplicates, whose surviving row is
-    nondeterministic. Groups on the (sha2, text) PAIR — bodies do ride
-    the shuffle, bounded by map-side partial agg (see
-    operators.dedup.exact_dedup); the hash-only-shuffle variant is
-    dedup_exact_hash_rejoin."""
-    from clean_census_acs_data_spark.operators.dedup import exact_dedup
-
-    d = _t(spark, sf_dir, "documents")
-    return exact_dedup(d, text_col="text", id_col="doc_id").select("doc_id", "n_copies")
-
-
-@register(
-    "text_stats",
-    oracle="""
-    SELECT doc_id,
-           CAST(LENGTH(text) AS BIGINT)                             AS n_chars,
-           CAST(LEN(STRING_SPLIT(text, ' ')) AS BIGINT)             AS n_tokens,
-           CAST(LEN(LIST_DISTINCT(STRING_SPLIT(text, ' '))) AS BIGINT) AS n_unique_tokens,
-           CAST(LEN(LIST_DISTINCT(STRING_SPLIT(text, ' '))) AS DOUBLE)
-             / CAST(LEN(STRING_SPLIT(text, ' ')) AS DOUBLE)         AS type_token_ratio
-    FROM documents
-    """,
-)
-def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document token statistics: whitespace tokenization, distinct
-    counts, type-token ratio (single deterministic division). Row-local →
-    embarrassingly parallel at any scale."""
-    d = _t(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ")
-    n_tok = F.size(toks).cast("long")
-    n_uniq = F.size(F.array_distinct(toks)).cast("long")
-    return d.select(
-        "doc_id",
-        F.length("text").cast("long").alias("n_chars"),
-        n_tok.alias("n_tokens"),
-        n_uniq.alias("n_unique_tokens"),
-        (n_uniq.cast("double") / n_tok.cast("double")).alias("type_token_ratio"),
-    )
-
-
-# extension-tier queries register themselves into QUERIES/ORACLES on import
-from clean_census_acs_data_spark import queries_ext  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_windows  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_census  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_multimodal  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_scale  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_breadth  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_analytics  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_round2  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_tpch  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_corpus  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_round3  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_round3c  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_round4  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_round5  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_round5b  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_round5c  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_round5d  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_round5e  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_round5f  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_round6  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_round6b  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_round6c  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_round7  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_round7b  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_round7c  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_round7d  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_round7e  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_round7f  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_round8  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_round8b  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_round8c  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_round8d  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_round8e  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_round8f  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_round9  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_round10  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_round11  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_round12  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_round12b  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_round12c  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_round12d  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_round12e  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_round12f  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_round12g  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_round12h  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_round12i  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_round12j  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_round12k  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_round12l  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_round12m  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_round13  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_round14  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_round15  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_round16  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_round17  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_round18  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_round19  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_round19b  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_round19c  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_round19d  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_round20  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_round20b  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_round20c  # noqa: E402,F401
-from clean_census_acs_data_spark import queries_round20d  # noqa: E402,F401
+from clean_census_acs_data_spark.registry import ORACLES, QUERIES  # noqa: F401
+from clean_census_acs_data_spark import queries_relational  # noqa: F401
+from clean_census_acs_data_spark import queries_tpch  # noqa: F401
+from clean_census_acs_data_spark import queries_census  # noqa: F401
+from clean_census_acs_data_spark import queries_analytics  # noqa: F401
+from clean_census_acs_data_spark import queries_sketches  # noqa: F401
+from clean_census_acs_data_spark import queries_vectors  # noqa: F401
+from clean_census_acs_data_spark import queries_dedup  # noqa: F401
+from clean_census_acs_data_spark import queries_corpus  # noqa: F401
+from clean_census_acs_data_spark import queries_stats  # noqa: F401
+from clean_census_acs_data_spark import queries_events  # noqa: F401
+from clean_census_acs_data_spark import queries_streaming  # noqa: F401
+from clean_census_acs_data_spark import queries_text  # noqa: F401
+from clean_census_acs_data_spark import queries_graph  # noqa: F401

@@ -1,11 +1,14 @@
-"""Advanced-analytics tier: offset/distribution window functions,
-exact moments (variance/stddev) from integer sums, arg-min/max and
-conditional aggregates, ordered string aggregation, extended date
-arithmetic, exact interpolated percentiles.
+"""Windows and business analytics: ranking, running, offset,
+distribution and range-frame windows, windowed distinct counts, funnels,
+retention, attribution, conversion, market-basket affinity,
+concentration, apportionment and period-over-period reporting.
 
-Determinism notes per query; the recurring trick is the one from
-queries.py — do all accumulation in exact integer/decimal space and
-spend at most one double division/sqrt at the very end.
+The recurring trick: do all accumulation in exact integer/decimal space
+and spend at most one double division at the very end. COUNT(DISTINCT)
+over a frame is unsupported by engines generally:
+``window_distinct_rolling`` uses a frame-local array_distinct, and the
+suffix and sliding variants use two-phase rewrites (last-occurrence
+flags, ±1 interval deltas) that run as plain windows.
 """
 
 from __future__ import annotations
@@ -15,12 +18,83 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from clean_census_acs_data_spark.functions import cents
-from clean_census_acs_data_spark.io import load_table
-from clean_census_acs_data_spark.queries import register
+from clean_census_acs_data_spark.registry import _t, register
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
+# ---------------------------------------------------------------------------
+# §2C-10 windows
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "window_rank",
+    oracle="""
+    SELECT * FROM (
+      SELECT c_custkey, c_nationkey, c_acctbal,
+             ROW_NUMBER() OVER (PARTITION BY c_nationkey
+                                ORDER BY c_acctbal DESC, c_custkey) AS rn,
+             RANK()       OVER (PARTITION BY c_nationkey
+                                ORDER BY c_acctbal DESC, c_custkey) AS rnk
+      FROM customer
+    ) WHERE rn <= 3
+    """,
+)
+def window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-3 customers by balance within each nation. The window ordering
+    includes the unique custkey tiebreak → row_number is deterministic.
+    One shuffle on the partition key; rank filter applied post-window
+    (Spark 3.5+ pushes rn<=k into a WindowGroupLimit, keeping per-key
+    state at k rows at any scale)."""
+    from pyspark.sql.window import Window
+
+    c = _t(spark, sf_dir, "customer")
+    w = Window.partitionBy("c_nationkey").orderBy(F.desc("c_acctbal"), F.asc("c_custkey"))
+    return (
+        c.select(
+            "c_custkey",
+            "c_nationkey",
+            "c_acctbal",
+            F.row_number().over(w).alias("rn"),
+            F.rank().over(w).alias("rnk"),
+        )
+        .where(F.col("rn") <= 3)
+    )
+
+
+@register(
+    "window_running",
+    oracle="""
+    SELECT o_custkey, o_orderkey, o_orderdate,
+           CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) OVER (
+             PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
+             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+           ) AS BIGINT) AS running_cents,
+           CAST(COUNT(*) OVER (
+             PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
+             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+           ) AS BIGINT) AS n_orders_so_far
+    FROM orders
+    """,
+)
+def window_running(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Running totals per customer. Summand is exact integer cents so the
+    running sum is order-exact; ordering is total (orderdate, unique
+    orderkey). ROWS frame = O(1) state per row."""
+    from pyspark.sql.window import Window
+
+    o = _t(spark, sf_dir, "orders")
+    w = (
+        Window.partitionBy("o_custkey")
+        .orderBy("o_orderdate", "o_orderkey")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return o.select(
+        "o_custkey",
+        "o_orderkey",
+        "o_orderdate",
+        F.sum(cents("o_totalprice")).over(w).alias("running_cents"),
+        F.count(F.lit(1)).over(w).alias("n_orders_so_far"),
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -101,172 +175,6 @@ def window_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# exact moments: variance / stddev from integer power sums
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "stats_moments",
-    oracle="""
-    WITH s AS (
-      SELECT o_orderpriority,
-             COUNT(*) AS n,
-             SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS s1,
-             SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)
-                 * CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS s2
-      FROM orders GROUP BY o_orderpriority
-    )
-    SELECT o_orderpriority,
-           n,
-           CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE)                      AS mean_cents,
-           CAST(n * s2 - s1 * s1 AS DOUBLE) / CAST(n * n AS DOUBLE)    AS var_pop,
-           SQRT(CAST(n * s2 - s1 * s1 AS DOUBLE) / CAST(n * n AS DOUBLE)) AS std_pop
-    FROM s
-    """,
-)
-def stats_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Population variance/stddev computed from exact integer power
-    sums (n, Σx, Σx²) instead of the engines' streaming Welford
-    aggregates (whose intermediate rounding is engine-specific and NOT
-    bit-portable). n·s2 − s1² stays in 128-bit exact space (decimal in
-    Spark, hugeint in DuckDB); one double division + one sqrt at the
-    end. Same single-shuffle partial-agg shape as any groupBy."""
-    o = _t(spark, sf_dir, "orders")
-    c = cents("o_totalprice")
-    dec = "decimal(38,0)"
-    s = o.groupBy("o_orderpriority").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(c.cast(dec)).alias("s1"),
-        F.sum((c * c).cast(dec)).alias("s2"),
-    )
-    num = (F.col("n").cast(dec) * F.col("s2") - F.col("s1") * F.col("s1")).cast("double")
-    den = (F.col("n") * F.col("n")).cast("double")
-    return s.select(
-        "o_orderpriority",
-        "n",
-        (F.col("s1").cast("double") / F.col("n").cast("double")).alias("mean_cents"),
-        (num / den).alias("var_pop"),
-        F.sqrt(num / den).alias("std_pop"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# arg-max / conditional / boolean aggregates
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "agg_argmax_conditional",
-    oracle="""
-    SELECT o_orderpriority,
-           arg_max(o_orderkey,
-                   CAST(ROUND(o_totalprice * 100) AS BIGINT) * 10000000 + o_orderkey)
-             AS biggest_order,
-           arg_min(o_orderkey,
-                   CAST(ROUND(o_totalprice * 100) AS BIGINT) * 10000000 + o_orderkey)
-             AS smallest_order,
-           COUNT(*) FILTER (WHERE o_orderstatus = 'F') AS n_finished,
-           bool_and(o_totalprice > 0)                  AS all_positive,
-           bool_or(o_orderstatus = 'P')                AS any_pending
-    FROM orders
-    GROUP BY o_orderpriority
-    """,
-)
-def agg_argmax_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """max_by/min_by (arg-max), filtered count, and boolean aggregates.
-    The arg-max comparand is made *unique* (cents·10^7 + orderkey) —
-    plain max_by on a tied value is free to return either row on
-    either engine, so determinism requires a total comparand. All are
-    partial-aggregable: one shuffle of |groups| rows."""
-    o = _t(spark, sf_dir, "orders")
-    comparand = cents("o_totalprice") * F.lit(10_000_000) + F.col("o_orderkey")
-    return o.groupBy("o_orderpriority").agg(
-        F.max_by("o_orderkey", comparand).alias("biggest_order"),
-        F.min_by("o_orderkey", comparand).alias("smallest_order"),
-        F.count_if(F.col("o_orderstatus") == "F").alias("n_finished"),
-        F.every(F.col("o_totalprice") > 0).alias("all_positive"),
-        F.some(F.col("o_orderstatus") == "P").alias("any_pending"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# ordered string aggregation
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "string_agg_sorted",
-    oracle="""
-    SELECT n_name,
-           string_agg(c_name, ',' ORDER BY c_name) AS customer_csv,
-           COUNT(*) AS n_sampled
-    FROM customer JOIN nation ON c_nationkey = n_nationkey
-    WHERE c_custkey % 199 = 0
-    GROUP BY n_name
-    """,
-)
-def string_agg_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered string_agg: collect_list is unordered in a distributed
-    engine (assembly order = task completion order), so determinism
-    requires an explicit array_sort before joining. The sampled filter
-    bounds the aggregated string; at scale an unbounded string agg is
-    an anti-pattern (collect the top-k instead)."""
-    c = _t(spark, sf_dir, "customer").where(F.col("c_custkey") % 199 == 0)
-    n = _t(spark, sf_dir, "nation")
-    return (
-        c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy("n_name")
-        .agg(
-            F.array_join(F.array_sort(F.collect_list("c_name")), ",").alias("customer_csv"),
-            F.count(F.lit(1)).alias("n_sampled"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# extended date arithmetic
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "date_arithmetic",
-    oracle="""
-    SELECT o_orderkey,
-           CAST(CAST(o_orderdate AS DATE) + 90 AS TIMESTAMP)   AS due_ts,
-           CAST(last_day(CAST(o_orderdate AS DATE)) AS TIMESTAMP) AS month_end_ts,
-           CAST(date_diff('day', CAST(o_orderdate AS DATE), DATE '1999-01-01') AS INTEGER)
-                                                               AS days_to_1999,
-           CAST(dayofweek(CAST(o_orderdate AS DATE)) AS INTEGER) AS dow_sunday0,
-           CAST(weekofyear(CAST(o_orderdate AS DATE)) AS INTEGER) AS iso_week,
-           CAST(make_date(2000, CAST(MONTH(o_orderdate) AS INTEGER), 1) AS TIMESTAMP)
-                                                               AS anchor_month_ts
-    FROM orders WHERE o_orderkey % 37 = 0
-    """,
-)
-def date_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Extended date pack: day offsets, month boundaries, day-of-week
-    (normalized to Sunday=0 on both engines — Spark's dayofweek is
-    1-based, DuckDB's is 0-based), ISO week, date construction. Date
-    results are surfaced as timestamps on both sides: DuckDB's
-    pandas bridge is inconsistent about DATE (object vs datetime64
-    per function), so the comparable type is TIMESTAMP. All codegen'd
-    integer calendar math."""
-    o = _t(spark, sf_dir, "orders").where(F.col("o_orderkey") % 37 == 0)
-    d = F.col("o_orderdate").cast("date")
-    return o.select(
-        "o_orderkey",
-        F.date_add(d, 90).cast("timestamp").alias("due_ts"),
-        F.last_day(d).cast("timestamp").alias("month_end_ts"),
-        F.datediff(F.lit("1999-01-01").cast("date"), d).alias("days_to_1999"),
-        (F.dayofweek(d) - 1).alias("dow_sunday0"),
-        F.weekofyear(d).alias("iso_week"),
-        F.make_date(F.lit(2000), F.month(d), F.lit(1))
-        .cast("timestamp")
-        .alias("anchor_month_ts"),
-    )
-
-
-# ---------------------------------------------------------------------------
 # range-frame window: trailing 7-day sum
 # ---------------------------------------------------------------------------
 
@@ -334,341 +242,1563 @@ def histogram_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# time-series: hourly resample + gap fill + forward fill
+# funnel conversion (view → click → purchase)
 # ---------------------------------------------------------------------------
 
 
 @register(
-    "gap_fill_forward",
+    "event_funnel_conversion",
     oracle="""
-    WITH ev AS (SELECT * FROM events WHERE user_id < 5),
-    hourly AS (
-      SELECT user_id, date_trunc('hour', ts) AS h,
-             SUM(CAST(ROUND(value * 100) AS BIGINT)) AS cents,
-             COUNT(*) AS n_events
-      FROM ev GROUP BY user_id, date_trunc('hour', ts)
-    ),
-    spine_hours AS (
-      SELECT unnest(generate_series(
-        (SELECT date_trunc('hour', MIN(ts)) FROM ev),
-        (SELECT date_trunc('hour', MAX(ts)) FROM ev),
-        INTERVAL 1 HOUR)) AS h
-    ),
-    spine AS (
-      SELECT u.user_id, s.h
-      FROM (SELECT DISTINCT user_id FROM ev) u, spine_hours s
+    WITH per_user AS (
+      SELECT user_id,
+             MIN(CASE WHEN event_type = 'view'     THEN ts END) AS t_view,
+             MIN(CASE WHEN event_type = 'click'    THEN ts END) AS t_click,
+             MIN(CASE WHEN event_type = 'purchase' THEN ts END) AS t_purchase
+      FROM events GROUP BY user_id
     )
-    SELECT spine.user_id, spine.h,
-           COALESCE(hourly.n_events, 0) AS n_events,
-           last_value(hourly.cents IGNORE NULLS) OVER (
-             PARTITION BY spine.user_id ORDER BY spine.h
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-           ) AS filled_cents
-    FROM spine LEFT JOIN hourly
-      ON spine.user_id = hourly.user_id AND spine.h = hourly.h
+    SELECT
+      COUNT(*) FILTER (WHERE t_view IS NOT NULL) AS n_view,
+      COUNT(*) FILTER (WHERE t_view IS NOT NULL AND t_click > t_view)
+        AS n_click_after_view,
+      COUNT(*) FILTER (WHERE t_view IS NOT NULL AND t_click > t_view
+                       AND t_purchase > t_click) AS n_purchase_after_click
+    FROM per_user
     """,
 )
-def gap_fill_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-series resample: bucket events hourly, build the dense
-    user×hour spine (sequence + explode — the hypertable-rollup shape),
-    left-join observations, forward-fill gaps with
-    last(ignorenulls) over an ordered frame. The spine cross join is
-    |users|·|hours| rows *by definition of the output* — at scale the
-    spine generates per-partition (explode of a per-user sequence),
-    never a shuffled cartesian; the only shuffle is the final window by
-    user."""
-    ev = _t(spark, sf_dir, "events").where(F.col("user_id") < 5)
-    hourly = ev.groupBy(
-        "user_id", F.date_trunc("hour", "ts").alias("h")
-    ).agg(
-        F.sum(cents("value")).alias("cents"),
-        F.count(F.lit(1)).alias("n_events"),
+def event_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Ordered funnel: users whose first view precedes their first
+    click precedes their first purchase. One conditional-min aggregate
+    per user (single shuffle, |users| rows), then a 1-row count
+    rollup — the standard product-analytics funnel without any
+    self-join explosion."""
+    ev = _t(spark, sf_dir, "events")
+    per_user = ev.groupBy("user_id").agg(
+        F.min(F.when(F.col("event_type") == "view", F.col("ts"))).alias("t_view"),
+        F.min(F.when(F.col("event_type") == "click", F.col("ts"))).alias("t_click"),
+        F.min(F.when(F.col("event_type") == "purchase", F.col("ts"))).alias(
+            "t_purchase"
+        ),
     )
-    bounds = ev.agg(
-        F.date_trunc("hour", F.min("ts")).alias("lo"),
-        F.date_trunc("hour", F.max("ts")).alias("hi"),
+    stage2 = F.col("t_view").isNotNull() & (F.col("t_click") > F.col("t_view"))
+    stage3 = stage2 & (F.col("t_purchase") > F.col("t_click"))
+    return per_user.agg(
+        F.count(F.when(F.col("t_view").isNotNull(), 1)).alias("n_view"),
+        F.count(F.when(stage2, 1)).alias("n_click_after_view"),
+        F.count(F.when(stage3, 1)).alias("n_purchase_after_click"),
     )
-    # per-user spine: explode a per-row sequence — a Generate, not a
-    # shuffled cartesian (each user row expands locally)
-    users = ev.select("user_id").distinct()
-    spine = (
-        users.join(F.broadcast(bounds))
+
+
+# ---------------------------------------------------------------------------
+# retention cohorts (weekly)
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "retention_cohorts",
+    oracle="""
+    WITH firsts AS (
+      SELECT user_id, MIN(CAST(ts AS DATE)) AS first_day FROM events GROUP BY user_id
+    )
+    SELECT CAST(first_day AS TIMESTAMP) AS cohort_day,
+           CAST(FLOOR(date_diff('day', first_day, CAST(ts AS DATE)) / 7) AS BIGINT)
+             AS week_offset,
+           COUNT(DISTINCT e.user_id) AS n_active_users
+    FROM events e JOIN firsts f ON e.user_id = f.user_id
+    GROUP BY cohort_day, week_offset
+    """,
+)
+def retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Weekly retention triangle: users grouped by first-seen day,
+    counted distinct per (cohort day, weeks since). The firsts
+    aggregate shrinks to |users| before the join back (broadcast-able
+    for realistic user counts vs event counts); integer day arithmetic
+    only — no timezone-sensitive week truncation. Cohort day emitted
+    as timestamp: Spark DATE surfaces in pandas as Python date objects
+    while DuckDB DATE arrives as datetime64, so a raw date column
+    would type-mismatch in the driver hash."""
+    ev = _t(spark, sf_dir, "events").select(
+        "user_id", F.col("ts").cast("date").alias("day")
+    )
+    firsts = ev.groupBy("user_id").agg(F.min("day").alias("first_day"))
+    return (
+        ev.join(firsts, "user_id")
         .select(
             "user_id",
-            F.explode(F.sequence("lo", "hi", F.expr("INTERVAL 1 HOUR"))).alias("h"),
+            F.col("first_day").cast("timestamp").alias("cohort_day"),
+            F.floor(F.datediff("day", "first_day") / 7).cast("long").alias("week_offset"),
         )
+        .groupBy("cohort_day", "week_offset")
+        .agg(F.count_distinct("user_id").alias("n_active_users"))
+    )
+
+
+# ---------------------------------------------------------------------------
+# per-user RFM features
+# ---------------------------------------------------------------------------
+
+_RFM_ORACLE = """
+SELECT user_id,
+       COUNT(*) AS frequency,
+       MAX(ts) AS last_ts,
+       CAST(SUM(CAST(ROUND(value * 100) AS BIGINT)) AS BIGINT) AS monetary_cents,
+       CAST(COUNT(DISTINCT event_type) AS BIGINT) AS n_event_types
+FROM events GROUP BY user_id
+"""
+
+
+@register("user_rfm_features", oracle=_RFM_ORACLE)
+def user_rfm_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-user recency/frequency/monetary feature block from the
+    events table (+ event-type breadth): the canonical aggregate
+    feature-engineering pass feeding downstream model training. One
+    partial-agg shuffle keyed by user_id; the distinct event-type count
+    rides the same shuffle (Spark plans count(distinct) as a two-phase
+    expand over the same key). Money summed in exact cents."""
+    ev = _t(spark, sf_dir, "events")
+    return ev.groupBy("user_id").agg(
+        F.count(F.lit(1)).alias("frequency"),
+        F.max("ts").alias("last_ts"),
+        F.sum(F.round(F.col("value") * 100).cast("long"))
+        .cast("long")
+        .alias("monetary_cents"),
+        F.countDistinct("event_type").cast("long").alias("n_event_types"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# cohort conversion with Wilson confidence bounds
+# ---------------------------------------------------------------------------
+
+_WILSON_ORACLE = """
+WITH j AS (
+  SELECT e.user_id, e.event_type, c.c_nationkey
+  FROM events e JOIN customer c ON e.user_id = c.c_custkey
+),
+agg AS (
+  SELECT c_nationkey,
+         COUNT(DISTINCT user_id) AS n_users,
+         COUNT(DISTINCT CASE WHEN event_type = 'purchase' THEN user_id END)
+           AS n_conv
+  FROM j GROUP BY c_nationkey
+),
+d AS (
+  SELECT c_nationkey, n_users, n_conv,
+         CAST(n_users AS DOUBLE) AS n,
+         CAST(n_conv AS DOUBLE) / CAST(n_users AS DOUBLE) AS p
+  FROM agg
+)
+SELECT c_nationkey,
+       CAST(n_users AS BIGINT) AS n_users,
+       CAST(n_conv AS BIGINT) AS n_conv,
+       p AS conv_rate,
+       (p + CAST(3.8416 AS DOUBLE) / (CAST(2 AS DOUBLE) * n)
+        - CAST(1.96 AS DOUBLE)
+          * sqrt((p * (CAST(1 AS DOUBLE) - p)
+                  + CAST(3.8416 AS DOUBLE) / (CAST(4 AS DOUBLE) * n)) / n))
+       / (CAST(1 AS DOUBLE) + CAST(3.8416 AS DOUBLE) / n) AS wilson_lo,
+       (p + CAST(3.8416 AS DOUBLE) / (CAST(2 AS DOUBLE) * n)
+        + CAST(1.96 AS DOUBLE)
+          * sqrt((p * (CAST(1 AS DOUBLE) - p)
+                  + CAST(3.8416 AS DOUBLE) / (CAST(4 AS DOUBLE) * n)) / n))
+       / (CAST(1 AS DOUBLE) + CAST(3.8416 AS DOUBLE) / n) AS wilson_hi
+FROM d
+"""
+
+
+@register("conversion_wilson_by_nation", oracle=_WILSON_ORACLE)
+def conversion_wilson_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-nation user-level conversion rate (users with ≥1 purchase /
+    active users) with 95% Wilson score interval — the experiment-
+    readout statistic that stays sane at small n where the normal
+    approximation lies. Distinct counts are exact; the Wilson algebra
+    is written with IDENTICAL association on both engines (every
+    constant cast, every parenthesis mirrored), so even sqrt-bearing
+    doubles hash-match — the cosine-similarity discipline applied to
+    inferential statistics.
+
+    Shape: fact joins the 1500-row customer dim by broadcast, then one
+    distinct-expand aggregate per nation; output is |nations|-sized."""
+    ev = _t(spark, sf_dir, "events").select("user_id", "event_type")
+    cust = _t(spark, sf_dir, "customer").select(
+        F.col("c_custkey").alias("user_id"), "c_nationkey"
+    )
+    j = ev.join(F.broadcast(cust), "user_id")
+    agg = j.groupBy("c_nationkey").agg(
+        F.countDistinct("user_id").alias("n_users"),
+        F.countDistinct(
+            F.when(F.col("event_type") == "purchase", F.col("user_id"))
+        ).alias("n_conv"),
+    )
+    n = F.col("n_users").cast("double")
+    p = F.col("n_conv").cast("double") / F.col("n_users").cast("double")
+    z, z2 = F.lit(1.96), F.lit(3.8416)
+    margin = z * F.sqrt(
+        (p * (F.lit(1.0) - p) + z2 / (F.lit(4.0) * n)) / n
+    )
+    denom = F.lit(1.0) + z2 / n
+    center = p + z2 / (F.lit(2.0) * n)
+    return agg.select(
+        "c_nationkey",
+        F.col("n_users").cast("long").alias("n_users"),
+        F.col("n_conv").cast("long").alias("n_conv"),
+        p.alias("conv_rate"),
+        ((center - margin) / denom).alias("wilson_lo"),
+        ((center + margin) / denom).alias("wilson_hi"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# conversion latency (first view → first purchase) with exact medians
+# ---------------------------------------------------------------------------
+
+_CONV_LATENCY_ORACLE = """
+WITH per_user AS (
+  SELECT user_id,
+         MIN(CASE WHEN event_type = 'view' THEN ts END) AS first_view,
+         MIN(CASE WHEN event_type = 'purchase' THEN ts END) AS first_purchase
+  FROM events GROUP BY user_id
+),
+conv AS (
+  SELECT u.user_id, c.c_nationkey,
+         epoch_us(u.first_purchase) - epoch_us(u.first_view) AS latency_us
+  FROM per_user u JOIN customer c ON u.user_id = c.c_custkey
+  WHERE u.first_view IS NOT NULL AND u.first_purchase IS NOT NULL
+    AND u.first_purchase >= u.first_view
+),
+r AS (
+  SELECT c_nationkey, latency_us,
+         ROW_NUMBER() OVER (PARTITION BY c_nationkey
+                            ORDER BY latency_us, user_id) AS rn,
+         COUNT(*) OVER (PARTITION BY c_nationkey) AS cnt
+  FROM conv
+)
+SELECT c_nationkey,
+       CAST(MAX(cnt) AS BIGINT) AS n_converted,
+       CAST(MIN(latency_us) AS BIGINT) AS min_latency_us,
+       CAST(MAX(latency_us) AS BIGINT) AS max_latency_us,
+       CAST(MAX(CASE WHEN rn = (cnt + 1) // 2 THEN latency_us END) AS BIGINT)
+         AS median_latency_us
+FROM r GROUP BY c_nationkey
+"""
+
+
+@register("conversion_latency_median", oracle=_CONV_LATENCY_ORACLE)
+def conversion_latency_median(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Time-to-convert analytics: per user, first 'view' → first
+    'purchase' latency in exact integer µs (users whose first purchase
+    precedes any view are excluded — they converted through another
+    door); per nation, the converted count, min/max, and exact lower
+    median latency. The growth-analytics readout that pairs with
+    event_funnel_conversion (how many) by answering how fast.
+
+    Shape: one user-keyed conditional-MIN aggregate (no self-join for
+    the two firsts), broadcast customer dim for the cohort key, then
+    the per-group exact-median window (exact_median_disc's pattern) —
+    sorts only the converted-user rows, cohort-parallel.
+
+    Scale bound: only µs differences bounded by the data's time-span enter the arithmetic (no µs products, no cross-row sums of raw epoch-µs); int64 epoch-µs is safe to ~year 294000."""
+    ev = _t(spark, sf_dir, "events")
+    per_user = ev.groupBy("user_id").agg(
+        F.min(F.when(F.col("event_type") == "view", F.col("ts"))).alias(
+            "first_view"
+        ),
+        F.min(F.when(F.col("event_type") == "purchase", F.col("ts"))).alias(
+            "first_purchase"
+        ),
+    )
+    cust = _t(spark, sf_dir, "customer").select(
+        F.col("c_custkey").alias("user_id"), "c_nationkey"
+    )
+    conv = (
+        per_user.where(
+            F.col("first_view").isNotNull()
+            & F.col("first_purchase").isNotNull()
+            & (F.col("first_purchase") >= F.col("first_view"))
+        )
+        .join(F.broadcast(cust), "user_id")
+        .select(
+            "user_id",
+            "c_nationkey",
+            (
+                F.unix_micros(F.col("first_purchase"))
+                - F.unix_micros(F.col("first_view"))
+            ).alias("latency_us"),
+        )
+    )
+    w = Window.partitionBy("c_nationkey").orderBy("latency_us", "user_id")
+    wc = Window.partitionBy("c_nationkey")
+    r = conv.select(
+        "c_nationkey",
+        "latency_us",
+        F.row_number().over(w).alias("rn"),
+        F.count(F.lit(1)).over(wc).alias("cnt"),
+    )
+    return r.groupBy("c_nationkey").agg(
+        F.max("cnt").cast("long").alias("n_converted"),
+        F.min("latency_us").cast("long").alias("min_latency_us"),
+        F.max("latency_us").cast("long").alias("max_latency_us"),
+        F.max(
+            F.when(F.col("rn") == F.expr("(cnt + 1) div 2"), F.col("latency_us"))
+        )
+        .cast("long")
+        .alias("median_latency_us"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# market-basket lift
+# ---------------------------------------------------------------------------
+
+_BASKET_MIN_SUPPORT = 3
+
+_BASKET_ORACLE = f"""
+WITH items AS (
+  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
+),
+pr AS (
+  SELECT a.l_partkey AS part_a, b.l_partkey AS part_b
+  FROM items a JOIN items b
+    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+),
+cab AS (
+  SELECT part_a, part_b, COUNT(*) AS c_ab FROM pr GROUP BY part_a, part_b
+  HAVING COUNT(*) >= {_BASKET_MIN_SUPPORT}
+),
+cu AS (SELECT l_partkey, COUNT(*) AS c FROM items GROUP BY l_partkey),
+tot AS (SELECT COUNT(DISTINCT l_orderkey) AS n_orders FROM items)
+SELECT cab.part_a, cab.part_b, CAST(cab.c_ab AS BIGINT) AS c_ab,
+       CAST(ROUND(CAST(cab.c_ab AS DOUBLE) * CAST(tot.n_orders AS DOUBLE)
+                  / (CAST(ua.c AS DOUBLE) * CAST(ub.c AS DOUBLE))
+                  * 1000000.0) AS BIGINT) AS lift_e6
+FROM cab
+JOIN cu ua ON cab.part_a = ua.l_partkey
+JOIN cu ub ON cab.part_b = ub.l_partkey
+CROSS JOIN tot
+"""
+
+
+@register("market_basket_lift", oracle=_BASKET_ORACLE)
+def market_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Part-pair affinity within orders: lift(a,b) = P(a,b)/(P(a)P(b))
+    over order baskets, support ≥ {_BASKET_MIN_SUPPORT}, quantized to
+    integer micro-units (PMI = ln lift — token_cooccurrence_pmi is the
+    text twin). Lift ≫ 1 drives recommendation and co-location
+    decisions.
+
+    Shape: pair generation self-joins the distinct (order, part) table
+    ON THE ORDER KEY — baskets are small (≤13 items here), so the
+    per-order pair fan-out is bounded by basket size², never corpus
+    size (the blocking-key discipline of the dedup tier); per-part
+    counts broadcast back and the single ROUND'd double expression is
+    associated identically in both engines.
+
+    Scale bound: lift_e6 ≤ n_orders·10⁶ (attained only at c_a=c_b=
+    c_ab=1), so the long cast wraps only past 9.2·10¹² orders; the
+    double expression is exact-and-identical on both engines while
+    intermediate products stay under 2⁵³ (~9·10¹⁵ — beyond that both
+    engines still agree, but the last ulp is a rounding choice)."""
+    # NOT cached: the r8 warm A/B credited a cache here, but the COLD
+    # first-rep A/B (fresh process per rep, 2×2 interleaved at sf0.1:
+    # cache 4.22/4.45 s vs nocache 3.42/3.14 s, 0.76×) shows the eager
+    # fill + cache write cost more than the repeated recompute — whose
+    # shuffle files Spark's exchange reuse already shares between the
+    # three consumers. VERDICT r8 flagged exactly this.
+    #
+    # r12 optimization (guide §2.4/§1.2 step 1): pair generation is
+    # in-row over per-order BASKETS (collect_set → sorted array →
+    # nested-transform upper-triangle pairs) instead of the former
+    # items⋈items self-join on l_orderkey. That removes the distinct's
+    # (orderkey, partkey) exchange AND the self-join's orderkey
+    # exchange + two sorts + SortMergeJoin (26 Exchange → 8 in the
+    # recsys consumer; one exchange now carries lineitem rows, reused
+    # by all three basket consumers). Baskets are ≤13 items, so the
+    # in-row fan-out is the same bounded basket-size² the join
+    # produced — the blocking discipline is unchanged at 100 TB.
+    baskets = (
+        _t(spark, sf_dir, "lineitem")
+        .groupBy("l_orderkey")
+        .agg(F.collect_set("l_partkey").alias("parts"))
+    )
+    ps = F.array_sort(F.col("parts"))
+    pair_structs = F.flatten(
+        F.transform(
+            ps,
+            lambda x, i: F.transform(
+                F.slice(ps, i + F.lit(2), F.size(ps)),
+                lambda y: F.struct(x.alias("part_a"), y.alias("part_b")),
+            ),
+        )
+    )
+    cab = (
+        baskets.select(F.explode(pair_structs).alias("p"))
+        .select("p.part_a", "p.part_b")
+        .groupBy("part_a", "part_b")
+        .agg(F.count(F.lit(1)).alias("c_ab"))
+        .where(F.col("c_ab") >= _BASKET_MIN_SUPPORT)
+    )
+    cu = (
+        baskets.select(F.explode("parts").alias("l_partkey"))
+        .groupBy("l_partkey")
+        .agg(F.count(F.lit(1)).alias("c"))
+    )
+    tot = baskets.agg(F.count(F.lit(1)).alias("n_orders"))
+    ua = cu.select(F.col("l_partkey").alias("part_a"), F.col("c").alias("c_a"))
+    ub = cu.select(F.col("l_partkey").alias("part_b"), F.col("c").alias("c_b"))
+    return (
+        cab.join(F.broadcast(ua), "part_a")
+        .join(F.broadcast(ub), "part_b")
+        .crossJoin(F.broadcast(tot))
+        .select(
+            "part_a",
+            "part_b",
+            F.col("c_ab").cast("long").alias("c_ab"),
+            F.round(
+                F.col("c_ab").cast("double")
+                * F.col("n_orders").cast("double")
+                / (F.col("c_a").cast("double") * F.col("c_b").cast("double"))
+                * 1000000.0
+            )
+            .cast("long")
+            .alias("lift_e6"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# top-k with ties (RANK, not ROW_NUMBER)
+# ---------------------------------------------------------------------------
+
+_TOPK_TIES_ORACLE = """
+WITH c AS (
+  SELECT c_nationkey, CAST(ROUND(c_acctbal * 100) AS BIGINT) AS cents, c_custkey
+  FROM customer
+),
+r AS (
+  SELECT c_nationkey, c_custkey, cents,
+         RANK() OVER (PARTITION BY c_nationkey ORDER BY cents DESC) AS rnk
+  FROM c
+)
+SELECT c_nationkey, c_custkey, cents, CAST(rnk AS BIGINT) AS rnk
+FROM r WHERE rnk <= 3
+"""
+
+
+@register("topk_with_ties_per_nation", oracle=_TOPK_TIES_ORACLE)
+def topk_with_ties_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-nation top-3 account balances WITH TIES: RANK (gaps on
+    ties) instead of ROW_NUMBER, so equal balances at the cut all
+    survive — the 'WITH TIES' semantics reports need when an arbitrary
+    tiebreak would be unfair/nondeterministic. Output size varies with
+    the data (that's the point); the rank itself is returned so the
+    tie structure is visible.
+
+    Spark still plans this as WindowGroupLimit (rank-based filters
+    push the limit into the window operator, k rows + ties of state
+    per key), so the with-ties form costs the same as window_rank's
+    row_number form."""
+    from pyspark.sql.window import Window
+
+    c = _t(spark, sf_dir, "customer").select(
+        "c_nationkey",
+        F.round(F.col("c_acctbal") * 100).cast("long").alias("cents"),
+        "c_custkey",
+    )
+    w = Window.partitionBy("c_nationkey").orderBy(F.desc("cents"))
+    return (
+        c.select(
+            "c_nationkey",
+            "c_custkey",
+            "cents",
+            F.rank().over(w).cast("long").alias("rnk"),
+        )
+        .where(F.col("rnk") <= 3)
+    )
+
+
+# ---------------------------------------------------------------------------
+# multi-touch attribution: first/last click before each purchase
+# ---------------------------------------------------------------------------
+
+_ATTR_WINDOW_US = 1_800_000_000  # 30 minutes
+
+_ATTR_ORACLE = f"""
+WITH p AS (
+  SELECT event_id, user_id, epoch_us(ts) AS pus
+  FROM events WHERE event_type = 'purchase'
+),
+c AS (
+  SELECT user_id, epoch_us(ts) AS cus, event_id AS cid
+  FROM events WHERE event_type = 'click'
+)
+SELECT p.event_id, CAST(COUNT(c.cus) AS BIGINT) AS n_touches,
+       (MIN(CASE WHEN c.cus IS NOT NULL
+                 THEN struct_pack(us := c.cus, eid := c.cid) END)).us
+         AS first_touch_us,
+       (MIN(CASE WHEN c.cus IS NOT NULL
+                 THEN struct_pack(us := c.cus, eid := c.cid) END)).eid
+         AS first_touch_id,
+       (MAX(CASE WHEN c.cus IS NOT NULL
+                 THEN struct_pack(us := c.cus, eid := c.cid) END)).us
+         AS last_touch_us,
+       (MAX(CASE WHEN c.cus IS NOT NULL
+                 THEN struct_pack(us := c.cus, eid := c.cid) END)).eid
+         AS last_touch_id
+FROM p LEFT JOIN c
+  ON c.user_id = p.user_id
+ AND c.cus < p.pus
+ AND c.cus > p.pus - {_ATTR_WINDOW_US}
+GROUP BY p.event_id
+"""
+
+
+@register("attribution_first_last", oracle=_ATTR_ORACLE)
+def attribution_first_last(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Position-based attribution inputs: for every purchase, the
+    number of click touchpoints in the preceding 30 minutes plus the
+    first- and last-touch click identities, as (µs, event_id) pairs
+    via lexical struct extrema — min/max order primarily by time with
+    a deterministic id tiebreak, arithmetic-free (the r9 migration off
+    the epoch_µs·4096 packed key, which wrapped int64 in May 2041 —
+    the same struct path ohlc_bars_hourly took). Unmatched probe rows
+    are gated to NULL before the extrema (a struct of NULL fields is
+    itself non-NULL and would win the min on both engines).
+
+    Scale bound: no integer products anywhere after the migration —
+    the only arithmetic is µs differences bounded by the 30-min window
+    (1.8·10⁹) and int64 epoch-µs itself (wraps ~year 294000). No
+    overflow at any row count.
+
+    Scale shape (r12): NOT a per-user unbounded self-join (a power
+    user would make that quadratic — VERDICT r2 #3's lesson), and
+    since r12 not a bucket-probe join either: ``EXISTS/aggregate over
+    clicks in (pus−w, pus)`` is exactly a per-user RANGE window frame
+    ``RANGE BETWEEN w−1 PRECEDING AND 1 PRECEDING`` on integer µs
+    (strict < on both ends ⟺ the closed integer frame) — the same
+    device that rewrote funnel_time_constrained this round. Clicks
+    and purchases ride ONE user-partitioned sort; each purchase row
+    reads its three aggregates (count of click µs, min/max of the
+    NULL-gated (µs, id) touch struct) straight off the frame, so the
+    2× bucket-probe fan-out, the probe join, and the per-purchase
+    re-aggregation exchange all disappear (plan: 2 parquet scans /
+    1 join → 1 scan / 0 joins, one exchange either way). Candidates
+    per purchase stay bounded by one user's clicks in 30 min; zero-
+    touch purchases read count 0 / NULL extrema off an empty frame —
+    identical to the old left-join + group-by semantics."""
+    ev = _t(spark, sf_dir, "events")
+    e = ev.where(F.col("event_type").isin("click", "purchase")).select(
+        "event_id",
+        "user_id",
+        "event_type",
+        F.unix_micros("ts").alias("__us"),
+    )
+    wr = (
+        Window.partitionBy("user_id")
+        .orderBy("__us")
+        .rangeBetween(-(_ATTR_WINDOW_US - 1), -1)
+    )
+    is_click = F.col("event_type") == "click"
+    cus = F.when(is_click, F.col("__us"))
+    touch = F.when(
+        is_click,
+        F.struct(F.col("__us").alias("us"), F.col("event_id").alias("eid")),
+    )
+    return (
+        e.select(
+            "event_id",
+            "event_type",
+            F.count(cus).over(wr).cast("long").alias("n_touches"),
+            F.min(touch).over(wr).alias("__f"),
+            F.max(touch).over(wr).alias("__l"),
+        )
+        .where(F.col("event_type") == "purchase")
+        .select(
+            "event_id",
+            "n_touches",
+            F.col("__f.us").alias("first_touch_us"),
+            F.col("__f.eid").alias("first_touch_id"),
+            F.col("__l.us").alias("last_touch_us"),
+            F.col("__l.eid").alias("last_touch_id"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# item-item recommendation serving table
+# ---------------------------------------------------------------------------
+
+_RECSYS_ORACLE = f"""
+WITH lift AS ({_BASKET_ORACLE.strip()}),
+directed AS (
+  SELECT part_a AS part, part_b AS rec, c_ab, lift_e6 FROM lift
+  UNION ALL
+  SELECT part_b AS part, part_a AS rec, c_ab, lift_e6 FROM lift
+)
+SELECT part, rec, c_ab, lift_e6, CAST(rec_rank AS BIGINT) AS rec_rank FROM (
+  SELECT *, ROW_NUMBER() OVER (PARTITION BY part
+                               ORDER BY lift_e6 DESC, rec) AS rec_rank
+  FROM directed
+) WHERE rec_rank <= 3
+"""
+
+
+@register("recsys_item_item_topk", oracle=_RECSYS_ORACLE)
+def recsys_item_item_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The item-item serving table: per part, its top-3 co-purchase
+    recommendations by basket lift (support ≥ 3). Built by mirroring
+    the undirected market-basket pair table into both directions and
+    keeping 3 rows per part at the window (WindowGroupLimit — never a
+    global sort).
+
+    This is what "customers also bought" queries hit in production: a
+    (part → 3 recs) table small enough to broadcast or serve from a
+    K/V store, refreshed by exactly this batch plan. The mirror is a
+    union of two projections of the SAME lift table (one pair-join
+    pass), and the rank tiebreak (lift desc, rec asc) is total, so
+    both engines cut identical tables.
+
+    Scale bound: no new arithmetic — lift_e6 and c_ab arrive bounded from market_basket_lift (see its bound); ranks are window row numbers."""
+    from clean_census_acs_data_spark.queries_analytics import market_basket_lift
+
+    lift = market_basket_lift(spark, sf_dir)
+    # mirror with an in-row explode, NOT a union of two projections: a
+    # union references the lift subtree twice and Catalyst has no
+    # plan-level CSE, so the whole basket pair pipeline would run twice
+    # (measured 9.4 s → 4.4 s at sf0.1)
+    directed = lift.select(
+        F.explode(
+            F.array(
+                F.struct(
+                    F.col("part_a").alias("part"), F.col("part_b").alias("rec")
+                ),
+                F.struct(
+                    F.col("part_b").alias("part"), F.col("part_a").alias("rec")
+                ),
+            )
+        ).alias("pr"),
+        "c_ab",
+        "lift_e6",
+    ).select(F.col("pr.part").alias("part"), F.col("pr.rec").alias("rec"), "c_ab", "lift_e6")
+    w = Window.partitionBy("part").orderBy(F.desc("lift_e6"), F.asc("rec"))
+    return (
+        directed.withColumn("rec_rank", F.row_number().over(w))
+        .where(F.col("rec_rank") <= 3)
+        .select("part", "rec", "c_ab", "lift_e6", F.col("rec_rank").cast("long"))
+    )
+
+
+# ---------------------------------------------------------------------------
+# time-constrained funnel (every step gap ≤ 1 hour)
+# ---------------------------------------------------------------------------
+
+_FUNNEL_W_US = 3_600_000_000
+
+_FUNNEL_TC_ORACLE = f"""
+WITH p AS (SELECT event_id, user_id, epoch_us(ts) AS us FROM events
+           WHERE event_type = 'purchase'),
+c AS (SELECT user_id, epoch_us(ts) AS us FROM events WHERE event_type = 'click'),
+v AS (SELECT user_id, epoch_us(ts) AS us FROM events WHERE event_type = 'view'),
+cv AS (
+  SELECT DISTINCT c.user_id, c.us FROM c
+  WHERE EXISTS (SELECT 1 FROM v WHERE v.user_id = c.user_id
+                AND v.us < c.us AND v.us > c.us - {_FUNNEL_W_US})
+)
+SELECT
+  (SELECT COUNT(*) FROM p) AS n_purchases,
+  (SELECT COUNT(*) FROM p WHERE EXISTS
+     (SELECT 1 FROM c WHERE c.user_id = p.user_id
+      AND c.us < p.us AND c.us > p.us - {_FUNNEL_W_US})) AS n_with_click,
+  (SELECT COUNT(*) FROM p WHERE EXISTS
+     (SELECT 1 FROM cv WHERE cv.user_id = p.user_id
+      AND cv.us < p.us AND cv.us > p.us - {_FUNNEL_W_US})) AS n_full_chain
+"""
+
+
+def _exists_within(left: DataFrame, right: DataFrame, w_us: int) -> DataFrame:
+    """Rows of ``left`` (user, us, + payload) having ≥1 ``right`` row
+    (user, us) with right.us strictly inside (left.us − w, left.us).
+    Bucketed probe (own + previous floor(us/w) bucket) keeps the
+    equi-key (user, bucket) so candidates stay bounded per bucket
+    regardless of per-user history length; the left-semi dedups the
+    2× probe fan-out."""
+    r = right.select(
+        F.col("user_id").alias("__ru"),
+        F.col("us").alias("__rus"),
+        F.floor(F.col("us") / w_us).cast("long").alias("__rb"),
+    )
+    probes = left.withColumn(
+        "__pb",
+        F.explode(
+            F.array(
+                (F.floor(F.col("us") / w_us) - 1).cast("long"),
+                F.floor(F.col("us") / w_us).cast("long"),
+            )
+        ),
+    )
+    return (
+        probes.join(
+            r,
+            (F.col("__pb") == F.col("__rb"))
+            & (F.col("user_id") == F.col("__ru"))
+            & (F.col("__rus") < F.col("us"))
+            & (F.col("__rus") > F.col("us") - w_us),
+            "left_semi",
+        )
+        .drop("__pb")
+        .distinct()
+    )
+
+
+@register("funnel_time_constrained", oracle=_FUNNEL_TC_ORACLE)
+def funnel_time_constrained(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deadline-bounded funnel: a purchase completes the chain only if
+    a click precedes it within one hour AND that chain's click itself
+    had a view within the hour before it (EXISTS over clicks that have
+    a qualifying view — not just the most recent click, so a
+    slow-click/fast-click mix can still complete). Reports
+    (n_purchases, n_with_click, n_full_chain) as one row.
+
+    Shape (r12 optimization, guide §2.4): ONE user-partitioned RANGE-
+    frame window pass replaces the former three bucketed-EXISTS
+    semi-join probes (22 Exchange / 12 scans → 2 Exchange / 1 scan).
+    ``EXISTS right IN (us−w, us)`` ≡ ``MAX(right_us) OVER (ORDER BY us
+    RANGE BETWEEN w−1 PRECEDING AND 1 PRECEDING) IS NOT NULL`` on
+    integer µs — MAX ignores the NULLs that mask other event types, and
+    the strict range frame is exactly the open interval. Chaining is
+    two Window nodes over the SAME sort (click-qualification first,
+    then purchase probes over clicks/qualified-clicks) — no second
+    exchange. The old probe decomposition lives on in
+    attribution_first_last; here the window form is strictly less
+    traffic at any scale (events shuffle once, no 2× bucket-probe
+    fan-out, no distinct).
+
+    Scale bound: epoch-µs is compared, never multiplied or summed
+    across rows — int64 µs cannot wrap until ~year 294000; outputs
+    are plain int64 COUNTs."""
+    ev = _t(spark, sf_dir, "events").select(
+        "user_id", "event_type", F.unix_micros("ts").alias("us")
     )
     w = (
         Window.partitionBy("user_id")
-        .orderBy("h")
+        .orderBy("us")
+        .rangeBetween(-(_FUNNEL_W_US - 1), -1)
+    )
+    is_click = F.col("event_type") == "click"
+    is_purchase = F.col("event_type") == "purchase"
+    view_us = F.when(F.col("event_type") == "view", F.col("us"))
+    click_us = F.when(is_click, F.col("us"))
+    staged = ev.select(
+        "us",
+        "user_id",
+        is_purchase.alias("is_p"),
+        click_us.alias("c_us"),
+        # qualified click: a view strictly inside (us − w, us)
+        F.when(is_click & F.max(view_us).over(w).isNotNull(), F.col("us")).alias(
+            "qc_us"
+        ),
+    )
+    probed = staged.select(
+        "is_p",
+        F.max("c_us").over(w).isNotNull().alias("has_c"),
+        F.max("qc_us").over(w).isNotNull().alias("has_qc"),
+    ).where("is_p")
+    return probed.agg(
+        F.count(F.lit(1)).cast("long").alias("n_purchases"),
+        F.sum(F.when(F.col("has_c"), 1).otherwise(0))
+        .cast("long")
+        .alias("n_with_click"),
+        F.sum(F.when(F.col("has_qc"), 1).otherwise(0))
+        .cast("long")
+        .alias("n_full_chain"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Pareto 80/20 revenue concentration
+# ---------------------------------------------------------------------------
+
+_PARETO_ORACLE = """
+WITH per AS (
+  SELECT o_custkey, CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS rev
+  FROM orders GROUP BY o_custkey
+),
+r AS (
+  SELECT rev,
+         SUM(rev) OVER (ORDER BY rev DESC, o_custkey
+                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
+         SUM(rev) OVER () AS total,
+         COUNT(*) OVER () AS n_customers
+  FROM per
+)
+SELECT CAST(COUNT(*) AS BIGINT) AS n_top,
+       CAST(MAX(n_customers) AS BIGINT) AS n_customers,
+       CAST(MAX(cum) AS BIGINT) AS covered_cents,
+       CAST(MAX(total) AS BIGINT) AS total_cents
+FROM r WHERE (cum - rev) * 5 < total * 4
+"""
+
+
+@register("pareto_8020_concentration", oracle=_PARETO_ORACLE)
+def pareto_8020_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Revenue concentration: the smallest top-customer set (by exact
+    cents revenue, custkey tiebreak) whose cumulative revenue reaches
+    80% of the total, reported as one row (n_top, n_customers,
+    covered_cents, total_cents). The audit behind key-account
+    programs, cache sizing, and hot-key risk: n_top ≪ n_customers
+    means one salted key strategy, n_top ≈ 0.8·n means another.
+
+    The 80% test is pure integer cross-multiplication
+    ((cum−rev)·5 < total·4 — "the set BEFORE this row hadn't reached
+    80%"), no doubles anywhere. The running sum's single-partition
+    window runs over the per-customer AGGREGATE (thousands of rows at
+    any corpus size, reduced map-side from the orders scan), not the
+    fact table — same discipline as range_partition_boundaries."""
+    cents = F.round(F.col("o_totalprice") * 100).cast("long")
+    per = (
+        _t(spark, sf_dir, "orders")
+        .groupBy("o_custkey")
+        .agg(F.sum(cents).cast("long").alias("rev"))
+    )
+    wcum = (
+        Window.orderBy(F.desc("rev"), F.asc("o_custkey"))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    wall = Window.partitionBy()
+    r = per.select(
+        "rev",
+        F.sum("rev").over(wcum).alias("cum"),
+        F.sum("rev").over(wall).alias("total"),
+        F.count(F.lit(1)).over(wall).alias("n_customers"),
+    )
+    kept = r.where((F.col("cum") - F.col("rev")) * 5 < F.col("total") * 4)
+    return kept.agg(
+        F.count(F.lit(1)).cast("long").alias("n_top"),
+        F.max("n_customers").cast("long").alias("n_customers"),
+        F.max("cum").cast("long").alias("covered_cents"),
+        F.max("total").cast("long").alias("total_cents"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# ratio-to-parent rollup report
+# ---------------------------------------------------------------------------
+
+_RATIO_ORACLE = """
+WITH rev AS (
+  SELECT r.r_name AS region_name, n.n_name AS nation_name,
+         CAST(SUM(CAST(ROUND(o.o_totalprice * 100) AS BIGINT)) AS BIGINT)
+           AS rev_cents
+  FROM orders o
+  JOIN customer c ON c.c_custkey = o.o_custkey
+  JOIN nation n ON n.n_nationkey = c.c_nationkey
+  JOIN region r ON r.r_regionkey = n.n_regionkey
+  GROUP BY r.r_name, n.n_name
+)
+SELECT region_name, nation_name, rev_cents,
+       CAST(rev_cents * 1000000
+            // SUM(rev_cents) OVER (PARTITION BY region_name) AS BIGINT)
+         AS share_of_region_micro,
+       CAST(rev_cents * 1000000 // SUM(rev_cents) OVER () AS BIGINT)
+         AS share_of_total_micro
+FROM rev
+"""
+
+
+@register("ratio_to_parent_rollup", oracle=_RATIO_ORACLE)
+def ratio_to_parent_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Ratio-to-parent report: each nation's order revenue as an
+    integer micro-share of its region and of the grand total — the
+    percent-of-parent column every hierarchy dashboard computes
+    (rollup_geo gives the subtotals; this gives the shares).
+
+    One fact agg (orders ⋈ customer on the key — AQE picks broadcast
+    when customer fits; nation/region broadcast unconditionally),
+    map-side combined to 25 rows, then two windows OVER THE 25-ROW
+    AGGREGATE — at any fact scale the windowed part is
+    dimension-sized. Shares are integer-floored micro-units, immune to
+    engine float formatting."""
+    o = _t(spark, sf_dir, "orders")
+    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
+    r = _t(spark, sf_dir, "region").select("r_regionkey", "r_name")
+    cents = F.round(F.col("o_totalprice") * 100).cast("long")
+    rev = (
+        o.join(c, F.col("c_custkey") == F.col("o_custkey"))
+        .join(F.broadcast(n), F.col("n_nationkey") == F.col("c_nationkey"))
+        .join(F.broadcast(r), F.col("r_regionkey") == F.col("n_regionkey"))
+        .groupBy(
+            F.col("r_name").alias("region_name"),
+            F.col("n_name").alias("nation_name"),
+        )
+        .agg(F.sum(cents).cast("long").alias("rev_cents"))
+    )
+    wr = Window.partitionBy("region_name")
+    wt = Window.partitionBy()
+    return rev.select(
+        "region_name",
+        "nation_name",
+        "rev_cents",
+        F.expr("rev_cents * 1000000")
+        .cast("long")
+        .alias("__num"),
+        F.sum("rev_cents").over(wr).alias("__r"),
+        F.sum("rev_cents").over(wt).alias("__t"),
+    ).select(
+        "region_name",
+        "nation_name",
+        "rev_cents",
+        F.expr("__num div __r").cast("long").alias("share_of_region_micro"),
+        F.expr("__num div __t").cast("long").alias("share_of_total_micro"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# year-over-year revenue growth
+# ---------------------------------------------------------------------------
+
+_YOY_ORACLE = """
+WITH per AS (
+  SELECT CAST(year(o_orderdate) AS BIGINT) AS yr,
+         CAST(month(o_orderdate) AS BIGINT) AS mo,
+         CAST(SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+           AS rev_cents
+  FROM orders GROUP BY yr, mo
+),
+lagd AS (
+  SELECT yr, mo, rev_cents,
+         LAG(rev_cents) OVER (PARTITION BY mo ORDER BY yr) AS prev_cents
+  FROM per
+)
+SELECT yr, mo, rev_cents, prev_cents,
+       CAST(CASE WHEN prev_cents IS NOT NULL AND prev_cents > 0
+                 THEN (rev_cents - prev_cents) * 1000000 // prev_cents
+            END AS BIGINT) AS yoy_growth_micro
+FROM lagd
+"""
+
+
+@register("yoy_revenue_growth", oracle=_YOY_ORACLE)
+def yoy_revenue_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Monthly revenue with year-over-year growth: each (year, month)
+    cell compared to the SAME month a year earlier (LAG partitioned by
+    month, ordered by year) — the seasonality-free growth figure, as
+    opposed to month-over-month which mostly measures the calendar.
+    Growth is integer-floored micro-units; months without a prior year
+    carry NULL rather than a fake zero.
+
+    One fact agg to a ≤|years|·12-row frame (map-side combined), one
+    window over that frame — the report costs a sketch at any order
+    volume. year()/month() agree across engines for DATE inputs (both
+    proleptic Gregorian here)."""
+    cents = F.round(F.col("o_totalprice") * 100).cast("long")
+    per = (
+        _t(spark, sf_dir, "orders")
+        .groupBy(
+            F.year("o_orderdate").cast("long").alias("yr"),
+            F.month("o_orderdate").cast("long").alias("mo"),
+        )
+        .agg(F.sum(cents).cast("long").alias("rev_cents"))
+    )
+    w = Window.partitionBy("mo").orderBy("yr")
+    lagd = per.withColumn("prev_cents", F.lag("rev_cents").over(w))
+    return lagd.select(
+        "yr",
+        "mo",
+        "rev_cents",
+        "prev_cents",
+        F.when(
+            F.col("prev_cents").isNotNull() & (F.col("prev_cents") > 0),
+            F.expr("(rev_cents - prev_cents) * 1000000 div prev_cents"),
+        )
+        .cast("long")
+        .alias("yoy_growth_micro"),
+    )
+
+
+_MTA_ORACLE = """
+WITH purchases AS (
+  SELECT user_id, ts AS purchase_ts, event_id AS purchase_id
+  FROM events WHERE event_type = 'purchase'
+),
+touches AS (
+  SELECT p.purchase_id, e.event_type, e.ts, e.event_id
+  FROM purchases p
+  JOIN events e
+    ON e.user_id = p.user_id
+   AND e.event_type IN ('click', 'view', 'signup')
+   AND e.ts >= p.purchase_ts - INTERVAL 7 DAY
+   AND e.ts < p.purchase_ts
+),
+ranked AS (
+  SELECT purchase_id, event_type,
+         row_number() OVER (PARTITION BY purchase_id
+                            ORDER BY ts, event_id) AS pos,
+         COUNT(*) OVER (PARTITION BY purchase_id) AS n
+  FROM touches
+),
+credited AS (
+  SELECT event_type,
+         -- linear: floor ppm share, remainder to the FIRST touch
+         CASE WHEN pos = 1
+              THEN 1000000 - (n - 1) * (1000000 // n)
+              ELSE 1000000 // n END AS linear_ppm,
+         -- U-shaped: 40/20/40 with degenerate n=1,2 cases; middle
+         -- remainder to the first middle touch
+         CASE WHEN n = 1 THEN 1000000
+              WHEN n = 2 THEN 500000
+              WHEN pos = 1 OR pos = n THEN 400000
+              WHEN pos = 2
+              THEN 200000 - (n - 3) * (200000 // (n - 2))
+              ELSE 200000 // (n - 2) END AS u_ppm
+  FROM ranked
+)
+SELECT event_type,
+       CAST(COUNT(*) AS BIGINT) AS n_touches,
+       CAST(SUM(linear_ppm) AS BIGINT) AS linear_credit_ppm,
+       CAST(SUM(u_ppm) AS BIGINT) AS u_credit_ppm
+FROM credited
+GROUP BY event_type
+"""
+
+
+@register("attribution_multi_touch", oracle=_MTA_ORACLE)
+def attribution_multi_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Multi-touch attribution with linear and U-shaped (40/20/40)
+    credit over the 7-day pre-purchase touch window — the marketing
+    twin of attribution_first_last, which only credits endpoints.
+    Credit is integer ppm with floor shares and the remainder pinned
+    deterministically (first touch / first middle touch), so per-
+    conversion credit sums to exactly 1,000,000 and the aggregate is
+    bit-exact — no float redistribution drift.
+
+    100-TB shape: the touch join is a per-user range join (both sides
+    hash on user_id, the 7-day predicate prunes state), window ranks
+    are per-purchase partitions, and the final aggregate is
+    |event_types| cells. Degenerate fan-out is bounded by touches-per-
+    purchase, not corpus size.
+
+    Scale bound: per-conversion credit sums to exactly 10⁶ ppm, so a
+    per-type aggregate is ≤ conversions·10⁶ and int64 wraps only past
+    9.2·10¹² conversions; (n−1)·lin_share < 10⁶ per row by
+    construction."""
+    ev = _t(spark, sf_dir, "events")
+    purchases = ev.where(F.col("event_type") == "purchase").select(
+        F.col("user_id").alias("p_user"),
+        F.col("ts").alias("purchase_ts"),
+        F.col("event_id").alias("purchase_id"),
+    )
+    touches = ev.where(
+        F.col("event_type").isin("click", "view", "signup")
+    ).join(
+        purchases,
+        (F.col("user_id") == F.col("p_user"))
+        & (F.col("ts") >= F.col("purchase_ts") - F.expr("INTERVAL 7 DAYS"))
+        & (F.col("ts") < F.col("purchase_ts")),
+    )
+    pw = Window.partitionBy("purchase_id").orderBy("ts", "event_id")
+    cw = Window.partitionBy("purchase_id")
+    ranked = touches.select(
+        "purchase_id",
+        "event_type",
+        F.row_number().over(pw).alias("pos"),
+        F.count(F.lit(1)).over(cw).alias("n"),
+    )
+    lin_share = F.floor(F.lit(1_000_000) / F.col("n")).cast("long")
+    linear_ppm = F.when(
+        F.col("pos") == 1, F.lit(1_000_000) - (F.col("n") - 1) * lin_share
+    ).otherwise(lin_share)
+    mid_share = F.floor(F.lit(200_000) / (F.col("n") - 2)).cast("long")
+    u_ppm = (
+        F.when(F.col("n") == 1, F.lit(1_000_000))
+        .when(F.col("n") == 2, F.lit(500_000))
+        .when((F.col("pos") == 1) | (F.col("pos") == F.col("n")), F.lit(400_000))
+        .when(F.col("pos") == 2, F.lit(200_000) - (F.col("n") - 3) * mid_share)
+        .otherwise(mid_share)
+    )
+    return (
+        ranked.select(
+            "event_type",
+            linear_ppm.cast("long").alias("linear_ppm"),
+            u_ppm.cast("long").alias("u_ppm"),
+        )
+        .groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_touches"),
+            F.sum("linear_ppm").alias("linear_credit_ppm"),
+            F.sum("u_ppm").alias("u_credit_ppm"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# rolling distinct count (a genuine engine gap, answered by composition)
+# ---------------------------------------------------------------------------
+
+_ROLLING_DISTINCT_ORACLE = """
+SELECT event_id, user_id,
+       CAST(len(list_distinct(list(event_type) OVER (
+         PARTITION BY user_id ORDER BY ts, event_id
+         ROWS BETWEEN 9 PRECEDING AND CURRENT ROW))) AS BIGINT)
+         AS n_distinct_10
+FROM events
+"""
+
+
+@register("window_distinct_rolling", oracle=_ROLLING_DISTINCT_ORACLE)
+def window_distinct_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct event types over each user's trailing 10 events — the
+    behavioral-diversity feature (bot detection, engagement scoring).
+    Spark rejects COUNT(DISTINCT) OVER a frame; the operator is
+    expressed as size(array_distinct(collect_list() OVER)) — exact,
+    JVM-side, and frame-bounded so the intermediate array is ≤10
+    elements regardless of user history length.
+
+    100-TB shape: one hash shuffle on user_id (the window partition),
+    in-partition sort by (ts, event_id); state per row is the bounded
+    frame, never the full partition. Skewed power users are bounded by
+    the same 10-row frame."""
+    ev = _t(spark, sf_dir, "events")
+    w = (
+        Window.partitionBy("user_id")
+        .orderBy("ts", "event_id")
+        .rowsBetween(-9, Window.currentRow)
+    )
+    return ev.select(
+        "event_id",
+        "user_id",
+        F.size(F.array_distinct(F.collect_list("event_type").over(w)))
+        .cast("long")
+        .alias("n_distinct_10"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# largest-remainder (Hamilton) apportionment of 1000 seats by nation
+# ---------------------------------------------------------------------------
+
+_SEATS = 1000
+
+_APPORTION_ORACLE = f"""
+WITH c AS (
+  SELECT c_nationkey AS nk, CAST(COUNT(*) AS BIGINT) AS members
+  FROM customer GROUP BY 1
+),
+tot AS (SELECT CAST(SUM(members) AS BIGINT) AS t FROM c),
+q AS (
+  SELECT nk, members,
+         (members * {_SEATS}) // t AS floor_seats,
+         (members * {_SEATS}) % t AS remainder_num
+  FROM c, tot
+),
+lo AS (SELECT CAST(SUM(floor_seats) AS BIGINT) AS fl FROM q),
+r AS (
+  SELECT *, ROW_NUMBER() OVER (ORDER BY remainder_num DESC, nk) AS rk
+  FROM q
+)
+SELECT r.nk AS c_nationkey, r.members,
+       CAST(r.floor_seats AS BIGINT) AS floor_seats,
+       CAST(r.remainder_num AS BIGINT) AS remainder_num,
+       CAST(r.floor_seats
+            + CASE WHEN r.rk <= {_SEATS} - lo.fl THEN 1 ELSE 0 END
+            AS BIGINT) AS seats
+FROM r, lo
+"""
+
+
+@register("apportion_largest_remainder", oracle=_APPORTION_ORACLE)
+def apportion_largest_remainder(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hamilton apportionment of {_SEATS} seats across nations by
+    customer count: floor(members·S/total) seats each, then one bonus
+    seat to the largest remainders (ties → lowest nation key) until the
+    house is exactly full. Integer end-to-end, so Σ seats = S exactly —
+    the allocation discipline float shares cannot guarantee.
+
+    100-TB shape: the only full-data pass is the per-nation count
+    (partial agg); ranking runs on the |nations|-row quota table.
+    The single-partition window is |dimension|-bounded, never
+    fact-bounded — same argument as skew_key_diagnostics' top-10.
+
+    Scale bound: members·1000 < 2⁶³ while any nation holds < 9.2·10¹⁵
+    customers; remainders are < total by construction — no overflow at
+    any population."""
+    c = (
+        _t(spark, sf_dir, "customer")
+        .groupBy(F.col("c_nationkey").alias("nk"))
+        .agg(F.count(F.lit(1)).cast("long").alias("members"))
+    )
+    tot = c.agg(F.sum("members").cast("long").alias("t"))
+    q = c.crossJoin(F.broadcast(tot)).select(
+        "nk",
+        "members",
+        F.expr(f"(members * {_SEATS}) DIV t").alias("floor_seats"),
+        (F.col("members") * _SEATS % F.col("t")).alias("remainder_num"),
+    )
+    lo = q.agg(F.sum("floor_seats").cast("long").alias("fl"))
+    w = Window.orderBy(F.desc("remainder_num"), F.asc("nk"))
+    return (
+        q.withColumn("rk", F.row_number().over(w))
+        .crossJoin(F.broadcast(lo))
+        .select(
+            F.col("nk").alias("c_nationkey"),
+            "members",
+            F.col("floor_seats").cast("long").alias("floor_seats"),
+            F.col("remainder_num").cast("long").alias("remainder_num"),
+            (
+                F.col("floor_seats")
+                + F.when(F.col("rk") <= _SEATS - F.col("fl"), 1).otherwise(0)
+            )
+            .cast("long")
+            .alias("seats"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# business-day latency (closed-form weekday counting)
+# ---------------------------------------------------------------------------
+
+# W(n) = weekdays among epoch days [0, n): epoch day 0 = Thu 1970-01-01,
+# so the mod-7 sequence is Thu Fri Sat Sun Mon Tue Wed and the prefix
+# counts are 0,1,2,2,2,3,4 (full week = 5). Shared SQL text keeps the
+# CASE bit-identical on both engines.
+_BUSDAY_PREFIX = (
+    "CASE ({n}) % 7 WHEN 0 THEN 0 WHEN 1 THEN 1 WHEN 2 THEN 2 WHEN 3 THEN 2"
+    " WHEN 4 THEN 2 WHEN 5 THEN 3 ELSE 4 END"
+)
+
+
+def _busday_w(n: str) -> str:
+    # integer division: n is always >= 0 here (dates are post-1970), so
+    # truncation (Spark DIV) == floor (DuckDB //); the shared /-free
+    # spelling below parses as integer division on both engines via DIV
+    # (Spark) and // (DuckDB) — interpolated per engine. The inner
+    # parens around (n) {div} 7 are load-bearing: *, DIV and // share
+    # precedence and left-associate on both engines, so the unparenthesized
+    # form would compute (5*n) div 7, not 5*(n div 7).
+    return f"(5 * (({n}) {{div}} 7) + {_BUSDAY_PREFIX.format(n=n)})"
+
+
+_BUSDAY_ORACLE = f"""
+WITH j AS (
+  SELECT o.o_orderpriority,
+         date_diff('day', DATE '1970-01-01', CAST(o.o_orderdate AS DATE)) AS od,
+         date_diff('day', DATE '1970-01-01', CAST(l.l_shipdate AS DATE)) AS sd
+  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+)
+SELECT o_orderpriority,
+       CAST(COUNT(*) AS BIGINT) AS n_items,
+       CAST(SUM({_busday_w("sd").format(div="//")}
+              - {_busday_w("od").format(div="//")}) AS BIGINT) AS sum_busdays,
+       CAST(SUM({_busday_w("sd").format(div="//")}
+              - {_busday_w("od").format(div="//")}) AS DOUBLE)
+         / CAST(COUNT(*) AS DOUBLE) AS avg_busdays
+FROM j
+GROUP BY o_orderpriority
+"""
+
+
+@register("business_day_latency", oracle=_BUSDAY_ORACLE)
+def business_day_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Order→ship latency in BUSINESS days (Mon–Fri) per order
+    priority, via the closed-form weekday count W(n) = 5·(n div 7) +
+    prefix(n mod 7) on epoch days — business days in [order, ship) =
+    W(ship) − W(order), zero per-day row expansion (a generate-series
+    + filter approach would multiply the fact table ~30×). The workweek
+    complement of date_arithmetic's calendar units.
+
+    100-TB shape: one fact⋈fact equi join on the order key (both sides
+    shuffle-partitioned on it; the lineitem side prunes to two
+    columns), then a partial agg on the 5-value priority — the
+    dominant cost is the join Exchange, identical to
+    sortmerge_join_fact's. Scale bound: epoch days < 10⁵ for any
+    realistic date, W(n) < 10⁵, sums bounded by 10⁵·|lineitem| — int64
+    wraps only past 9.2·10¹³ lineitems (a 9000-TB fact table).
+    """
+    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
+    o = _t(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_orderpriority", "o_orderdate"
+    )
+    j = li.join(o, li.l_orderkey == o.o_orderkey).select(
+        "o_orderpriority",
+        F.datediff(F.to_date("o_orderdate"), F.lit("1970-01-01")).alias("od"),
+        F.datediff(F.to_date("l_shipdate"), F.lit("1970-01-01")).alias("sd"),
+    )
+    busdays = F.expr(
+        f"{_busday_w('sd').format(div='DIV')} - {_busday_w('od').format(div='DIV')}"
+    )
+    return (
+        j.groupBy("o_orderpriority")
+        .agg(
+            F.count(F.lit(1)).alias("n_items"),
+            F.sum(busdays).cast("long").alias("sum_busdays"),
+        )
+        .select(
+            "o_orderpriority",
+            "n_items",
+            "sum_busdays",
+            (F.col("sum_busdays").cast("double") / F.col("n_items").cast("double")).alias(
+                "avg_busdays"
+            ),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# D'Hondt (highest-averages) apportionment
+# ---------------------------------------------------------------------------
+
+_DH_SEATS = 100
+
+_DH_ORACLE = f"""
+WITH c AS (
+  SELECT c_nationkey AS nk, CAST(COUNT(*) AS BIGINT) AS members
+  FROM customer GROUP BY 1
+),
+q AS (
+  SELECT nk, members, d,
+         CAST(members AS DOUBLE) / CAST(d AS DOUBLE) AS quot
+  FROM c, (SELECT unnest(range(1, {_DH_SEATS} + 1)) AS d)
+),
+r AS (
+  SELECT nk, members,
+         ROW_NUMBER() OVER (ORDER BY quot DESC, nk, d) AS rk
+  FROM q
+)
+SELECT nk AS c_nationkey,
+       ANY_VALUE(members) AS members,
+       CAST(SUM(CASE WHEN rk <= {_DH_SEATS} THEN 1 ELSE 0 END) AS BIGINT) AS seats
+FROM r GROUP BY nk
+"""
+
+
+@register("apportion_dhondt_divisor", oracle=_DH_ORACLE)
+def apportion_dhondt_divisor(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """D'Hondt highest-averages apportionment of {S} seats across
+    nations by customer count: rank all members/divisor quotients
+    (divisors 1..{S}), award one seat per top-{S} row. The divisor-
+    method complement of apportion_largest_remainder — the two methods
+    genuinely disagree (D'Hondt favors large parties), which is the
+    textbook apportionment-paradox demonstration. Quotients are single
+    double divisions of exact integers (bit-identical both engines);
+    the ranking is made total by (quotient desc, nation, divisor), so
+    equal quotients — e.g. 10/2 = 5/1 — award deterministically.
+
+    100-TB shape: one partial-agg count to |nations| rows, then every
+    downstream op runs on the |nations|·S quotient table — dimension-
+    bounded, like apportion_largest_remainder's ranking. The single-
+    partition window is |nations|·S rows, never fact-bounded.
+    """.format(S=_DH_SEATS)
+    c = (
+        _t(spark, sf_dir, "customer")
+        .groupBy(F.col("c_nationkey").alias("nk"))
+        .agg(F.count(F.lit(1)).cast("long").alias("members"))
+    )
+    d = c.select(
+        "nk",
+        "members",
+        F.explode(F.sequence(F.lit(1), F.lit(_DH_SEATS))).alias("d"),
+    ).select(
+        "nk",
+        "members",
+        "d",
+        (F.col("members").cast("double") / F.col("d").cast("double")).alias("quot"),
+    )
+    w = Window.orderBy(F.desc("quot"), F.asc("nk"), F.asc("d"))
+    r = d.withColumn("rk", F.row_number().over(w))
+    return r.groupBy(F.col("nk").alias("c_nationkey")).agg(
+        F.first("members").alias("members"),
+        F.sum(F.when(F.col("rk") <= _DH_SEATS, 1).otherwise(0))
+        .cast("long")
+        .alias("seats"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# suffix-frame exact distinct count (two-phase: last-occurrence + suffix sum)
+# ---------------------------------------------------------------------------
+
+_SUFFIX_DISTINCT_ORACLE = """
+WITH e AS (
+  SELECT user_id, event_id, event_type, epoch_us(ts) AS us FROM events
+),
+f AS (
+  SELECT user_id, event_id, us,
+         CASE WHEN LEAD(us) OVER (PARTITION BY user_id, event_type
+                                  ORDER BY us, event_id) IS NULL
+              THEN 1 ELSE 0 END AS is_last
+  FROM e
+)
+SELECT event_id, user_id,
+       CAST(SUM(is_last) OVER (PARTITION BY user_id ORDER BY us, event_id
+                               ROWS BETWEEN CURRENT ROW
+                               AND UNBOUNDED FOLLOWING) AS BIGINT)
+         AS n_distinct_remaining
+FROM f
+"""
+
+
+@register("windowed_distinct_suffix", oracle=_SUFFIX_DISTINCT_ORACLE)
+def windowed_distinct_suffix(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact COUNT(DISTINCT event_type) over the SUFFIX frame — for
+    each event, how many distinct types the user still produces from
+    this row (inclusive) to the end of their history. Engines reject
+    COUNT(DISTINCT) OVER any frame; the exact two-phase rewrite is:
+    (1) flag each (user, type)'s LAST occurrence (LEAD over the
+    per-type ordering is NULL), (2) suffix running sum of flags over
+    the per-user ordering — a distinct type is counted from exactly
+    its last occurrence backward, which is precisely suffix
+    distinctness. The mirror of the classic first-occurrence/prefix
+    trick, shipped at the other frame shape (VERDICT r10 ask #5
+    carried candidate); window_distinct_rolling covers the bounded
+    frame by frame-local array_distinct.
+
+    100-TB shape: both windows hash-partition on user_id — ONE
+    shuffle, two in-partition sorts ((type, us) then (us)); per-row
+    state is a single running integer, never a set. Skew = the
+    heaviest user's history, same bound as any per-user window.
+
+    Scale bound: epoch-µs values are compared, never multiplied or
+    differenced, and the suffix sum of 0/1 flags is bounded by the
+    per-user distinct-type count — nothing here can approach int64 at
+    any corpus size."""
+    e = _t(spark, sf_dir, "events").select(
+        "user_id", "event_id", "event_type", F.unix_micros("ts").alias("us")
+    )
+    w_type = Window.partitionBy("user_id", "event_type").orderBy(
+        "us", "event_id"
+    )
+    w_suffix = (
+        Window.partitionBy("user_id")
+        .orderBy("us", "event_id")
+        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
+    )
+    return e.select(
+        "event_id",
+        "user_id",
+        "us",
+        F.when(F.lead("us").over(w_type).isNull(), 1)
+        .otherwise(0)
+        .alias("is_last"),
+    ).select(
+        "event_id",
+        "user_id",
+        F.sum("is_last").over(w_suffix).cast("long").alias(
+            "n_distinct_remaining"
+        ),
+    )
+
+
+# ---------------------------------------------------------------------------
+# sliding-frame exact distinct count (two-phase: interval deltas + running sum)
+# ---------------------------------------------------------------------------
+
+_SLIDE_K = 9  # ROWS BETWEEN 9 PRECEDING AND CURRENT ROW — a 10-row frame
+
+# The oracle is the brute-force DEFINITION: DuckDB supports
+# COUNT(DISTINCT) OVER a ROWS frame natively (Spark does not), so the
+# two engines run genuinely independent algorithms for one definition —
+# the strongest oracle form (cf. udtf_table_arg_sessionize).
+_SLIDE_DISTINCT_ORACLE = f"""
+WITH e AS (
+  SELECT user_id, event_id, event_type, epoch_us(ts) AS us FROM events
+)
+SELECT event_id, user_id,
+       CAST(COUNT(DISTINCT event_type) OVER (
+              PARTITION BY user_id ORDER BY us, event_id
+              ROWS BETWEEN {_SLIDE_K} PRECEDING AND CURRENT ROW)
+            AS BIGINT) AS n_distinct_window
+FROM e
+"""
+
+
+@register("windowed_distinct_sliding", oracle=_SLIDE_DISTINCT_ORACLE)
+def windowed_distinct_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact COUNT(DISTINCT event_type) over the SLIDING frame (ROWS
+    BETWEEN 9 PRECEDING AND CURRENT ROW) — "distinct event types in
+    the user's last 10 actions", the short-horizon behavioural-
+    diversity feature. Engines reject COUNT(DISTINCT) OVER any frame;
+    the two-phase rewrite here needs O(1) state per row (unlike
+    window_distinct_rolling's frame-local array_distinct, whose
+    per-row set is ∝ frame length):
+
+    (1) position each row (row_number per user) and find the previous
+        occurrence position p of the same (user, type) (lag over the
+        per-type ordering);
+    (2) the row is the first IN-WINDOW occurrence of its type for
+        exactly the window ends i ∈ [max(pos, p+k+1), pos+k] — a
+        CONTIGUOUS interval (it enters once its predecessor has left,
+        and leaves when it does), so distinct(i) = Σ rows whose
+        interval covers i;
+    (3) emit +1/−1 delta events at the interval endpoints, aggregate
+        deltas per position, and one running sum over positions reads
+        off the count — classic interval stabbing by prefix sum,
+        every value an exact integer.
+
+    100-TB shape: all four exchanges hash on user_id (±type); per-row
+    state is two ints (position, previous position) and the delta
+    table is exactly 2 rows per event pre-aggregation. Skew = the
+    heaviest user's history, same bound as any per-user window. Scale
+    bound: positions and deltas are bounded by per-user event counts —
+    no products, no overflow surface."""
+    k = _SLIDE_K
+    e = _t(spark, sf_dir, "events").select(
+        "user_id", "event_id", "event_type", F.unix_micros("ts").alias("us")
+    )
+    w_user = Window.partitionBy("user_id").orderBy("us", "event_id")
+    pos = e.select(
+        "user_id",
+        "event_id",
+        "event_type",
+        (F.row_number().over(w_user) - 1).alias("pos"),
+    )
+    w_type = Window.partitionBy("user_id", "event_type").orderBy("pos")
+    marked = pos.select(
+        "user_id",
+        "event_id",
+        "pos",
+        F.lag("pos").over(w_type).alias("prev"),
+    )
+    # interval of window-end positions where this occurrence is counted
+    start = F.when(
+        F.col("prev").isNull(), F.col("pos")
+    ).otherwise(F.greatest(F.col("pos"), F.col("prev") + k + 1))
+    deltas = (
+        marked.select(
+            "user_id",
+            F.explode(
+                F.array(
+                    F.struct(start.alias("p"), F.lit(1).alias("d")),
+                    F.struct((F.col("pos") + k + 1).alias("p"), F.lit(-1).alias("d")),
+                )
+            ).alias("ev"),
+        )
+        .select(
+            F.col("user_id").alias("uid"),
+            F.col("ev.p").alias("p"),
+            F.col("ev.d").alias("d"),
+        )
+        .groupBy("uid", "p")
+        .agg(F.sum("d").alias("delta"))
+    )
+    run = (
+        Window.partitionBy("user_id")
+        .orderBy("pos")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return (
-        spine.join(hourly, ["user_id", "h"], "left")
+        marked.join(
+            deltas,
+            (F.col("user_id") == F.col("uid")) & (F.col("pos") == F.col("p")),
+            "left",
+        )
         .select(
             "user_id",
-            "h",
-            F.coalesce("n_events", F.lit(0)).alias("n_events"),
-            F.last("cents", ignorenulls=True).over(w).alias("filled_cents"),
+            "event_id",
+            "pos",
+            F.coalesce("delta", F.lit(0)).alias("delta"),
         )
-    )
-
-
-# ---------------------------------------------------------------------------
-# data profiling: one pass over all columns
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "profile_columns",
-    oracle="""
-    SELECT 'l_quantity' AS column_name, COUNT(*) AS n_rows,
-           COUNT(*) - COUNT(l_quantity) AS n_null,
-           COUNT(DISTINCT l_quantity) AS n_distinct,
-           MIN(l_quantity) AS min_val, MAX(l_quantity) AS max_val
-    FROM lineitem
-    UNION ALL
-    SELECT 'l_discount', COUNT(*), COUNT(*) - COUNT(l_discount),
-           COUNT(DISTINCT l_discount), MIN(l_discount), MAX(l_discount)
-    FROM lineitem
-    UNION ALL
-    SELECT 'l_tax', COUNT(*), COUNT(*) - COUNT(l_tax),
-           COUNT(DISTINCT l_tax), MIN(l_tax), MAX(l_tax)
-    FROM lineitem
-    """,
-)
-def profile_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Column profiling (null rate, cardinality, range) for a
-    training-data quality report — in ONE scan: unpivot the measured
-    columns to (column_name, value) rows via a single Expand, then one
-    grouped aggregate. The oracle's UNION ALL form scans the table once
-    per column; at 100 TB that difference is the whole game. (For
-    approximate profiling at extreme cardinality swap count_distinct
-    for approx_count_distinct — see approx_distinct_sketch.)"""
-    li = _t(spark, sf_dir, "lineitem").select("l_quantity", "l_discount", "l_tax")
-    tall = li.unpivot(
-        ids=[],
-        values=["l_quantity", "l_discount", "l_tax"],
-        variableColumnName="column_name",
-        valueColumnName="value",
-    )
-    return tall.groupBy("column_name").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        (F.count(F.lit(1)) - F.count("value")).alias("n_null"),
-        F.countDistinct("value").alias("n_distinct"),
-        F.min("value").alias("min_val"),
-        F.max("value").alias("max_val"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# SQL interface: one query text, two engines
-# ---------------------------------------------------------------------------
-
-_SQL_BOTH_ENGINES = """
-WITH rev AS (
-  SELECT n_name,
-         CAST(YEAR(o_orderdate) AS INTEGER) AS order_year,
-         CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * 100) AS BIGINT))
-              AS BIGINT) AS revenue_cents
-  FROM lineitem
-  JOIN orders   ON l_orderkey = o_orderkey
-  JOIN customer ON o_custkey = c_custkey
-  JOIN nation   ON c_nationkey = n_nationkey
-  GROUP BY n_name, YEAR(o_orderdate)
-)
-SELECT n_name, order_year, revenue_cents, rnk FROM (
-  SELECT n_name, order_year, revenue_cents,
-         RANK() OVER (PARTITION BY order_year
-                      ORDER BY revenue_cents DESC, n_name) AS rnk
-  FROM rev
-)
-WHERE rnk <= 3
-"""
-
-
-@register("sql_interface_rank", oracle=_SQL_BOTH_ENGINES)
-def sql_interface_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SQL front door: the *identical ANSI SQL text* (CTE + 4-way
-    join + agg + window rank) runs via spark.sql() on registered views
-    and via DuckDB as its own oracle — proving dialect-portable SQL
-    parity, not just DataFrame parity. Catalyst plans it exactly like
-    the DataFrame form (broadcast dims, partial agg, single window
-    shuffle)."""
-    from clean_census_acs_data_spark.io import load_table
-
-    # register only the four views the statement reads — registering the
-    # whole catalog re-reads six unrelated parquet footers per call
-    for t in ("lineitem", "orders", "customer", "nation"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
-    return spark.sql(_SQL_BOTH_ENGINES)
-
-
-# ---------------------------------------------------------------------------
-# exact interpolated percentiles
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "percentile_exact",
-    oracle="""
-    SELECT o_orderpriority,
-           quantile_cont(CAST(ROUND(o_totalprice * 100) AS BIGINT), 0.25) AS p25_cents,
-           quantile_cont(CAST(ROUND(o_totalprice * 100) AS BIGINT), 0.50) AS p50_cents,
-           quantile_cont(CAST(ROUND(o_totalprice * 100) AS BIGINT), 0.75) AS p75_cents
-    FROM orders
-    GROUP BY o_orderpriority
-    """,
-)
-def percentile_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact linear-interpolated percentiles over integer cents. Both
-    engines use rank = p·(n−1) with linear interpolation between exact
-    integers — the interpolation is one double multiply-add on
-    identical operands, so results are bit-identical. The exact
-    percentile requires a per-group sort (vs percentile_approx's
-    mergeable sketch, see approx_distinct_sketch, which is the 100-TB
-    path)."""
-    o = _t(spark, sf_dir, "orders")
-    c = cents("o_totalprice")
-    # one array-percentile aggregate = one per-group value buffer, not
-    # three (same fix as percentile_cont_interp)
-    return (
-        o.groupBy("o_orderpriority")
-        .agg(F.percentile(c, F.lit([0.25, 0.50, 0.75])).alias("ps"))
         .select(
-            "o_orderpriority",
-            F.col("ps")[0].alias("p25_cents"),
-            F.col("ps")[1].alias("p50_cents"),
-            F.col("ps")[2].alias("p75_cents"),
+            "event_id",
+            "user_id",
+            F.sum("delta").over(run).cast("long").alias("n_distinct_window"),
         )
     )
-
-
-# ---------------------------------------------------------------------------
-# exact-moment correlation / covariance
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "stats_corr_covar",
-    oracle="""
-    WITH s AS (
-      SELECT l_returnflag,
-             COUNT(*) AS n,
-             SUM(CAST(l_quantity AS BIGINT)) AS sx,
-             SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS sy,
-             SUM(CAST(l_quantity AS BIGINT)
-                 * CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS sxy,
-             SUM(CAST(l_quantity AS BIGINT) * CAST(l_quantity AS BIGINT)) AS sx2,
-             SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)
-                 * CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS sy2
-      FROM lineitem GROUP BY l_returnflag
-    )
-    SELECT l_returnflag, n,
-           CAST(n * sxy - sx * sy AS DOUBLE) / CAST(n * n AS DOUBLE) AS covar_pop,
-           CAST(n * sxy - sx * sy AS DOUBLE)
-             / (SQRT(CAST(n * sx2 - sx * sx AS DOUBLE))
-                * SQRT(CAST(n * sy2 - sy * sy AS DOUBLE))) AS corr
-    FROM s
-    """,
-)
-def stats_corr_covar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pearson correlation and population covariance from exact integer
-    power sums (n, Σx, Σy, Σxy, Σx², Σy²) — the same no-Welford
-    discipline as stats_moments, extended to the cross moment. The
-    squares exceed int64 at scale, so accumulation runs in
-    decimal(38,0) / HUGEINT; two sqrts and one division at the end,
-    identical association both engines. Single partial-agg shuffle of
-    six integers per group at any data size."""
-    li = _t(spark, sf_dir, "lineitem")
-    dec = "decimal(38,0)"
-    x = F.col("l_quantity").cast("long")
-    y = cents("l_extendedprice")
-    s = li.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(x.cast(dec)).alias("sx"),
-        F.sum(y.cast(dec)).alias("sy"),
-        F.sum((x * y).cast(dec)).alias("sxy"),
-        F.sum((x * x).cast(dec)).alias("sx2"),
-        F.sum((y * y).cast(dec)).alias("sy2"),
-    )
-    n_d = F.col("n").cast(dec)
-    cov_num = (n_d * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double")
-    varx = (n_d * F.col("sx2") - F.col("sx") * F.col("sx")).cast("double")
-    vary = (n_d * F.col("sy2") - F.col("sy") * F.col("sy")).cast("double")
-    return s.select(
-        "l_returnflag",
-        "n",
-        (cov_num / (F.col("n") * F.col("n")).cast("double")).alias("covar_pop"),
-        (cov_num / (F.sqrt(varx) * F.sqrt(vary))).alias("corr"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# per-group mode with deterministic tiebreak
-# ---------------------------------------------------------------------------
-
-
-@register(
-    "mode_per_group",
-    oracle="""
-    SELECT l_returnflag, l_quantity AS mode_qty, cnt FROM (
-      SELECT l_returnflag, l_quantity, COUNT(*) AS cnt,
-             ROW_NUMBER() OVER (PARTITION BY l_returnflag
-                                ORDER BY COUNT(*) DESC, l_quantity) AS rn
-      FROM lineitem GROUP BY l_returnflag, l_quantity
-    ) WHERE rn = 1
-    """,
-)
-def mode_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Statistical mode per group with a total tiebreak (smallest value
-    wins on count ties) — engines' built-in mode() breaks ties
-    arbitrarily, so it can never be cross-engine deterministic; this
-    count→row_number form is. Two shuffles: (group, value) partial-agg
-    counts, then a WindowGroupLimit keyed on the group keeps one row
-    per group — state O(1), skew-immune at any cardinality."""
-    li = _t(spark, sf_dir, "lineitem")
-    counts = li.groupBy("l_returnflag", "l_quantity").agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    w = Window.partitionBy("l_returnflag").orderBy(
-        F.desc("cnt"), F.asc("l_quantity")
-    )
-    return (
-        counts.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("l_returnflag", F.col("l_quantity").alias("mode_qty"), "cnt")
-    )
-
-
-# ---------------------------------------------------------------------------
-# recursive CTE: hierarchy walk (Spark 4 WITH RECURSIVE)
-# ---------------------------------------------------------------------------
-
-_RECURSIVE_HIERARCHY = """
-WITH RECURSIVE chain AS (
-  SELECT c_custkey, c_custkey AS root, 0 AS depth
-  FROM customer WHERE c_custkey < 10
-  UNION ALL
-  SELECT c.c_custkey, chain.root, chain.depth + 1
-  FROM customer c
-  JOIN chain ON CAST(FLOOR(c.c_custkey / 10) AS BIGINT) = chain.c_custkey
-  WHERE c.c_custkey >= 10
-)
-SELECT c_custkey, root, CAST(depth AS BIGINT) AS depth FROM chain
-"""
-
-
-@register("recursive_hierarchy_walk", oracle=_RECURSIVE_HIERARCHY)
-def recursive_hierarchy_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recursive CTE hierarchy flattening (org-chart / BOM walk): every
-    customer resolved to its root and depth in the derived decimal-tree
-    hierarchy (parent = custkey/10). The IDENTICAL SQL text runs on
-    Spark 4's WITH RECURSIVE and as the DuckDB oracle. Each recursion
-    level is one equi-join of the frontier against the child scan —
-    the frontier shrinks geometrically, and depth is bounded by
-    log₁₀(max key), so the unrolled plan stays shallow at any scale."""
-    from clean_census_acs_data_spark.io import register_views
-
-    register_views(spark, sf_dir)
-    return spark.sql(_RECURSIVE_HIERARCHY)

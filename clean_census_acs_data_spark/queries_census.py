@@ -1,27 +1,153 @@
-"""Reference-parity pipelines as driver-contract entries, WITH DuckDB
-oracles (VERDICT r4 ask #5): the fake Census fetchers are deterministic
-pure functions, so the exact wire bodies the Spark pipeline ingests are
-embedded as VALUES literals and the whole
-decode → normalize → rename → align → cast chain is re-expressed in
-DuckDB SQL over them (JSON array-of-arrays parse, header-position
-lookup, NULL-fill alignment, blank/sentinel→NULL typed tier). The wire
-bytes are shared input — same as both engines reading one parquet file;
-every transform is independently implemented on each side."""
+"""The paper's pipeline as driver-contract entries: the
+rename/normalize, schema-align and typed-cast layer, the reference's
+map-entry prefix filter, and the census ETL end to end (tract, ZCTA,
+availability pre-flight, write/read-back, the REST data source).
+
+The fake Census fetchers are deterministic pure functions, so the exact
+wire bodies the Spark pipeline ingests are embedded as VALUES literals
+and the whole decode → normalize → rename → align → cast chain is
+re-expressed in DuckDB SQL over them (JSON array-of-arrays parse,
+header-position lookup, NULL-fill alignment, blank/sentinel→NULL typed
+tier). The wire bytes are shared input — same as both engines reading
+one parquet file; every transform is independently implemented on each
+side.
+"""
 
 from __future__ import annotations
 
 import csv
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
+from clean_census_acs_data_spark import transforms as T
+from clean_census_acs_data_spark.functions import cents
 from clean_census_acs_data_spark.plans.census_pipeline import run_census_pipeline
-from clean_census_acs_data_spark.queries import register
+from clean_census_acs_data_spark.registry import _t, register
 from clean_census_acs_data_spark.sources import census as C
 from clean_census_acs_data_spark.sources.fake_census import (
-    RETIRED_VARIABLE,
     fake_census_fetcher,
     fake_zcta_fetcher,
+    RETIRED_VARIABLE,
 )
+
+
+# ---------------------------------------------------------------------------
+# §2C-2 rename_normalize (SURVEY.md §2A rows 7-8)
+# ---------------------------------------------------------------------------
+
+_PART_MAPPING = {
+    "P_PARTKEY": "partkey",
+    "P_NAME": "part_name",
+    "P_BRAND": "brand",
+    "P_TYPE": "part_type",
+}
+
+
+@register(
+    "rename_normalize",
+    oracle="""
+    SELECT p_partkey AS partkey, p_name AS part_name,
+           p_brand AS brand, p_type AS part_type
+    FROM part
+    """,
+)
+def rename_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """normalize_columns (replace('-','_').upper().strip(),
+    Test_census_tract.py:352) then metadata-driven rename with identity
+    fallback (:354) via the transform library. Pure projection — compiles
+    to a column alias list, zero runtime cost at any scale."""
+    part = _t(spark, sf_dir, "part")
+    renamed = T.apply_mapping(T.normalize_columns(part), _PART_MAPPING)
+    return renamed.select("partkey", "part_name", "brand", "part_type")
+
+
+# ---------------------------------------------------------------------------
+# §2C-3 schema_align_union (SURVEY.md §2A rows 10, 23)
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "schema_align_union",
+    oracle="""
+    SELECT o_orderkey, o_custkey, o_totalprice,
+           CAST(NULL AS VARCHAR) AS o_orderpriority
+    FROM orders WHERE o_orderstatus = 'O'
+    UNION ALL
+    SELECT o_orderkey, o_custkey, CAST(NULL AS DOUBLE) AS o_totalprice,
+           o_orderpriority
+    FROM orders WHERE o_orderstatus = 'F'
+    """,
+)
+def schema_align_union(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Two heterogeneous projections NULL-filled and name-union'd — the
+    reference's per-chunk align + pd.concat (Test_census_tract.py:171-175,
+    396-398). unionByName is a narrow op: each branch keeps its
+    partitioning, no shuffle at any scale."""
+    orders = _t(spark, sf_dir, "orders")
+    o_open = orders.where(F.col("o_orderstatus") == "O").select(
+        "o_orderkey", "o_custkey", "o_totalprice"
+    )
+    o_done = orders.where(F.col("o_orderstatus") == "F").select(
+        "o_orderkey", "o_custkey", "o_orderpriority"
+    )
+    aligned_open = T.align_schema(
+        o_open, ["o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"]
+    )
+    return T.union_all([aligned_open, o_done]).select(
+        "o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"
+    )
+
+
+# ---------------------------------------------------------------------------
+# §2C-4 cast_clean (SURVEY.md §1.2; COPY EMPTYASNULL/BLANKSASNULL)
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "cast_clean",
+    oracle="""
+    WITH raw AS (
+      SELECT
+        CAST(c_custkey AS VARCHAR) AS custkey_s,
+        CASE WHEN c_custkey % 7 = 0 THEN '  ' ELSE c_mktsegment END AS segment_s,
+        CASE WHEN c_custkey % 11 = 0 THEN '-888888888'
+             ELSE CAST(CAST(ROUND(c_acctbal * 100) AS BIGINT) AS VARCHAR) END AS acctbal_s
+      FROM customer
+    )
+    SELECT
+      CAST(custkey_s AS BIGINT)                                    AS custkey,
+      NULLIF(TRIM(segment_s), '')                                  AS segment,
+      CAST(CASE WHEN TRIM(acctbal_s) IN ('-888888888','-999999999','-666666666','-222222222')
+                THEN NULL ELSE NULLIF(TRIM(acctbal_s), '') END AS BIGINT) AS acctbal_cents
+    FROM raw
+    """,
+)
+def cast_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The typed tier over all-string ingest: blanks → NULL (COPY
+    EMPTYASNULL BLANKSASNULL, Test_census_tract.py:277), ACS sentinel
+    codes → NULL, then explicit casts (SURVEY.md §1.2). The all-string
+    frame is synthesized from `customer` so the oracle sees identical
+    input. Pure row-local projection — scales linearly, no shuffle."""
+    c = _t(spark, sf_dir, "customer")
+    raw = c.select(
+        F.col("c_custkey").cast("string").alias("custkey_s"),
+        F.when(F.col("c_custkey") % 7 == 0, F.lit("  "))
+        .otherwise(F.col("c_mktsegment"))
+        .alias("segment_s"),
+        F.when(F.col("c_custkey") % 11 == 0, F.lit("-888888888"))
+        .otherwise(cents("c_acctbal").cast("string"))
+        .alias("acctbal_s"),
+    )
+    cleaned = T.cast_clean(
+        raw, {"custkey_s": "long", "segment_s": "string", "acctbal_s": "long"}
+    )
+    return cleaned.select(
+        F.col("custkey_s").alias("custkey"),
+        F.col("segment_s").alias("segment"),
+        F.col("acctbal_s").alias("acctbal_cents"),
+    )
+
 
 # ---------------------------------------------------------------------------
 # oracle construction (import-time, pure Python — no Spark, no network)
@@ -376,3 +502,47 @@ def census_rest_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         .load()
     )
     return df
+
+
+# ---------------------------------------------------------------------------
+# map functions — the reference's x-ratelimit header filter as a data op
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "map_prefix_filter",
+    oracle="""
+    WITH hdrs AS (
+      SELECT o_orderkey, k, v FROM (
+        SELECT o_orderkey, 'x-ratelimit-remaining' AS k,
+               CAST(o_orderkey % 100 AS VARCHAR) AS v FROM orders
+        UNION ALL
+        SELECT o_orderkey, 'X-RateLimit-Limit' AS k, '500' AS v FROM orders
+        UNION ALL
+        SELECT o_orderkey, 'server' AS k, 'census' AS v FROM orders
+        UNION ALL
+        SELECT o_orderkey, 'content-type' AS k, 'application/json' AS v FROM orders
+      )
+    )
+    SELECT o_orderkey, k AS header_key, v AS header_value
+    FROM hdrs
+    WHERE lower(k) LIKE 'x-ratelimit%'
+    """,
+)
+def map_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The reference's response-header prefix filter
+    (Test_census_tract.py:92, SURVEY.md §2A row 21) as a data-level
+    map op: build a header map per row, F.map_filter on
+    lower(key).startswith('x-ratelimit'), explode surviving entries.
+    Map construction + filter + explode are all row-local codegen."""
+    o = _t(spark, sf_dir, "orders")
+    hdrs = F.create_map(
+        F.lit("x-ratelimit-remaining"), (F.col("o_orderkey") % 100).cast("string"),
+        F.lit("X-RateLimit-Limit"), F.lit("500"),
+        F.lit("server"), F.lit("census"),
+        F.lit("content-type"), F.lit("application/json"),
+    )
+    kept = F.map_filter(hdrs, lambda k, _: F.lower(k).startswith("x-ratelimit"))
+    return o.select(
+        "o_orderkey", F.explode(kept).alias("header_key", "header_value")
+    )

@@ -1,15 +1,9 @@
-"""TPC-H pattern completion: the remaining planner shapes of the
-22-query suite, adapted to this data universe (reference tables carry
-no partsupp / l_shipmode / l_commitdate — flavors note the adaptation
-in their docstrings; the PLAN SHAPE each query exercises is preserved).
+"""TPC-H: the planner shapes of the 22-query suite, adapted to this
+data universe (the tables carry no partsupp / l_shipmode /
+l_commitdate — flavors note the adaptation in their docstrings; the
+plan shape each query exercises is preserved).
 
-Already covered elsewhere: Q1 (`q1_pricing_summary`), Q3, Q5
-(queries_breadth), Q4/Q10/Q14/Q18/Q19/Q22 (queries_round2), Q16 flavor
-(`supplier_variety`), Q17 shape (`scalar_subquery_smallqty`). This
-module adds Q2, Q6, Q7, Q8, Q9, Q11, Q12, Q13, Q15, Q20, Q21 — with
-that, every TPC-H planner pattern has an oracle-checked entry.
-
-Same determinism discipline as queries.py: exact integer (cents)
+Same determinism discipline as the registry: exact integer (cents)
 aggregation, single post-agg double divisions, identical association
 order, identical aliases both sides.
 """
@@ -20,8 +14,519 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from clean_census_acs_data_spark.functions import as_long, cents
-from clean_census_acs_data_spark.queries import _t, register
+from clean_census_acs_data_spark.registry import _t, register
 from clean_census_acs_data_spark.session import tracked_cache
+
+
+# ---------------------------------------------------------------------------
+# §2C-8 hash_agg — flagship (TPC-H Q1 shape). SURVEY.md §7 Phase 1.
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "q1_pricing_summary",
+    oracle="""
+    SELECT
+      l_returnflag,
+      l_linestatus,
+      CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT)                     AS sum_qty,
+      CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS BIGINT)  AS sum_base_cents,
+      CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)) AS BIGINT)
+                                                                          AS sum_disc_cents,
+      CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * (1 + l_tax) * 100) AS BIGINT)) AS BIGINT)
+                                                                          AS sum_charge_cents,
+      CAST(SUM(CAST(l_quantity AS BIGINT)) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE)
+                                                                          AS avg_qty,
+      COUNT(*)                                                            AS count_order
+    FROM lineitem
+    WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
+    GROUP BY l_returnflag, l_linestatus
+    """,
+)
+def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Pricing-summary hash aggregate: scan→filter→project→partial agg→
+    final agg. Scale: filter + 7-column projection reach the parquet scan
+    (pushdown); partial aggregation (map-side combine) means the shuffle
+    carries only |groups|×partitions rows — 4 groups, so bytes shuffled
+    are ~zero regardless of input size. Survives 100 TB trivially."""
+    li = _t(spark, sf_dir, "lineitem").where(
+        F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp")
+    )
+    disc = F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount"))
+    charge = disc * (F.lit(1) + F.col("l_tax"))
+    return (
+        li.groupBy("l_returnflag", "l_linestatus")
+        .agg(
+            F.sum(as_long("l_quantity")).alias("sum_qty"),
+            F.sum(cents("l_extendedprice")).alias("sum_base_cents"),
+            F.sum(F.round(disc * 100).cast("long")).alias("sum_disc_cents"),
+            F.sum(F.round(charge * 100).cast("long")).alias("sum_charge_cents"),
+            (
+                F.sum(as_long("l_quantity")).cast("double")
+                / F.count(F.lit(1)).cast("double")
+            ).alias("avg_qty"),
+            F.count(F.lit(1)).alias("count_order"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# TPC-H Q3 shape: multi-join + agg + top-k
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "tpch_q3_shipping_priority",
+    oracle="""
+    SELECT l_orderkey,
+           CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)) AS BIGINT)
+             AS revenue_cents,
+           o_orderdate
+    FROM customer
+    JOIN orders   ON c_custkey = o_custkey
+    JOIN lineitem ON l_orderkey = o_orderkey
+    WHERE c_mktsegment = 'BUILDING'
+      AND o_orderdate < TIMESTAMP '1995-03-15 00:00:00'
+      AND l_shipdate  > TIMESTAMP '1995-03-15 00:00:00'
+    GROUP BY l_orderkey, o_orderdate
+    ORDER BY revenue_cents DESC, l_orderkey
+    LIMIT 10
+    """,
+)
+def tpch_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Q3 shape: selective dim-side filter → fact join → agg → top-k.
+    The segment filter cuts customer ~5× before the join; both filters
+    push to the scans. Final top-10 is TakeOrderedAndProject (k-row
+    heap per partition) — no global sort. At 100 TB, AQE picks
+    broadcast for the filtered customer side if it fits, else
+    shuffle-hash; the plan needs no hints to stay sane."""
+    c = _t(spark, sf_dir, "customer").where(F.col("c_mktsegment") == "BUILDING")
+    o = _t(spark, sf_dir, "orders").where(
+        F.col("o_orderdate") < F.lit("1995-03-15 00:00:00").cast("timestamp")
+    )
+    li = _t(spark, sf_dir, "lineitem").where(
+        F.col("l_shipdate") > F.lit("1995-03-15 00:00:00").cast("timestamp")
+    )
+    rev = F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount"))
+    return (
+        c.join(o, c.c_custkey == o.o_custkey)
+        .join(li, li.l_orderkey == o.o_orderkey)
+        .groupBy("l_orderkey", "o_orderdate")
+        .agg(F.sum(F.round(rev * 100).cast("long")).alias("revenue_cents"))
+        .select("l_orderkey", "revenue_cents", "o_orderdate")
+        .orderBy(F.desc("revenue_cents"), F.asc("l_orderkey"))
+        .limit(10)
+    )
+
+
+# ---------------------------------------------------------------------------
+# TPC-H Q5 shape: 6-way join
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "tpch_q5_local_supplier",
+    oracle="""
+    SELECT n_name,
+           CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)) AS BIGINT)
+             AS revenue_cents
+    FROM customer
+    JOIN orders   ON c_custkey = o_custkey
+    JOIN lineitem ON l_orderkey = o_orderkey
+    JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
+    JOIN nation   ON s_nationkey = n_nationkey
+    JOIN region   ON n_regionkey = r_regionkey
+    WHERE r_name = 'ASIA'
+      AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
+      AND o_orderdate <  TIMESTAMP '1997-01-01 00:00:00'
+    GROUP BY n_name
+    """,
+)
+def tpch_q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Q5 shape: 6-way join where only lineitem⋈orders is fact-fact;
+    supplier/nation/region are broadcast so the big probe side never
+    shuffles for them. The region filter transitively prunes nation
+    and supplier *before* broadcast (Catalyst pushes it through the
+    join graph). One shuffle total (orders⋈lineitem), then a 25-group
+    agg."""
+    c = _t(spark, sf_dir, "customer")
+    o = _t(spark, sf_dir, "orders").where(
+        (F.col("o_orderdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
+        & (F.col("o_orderdate") < F.lit("1997-01-01 00:00:00").cast("timestamp"))
+    )
+    li = _t(spark, sf_dir, "lineitem")
+    s = _t(spark, sf_dir, "supplier")
+    n = _t(spark, sf_dir, "nation")
+    r = _t(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
+    rev = F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount"))
+    return (
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .join(c, o.o_custkey == c.c_custkey)
+        .join(
+            F.broadcast(s),
+            (li.l_suppkey == s.s_suppkey) & (c.c_nationkey == s.s_nationkey),
+        )
+        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
+        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
+        .groupBy("n_name")
+        .agg(F.sum(F.round(rev * 100).cast("long")).alias("revenue_cents"))
+    )
+
+
+# ---------------------------------------------------------------------------
+# TPC-H Q17 shape: decorrelated scalar subquery
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "scalar_subquery_smallqty",
+    oracle="""
+    WITH pa AS (
+      SELECT l_partkey,
+             SUM(CAST(l_quantity AS BIGINT)) AS qty_sum,
+             COUNT(*) AS qty_cnt
+      FROM lineitem GROUP BY l_partkey
+    )
+    SELECT COUNT(*) AS n_small,
+           CAST(SUM(CAST(ROUND(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS total_cents
+    FROM lineitem JOIN pa USING (l_partkey)
+    WHERE 5 * CAST(l_quantity AS BIGINT) * qty_cnt < qty_sum
+    """,
+)
+def scalar_subquery_smallqty(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Q17 shape: per-part average as a decorrelated aggregate joined
+    back to the fact — the manual form of `qty < 0.2 * (SELECT AVG ...)`.
+    The predicate is pure integer arithmetic (5·qty·cnt < sum ⇔
+    qty < 0.2·avg) so both engines agree bit-exactly with no double
+    division. At scale: the aggregate side shrinks to |parts| rows
+    before the join; same shuffle key (l_partkey) on both sides means
+    AQE can reuse the exchange."""
+    li = _t(spark, sf_dir, "lineitem")
+    pa = li.groupBy("l_partkey").agg(
+        F.sum(as_long("l_quantity")).alias("qty_sum"),
+        F.count(F.lit(1)).alias("qty_cnt"),
+    )
+    joined = li.join(pa, "l_partkey")
+    small = joined.where(
+        F.lit(5) * as_long("l_quantity") * F.col("qty_cnt") < F.col("qty_sum")
+    )
+    return small.agg(
+        F.count(F.lit(1)).alias("n_small"),
+        F.sum(cents("l_extendedprice")).alias("total_cents"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# TPC-H Q4 shape: EXISTS semi join with a non-equi residual condition
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "tpch_q4_late_shipped",
+    oracle="""
+    SELECT o_orderpriority, COUNT(*) AS n_late_orders
+    FROM orders
+    WHERE o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1996-04-01'
+      AND EXISTS (
+        SELECT 1 FROM lineitem
+        WHERE l_orderkey = o_orderkey
+          AND l_shipdate > o_orderdate + INTERVAL 90 DAY
+      )
+    GROUP BY o_orderpriority
+    """,
+)
+def tpch_q4_late_shipped(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Q4 shape: EXISTS → left-semi join on the order key with a
+    non-equi residual (shipdate > orderdate + 90d). The semi join keeps
+    the probe side at one output row per order regardless of lineitem
+    fan-out — no dedup needed. Date filter prunes orders at the scan;
+    the semi join shuffles only (orderkey, orderdate) + lineitem's
+    (orderkey, shipdate): narrow columns at any scale."""
+    o = _t(spark, sf_dir, "orders").where(
+        (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1996-04-01")
+    )
+    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
+    late = o.join(
+        li,
+        (F.col("l_orderkey") == F.col("o_orderkey"))
+        & (F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 90 DAYS")),
+        "left_semi",
+    )
+    return late.groupBy("o_orderpriority").agg(
+        F.count(F.lit(1)).alias("n_late_orders")
+    )
+
+
+# ---------------------------------------------------------------------------
+# TPC-H Q10 shape: 4-way join + agg + top-k
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "tpch_q10_returned_topk",
+    oracle="""
+    SELECT c_custkey, c_name, n_name,
+           CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * 100) AS BIGINT))
+                AS BIGINT) AS revenue_cents
+    FROM lineitem
+    JOIN orders   ON l_orderkey = o_orderkey
+    JOIN customer ON o_custkey = c_custkey
+    JOIN nation   ON c_nationkey = n_nationkey
+    WHERE l_returnflag = 'R'
+      AND o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1996-07-01'
+    GROUP BY c_custkey, c_name, n_name
+    ORDER BY revenue_cents DESC, c_custkey
+    LIMIT 20
+    """,
+)
+def tpch_q10_returned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Q10 shape: returned-item revenue per customer, top 20. Returnflag
+    + date filters reach both scans; nation broadcasts; customer joins
+    after the lineitem-orders join has already shrunk the fact side;
+    final top-k is a TakeOrderedAndProject heap (k rows per partition),
+    never a global sort."""
+    li = _t(spark, sf_dir, "lineitem").where(F.col("l_returnflag") == "R")
+    o = _t(spark, sf_dir, "orders").where(
+        (F.col("o_orderdate") >= "1996-01-01") & (F.col("o_orderdate") < "1996-07-01")
+    )
+    c = _t(spark, sf_dir, "customer")
+    n = _t(spark, sf_dir, "nation")
+    rev = F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100).cast("long")
+    return (
+        li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(c, F.col("o_custkey") == F.col("c_custkey"))
+        .join(F.broadcast(n), F.col("c_nationkey") == F.col("n_nationkey"))
+        .groupBy("c_custkey", "c_name", "n_name")
+        .agg(F.sum(rev).alias("revenue_cents"))
+        .orderBy(F.desc("revenue_cents"), F.asc("c_custkey"))
+        .limit(20)
+    )
+
+
+# ---------------------------------------------------------------------------
+# TPC-H Q14 shape: conditional aggregate ratio (promo revenue share)
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "tpch_q14_promo_share",
+    oracle="""
+    SELECT
+      CAST(SUM(CASE WHEN p_type = 'PROMO'
+               THEN CAST(ROUND(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)
+               ELSE 0 END) AS BIGINT) AS promo_cents,
+      CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * 100) AS BIGINT))
+           AS BIGINT) AS total_cents,
+      100.0 * CAST(SUM(CASE WHEN p_type = 'PROMO'
+                       THEN CAST(ROUND(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)
+                       ELSE 0 END) AS DOUBLE)
+            / CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * 100) AS BIGINT))
+                   AS DOUBLE) AS promo_share_pct
+    FROM lineitem JOIN part ON l_partkey = p_partkey
+    WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1996-02-01'
+    """,
+)
+def tpch_q14_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Q14 shape: promo revenue share over one month. Part broadcasts
+    (dim-sized); both conditional and total sums are exact integer
+    cents aggregated in one pass; the share is a single post-agg
+    double division — bit-deterministic."""
+    li = _t(spark, sf_dir, "lineitem").where(
+        (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1996-02-01")
+    )
+    p = _t(spark, sf_dir, "part").select("p_partkey", "p_type")
+    rev = F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100).cast("long")
+    agg = (
+        li.join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
+        .agg(
+            F.sum(F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0))).alias(
+                "promo_cents"
+            ),
+            F.sum(rev).alias("total_cents"),
+        )
+    )
+    return agg.select(
+        "promo_cents",
+        "total_cents",
+        (
+            100.0
+            * F.col("promo_cents").cast("double")
+            / F.col("total_cents").cast("double")
+        ).alias("promo_share_pct"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# TPC-H Q16 flavor: supplier variety per brand/type with exclusion
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "supplier_variety",
+    oracle="""
+    SELECT p_brand, p_type, COUNT(DISTINCT l_suppkey) AS n_suppliers
+    FROM lineitem JOIN part ON l_partkey = p_partkey
+    WHERE p_brand <> 'Brand#13'
+    GROUP BY p_brand, p_type
+    """,
+)
+def supplier_variety(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Q16 flavor (no partsupp table in this universe): distinct
+    suppliers serving each (brand, type), excluding one brand. The
+    exclusion predicate pushes into the broadcast dim before the join;
+    COUNT(DISTINCT) expands to a two-phase aggregate (distinct partial
+    per partition, then merge) — no row explosion crosses the wire."""
+    li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
+    p = _t(spark, sf_dir, "part").where(F.col("p_brand") != "Brand#13")
+    return (
+        li.join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
+        .groupBy("p_brand", "p_type")
+        .agg(F.count_distinct("l_suppkey").alias("n_suppliers"))
+    )
+
+
+# ---------------------------------------------------------------------------
+# TPC-H Q18 shape: HAVING on a grouped fact, joined back to dimensions
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "tpch_q18_large_orders",
+    oracle="""
+    SELECT c_custkey, c_name, o_orderkey, o_orderdate, big.sum_qty
+    FROM (
+      SELECT l_orderkey, CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty
+      FROM lineitem GROUP BY l_orderkey
+      HAVING SUM(CAST(l_quantity AS BIGINT)) >= 140
+    ) big
+    JOIN orders   ON big.l_orderkey = o_orderkey
+    JOIN customer ON o_custkey = c_custkey
+    """,
+)
+def tpch_q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Q18 shape: aggregate the fact first (sum qty per order, partial
+    agg shrinks it to |orders| before any join), filter with HAVING,
+    then join the small surviving set back to orders/customer. Doing
+    the joins first would shuffle the full lineitem — aggregate-then-
+    join is the scale-correct order, and AQE converts the join-back to
+    broadcast once the HAVING filter leaves few rows."""
+    li = _t(spark, sf_dir, "lineitem")
+    big = (
+        li.groupBy("l_orderkey")
+        .agg(F.sum(F.col("l_quantity").cast("long")).alias("sum_qty"))
+        .where(F.col("sum_qty") >= 140)
+    )
+    o = _t(spark, sf_dir, "orders")
+    c = _t(spark, sf_dir, "customer")
+    return (
+        big.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
+        .join(c, F.col("o_custkey") == F.col("c_custkey"))
+        .select("c_custkey", "c_name", "o_orderkey", "o_orderdate", "sum_qty")
+    )
+
+
+# ---------------------------------------------------------------------------
+# TPC-H Q19 shape: disjunctive (OR-of-ANDs) predicate across join sides
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "tpch_q19_disjunctive",
+    oracle="""
+    SELECT CAST(SUM(CAST(ROUND(l_extendedprice * (1 - l_discount) * 100) AS BIGINT))
+                AS BIGINT) AS revenue_cents,
+           COUNT(*) AS n_lines
+    FROM lineitem JOIN part ON l_partkey = p_partkey
+    WHERE (p_brand = 'Brand#13' AND p_size BETWEEN 1 AND 10
+           AND l_quantity BETWEEN 10 AND 30)
+       OR (p_brand = 'Brand#19' AND p_size BETWEEN 5 AND 25
+           AND l_quantity BETWEEN 20 AND 40)
+       OR (p_brand = 'Brand#5'  AND p_size BETWEEN 1 AND 40
+           AND l_quantity BETWEEN 1 AND 15)
+    """,
+)
+def tpch_q19_disjunctive(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Q19 shape: OR-of-ANDs spanning both join sides. Catalyst derives
+    pushable per-side residuals from the disjunction (the l_quantity
+    range union reaches the lineitem scan, the brand/size union reaches
+    the part scan) while the full predicate evaluates post-join —
+    free scan pruning even for disjunctions."""
+    li = _t(spark, sf_dir, "lineitem")
+    p = _t(spark, sf_dir, "part")
+    cond = (
+        (
+            (F.col("p_brand") == "Brand#13")
+            & F.col("p_size").between(1, 10)
+            & F.col("l_quantity").between(10, 30)
+        )
+        | (
+            (F.col("p_brand") == "Brand#19")
+            & F.col("p_size").between(5, 25)
+            & F.col("l_quantity").between(20, 40)
+        )
+        | (
+            (F.col("p_brand") == "Brand#5")
+            & F.col("p_size").between(1, 40)
+            & F.col("l_quantity").between(1, 15)
+        )
+    )
+    rev = F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 100).cast("long")
+    return (
+        li.join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
+        .where(cond)
+        .agg(F.sum(rev).alias("revenue_cents"), F.count(F.lit(1)).alias("n_lines"))
+    )
+
+
+# ---------------------------------------------------------------------------
+# TPC-H Q22 shape: scalar subquery threshold + anti join
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "tpch_q22_idle_customers",
+    oracle="""
+    SELECT c_nationkey,
+           COUNT(*) AS n_custs,
+           CAST(SUM(CAST(ROUND(c_acctbal * 100) AS BIGINT)) AS BIGINT)
+             AS total_acctbal_cents
+    FROM customer
+    WHERE CAST(ROUND(c_acctbal * 100) AS BIGINT) > (
+            SELECT CAST(SUM(CAST(ROUND(c_acctbal * 100) AS BIGINT)) AS DOUBLE)
+                   / CAST(COUNT(*) AS DOUBLE)
+            FROM customer WHERE c_acctbal > 0.0
+          )
+      AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
+    GROUP BY c_nationkey
+    """,
+)
+def tpch_q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Q22 shape: customers above the average positive balance with no
+    orders, per nation. The average is a 1-row scalar subquery
+    (broadcast), the no-orders check a left-anti join on the order key;
+    balances compare in exact integer cents against a deterministic
+    single-division double threshold."""
+    c = _t(spark, sf_dir, "customer").withColumn("bal_cents", cents("c_acctbal"))
+    avg_pos = (
+        c.where(F.col("c_acctbal") > 0.0)
+        .agg(
+            (
+                F.sum("bal_cents").cast("double") / F.count(F.lit(1)).cast("double")
+            ).alias("avg_cents")
+        )
+    )
+    o = _t(spark, sf_dir, "orders").select("o_custkey")
+    return (
+        c.crossJoin(F.broadcast(avg_pos))
+        .where(F.col("bal_cents") > F.col("avg_cents"))
+        .join(o, F.col("o_custkey") == F.col("c_custkey"), "left_anti")
+        .groupBy("c_nationkey")
+        .agg(
+            F.count(F.lit(1)).alias("n_custs"),
+            F.sum("bal_cents").alias("total_acctbal_cents"),
+        )
+    )
+
 
 _REV_CENTS_SQL = "CAST(ROUND(l_extendedprice * (1 - l_discount) * 100) AS BIGINT)"
 

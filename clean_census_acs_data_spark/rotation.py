@@ -20,10 +20,11 @@ A fingerprint is the sha1 of the sorted distinct ``ast.dump``s of the
 top-level defs an entry's ``@register`` def statically reaches. Module
 paths are not hashed, neither where a def lives nor the package module a
 def imports from, so moving an unchanged def keeps it. A name a module
-binds by import (a re-export) is followed to the def it names. The map is written by
-``scripts/stamp_fingerprints.py`` from each round's git tree. A missing
-or unreadable map, or one from another Python minor version (whose
-``ast.dump`` differs), counts every attested entry as changed.
+binds by import (a re-export) is followed to the def it names. The map
+is written by ``scripts/stamp_fingerprints.py`` from each round's git
+tree. A missing or unreadable map, or one from another Python minor
+version (whose ``ast.dump`` differs), counts every attested entry as
+changed.
 """
 
 from __future__ import annotations
@@ -103,7 +104,7 @@ def _refs_and_imports(node, package: list[str]) -> tuple[set[str], dict[str, str
     return {r for r in refs if r.partition(".")[0] not in local}, imports
 
 
-def _blank_package_imports(node, package: list[str]):
+def _blank_package_imports(node):
     """``node`` with the module path of every import of a package module
     blanked, so a def keeps its dump when what it imports moves; the
     reach walk still follows the import to the def it names."""
@@ -144,7 +145,7 @@ def _module_index(src: str, package: list[str]) -> dict:
         else:
             continue
         refs, local = _refs_and_imports(node, package)
-        dump = ast.dump(_blank_package_imports(node, package))
+        dump = ast.dump(_blank_package_imports(node))
         for name in names:
             # a name bound twice keeps both statements' dumps
             d = defs.setdefault(name, {"dump": "", "refs": set(), "imports": {}})

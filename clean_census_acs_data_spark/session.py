@@ -303,7 +303,7 @@ def register_python_datasource(spark: SparkSession, ds_cls) -> None:
 # and land in a registry; harnesses that run many entries in sequence
 # (bench.py) call reap_tracked_caches() after each entry's terminal
 # action. Session-SHARED caches (operators/dedup.py's standard-pair /
-# edge / component memos, queries_round7._knn_ivf_stages) deliberately
+# edge / component memos, queries_vectors._knn_ivf_stages) deliberately
 # do NOT use it — they are the cross-entry materialized artifacts a
 # production dedup/ANN pipeline persists, and reaping them would
 # re-run their fill once per consumer.

@@ -1,7 +1,6 @@
-"""Generate MODULES.md — a navigable index of every registered query
-entry grouped by defining module, with oracle status and the first
-docstring line. Zero behavior change; pure discoverability for the
-50+ queries_round* files (VERDICT r6 'Next round' #7).
+"""Generate MODULES.md — an index of every registered query entry
+grouped by its domain module, with oracle status and the first
+docstring line.
 
 Run:  python scripts/module_index.py   (rewrites MODULES.md)
 """
@@ -42,8 +41,7 @@ def main() -> None:
         "",
         f"{len(QUERIES)} registered entries across {len(by_mod)} modules;"
         f" {n_oracle} oracle-backed, {len(QUERIES) - n_oracle} rows-only.",
-        "Entries appear in registry (insertion) order within each module —"
-        " the same order the driver's first-50 sampling window uses.",
+        "Entries appear in registry (insertion) order within each module.",
         "",
     ]
     for mod in sorted(by_mod):

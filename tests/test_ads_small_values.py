@@ -9,7 +9,7 @@ from __future__ import annotations
 import duckdb
 import pytest
 
-from clean_census_acs_data_spark.queries_windows import (
+from clean_census_acs_data_spark.queries_sketches import (
     _ADS_ORACLE,
     approx_distinct_sketch,
 )

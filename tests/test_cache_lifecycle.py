@@ -179,7 +179,7 @@ def test_knn_memo_teardown_frees_internal_cache(spark):
     """The IVF stages memo stores its internal cached `sel` stage so
     teardown can actually free blocks (the returned probe/candidate
     frames are uncached derivations)."""
-    from clean_census_acs_data_spark import queries_round7 as R7
+    from clean_census_acs_data_spark import queries_vectors as R7
 
     sf = "/root/testdata/sf0.001"
     R7._knn_ivf_stages(spark, sf)

@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import duckdb
 
-from clean_census_acs_data_spark.queries_round9 import _hilbert_sql
+from clean_census_acs_data_spark.queries_relational import _hilbert_sql
 
 
 def _reference_xy2d(n: int, x: int, y: int) -> int:

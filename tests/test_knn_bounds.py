@@ -11,11 +11,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-# import the registry FIRST: queries_round9 pulls oracle text from
-# queries_round7 at module level, so importing round7 directly would
-# re-enter it partially initialized (registry import order is safe)
-import clean_census_acs_data_spark.queries  # noqa: F401
-from clean_census_acs_data_spark.queries_round7 import (
+from clean_census_acs_data_spark.queries_vectors import (
     _KNN_CAP,
     _knn_ivf_stages,
     knn_join_ivf,
@@ -73,7 +69,7 @@ def test_probe2_recall_is_monotone(spark):
     """nprobe=2 candidate coverage is a superset of nprobe=1's: every
     probe-1 neighbor at rank 1 still appears in probe-2's candidate
     set, and probe-2's best cosine per vector is >= probe-1's."""
-    from clean_census_acs_data_spark.queries_round9 import knn_join_ivf_probe2
+    from clean_census_acs_data_spark.queries_vectors import knn_join_ivf_probe2
 
     p1 = {
         r.vec_id: r.cosine

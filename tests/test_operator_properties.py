@@ -662,7 +662,7 @@ def test_interval_overlap_bucketing_matches_brute_force(spark):
                 out.add((ua, a[0], b[0], min(a[1] + W, b[1] + W) - max(a[1], b[1])))
         return out
 
-    # mirror of queries_round3.interval_overlap_join's bucketed plan
+    # mirror of queries_events.interval_overlap_join's bucketed plan
     ev = df.select(
         "user_id",
         "event_id",

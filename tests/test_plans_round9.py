@@ -24,7 +24,7 @@ def test_partitioned_readback_prunes(spark):
     import os
     import tempfile
 
-    from clean_census_acs_data_spark.queries_round9 import (
+    from clean_census_acs_data_spark.queries_relational import (
         partitioned_write_prune_scan,
     )
 
@@ -49,7 +49,7 @@ def test_partitioned_readback_prunes(spark):
 
 
 def test_mmr_plan_is_broadcast_only(spark):
-    from clean_census_acs_data_spark.queries_round9 import mmr_rerank_topk
+    from clean_census_acs_data_spark.queries_vectors import mmr_rerank_topk
 
     plan = (
         mmr_rerank_topk(spark, SF_DIR)
@@ -61,7 +61,7 @@ def test_mmr_plan_is_broadcast_only(spark):
 
 
 def test_colbert_plan_takes_ordered_topk(spark):
-    from clean_census_acs_data_spark.queries_round9 import colbert_maxsim_topk
+    from clean_census_acs_data_spark.queries_vectors import colbert_maxsim_topk
 
     plan = (
         colbert_maxsim_topk(spark, SF_DIR)

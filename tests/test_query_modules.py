@@ -1,0 +1,40 @@
+"""The query layer's import graph: every query module imports first in a
+fresh interpreter, and the registry imports no entry module."""
+
+from __future__ import annotations
+
+import glob
+import os
+import subprocess
+import sys
+
+import pytest
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PKG = "clean_census_acs_data_spark"
+MODULES = sorted(
+    os.path.basename(p)[: -len(".py")]
+    for p in glob.glob(os.path.join(REPO, PKG, "queries*.py"))
+)
+
+
+def _run(code: str) -> subprocess.CompletedProcess:
+    return subprocess.run(
+        [sys.executable, "-c", code], cwd=REPO, capture_output=True, text=True, timeout=300
+    )
+
+
+@pytest.mark.parametrize("module", MODULES)
+def test_query_module_imports_first(module):
+    proc = _run(f"import {PKG}.{module}")
+    assert proc.returncode == 0, proc.stderr[-2000:]
+
+
+def test_registry_imports_no_entry_module():
+    proc = _run(
+        f"import sys\nimport {PKG}.registry as r\n"
+        f"assert not r.QUERIES, len(r.QUERIES)\n"
+        f"loaded = sorted(m for m in sys.modules if m.startswith('{PKG}.queries'))\n"
+        "assert not loaded, loaded\n"
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]

@@ -44,7 +44,7 @@ def test_funnel_window_probe_matches_semijoin_probe(spark):
     integer µs is exactly the open interval (us−w, us) the semi-join
     probes."""
     from clean_census_acs_data_spark.queries import QUERIES
-    from clean_census_acs_data_spark.queries_round7b import (
+    from clean_census_acs_data_spark.queries_analytics import (
         _FUNNEL_W_US,
         _exists_within,
     )
@@ -76,9 +76,7 @@ def test_basket_inrow_pairs_match_selfjoin_pairs(spark):
     full lift table must match the self-join reformulation row-for-
     row."""
     from clean_census_acs_data_spark.queries import QUERIES
-    from clean_census_acs_data_spark.queries_round6c import (
-        _BASKET_MIN_SUPPORT,
-    )
+    from clean_census_acs_data_spark.queries_analytics import _BASKET_MIN_SUPPORT
 
     items = (
         load_table(spark, SF, "lineitem")
@@ -273,7 +271,7 @@ def test_sweep_derived_configs_match_independent_bandings(spark):
     row-for-row."""
     from clean_census_acs_data_spark.operators import dedup as D
     from clean_census_acs_data_spark.queries import QUERIES
-    from clean_census_acs_data_spark.queries_round8d import _SWEEP_CONFIGS
+    from clean_census_acs_data_spark.queries_dedup import _SWEEP_CONFIGS
 
     sh_tbl = D.standard_shingle_table(spark, SF)
     sig = D.standard_minhash_signatures(spark, SF)
@@ -414,7 +412,7 @@ def test_attribution_window_matches_bucket_probe_join(spark):
     same first/last (µs, id) struct extrema, zero-touch purchases
     included with NULL extrema."""
     from clean_census_acs_data_spark.queries import QUERIES
-    from clean_census_acs_data_spark.queries_round7 import _ATTR_WINDOW_US
+    from clean_census_acs_data_spark.queries_analytics import _ATTR_WINDOW_US
 
     new = QUERIES["attribution_first_last"](spark, SF)
 
@@ -583,7 +581,7 @@ def test_bucketed_debounce_matches_per_user_grouping(spark):
     import pandas as pd
 
     from clean_census_acs_data_spark.queries import QUERIES
-    from clean_census_acs_data_spark.queries_round14 import _DEBOUNCE_GAP_US
+    from clean_census_acs_data_spark.queries_events import _DEBOUNCE_GAP_US
 
     new = QUERIES["event_debounce_keep_first"](spark, SF)
 

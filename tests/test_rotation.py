@@ -416,7 +416,7 @@ def test_duplicate_registration_raises():
     driver-attested operator) until the registry count came up short."""
     import pytest
 
-    from clean_census_acs_data_spark.queries import register
+    from clean_census_acs_data_spark.registry import register
 
     existing = next(iter(QUERIES))
     with pytest.raises(ValueError, match="duplicate query registration"):
@@ -485,7 +485,7 @@ def test_function_level_reach_and_change_detection(tmp_path):
     # (a) cross-module reach through `from ..operators import dedup as D`
     #     + `D.standard_components(...)` + its internal call chain
     index = rot._package_index(rot._REPO)
-    r = rot._reach(index, f"{rot.PKG}.queries_ext", "dedup_components")
+    r = rot._reach(index, f"{rot.PKG}.queries_dedup", "dedup_components")
     assert (f"{rot.PKG}.operators.components", "connected_components") in r
     assert (f"{rot.PKG}.operators.dedup", "standard_components") in r
     # (b) every reached node is an indexed def with a non-empty dump

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from clean_census_acs_data_spark.io import load_table
 from clean_census_acs_data_spark.queries import QUERIES
-from clean_census_acs_data_spark.queries_round11 import global_rank
+from clean_census_acs_data_spark.queries_relational import global_rank
 
 SF = "/root/testdata/sf0.001"
 

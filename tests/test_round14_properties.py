@@ -8,11 +8,8 @@ from pyspark.sql import functions as F
 
 from clean_census_acs_data_spark.io import load_table
 from clean_census_acs_data_spark.queries import QUERIES
-from clean_census_acs_data_spark.queries_round14 import (
-    _DEBOUNCE_GAP_US,
-    _IV_W_US,
-    _SEATS,
-)
+from clean_census_acs_data_spark.queries_events import _DEBOUNCE_GAP_US, _IV_W_US
+from clean_census_acs_data_spark.queries_analytics import _SEATS
 
 SF = "/root/testdata/sf0.001"
 

@@ -40,7 +40,7 @@ def test_kendall_tau_counts_are_consistent(spark):
 
 
 def test_sssp_weighted_dominates_hop_count(spark):
-    from clean_census_acs_data_spark.queries_round15 import _SSSP_HOPS, _SSSP_SEED
+    from clean_census_acs_data_spark.queries_graph import _SSSP_HOPS, _SSSP_SEED
 
     dist = {r.doc_id: r.dist_weighted for r in QUERIES["graph_sssp_weighted"](spark, SF).collect()}
     bfs = {r.doc_id: r.distance for r in QUERIES["graph_bfs_distance"](spark, SF).collect()}
@@ -88,7 +88,7 @@ def test_busday_closed_form_matches_naive_count(spark):
 
     import duckdb
 
-    from clean_census_acs_data_spark.queries_round15 import _busday_w
+    from clean_census_acs_data_spark.queries_analytics import _busday_w
 
     def w(n: int) -> int:
         sql = _busday_w(str(n)).format(div="//")

@@ -47,7 +47,7 @@ def test_theil_sen_is_lower_median_of_pairwise_slopes(spark):
 
 
 def test_dhondt_sums_to_house_and_is_member_monotone(spark):
-    from clean_census_acs_data_spark.queries_round16 import _DH_SEATS
+    from clean_census_acs_data_spark.queries_analytics import _DH_SEATS
 
     rows = QUERIES["apportion_dhondt_divisor"](spark, SF).collect()
     assert sum(r.seats for r in rows) == _DH_SEATS

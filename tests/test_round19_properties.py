@@ -149,7 +149,7 @@ def test_udtf_sessionize_python_recompute(spark):
     import pyspark.sql.functions as F
 
     from clean_census_acs_data_spark.io import load_table
-    from clean_census_acs_data_spark.queries_round19 import _SESSION_GAP_US
+    from clean_census_acs_data_spark.queries_relational import _SESSION_GAP_US
 
     raw = (
         load_table(spark, SF, "events")

@@ -18,7 +18,7 @@ def test_windowed_distinct_sliding_bruteforce(spark):
     for every event, |{event_type of the last min(10, pos+1) rows}| —
     recomputed here with plain Python sets over the same (us, event_id)
     total order."""
-    from clean_census_acs_data_spark.queries_round20 import _SLIDE_K
+    from clean_census_acs_data_spark.queries_analytics import _SLIDE_K
 
     raw = (
         load_table(spark, SF, "events")
@@ -341,7 +341,7 @@ def test_langid_prf_recompute_from_confusion(spark):
     """P/R/F1 must equal exact truncating-integer recomputes from the
     confusion matrix, and the count identities must hold (tp + fn =
     support; Σ(tp + fp) = Σ support = total docs)."""
-    from clean_census_acs_data_spark.queries_round7c import lang_id_confusion
+    from clean_census_acs_data_spark.queries_text import lang_id_confusion
 
     cm = {
         (r["labeled_lang"], r["pred_lang"]): r["n_docs"]
@@ -473,7 +473,7 @@ def test_krippendorff_alpha_bruteforce(spark):
     from collections import Counter
     from fractions import Fraction
 
-    from clean_census_acs_data_spark.queries_round12d import (
+    from clean_census_acs_data_spark.queries_corpus import (
         _W_ALPHA,
         _W_CHAR,
         _W_DIGIT,
@@ -513,7 +513,7 @@ def test_krippendorff_alpha_bruteforce(spark):
     de_pairs = n * n - sum(v * v for v in marg.values())
     alpha = 1 - Fraction(n - 1) * do_total / de_pairs
     row = QUERIES["krippendorff_alpha_nominal"](spark, SF).collect()[0]
-    from clean_census_acs_data_spark.queries_round20b import _ALPHA_SCALE
+    from clean_census_acs_data_spark.queries_stats import _ALPHA_SCALE
 
     assert row["n_units"] == len(pairable)
     assert row["n_values"] == n
@@ -537,7 +537,7 @@ def test_misra_gries_mergeable_bruteforce(spark):
     token of frequency > D present."""
     from collections import Counter
 
-    from clean_census_acs_data_spark.queries_round20b import _MG_B, _MG_K
+    from clean_census_acs_data_spark.queries_sketches import _MG_B, _MG_K
 
     docs = load_table(spark, SF, "documents").select("doc_id", "text").collect()
     buckets = [Counter() for _ in range(_MG_B)]

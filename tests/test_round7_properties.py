@@ -9,11 +9,8 @@ from pyspark.sql import functions as F
 
 from clean_census_acs_data_spark.operators.dedup import MINHASH_M
 from clean_census_acs_data_spark.queries import QUERIES
-from clean_census_acs_data_spark.queries_round7 import (
-    _ATTR_WINDOW_US,
-    _PQ_K,
-    _pq_encoded,
-)
+from clean_census_acs_data_spark.queries_analytics import _ATTR_WINDOW_US
+from clean_census_acs_data_spark.queries_vectors import _PQ_K, _pq_encoded
 from clean_census_acs_data_spark.io import load_table
 
 SF = "/root/testdata/sf0.001"

@@ -21,7 +21,7 @@ def spark():
 
 
 def test_mmr_first_pick_is_top_relevance_and_picks_distinct(spark):
-    from clean_census_acs_data_spark.queries_round9 import mmr_rerank_topk
+    from clean_census_acs_data_spark.queries_vectors import mmr_rerank_topk
     from clean_census_acs_data_spark.operators.similarity import brute_force_topk
 
     out = {r.mmr_rank: r for r in mmr_rerank_topk(spark, SF_DIR).collect()}
@@ -38,7 +38,7 @@ def test_mmr_first_pick_is_top_relevance_and_picks_distinct(spark):
 
 
 def test_span_masks_fit_and_do_not_overlap(spark):
-    from clean_census_acs_data_spark.queries_round9 import span_corruption_masks
+    from clean_census_acs_data_spark.queries_corpus import span_corruption_masks
 
     spans = span_corruption_masks(spark, SF_DIR).collect()
     assert spans
@@ -61,7 +61,7 @@ def test_span_masks_fit_and_do_not_overlap(spark):
 
 
 def test_cascade_stage_counts_chain(spark):
-    from clean_census_acs_data_spark.queries_round9 import dedup_cascade_report
+    from clean_census_acs_data_spark.queries_dedup import dedup_cascade_report
 
     rows = {r.stage: r for r in dedup_cascade_report(spark, SF_DIR).collect()}
     assert sorted(rows) == [1, 2, 3]
@@ -75,7 +75,7 @@ def test_cascade_stage_counts_chain(spark):
 
 
 def test_hard_negatives_are_below_threshold_and_off_diagonal(spark):
-    from clean_census_acs_data_spark.queries_round9 import (
+    from clean_census_acs_data_spark.queries_vectors import (
         _HARDNEG_DUP_T,
         hard_negative_mining,
     )

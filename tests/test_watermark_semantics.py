@@ -1,5 +1,5 @@
 """Pin the two engine behaviors the round-7 streaming oracles depend
-on (queries_windows / queries_round3c):
+on (queries_streaming):
 
 1. append-mode emission is ``end <= watermark`` — a window ending
    exactly AT the final watermark IS emitted;
