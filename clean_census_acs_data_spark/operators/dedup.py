@@ -27,7 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from clean_census_acs_data_spark.operators.text import md5_long, shingles, tokens
-from clean_census_acs_data_spark.session import tracked_cache
+from clean_census_acs_data_spark.session import shared_memo, tracked_cache
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -390,24 +390,7 @@ def plant_near_dups(
 # session-cached canonical derivations
 # ---------------------------------------------------------------------------
 
-_STD_PAIRS_MEMO: dict[tuple[str, str], DataFrame] = {}
-_STD_COMPONENTS_MEMO: dict[tuple[str, str], DataFrame] = {}
-_STD_SHINGLES_MEMO: dict[tuple[str, str], DataFrame] = {}
-_STD_SIG_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-# Reap-exempt ≠ immortal (ADVICE r9): these memos are registered with
-# session.teardown_shared_memos(), the explicit unpersist+clear hook
-# for long-lived sessions. Caveat: after spark.catalog.clearCache() or
-# a data refresh under a memoized sf_dir, the handles go STALE — still
-# valid plans, but every read silently recomputes; call
-# teardown_shared_memos() BEFORE such an event so the next access
-# re-fills cleanly.
-from clean_census_acs_data_spark.session import register_shared_memo  # noqa: E402
-
-for _memo in (_STD_PAIRS_MEMO, _STD_COMPONENTS_MEMO, _STD_SHINGLES_MEMO, _STD_SIG_MEMO):
-    register_shared_memo(_memo)
-
-
+@shared_memo
 def standard_shingle_table(spark, sf_dir: str) -> DataFrame:
     """The repo-standard materialized shingle stage: (doc, sh) distinct
     word-3-shingle sets over the planted corpus, cached ONCE per
@@ -419,20 +402,16 @@ def standard_shingle_table(spark, sf_dir: str) -> DataFrame:
     per-entry cache reaping (ADVICE r8) exposed the recompute. One
     session-shared table is also the production shape: the shingle
     stage of a dedup pipeline is persisted once and every audit reads
-    it, nobody re-shingles 100 TB per report. Session-SHARED on
-    purpose, so NOT tracked_cache (reap-exempt, like the pair table)."""
+    it, nobody re-shingles 100 TB per report."""
     from clean_census_acs_data_spark.io import load_table
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    tbl = _STD_SHINGLES_MEMO.get(key)
-    if tbl is None:
-        docs = plant_near_dups(load_table(spark, sf_dir, "documents"))
-        tbl = _shingle_frame(docs).cache()
-        tbl.count()  # eager: fan-out consumers must not race the fill
-        _STD_SHINGLES_MEMO[key] = tbl
+    docs = plant_near_dups(load_table(spark, sf_dir, "documents"))
+    tbl = _shingle_frame(docs).cache()
+    tbl.count()  # eager: fan-out consumers must not race the fill
     return tbl
 
 
+@shared_memo
 def standard_minhash_signatures(spark, sf_dir: str) -> DataFrame:
     """The 8-minhash signature table (doc, mh0..mh7) derived from the
     shared shingle stage, cached ONCE per (session, sf_dir): the md5
@@ -441,12 +420,8 @@ def standard_minhash_signatures(spark, sf_dir: str) -> DataFrame:
     signatures again after the pair table is already built. Tiny rows
     (one id + 8 longs), so the cache is a fraction of the shingle
     table's."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    sig = _STD_SIG_MEMO.get(key)
-    if sig is None:
-        sig = _signature_frame(standard_shingle_table(spark, sf_dir)).cache()
-        sig.count()
-        _STD_SIG_MEMO[key] = sig
+    sig = _signature_frame(standard_shingle_table(spark, sf_dir)).cache()
+    sig.count()
     return sig
 
 
@@ -468,42 +443,41 @@ def standard_near_dup_pairs(
     every consumer re-derives from raw text. Filtering the cached
     superset is row-identical to computing at the caller's threshold
     directly (the threshold is the final WHERE of minhash_lsh_pairs)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    pairs = _STD_PAIRS_MEMO.get(key)
-    if pairs is None:
-        # the superset is dimension-sized (collisions, not corpus), but
-        # uncoalesced it inherits ~2x shuffle partitions from the band
-        # union — every consumer then pays 64 scan tasks per cached
-        # read. One tiny extra shuffle down to 8 partitions here makes
-        # all ~12 downstream iterative/join consumers cheap; at 100 TB
-        # this is the compaction step before persisting the pair table.
-        # r12: the shared signature cache feeds BOTH band-join sides —
-        # a kernel-local signature pass would run the md5+remix pass
-        # over every shingle once per side (the kernel's dominant
-        # projection, duplicated in the plan). The sig fill is paid
-        # once per session and reused by the audit entries (parameter
-        # sweep, estimate audit, provenance) that already consume it.
-        pairs = (
-            _lsh_pairs(
-                standard_shingle_table(spark, sf_dir),
-                standard_minhash_signatures(spark, sf_dir),
-                num_hashes=8,
-                bands=4,
-                threshold=0.0,
-            )
-            .repartition(8)
-            .cache()
-        )
-        _STD_PAIRS_MEMO[key] = pairs
+    pairs = _near_dup_superset(spark, sf_dir)
     if threshold > 0.0:
         return pairs.where(F.col("jaccard") >= threshold)
     return pairs
 
 
-_STD_UND_MEMO: dict[tuple[str, str, float], DataFrame] = {}
-register_shared_memo(_STD_UND_MEMO)  # localCheckpoint handles: unpersist no-ops, clear() frees them
+@shared_memo
+def _near_dup_superset(spark, sf_dir: str) -> DataFrame:
+    """standard_near_dup_pairs at threshold 0.0, cached lazily."""
+    # the superset is dimension-sized (collisions, not corpus), but
+    # uncoalesced it inherits ~2x shuffle partitions from the band
+    # union — every consumer then pays 64 scan tasks per cached
+    # read. One tiny extra shuffle down to 8 partitions here makes
+    # all ~12 downstream iterative/join consumers cheap; at 100 TB
+    # this is the compaction step before persisting the pair table.
+    # r12: the shared signature cache feeds BOTH band-join sides —
+    # a kernel-local signature pass would run the md5+remix pass
+    # over every shingle once per side (the kernel's dominant
+    # projection, duplicated in the plan). The sig fill is paid
+    # once per session and reused by the audit entries (parameter
+    # sweep, estimate audit, provenance) that already consume it.
+    return (
+        _lsh_pairs(
+            standard_shingle_table(spark, sf_dir),
+            standard_minhash_signatures(spark, sf_dir),
+            num_hashes=8,
+            bands=4,
+            threshold=0.0,
+        )
+        .repartition(8)
+        .cache()
+    )
 
 
+@shared_memo
 def standard_undirected_edges(
     spark, sf_dir: str, *, threshold: float = 0.5
 ) -> DataFrame:
@@ -517,34 +491,30 @@ def standard_undirected_edges(
     fill; at 100 TB this is the same persisted artifact as the pair
     table itself (a dedup pass writes the edge list once; iterative
     consumers read it, they don't re-derive it)."""
-    key = (spark.sparkContext.applicationId, sf_dir, threshold)
-    und = _STD_UND_MEMO.get(key)
-    if und is None:
-        pairs = standard_near_dup_pairs(
-            spark, sf_dir, threshold=threshold
-        ).select("doc_a", "doc_b")
-        und = (
-            pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-            .unionAll(
-                pairs.select(
-                    F.col("doc_b").alias("a"), F.col("doc_a").alias("b")
-                )
+    pairs = standard_near_dup_pairs(
+        spark, sf_dir, threshold=threshold
+    ).select("doc_a", "doc_b")
+    return (
+        pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
+        .unionAll(
+            pairs.select(
+                F.col("doc_b").alias("a"), F.col("doc_a").alias("b")
             )
-            .repartition(2)  # node-bounded; tiny tasks downstream
-            # eager localCheckpoint, not cache(): it TRUNCATES the
-            # logical lineage to a LogicalRDD leaf. Iterative consumers
-            # reference the edge list 2-3× per round, so with the full
-            # MinHash lineage attached, round-i plans embed that
-            # lineage 2^i times and Catalyst ANALYSIS (driver-side)
-            # dominates wall clock (measured on k-core: ~7.5 s warm
-            # with cache vs ~2 s checkpointed). Same blocks on the
-            # executors either way; GraphX-style iterative hygiene.
-            .localCheckpoint(eager=True)
         )
-        _STD_UND_MEMO[key] = und
-    return und
+        .repartition(2)  # node-bounded; tiny tasks downstream
+        # eager localCheckpoint, not cache(): it TRUNCATES the
+        # logical lineage to a LogicalRDD leaf. Iterative consumers
+        # reference the edge list 2-3× per round, so with the full
+        # MinHash lineage attached, round-i plans embed that
+        # lineage 2^i times and Catalyst ANALYSIS (driver-side)
+        # dominates wall clock (measured on k-core: ~7.5 s warm
+        # with cache vs ~2 s checkpointed). Same blocks on the
+        # executors either way; GraphX-style iterative hygiene.
+        .localCheckpoint(eager=True)
+    )
 
 
+@shared_memo
 def standard_components(spark, sf_dir: str) -> DataFrame:
     """Connected-component labels over the standard ≥0.5 pair graph,
     cached per (session, sf_dir): components → survivor selection →
@@ -560,11 +530,6 @@ def standard_components(spark, sf_dir: str) -> DataFrame:
         connected_components,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    comp = _STD_COMPONENTS_MEMO.get(key)
-    if comp is None:
-        comp = connected_components(
-            standard_near_dup_pairs(spark, sf_dir, threshold=0.5)
-        ).cache()
-        _STD_COMPONENTS_MEMO[key] = comp
-    return comp
+    return connected_components(
+        standard_near_dup_pairs(spark, sf_dir, threshold=0.5)
+    ).cache()

@@ -24,23 +24,7 @@ from clean_census_acs_data_spark.sources import census as C
 from clean_census_acs_data_spark.sources import rest as R
 from clean_census_acs_data_spark.sources.audit import append_audit
 from clean_census_acs_data_spark import transforms as T
-from clean_census_acs_data_spark.session import register_shared_memo
-
-# Session-level memo of fetched RESPONSE frames, keyed on everything
-# that shapes the wire bytes (r12, guide §1.2 step 1). Two registry
-# entries run the IDENTICAL fetch (census_pipeline_e2e and
-# census_write_readback: same table, year, chunking, fetcher), so the
-# second used to pay the whole mapInPandas fetch leg again. The memo
-# holds an eager localCheckpoint — the same session-shared-memo
-# discipline as the knn/minhash stages, and exactly the materialized
-# fetch output a production pipeline persists before decode anyway.
-# Tract and ZCTA responses share it (the geography clause is part of
-# the key). Keyed on applicationId so a new session never sees a stale
-# frame. Registered as a shared memo: teardown_shared_memos() drops its
-# handles, and the checkpoint blocks no other frame still references
-# are freed.
-_RESPONSES_MEMO: dict = {}
-register_shared_memo(_RESPONSES_MEMO)
+from clean_census_acs_data_spark.session import shared_memo
 
 
 def run_census_pipeline(
@@ -89,40 +73,52 @@ def run_census_pipeline(
                     "table_name string, variable string, year int, reason string",
                 )
                 diag.write.mode("append").parquet(audit_path + "_preflight")
-    specs = C.request_specs(
-        spark, year=year, chunk_size=chunk_size,
-        datasets={table_name: request_cfg},
+    responses = _fetched_responses(
+        spark, table_name, year, chunk_size,
+        tuple(request_cfg.get("variables", ())), "tract:*", fetcher,
     )
-    memo_key = (table_name, year, chunk_size, tuple(request_cfg.get("variables", ())))
     return _run_table(
-        spark, specs, memo_key, cfg,
-        fetcher=fetcher, audit_path=audit_path, cast_measures=cast_measures,
+        spark, responses, cfg, audit_path=audit_path, cast_measures=cast_measures
     )
+
+
+@shared_memo
+def _fetched_responses(
+    spark: SparkSession,
+    table_name: str,
+    year: int,
+    chunk_size: int | None,
+    variables: tuple[str, ...],
+    geo_for: str,
+    fetcher: R.FetchFn | None,
+) -> DataFrame:
+    """The fetched response frame of one table's request universe, as
+    an eager localCheckpoint: the materialized fetch output a production
+    pipeline persists before decode. Memoized because two registry
+    entries (census_pipeline_e2e and census_write_readback) run the
+    identical fetch; tract and ZCTA share it through ``geo_for``.
+    ``chunk_size=None`` is the single-shot ZCTA universe, one request
+    per dataset with no state clause."""
+    datasets = {table_name: {**C.DATASETS[table_name], "variables": list(variables)}}
+    if chunk_size is None:
+        specs = C.zcta_request_specs(spark, year=year, datasets=datasets)
+    else:
+        specs = C.request_specs(spark, year=year, chunk_size=chunk_size, datasets=datasets)
+    return R.fetch_responses(
+        specs, fetcher=fetcher, geo_for=geo_for, geo_in_states=chunk_size is not None
+    ).localCheckpoint(eager=True)
 
 
 def _run_table(
     spark: SparkSession,
-    specs: DataFrame,
-    memo_key: tuple,
+    responses: DataFrame,
     cfg: dict,
     *,
-    fetcher: R.FetchFn | None,
     audit_path: str | None,
     cast_measures: bool,
-    geo_for: str = "tract:*",
-    geo_in_states: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
-    """The one table body of both pipelines: memoised fetch → audit →
-    dead-letter split → wire decode → normalize → mapping rename →
-    align → cast_clean. ``memo_key`` names the request universe of
-    ``specs``; the geography clause and the fetcher complete the key."""
-    key = (spark.sparkContext.applicationId, *memo_key, geo_for, fetcher)
-    responses = _RESPONSES_MEMO.get(key)
-    if responses is None:
-        responses = R.fetch_responses(
-            specs, fetcher=fetcher, geo_for=geo_for, geo_in_states=geo_in_states
-        ).localCheckpoint(eager=True)
-        _RESPONSES_MEMO[key] = responses
+    """The one table body of both pipelines: audit → dead-letter split
+    → wire decode → normalize → mapping rename → align → cast_clean."""
     if audit_path:
         append_audit(responses, audit_path)
     ok, dead = R.split_dead_letters(responses)
@@ -268,10 +264,11 @@ def run_zcta_pipeline(
     `zip code tabulation area` probed from the response (its header
     name contains spaces — kept verbatim through normalization)."""
     cfg = C.DATASETS[table_name]
-    specs = C.zcta_request_specs(spark, year=year, datasets={table_name: cfg})
+    responses = _fetched_responses(
+        spark, table_name, year, None, tuple(cfg["variables"]),
+        "zip code tabulation area:*", fetcher,
+    )
     out, dead = _run_table(
-        spark, specs, (table_name, year, tuple(cfg["variables"])), cfg,
-        fetcher=fetcher, audit_path=audit_path, cast_measures=cast_measures,
-        geo_for="zip code tabulation area:*", geo_in_states=False,
+        spark, responses, cfg, audit_path=audit_path, cast_measures=cast_measures
     )
     return out.drop("STATE_FIPS"), dead

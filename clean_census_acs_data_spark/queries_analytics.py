@@ -857,8 +857,6 @@ def recsys_item_item_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines cut identical tables.
 
     Scale bound: no new arithmetic — lift_e6 and c_ab arrive bounded from market_basket_lift (see its bound); ranks are window row numbers."""
-    from clean_census_acs_data_spark.queries_analytics import market_basket_lift
-
     lift = market_basket_lift(spark, sf_dir)
     # mirror with an in-row explode, NOT a union of two projections: a
     # union references the lift subtree twice and Catalyst has no

@@ -1252,8 +1252,6 @@ def dedup_exact_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _provenance_oracle() -> str:
-    from clean_census_acs_data_spark.queries_dedup import _PLANTED_DOCS, _SHINGLES
-
     sig_cols = ", ".join(
         f"list_min(list_transform(hv, x -> ({MINHASH_A[i]} * x + {MINHASH_B[i]})"
         f" % {MINHASH_M})) AS mh{i}"
@@ -1786,8 +1784,6 @@ _CASCADE_NORM_DUCKDB = (
 
 
 def _cascade_oracle() -> str:
-    from clean_census_acs_data_spark.queries_dedup import _MINHASH_ORACLE, _PLANTED_DOCS
-
     return f"""
 WITH base AS ({_PLANTED_DOCS}),
 s1 AS (SELECT MIN(doc_id) AS doc_id, text FROM base GROUP BY text),

@@ -1111,8 +1111,6 @@ def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     One row-local scoring pass (the same argmax fold as text_lang_id)
     followed by a ≤|langs|²-group partial agg — audit cost is a sketch
     regardless of corpus size."""
-    from clean_census_acs_data_spark.queries_text import text_lang_id
-
     li = text_lang_id(spark, sf_dir)
     return li.groupBy("labeled_lang", "pred_lang").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs")
@@ -1843,8 +1841,6 @@ def vocab_topp_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _prf_oracle() -> str:
-    from clean_census_acs_data_spark.queries_text import _LANG_CONFUSION_ORACLE
-
     return f"""
 WITH cm AS ({_LANG_CONFUSION_ORACLE.strip()}),
 tp AS (
@@ -1898,8 +1894,6 @@ def langid_eval_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
     scoring pass, a ≤|langs|²-cell aggregate, then |langs|-row joins;
     eval cost is a sketch regardless of corpus size. Scale bound:
     10⁶·tp ≤ 10⁶·|docs| — int64 to ~9×10¹² docs."""
-    from clean_census_acs_data_spark.queries_text import lang_id_confusion
-
     cm = lang_id_confusion(spark, sf_dir)
     # r12 optimization (guide §1.2): tp/rowsum/colsum are three DIFFERENT
     # aggregations of cm, so the former three-branch join re-derived the

@@ -23,7 +23,7 @@ from clean_census_acs_data_spark.operators import corpus as C
 from clean_census_acs_data_spark.operators import similarity as S
 from clean_census_acs_data_spark.queries_sketches import H15
 from clean_census_acs_data_spark.registry import _t, register
-from clean_census_acs_data_spark.session import register_shared_memo, tracked_cache
+from clean_census_acs_data_spark.session import shared_memo, tracked_cache
 
 
 def _quant_list(col: str) -> str:
@@ -1096,22 +1096,6 @@ SELECT vec_id, neighbor_id, cosine, CAST(nn_rank AS BIGINT) AS nn_rank FROM (
 """
 
 
-# session-shared memo: (appId, sf_dir, n_centroids, list_cap, probes) →
-# (probe_rows, candidates). The IVF scoring cross-join + cached
-# selection is the family's dominant cost and is consumed by
-# knn_join_ivf, knn_join_ivf_probe2, hard_negative_mining AND
-# tests/test_knn_bounds.py; memoizing here makes the sharing
-# structural (it previously relied on CacheManager plan-identity
-# between separately-built DataFrames, which the bench's per-entry
-# cache reaper would defeat). The internal cache() is deliberately
-# NOT tracked_cache — it is a protected cross-entry artifact, the
-# persisted IVF index of a production ANN pipeline.
-_KNN_STAGES_MEMO: dict[tuple, tuple[DataFrame, DataFrame, DataFrame]] = {}
-# third slot = the internal cached `sel` stage, kept so the session
-# teardown hook can unpersist it (ADVICE r9: reap-exempt ≠ immortal)
-register_shared_memo(_KNN_STAGES_MEMO, handles=lambda v: v[2:])
-
-
 def _knn_ivf_stages(
     spark: SparkSession,
     sf_dir: str,
@@ -1128,17 +1112,25 @@ def _knn_ivf_stages(
     each centroid's TOP-1 list only (inverted lists are built on the
     best assignment regardless of nprobe), at most ``list_cap`` per
     centroid, first-k by vec_id (deterministic), renamed to the
-    neighbor side."""
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        n_centroids,
-        list_cap,
-        probes,
-    )
-    memo = _KNN_STAGES_MEMO.get(key)
-    if memo is not None:
-        return memo[0], memo[1]
+    neighbor side.
+
+    The stages are memoized per session: the IVF scoring cross join is
+    the family's dominant cost, and knn_join_ivf, knn_join_ivf_probe2,
+    hard_negative_mining and tests/test_knn_bounds.py all read them."""
+    return _ivf_stages(spark, sf_dir, n_centroids, list_cap, probes)[:2]
+
+
+@shared_memo
+def _ivf_stages(
+    spark: SparkSession,
+    sf_dir: str,
+    n_centroids: int | None,
+    list_cap: int,
+    probes: int,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(probe_rows, candidates, sel) of :func:`_knn_ivf_stages`; ``sel``
+    is the cached selection both derive from, kept so that
+    teardown_shared_memos() frees it."""
     base = S._quantized(spread(_t(spark, sf_dir, "embeddings")), "vec_id", "embedding")
     if n_centroids is None:
         # same k as the oracle's scalar subquery: ceil(sqrt(count)).
@@ -1201,8 +1193,7 @@ def _knn_ivf_stages(
             "centroid_id",
         )
     )
-    _KNN_STAGES_MEMO[key] = (probe_rows, candidates, sel)
-    return probe_rows, candidates
+    return probe_rows, candidates, sel
 
 
 @register("knn_join_ivf", oracle=_KNN_JOIN_ORACLE)
@@ -1576,8 +1567,6 @@ _HARDNEG_DUP_T = "0.98"  # cosine above this = duplicate, not a negative
 
 
 def _hardneg_oracle() -> str:
-    from clean_census_acs_data_spark.queries_vectors import _KNN_JOIN_ORACLE
-
     return f"""
 WITH knn AS ({_KNN_JOIN_ORACLE})
 SELECT vec_id, neighbor_id AS hard_negative_id, cosine
@@ -1605,8 +1594,6 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     form keeps the oracle self-contained."""
     from pyspark.sql.window import Window
 
-    from clean_census_acs_data_spark.queries_vectors import knn_join_ivf
-
     knn = knn_join_ivf(spark, sf_dir)
     w = Window.partitionBy("vec_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
@@ -1622,8 +1609,6 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 def _knn_probe2_oracle() -> str:
-    from clean_census_acs_data_spark.queries_vectors import _KNN_CAP
-
     return f"""
 WITH e AS (SELECT vec_id, {_quant_list("embedding")} AS q FROM embeddings),
 nk AS (SELECT CAST(ceil(sqrt(COUNT(*))) AS BIGINT) AS k FROM embeddings),
@@ -1680,8 +1665,6 @@ def knn_join_ivf_probe2(spark: SparkSession, sf_dir: str) -> DataFrame:
     variants."""
     from pyspark.sql.window import Window
 
-    from clean_census_acs_data_spark.queries_vectors import _knn_ivf_stages
-
     probe_rows, members = _knn_ivf_stages(spark, sf_dir, probes=2)
     probes = probe_rows.select(
         "vec_id",
@@ -1716,8 +1699,6 @@ def knn_join_ivf_probe2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _triplet_oracle() -> str:
-    from clean_census_acs_data_spark.queries_vectors import _KNN_JOIN_ORACLE
-
     return f"""
 WITH knn AS ({_KNN_JOIN_ORACLE}),
 pos AS (
@@ -1767,8 +1748,6 @@ def contrastive_triplets(spark: SparkSession, sf_dir: str) -> DataFrame:
     hardest (most informative) triplets, so ORDER BY margin ASC LIMIT k
     on this output IS hard-triplet mining."""
     from pyspark.sql.window import Window
-
-    from clean_census_acs_data_spark.queries_vectors import knn_join_ivf
 
     # the pos and neg branches both consume the full kNN subtree; the
     # output is ≤ 3n tiny rows — cache + eager count so the bounded-

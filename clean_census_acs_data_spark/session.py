@@ -7,6 +7,8 @@ and the same config keys are what a 1000-executor deployment would tune.
 
 from __future__ import annotations
 
+import functools
+import inspect
 import os
 
 from pyspark.sql import SparkSession
@@ -302,11 +304,7 @@ def register_python_datasource(spark: SparkSession, ds_cls) -> None:
 # tracked_cache() is the choke point: entry-LOCAL caches go through it
 # and land in a registry; harnesses that run many entries in sequence
 # (bench.py) call reap_tracked_caches() after each entry's terminal
-# action. Session-SHARED caches (operators/dedup.py's standard-pair /
-# edge / component memos, queries_vectors._knn_ivf_stages) deliberately
-# do NOT use it — they are the cross-entry materialized artifacts a
-# production dedup/ANN pipeline persists, and reaping them would
-# re-run their fill once per consumer.
+# action. Session-SHARED results go through shared_memo() instead.
 
 _TRACKED_CACHES: list = []
 
@@ -322,82 +320,74 @@ def tracked_cache(df):
     return df
 
 
-# Session-SHARED memos (dedup's standard shingle/signature/pair/edge
-# tables, round7's IVF stages) are reap-EXEMPT by design but must not
-# be immortal: a long-lived session serving many (applicationId,
-# sf_dir) combinations accumulates one cached table per key with no
-# eviction path, and after spark.catalog.clearCache() (or a data
-# refresh under the same path) the memoized handles go STALE — they
-# keep working but silently recompute on every read, which is worse
-# than a fresh fill. Modules owning such a memo register it here;
-# teardown_shared_memos() is the explicit end-of-session/refresh hook
-# (ADVICE r9). Each registration is (memo_dict, handles_fn) where
-# handles_fn maps a memo VALUE to the list of cached DataFrames to
-# unpersist (values may be tuples of frames).
-
-_SHARED_MEMO_REGISTRY: list[tuple[dict, object]] = []
+_SHARED_MEMOS: dict = {}
 
 
-def register_shared_memo(memo: dict, handles=None) -> None:
-    """Register a session-shared memo dict so teardown_shared_memos()
-    can unpersist its cached frames and clear it. ``handles`` maps a
-    memo value to an iterable of DataFrames (default: the value itself
-    is a single DataFrame)."""
-    _SHARED_MEMO_REGISTRY.append((memo, handles or (lambda v: (v,))))
+def shared_memo(fn):
+    """Memoize ``fn(spark, ...)`` once per Spark application.
+
+    The key is the SparkContext's ``applicationId``, ``fn`` and the
+    arguments after ``spark`` bound to ``fn``'s signature with defaults
+    applied, so ``f(spark, x)`` and ``f(spark, x, k=<default>)`` share
+    one entry. ``newSession()`` clones share their parent's
+    SparkContext and therefore its memos; a new SparkContext starts
+    empty. The value is whatever ``fn`` returns, materialized (or not)
+    as ``fn`` chose.
+
+    Memoized values are session-SHARED: reap_tracked_caches() leaves
+    them alone, because reaping them would re-run their fill once per
+    consumer. They are not immortal: teardown_shared_memos() drops every
+    entry and unpersists every DataFrame in the values. Call it at
+    session end, and before spark.catalog.clearCache() or a data refresh
+    under a memoized path, since otherwise the memoized handles go stale
+    and recompute on every read (or replay the old data)."""
+    sig = inspect.signature(fn)
+
+    @functools.wraps(fn)
+    def memoized(spark, *args, **kwargs):
+        bound = sig.bind(spark, *args, **kwargs)
+        bound.apply_defaults()
+        key = (spark.sparkContext.applicationId, fn, *list(bound.arguments.values())[1:])
+        if key not in _SHARED_MEMOS:
+            _SHARED_MEMOS[key] = fn(spark, *args, **kwargs)
+        return _SHARED_MEMOS[key]
+
+    return memoized
 
 
 def teardown_shared_memos() -> int:
-    """Unpersist and clear every registered session-shared memo;
-    returns how many frames were unpersisted.
-
-    Call on session end, or BEFORE spark.catalog.clearCache() / a data
-    refresh under a memoized sf_dir — otherwise the memos hold handles
-    to evicted caches and silently recompute per read."""
+    """Drop every shared_memo entry and unpersist the DataFrames in
+    their values (a value may be a tuple); returns how many frames were
+    unpersisted."""
     from py4j.protocol import Py4JError
     from pyspark.sql import DataFrame
 
     n = 0
-    bad: list[str] = []
     dropped_checkpoints = False
-    for memo, handles in _SHARED_MEMO_REGISTRY:
-        for v in list(memo.values()):
-            for df in handles(v):
-                # A handles fn that yields non-DataFrames is a
-                # registration bug, not a stopped session — surface it
-                # (ADVICE r10: the bare except turned teardown into a
-                # silent leak with an undercounted return value). But
-                # surface it AFTER the sweep: aborting mid-iteration
-                # would leave every later memo holding cached blocks —
-                # the exact leak this hook exists to prevent.
-                if not isinstance(df, DataFrame):
-                    bad.append(type(df).__name__)
-                    continue
-                try:
-                    # count only frames that actually HELD storage:
-                    # localCheckpoint-backed memo values have no
-                    # storage level set, their unpersist is a no-op
-                    # (the checkpointed RDD is released by clearing
-                    # the memo reference, via the ContextCleaner once
-                    # the JVM GC requested below collects it)
-                    lvl = df.storageLevel
+    # newest first: a fill that reads other memos finishes after them,
+    # so dependents go before the caches their plans were built on
+    for v in reversed(_SHARED_MEMOS.values()):
+        for df in v if isinstance(v, tuple) else (v,):
+            if not isinstance(df, DataFrame):
+                continue
+            try:
+                # localCheckpoint-backed and derived frames hold no
+                # storage; a dropped checkpoint is released by the
+                # ContextCleaner once the JVM GC requested below
+                # collects it
+                lvl = df.storageLevel
+                if lvl.useMemory or lvl.useDisk:
                     df.unpersist()
-                    if lvl.useMemory or lvl.useDisk:
-                        n += 1
-                    else:
-                        dropped_checkpoints = True
-                except (Py4JError, AttributeError):
-                    # session already stopped (py4j error or a torn-down
-                    # JVM handle) — nothing to free
-                    pass
-        memo.clear()
+                    n += 1
+                else:
+                    dropped_checkpoints = True
+            except (Py4JError, AttributeError):
+                # session already stopped (py4j error or a torn-down
+                # JVM handle) — nothing to free
+                pass
+    _SHARED_MEMOS.clear()
     if dropped_checkpoints:
         _collect_dropped_checkpoints()
-    if bad:
-        raise TypeError(
-            "register_shared_memo handles fn yielded non-DataFrame "
-            f"value(s) {sorted(set(bad))}; every other memo was still "
-            "torn down — fix the registration"
-        )
     return n
 
 

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from clean_census_acs_data_spark.functions import cents
+from clean_census_acs_data_spark.session import shared_memo
 
 
 def tumbling_agg(events: DataFrame, width: str = "1 hour") -> DataFrame:
@@ -72,11 +73,12 @@ def session_agg(events: DataFrame, gap: str = "6 hours") -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-# (applicationId, sf_dir) -> events.parquet schema. Every streaming
-# entry (and BOTH sources of the two stream-stream joins) ran a batch
-# read just to learn the static schema — a driver-side footer job per
-# call. The file is immutable for a session's lifetime; memoize it.
-_EVENTS_SCHEMA_MEMO: dict = {}
+@shared_memo
+def _events_schema(spark: SparkSession, sf_dir: str):
+    """The static schema of events.parquet, read once per session: every
+    streaming entry (and both sources of the two stream-stream joins)
+    needs it, and each read is a driver-side footer job."""
+    return spark.read.parquet(f"{sf_dir}/events.parquet").schema
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -89,11 +91,7 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import LongType, TimestampNTZType
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    key = (spark.sparkContext.applicationId, sf_dir)
-    raw_schema = _EVENTS_SCHEMA_MEMO.get(key)
-    if raw_schema is None:
-        raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-        _EVENTS_SCHEMA_MEMO[key] = raw_schema
+    raw_schema = _events_schema(spark, sf_dir)
     stream = (
         spark.readStream.schema(raw_schema)
         .option("pathGlobFilter", "events.parquet")

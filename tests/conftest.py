@@ -24,16 +24,13 @@ def sf_dir():
 def cc_rounds(monkeypatch):
     """Force connected components onto the distributed rounds: with the
     driver bound at -1 no edge list, not even an empty one, is labeled
-    on the driver. The standard-components memo is emptied for the test
-    and its rounds-path entries dropped after, so registry entries that
-    read it recompute on the rounds."""
-    from clean_census_acs_data_spark.operators import components, dedup
+    on the driver. The shared memos are torn down before the test, so
+    registry entries that read the standard components recompute on the
+    rounds, and after it, so no rounds-path labels outlive the test."""
+    from clean_census_acs_data_spark import session
+    from clean_census_acs_data_spark.operators import components
 
     monkeypatch.setattr(components, "_DRIVER_MAX_EDGES", -1)
-    saved = dict(dedup._STD_COMPONENTS_MEMO)
-    dedup._STD_COMPONENTS_MEMO.clear()
+    session.teardown_shared_memos()
     yield
-    for df in dedup._STD_COMPONENTS_MEMO.values():
-        df.unpersist()
-    dedup._STD_COMPONENTS_MEMO.clear()
-    dedup._STD_COMPONENTS_MEMO.update(saved)
+    session.teardown_shared_memos()

@@ -143,7 +143,6 @@ def test_teardown_shared_memos_unpersists_and_clears(spark):
     freed = S.teardown_shared_memos()
     assert freed >= 1
     assert not sh1.storageLevel.useMemory
-    assert not D._STD_SHINGLES_MEMO and not D._STD_SIG_MEMO
     # idempotent + safe when empty
     assert S.teardown_shared_memos() == 0
     # next access re-fills: NEW handle, identical contents
@@ -152,43 +151,127 @@ def test_teardown_shared_memos_unpersists_and_clears(spark):
     assert sh2.count() == n and sh2.storageLevel.useMemory
 
 
-def test_teardown_surfaces_bad_handles_fn(spark):
-    """ADVICE r10: a handles fn that yields non-DataFrames is a
-    registration bug — teardown must raise TypeError, not swallow it
-    into a silent leak with an undercounted return value."""
-    import pytest
-
-    df = spark.range(1).cache()
-    memo = {"k": df}
-    S.register_shared_memo(memo, handles=lambda v: ("not-a-dataframe",))
-    try:
-        with pytest.raises(TypeError, match="yielded non-DataFrame"):
-            S.teardown_shared_memos()
-        # the error must not abort the sweep: the poisoned memo is still
-        # cleared so later memos got their teardown too (review r11)
-        assert not memo
-    finally:
-        # remove the poisoned registration so later tests' teardowns work
-        S._SHARED_MEMO_REGISTRY[:] = [
-            (m, h) for (m, h) in S._SHARED_MEMO_REGISTRY if m is not memo
-        ]
-        df.unpersist()
-
-
 def test_knn_memo_teardown_frees_internal_cache(spark):
-    """The IVF stages memo stores its internal cached `sel` stage so
+    """The IVF stages memo keeps its internal cached `sel` stage so
     teardown can actually free blocks (the returned probe/candidate
     frames are uncached derivations)."""
     from clean_census_acs_data_spark import queries_vectors as R7
 
     sf = "/root/testdata/sf0.001"
-    R7._knn_ivf_stages(spark, sf)
-    assert R7._KNN_STAGES_MEMO
-    sel = next(iter(R7._KNN_STAGES_MEMO.values()))[2]
+    probe_rows, _ = R7._knn_ivf_stages(spark, sf)
+    stages = R7._ivf_stages(spark, sf, None, R7._KNN_CAP, 1)
+    assert stages[0] is probe_rows  # one memo entry behind both calls
+    sel = stages[2]
     assert sel.storageLevel.useMemory
     S.teardown_shared_memos()
-    assert not R7._KNN_STAGES_MEMO
     assert not sel.storageLevel.useMemory
+    assert R7._knn_ivf_stages(spark, sf)[0] is not probe_rows
+
+
+def _responses(spark, sf, spelled):
+    from clean_census_acs_data_spark.plans import census_pipeline as CP
+    from clean_census_acs_data_spark.sources import census as C
+    from clean_census_acs_data_spark.sources.fake_census import fake_census_fetcher
+
+    variables = tuple(C.DATASETS["dp02"]["variables"])
+    if spelled:
+        return CP._fetched_responses(
+            spark, table_name="dp02", year=2023, chunk_size=3, variables=variables,
+            geo_for="tract:*", fetcher=fake_census_fetcher,
+        )
+    return CP._fetched_responses(spark, "dp02", 2023, 3, variables, "tract:*", fake_census_fetcher)
+
+
+def _dedup(name, first=(), spelled=()):
+    """A dedup memo called as ``f(spark, sf, **first)`` and, spelled
+    out, as ``f(spark, sf_dir=sf, **spelled)``."""
+    def call(spark, sf, spell):
+        from clean_census_acs_data_spark.operators import dedup as D
+
+        fn = getattr(D, name)
+        if spell:
+            return fn(spark, sf_dir=sf, **dict(spelled))
+        return fn(spark, sf, **dict(first))
+
+    return call
+
+
+def _ivf_stages(spark, sf, spelled):
+    from clean_census_acs_data_spark import queries_vectors as R7
+
+    if spelled:
+        return R7._knn_ivf_stages(spark, sf, None, R7._KNN_CAP, 1)
+    return R7._knn_ivf_stages(spark, sf)
+
+
+def _events_schema(spark, sf, spelled):
+    from clean_census_acs_data_spark.streaming import windows
+
+    if spelled:
+        return windows._events_schema(spark, sf_dir=sf)
+    return windows._events_schema(spark, sf)
+
+
+def _stage_dir(spark, sf, spelled):
+    from clean_census_acs_data_spark.streaming import stateful
+
+    if spelled:
+        return stateful.staged_events_dir(spark, sf, 2, extra_cols=())
+    return stateful.staged_events_dir(spark, sf, 2)
+
+
+def _staged_schema(spark, sf, spelled):
+    from clean_census_acs_data_spark.streaming import stateful
+
+    stage = stateful.staged_events_dir(spark, sf, 2)
+    if spelled:
+        return stateful._staged_schema(spark, stage=stage)
+    return stateful._staged_schema(spark, stage)
+
+
+MEMOIZED = {
+    "census_responses": _responses,
+    "shingles": _dedup("standard_shingle_table"),
+    "signatures": _dedup("standard_minhash_signatures"),
+    # at threshold 0.0 the public pair table is the memoized superset
+    "pair_superset": _dedup(
+        "standard_near_dup_pairs", [("threshold", 0.0)], [("threshold", 0.0)]
+    ),
+    "undirected_edges": _dedup("standard_undirected_edges", spelled=[("threshold", 0.5)]),
+    "components": _dedup("standard_components"),
+    "ivf_stages": _ivf_stages,
+    "events_schema": _events_schema,
+    "stage_dir": _stage_dir,
+    "staged_schema": _staged_schema,
+}
+
+
+def _same(a, b) -> bool:
+    if isinstance(a, tuple):  # _knn_ivf_stages slices the memoized triple
+        return len(a) == len(b) and all(x is y for x, y in zip(a, b))
+    return a is b
+
+
+@pytest.mark.parametrize("unit", sorted(MEMOIZED))
+def test_shared_memo_hits_then_refills_after_teardown(spark, sf_dir, unit):
+    """Every memoized unit: a second call with equal arguments (spelled
+    out, defaults included) returns the identical object and starts no
+    Spark job; after teardown_shared_memos() the next call refills."""
+    call = MEMOIZED[unit]
+    first = call(spark, sf_dir, False)
+    sc = spark.sparkContext
+    group = f"memo-hit-{unit}"
+    sc.setJobGroup(group, group)
+    try:
+        again = call(spark, sf_dir, True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert _same(again, first)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    S.teardown_shared_memos()
+    assert not _same(call(spark, sf_dir, False), first)
+    S.teardown_shared_memos()
 
 
 def test_shingle_and_signature_memos_are_shared_and_reap_exempt(spark):

@@ -384,7 +384,6 @@ def test_truncated_body_is_retried_then_dead_lettered(spark, tmp_path):
 )
 def test_teardown_releases_the_response_memo(spark, tmp_path, run, fake, calls):
     from clean_census_acs_data_spark import session as S
-    from clean_census_acs_data_spark.plans import census_pipeline as CP
 
     log = tmp_path / "fetch.log"
     fetcher = _logging_fetcher(str(log), latency_s=0.0, fake=fake)
@@ -394,6 +393,5 @@ def test_teardown_releases_the_response_memo(spark, tmp_path, run, fake, calls):
     run(spark, table_name="dp02", fetcher=fetcher)
     assert len(_read_fetch_log(log)) == first  # memo hit: no new calls
     S.teardown_shared_memos()
-    assert not CP._RESPONSES_MEMO
     run(spark, table_name="dp02", fetcher=fetcher)
     assert len(_read_fetch_log(log)) == 2 * first  # fetched again

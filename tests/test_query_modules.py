@@ -38,3 +38,26 @@ def test_registry_imports_no_entry_module():
         "assert not loaded, loaded\n"
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
+
+
+def test_no_def_imports_its_own_module():
+    """A def in a ``queries_*.py`` module reads that module's names as
+    globals; importing them from the module itself is dead weight."""
+    import ast
+
+    found = []
+    for module in MODULES:
+        if not module.startswith("queries_"):
+            continue
+        with open(os.path.join(REPO, PKG, f"{module}.py")) as f:
+            tree = ast.parse(f.read())
+        own = f"{PKG}.{module}"
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            for node in ast.walk(fn):
+                if (isinstance(node, ast.ImportFrom) and node.module == own) or (
+                    isinstance(node, ast.Import) and any(a.name == own for a in node.names)
+                ):
+                    found.append(f"{module}.{fn.name}:{node.lineno}")
+    assert not found, found

@@ -667,12 +667,43 @@ def test_staged_events_dir_memoizes_per_signature(spark):
 
     sf = "/root/testdata/sf0.001"
     a = S.staged_events_dir(spark, sf, 2)
-    b = S.staged_events_dir(spark, sf, 2)
-    assert a == b and os.path.isdir(a)
+    assert S.staged_events_dir(spark, sf, 2, extra_cols=()) is a
+    assert os.path.isfile(os.path.join(a, "b0.parquet"))
     c = S.staged_events_dir(spark, sf, 2, extra_cols=("event_type",))
     d = S.staged_events_dir(spark, sf, 3)
     assert c != a and d != a and c != d
-    # the memo key includes the application id: a dead context's conf
-    # must never leak staged batches into a fresh JVM
-    key_apps = {k[0] for k in S._STAGE_CACHE}
-    assert key_apps == {spark.sparkContext.applicationId}
+
+
+def test_teardown_restages_after_a_data_refresh(spark, sf_dir, tmp_path):
+    """teardown_shared_memos() is the call to make before a data refresh
+    under a memoized sf_dir: after it, the sessionizer stages the new
+    events instead of replaying the batches staged from the old ones."""
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from clean_census_acs_data_spark.session import teardown_shared_memos
+    from clean_census_acs_data_spark.streaming.stateful import (
+        sessionize_events_availablenow,
+    )
+
+    def sessions(sf):
+        return sorted(map(tuple, sessionize_events_availablenow(spark, sf).collect()))
+
+    src = os.path.join(sf_dir, "events.parquet")
+    refreshed, fresh = tmp_path / "refreshed", tmp_path / "fresh"
+    refreshed.mkdir()
+    fresh.mkdir()
+    shutil.copy(src, refreshed / "events.parquet")
+    before = sessions(str(refreshed))
+
+    teardown_shared_memos()
+    events = pq.read_table(src)
+    subset = events.slice(0, events.num_rows // 2)
+    pq.write_table(subset, refreshed / "events.parquet")
+    pq.write_table(subset, fresh / "events.parquet")
+    after = sessions(str(refreshed))
+
+    assert after == sessions(str(fresh))
+    assert after != before
