@@ -123,3 +123,19 @@ def iso_utc_now() -> Column:
 def epoch_seconds() -> Column:
     """int(time.time()) analog (Test_census_tract.py:251)."""
     return F.unix_timestamp()
+
+
+# ---------------------------------------------------------------------------
+# SQL text: plans built as ``selectExpr`` strings cost one py4j call per
+# string, where a ``Column`` composition costs one per ``F.*`` call
+# ---------------------------------------------------------------------------
+
+
+def sql_ident(name: str) -> str:
+    """``name`` as a backquoted Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_literal(value: str) -> str:
+    """``value`` as a Spark SQL string literal."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"

@@ -2,11 +2,15 @@
 composable Spark pipeline (SURVEY.md §3.1 → §3.4).
 
     request_specs (rows built on the driver)
-      → fetch (one Spark job: at most nproc mapInPandas tasks, concurrent
-        requests inside each) → dead-letter split
-      → wire decode → normalize columns → mapping rename → align
+      → fetch + header discovery (one Spark job: at most nproc
+        mapInPandas tasks, concurrent requests inside each, filling a
+        lazy localCheckpoint and collecting one header row per response)
+      → dead-letter split
+      → positional wire decode → normalize columns → mapping rename
+        → align → cast_clean typed tier (one selectExpr, worked out as
+        name arithmetic on the driver; no job)
       → union-by-name (implicit: decode emits one aligned frame)
-      → cast_clean typed tier → layout write
+      → layout write (the decode and typed tier run inside this job)
 
 vs the reference: zero driver-side pandas concat (the 85k-tract
 national frame never materializes on the driver), fetch parallelism
@@ -73,12 +77,12 @@ def run_census_pipeline(
                     "table_name string, variable string, year int, reason string",
                 )
                 diag.write.mode("append").parquet(audit_path + "_preflight")
-    responses = _fetched_responses(
+    fetched = _fetched_responses(
         spark, table_name, year, chunk_size,
         tuple(request_cfg.get("variables", ())), "tract:*", fetcher,
     )
     return _run_table(
-        spark, responses, cfg, audit_path=audit_path, cast_measures=cast_measures
+        spark, fetched, cfg, audit_path=audit_path, cast_measures=cast_measures
     )
 
 
@@ -91,12 +95,15 @@ def _fetched_responses(
     variables: tuple[str, ...],
     geo_for: str,
     fetcher: R.FetchFn | None,
-) -> DataFrame:
-    """The fetched response frame of one table's request universe, as
-    an eager localCheckpoint: the materialized fetch output a production
-    pipeline persists before decode. Memoized because two registry
-    entries (census_pipeline_e2e and census_write_readback) run the
-    identical fetch; tract and ZCTA share it through ``geo_for``.
+) -> tuple[DataFrame, tuple[str, ...]]:
+    """(responses, observed header names) of one table's request
+    universe, filled by one Spark job. The response frame is a lazy
+    localCheckpoint, the materialized fetch output a production
+    pipeline persists before decode; the collect of its header rows
+    (``observed_headers``) runs the fetch and fills the checkpoint in
+    the same job. Memoized because two registry entries
+    (census_pipeline_e2e and census_write_readback) run the identical
+    fetch; tract and ZCTA share it through ``geo_for``.
     ``chunk_size=None`` is the single-shot ZCTA universe, one request
     per dataset with no state clause."""
     datasets = {table_name: {**C.DATASETS[table_name], "variables": list(variables)}}
@@ -104,38 +111,41 @@ def _fetched_responses(
         specs = C.zcta_request_specs(spark, year=year, datasets=datasets)
     else:
         specs = C.request_specs(spark, year=year, chunk_size=chunk_size, datasets=datasets)
-    return R.fetch_responses(
+    responses = R.fetch_responses(
         specs, fetcher=fetcher, geo_for=geo_for, geo_in_states=chunk_size is not None
-    ).localCheckpoint(eager=True)
+    ).localCheckpoint(eager=False)
+    return responses, R.observed_headers(responses)
 
 
 def _run_table(
     spark: SparkSession,
-    responses: DataFrame,
+    fetched: tuple[DataFrame, tuple[str, ...]],
     cfg: dict,
     *,
     audit_path: str | None,
     cast_measures: bool,
 ) -> tuple[DataFrame, DataFrame]:
     """The one table body of both pipelines: audit → dead-letter split
-    → wire decode → normalize → mapping rename → align → cast_clean."""
+    → wire decode → normalize → mapping rename → align → cast_clean.
+    The last four are one projection (``T.clean_projection``), so the
+    body runs no Spark job and costs under a hundred py4j calls."""
+    responses, observed = fetched
     if audit_path:
         append_audit(responses, audit_path)
     ok, dead = R.split_dead_letters(responses)
 
     expected = ["NAME"] + list(dict.fromkeys(cfg["variables"]))
-    decoded = R.decode_wire(ok, expected)
+    decoded = R.decode_wire(ok, expected, observed)
 
     mapping = C.load_mapping_dict(spark)
-    out = T.normalize_columns(decoded)
-    out = T.apply_mapping(out, mapping)
     labels = [mapping.get(v, v) for v in expected]
-    out = T.align_schema(out, ["TABLE_NAME"] + labels)
-
+    casts = {}
     if cast_measures:
         # typed tier: measures → long, blanks + ACS sentinels → NULL
-        measure_labels = [mapping[v] for v in cfg["variables"] if v in mapping]
-        out = T.cast_clean(out, {c: "long" for c in measure_labels})
+        casts = {mapping[v]: "long" for v in cfg["variables"] if v in mapping}
+    out = decoded.selectExpr(
+        *T.clean_projection(decoded.columns, mapping, ["TABLE_NAME"] + labels, casts)
+    )
     return out, dead
 
 
@@ -264,11 +274,11 @@ def run_zcta_pipeline(
     `zip code tabulation area` probed from the response (its header
     name contains spaces — kept verbatim through normalization)."""
     cfg = C.DATASETS[table_name]
-    responses = _fetched_responses(
+    fetched = _fetched_responses(
         spark, table_name, year, None, tuple(cfg["variables"]),
         "zip code tabulation area:*", fetcher,
     )
     out, dead = _run_table(
-        spark, responses, cfg, audit_path=audit_path, cast_measures=cast_measures
+        spark, fetched, cfg, audit_path=audit_path, cast_measures=cast_measures
     )
     return out.drop("STATE_FIPS"), dead

@@ -358,7 +358,8 @@ def shared_memo(fn):
 def teardown_shared_memos() -> int:
     """Drop every shared_memo entry and unpersist the DataFrames in
     their values (a value may be a tuple); returns how many frames were
-    unpersisted."""
+    unpersisted. A value that owns a resource frees it when dropped: the
+    streaming staging directory is a ``TemporaryDirectory``."""
     from py4j.protocol import Py4JError
     from pyspark.sql import DataFrame
 

@@ -36,6 +36,15 @@ The per-request retry loop (``_get_with_retry``) is the only one in
 (sources/census_datasource.py) calls it too, so both connectors share
 one retry, malformed-body and dead-letter policy.
 
+Decode costs no Spark job. :func:`observed_headers` collects one
+header row per response, and a caller that checkpoints the fetch
+output lazily (``localCheckpoint(eager=False)``) and runs it first
+pays for the fetch, the checkpoint and the schema discovery with that
+one job (plans/census_pipeline.py does). :func:`decode_wire` then turns
+the bodies into rows positionally: each output name's position in a
+response's header is looked up once per response, below the explode,
+and each cell is an array read, not a per-row map build.
+
 The fetch function is injectable (``fetcher=``) so tests run a
 deterministic fake with no network; the default uses stdlib urllib
 (executors may not have `requests`).
@@ -53,8 +62,9 @@ from datetime import datetime, timezone
 import pandas as pd
 from pyspark import TaskContext
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType, StringType, IntegerType
+
+from clean_census_acs_data_spark.functions import sql_ident, sql_literal
 
 # (status, headers, body_text) — body is the raw JSON array-of-arrays text
 FetchFn = Callable[[str, dict[str, str]], tuple[int, dict[str, str], str]]
@@ -63,6 +73,11 @@ FetchFn = Callable[[str, dict[str, str]], tuple[int, dict[str, str], str]]
 # upstream answered, but not with a usable response ("bad gateway").
 MALFORMED_STATUS = 502
 MALFORMED_ERROR = "malformed body"
+
+# the wire format: row 0 the header, rows 1.. data, every cell a string
+WIRE_TYPE = "array<array<string>>"
+# geography columns kept from a response header when present
+GEO_COLS = ("state", "county", "tract", "zip code tabulation area")
 
 RESPONSE_SCHEMA = StructType(
     [
@@ -218,8 +233,9 @@ def _get_with_retry(
     2xx whose body is not a JSON array is retried with error
     ``malformed body`` and becomes ``MALFORMED_STATUS`` once the
     attempts are spent; a 204 is a valid empty response. Backoff is
-    exponential and capped at ``backoff_cap_s``; ``take_slot`` (the
-    caller's token bucket) runs before every attempt."""
+    exponential, capped at ``backoff_cap_s`` and taken between attempts
+    only; ``take_slot`` (the caller's token bucket) runs before every
+    attempt."""
     status, headers, body, err = 0, {}, None, None
     for attempt in range(max_attempts):
         if take_slot is not None:
@@ -234,8 +250,10 @@ def _get_with_retry(
             err = MALFORMED_ERROR  # a 2xx cut short → retryable
         else:
             err = err or (body or "")[:200]  # resp.text[:200] (:368)
-        # exponential backoff, capped (tenacity analog, :138-142)
-        time.sleep(min(backoff_cap_s, backoff_base_s * (2**attempt)))
+        if attempt + 1 < max_attempts:
+            # exponential backoff, capped (tenacity analog, :138-142);
+            # none after the last attempt, which nothing follows
+            time.sleep(min(backoff_cap_s, backoff_base_s * (2**attempt)))
     if 200 <= status < 300:  # retries spent on malformed bodies
         status = MALFORMED_STATUS  # dead-letter it, never decode it
     return status, headers, body, err, max_attempts
@@ -252,60 +270,69 @@ def split_dead_letters(responses: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(successes, dead_letters) — the quarantine-table replacement for
     the reference's per-state fallback loop (Test_census_tract.py:
     364-390)."""
-    ok = responses.where((F.col("status") >= 200) & (F.col("status") < 300))
-    dead = responses.where((F.col("status") < 200) | (F.col("status") >= 300))
+    ok = responses.where("status >= 200 AND status < 300")
+    dead = responses.where("status < 200 OR status >= 300")
     return ok, dead
 
 
-def decode_wire(responses: DataFrame, expected_vars: list[str]) -> DataFrame:
-    """JSON array-of-arrays → tall typed frame (wire decode, reference
-    row 5), entirely with JVM JSON expressions — no Python in the path:
+def observed_headers(responses: DataFrame) -> tuple[str, ...]:
+    """The header names of the 2xx responses that carry at least one
+    data row, sorted: the decode's schema discovery (the reference's
+    geo-column probe + extra-column passthrough, test_final_zcta.py:
+    196-198 / Test_census_tract.py:174-175). One job that collects one
+    header row per response; headers of data-less responses are left
+    out, because they never produce a row."""
+    ok, _ = split_dead_letters(responses)
+    heads = ok.selectExpr(f"from_json(body, '{WIRE_TYPE}') AS arr").selectExpr(
+        "IF(size(arr) >= 2, arr[0], NULL) AS hdr"
+    )
+    return tuple(sorted({n for (hdr,) in heads.collect() if hdr for n in hdr}))
+
+
+def decode_wire(
+    responses: DataFrame, expected_vars: list[str], observed: tuple[str, ...]
+) -> DataFrame:
+    """JSON array-of-arrays → tall frame of string cells (wire decode,
+    reference row 5), entirely with JVM expressions and no Spark job:
 
     row 0 of each body is the header; rows 1.. are data; every cell a
-    string. Output: one row per (response, data-row) with a map
-    column keyed by header name, plus state_fips tagging (row 9).
-    Missing expected columns surface as NULLs at map-access time
-    (NULL-fill alignment, rows 10, 23)."""
-    rows = responses.select(
+    string. Output: one row per (response, data row) with
+    ``table_name``, ``state_fips`` (the request's state chunk, row 9),
+    ``expected_vars``, then the other ``observed`` header names (from
+    :func:`observed_headers`) sorted, then the geography columns the
+    responses carried. A header a response lacks decodes to NULL
+    (NULL-fill alignment, rows 10, 23).
+
+    The decode is positional. A projection below the explode parses
+    each body once and looks up, once per response, each output name's
+    position in its header; every cell is then ``get(row, pos - 1)``,
+    which is NULL for a name the header lacks (position 0). The plan is
+    SQL text, so building it costs a few py4j calls, not a few per
+    column."""
+    extras = sorted(set(observed) - set(expected_vars) - set(GEO_COLS))
+    names = [*expected_vars, *extras, *(g for g in GEO_COLS if g in observed)]
+    wanted = ", ".join(sql_literal(n) for n in names)
+    # get(arr, 0), not arr[0]: under ANSI mode arr[0] of an empty body
+    # ("[]") raises, get() reads NULL
+    positioned = responses.selectExpr(
+        "table_name", "state_chunk", f"from_json(body, '{WIRE_TYPE}') AS arr"
+    ).selectExpr(
         "table_name",
         "state_chunk",
-        F.from_json("body", "array<array<string>>").alias("arr"),
+        "arr",
+        f"transform(array({wanted}), n -> array_position(get(arr, 0), n)) AS pos",
     )
-    exploded = rows.select(
+    # the explode's input is an expression, not a column: over a column
+    # the optimizer infers a non-empty filter and pushes it below the
+    # parse, which then runs once more per body
+    rows = positioned.selectExpr(
         "table_name",
         "state_chunk",
-        F.element_at("arr", 1).alias("hdr"),
-        F.explode(F.slice("arr", 2, F.greatest(F.size("arr") - 1, F.lit(0)))).alias("vals"),
+        "pos",
+        "explode(slice(arr, 2, greatest(size(arr) - 1, 0))) AS vals",
     )
-    kv = exploded.select(
+    return rows.selectExpr(
         "table_name",
-        "state_chunk",
-        F.map_from_arrays("hdr", "vals").alias("m"),
-    )
-    geo_cols = ("state", "county", "tract", "zip code tabulation area")
-    # schema discovery: union of observed header names beyond the request
-    # (the reference's geo-column probe + extra-column passthrough,
-    # test_final_zcta.py:196-198 / Test_census_tract.py:174-175). A tiny
-    # metadata aggregation — one distinct over HEADER keys, not data:
-    # r12 — this used to collect map_keys over the exploded kv frame,
-    # which executed the whole decode fan-out (explode of every data
-    # row + per-row map build) once for discovery and again for the
-    # real query. The map's keys are by construction the header row,
-    # so reading element_at(arr, 1) of responses that have at least
-    # one data row (size >= 2 — headers of data-less responses never
-    # produced kv rows, preserved exactly) observes the identical set
-    # with one row per RESPONSE instead of one per data row.
-    observed = {
-        r[0]
-        for r in rows.where(F.size("arr") >= 2)
-        .select(F.explode(F.element_at("arr", 1)).alias("k"))
-        .distinct()
-        .collect()
-    }
-    extras = sorted(observed - set(expected_vars) - set(geo_cols))
-    cols = [F.element_at("m", v).alias(v) for v in expected_vars]
-    extra_cols = [F.element_at("m", v).alias(v) for v in extras]
-    geo = [F.element_at("m", g).alias(g) for g in geo_cols if g in observed]
-    return kv.select(
-        "table_name", F.col("state_chunk").alias("state_fips"), *cols, *extra_cols, *geo
+        "state_chunk AS state_fips",
+        *(f"get(vals, pos[{i}] - 1) AS {sql_ident(n)}" for i, n in enumerate(names)),
     )

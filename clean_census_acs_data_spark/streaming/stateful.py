@@ -265,7 +265,7 @@ def staged_events_dir(
     identical signature."""
     import os
 
-    stage = _stage_dir(spark, os.path.abspath(sf_dir), n_splits, tuple(extra_cols))
+    stage = _stage_dir(spark, os.path.abspath(sf_dir), n_splits, tuple(extra_cols)).name
     # Stage unless the full complement of batch files is there: a temp
     # reaper (or partial cleanup) can empty the dir while leaving it in
     # place, and every consumer reads b0.parquet first for its schema.
@@ -280,11 +280,13 @@ def staged_events_dir(
 
 
 @shared_memo
-def _stage_dir(spark, sf_dir: str, n_splits: int, extra_cols: tuple[str, ...]) -> str:
-    """A new empty directory; the arguments only key the memo."""
+def _stage_dir(spark, sf_dir: str, n_splits: int, extra_cols: tuple[str, ...]):
+    """A new empty directory; the arguments only key the memo. It is a
+    ``TemporaryDirectory``, so teardown_shared_memos(), which drops the
+    memo's reference, also deletes the directory."""
     import tempfile
 
-    return tempfile.mkdtemp(prefix="stateful_stage_")
+    return tempfile.TemporaryDirectory(prefix="stateful_stage_")
 
 
 @shared_memo

@@ -5,6 +5,7 @@ from clean_census_acs_data_spark.transforms.normalize import (  # noqa: F401
     align_schema,
     union_all,
     cast_clean,
+    clean_projection,
     unmapped_columns,
     build_mapping,
     MappingCollisionError,

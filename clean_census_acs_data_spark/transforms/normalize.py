@@ -22,6 +22,9 @@ Reference behaviors re-expressed (file:line cites into /root/reference):
   (SURVEY.md §1.2) incl. ACS sentinel → NULL
 - ``unmapped_columns`` <- Test_census_tract.py:356-359 set-difference
   diagnostic
+
+``clean_projection`` applies normalize → mapping → align → cast_clean as
+one projection of SQL text, with the same rules as the four transforms.
 """
 
 from __future__ import annotations
@@ -31,6 +34,8 @@ from collections.abc import Iterable, Mapping
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from clean_census_acs_data_spark.functions import ACS_SENTINELS, sql_ident, sql_literal
 
 
 def _norm(name: str) -> str:
@@ -120,11 +125,21 @@ def align_schema(
     Column order is pinned explicitly because unionByName realigns
     (SURVEY.md §7 risk register)."""
     present = set(df.columns)
-    out = df
-    for missing in [c for c in expected if c not in present]:
-        out = out.withColumn(missing, F.lit(None).cast(fill_type))
-    extras = [c for c in df.columns if c not in set(expected)]
-    return out.select(*expected, *extras)
+    return df.selectExpr(*(
+        sql_ident(c) if c in present else f"{_null_of(fill_type)} AS {sql_ident(c)}"
+        for c in _aligned(df.columns, expected)
+    ))
+
+
+def _aligned(columns: list[str], expected: list[str]) -> list[str]:
+    """align_schema's output names: ``expected``, then the other
+    ``columns`` in their order."""
+    wanted = set(expected)
+    return [*expected, *(c for c in columns if c not in wanted)]
+
+
+def _null_of(fill_type: str) -> str:
+    return f"CAST(NULL AS {fill_type})"
 
 
 def union_all(dfs: Iterable[DataFrame]) -> DataFrame:
@@ -141,22 +156,53 @@ def cast_clean(
     df: DataFrame,
     casts: Mapping[str, str],
     *,
-    sentinels: tuple[str, ...] = ("-888888888", "-999999999", "-666666666", "-222222222"),
+    sentinels: tuple[str, ...] = ACS_SENTINELS,
 ) -> DataFrame:
     """The engine's typed tier over all-string ingest (SURVEY.md §1.2):
     blank/empty → NULL (COPY EMPTYASNULL BLANKSASNULL,
     Test_census_tract.py:277), ACS sentinel codes → NULL, then cast.
     ``casts`` maps column → target type name; unlisted columns pass
     through untouched."""
-    exprs = []
-    for c in df.columns:
-        if c in casts:
-            cleaned = F.nullif(F.trim(F.col(c).cast("string")), F.lit(""))
-            cleaned = F.when(cleaned.isin(*sentinels), F.lit(None)).otherwise(cleaned)
-            exprs.append(cleaned.cast(casts[c]).alias(c))
-        else:
-            exprs.append(F.col(c))
-    return df.select(*exprs)
+    return df.selectExpr(*(
+        f"{_cast_clean_sql(sql_ident(c), casts[c], sentinels)} AS {sql_ident(c)}"
+        if c in casts else sql_ident(c)
+        for c in df.columns
+    ))
+
+
+def _cast_clean_sql(value: str, to: str, sentinels: tuple[str, ...]) -> str:
+    """cast_clean's rule for one value (SQL text) as SQL text."""
+    cleaned = f"nullif(trim(CAST({value} AS STRING)), '')"
+    if sentinels:
+        listed = ", ".join(sql_literal(v) for v in sentinels)
+        cleaned = f"CASE WHEN {cleaned} IN ({listed}) THEN NULL ELSE {cleaned} END"
+    return f"CAST({cleaned} AS {to})"
+
+
+def clean_projection(
+    columns: list[str],
+    mapping: Mapping[str, str],
+    expected: list[str],
+    casts: Mapping[str, str],
+) -> list[str]:
+    """``normalize_columns`` → ``apply_mapping`` → ``align_schema`` →
+    ``cast_clean`` over a frame whose columns are ``columns``, as SQL
+    select expressions for one ``selectExpr``. The names are worked out
+    in Python with the same rules; the four transforms would cost
+    several py4j calls per column and four projections."""
+    source: dict[str, str] = {}
+    for c in columns:
+        label = mapping.get(_norm(c), _norm(c))
+        if label in source:
+            raise ValueError(f"columns {source[label]} and {sql_ident(c)} both become {label!r}")
+        source[label] = sql_ident(c)
+    out = []
+    for label in _aligned(list(source), expected):
+        value = source.get(label) or _null_of("string")
+        if label in casts:
+            value = _cast_clean_sql(value, casts[label], ACS_SENTINELS)
+        out.append(f"{value} AS {sql_ident(label)}")
+    return out
 
 
 def unmapped_columns(

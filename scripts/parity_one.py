@@ -1,6 +1,9 @@
 """Per-entry oracle parity check (driver comparison semantics).
 
-Usage: python scripts/parity_one.py ENTRY [ENTRY...] [--sf SF_DIR ...]
+Usage: python scripts/parity_one.py ENTRY [ENTRY...] [--sf SF_DIR [SF_DIR...]]
+
+``--sf`` takes one or more dirs and may repeat, so ``--sf A B`` and
+``--sf A --sf B`` are the same.
 
 Runs each named registry entry on Spark and its DuckDB oracle at each
 given scale dir (default: sf0.001 and sf0.01) and reports hash_match
@@ -10,6 +13,7 @@ Exit code 1 if anything mismatches.
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
@@ -17,6 +21,19 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from scripts.local_correctness import value_hash  # noqa: E402
+
+
+def parse_args(argv: list[str] | None = None) -> tuple[list[str], list[str]]:
+    """(entry names, scale dirs) from the command line; no dirs if
+    ``--sf`` is not given."""
+    parser = argparse.ArgumentParser(description="Per-entry oracle parity check.")
+    parser.add_argument("names", nargs="+", metavar="ENTRY")
+    parser.add_argument(
+        "--sf", nargs="+", action="extend", default=[], metavar="SF_DIR",
+        help="scale dirs (repeatable; default sf0.001 and sf0.01)",
+    )
+    args = parser.parse_args(argv)
+    return args.names, args.sf
 
 
 def main() -> None:
@@ -27,15 +44,7 @@ def main() -> None:
     from clean_census_acs_data_spark.queries import ORACLES, QUERIES
     from clean_census_acs_data_spark.session import get_spark
 
-    args = sys.argv[1:]
-    sfs: list[str] = []
-    names: list[str] = []
-    it = iter(args)
-    for a in it:
-        if a == "--sf":
-            sfs.append(next(it))
-        else:
-            names.append(a)
+    names, sfs = parse_args()
     if not sfs:
         sfs = ["/root/testdata/sf0.001", "/root/testdata/sf0.01"]
 

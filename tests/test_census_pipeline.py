@@ -369,7 +369,7 @@ def test_truncated_body_is_retried_then_dead_lettered(spark, tmp_path):
     assert broken["body"] is None
     ok, dead = R.split_dead_letters(responses)
     assert [r["state_chunk"] for r in dead.collect()] == ["16,17,18"]
-    decoded = R.decode_wire(ok, ["NAME"] + C.DATASETS["dp02"]["variables"])
+    decoded = R.decode_wire(ok, ["NAME"] + C.DATASETS["dp02"]["variables"], R.observed_headers(ok))
     assert decoded.count() == 3 * 2  # the retried chunk: 3 states x 2 tracts
     attempts: dict[str, int] = {}
     for chunk, *_ in _read_fetch_log(log):
@@ -395,3 +395,17 @@ def test_teardown_releases_the_response_memo(spark, tmp_path, run, fake, calls):
     S.teardown_shared_memos()
     run(spark, table_name="dp02", fetcher=fetcher)
     assert len(_read_fetch_log(log)) == 2 * first  # fetched again
+
+
+def test_retry_does_not_back_off_after_the_last_attempt(monkeypatch):
+    """Backoff is taken between attempts only: three failed attempts
+    sleep twice, with nothing after the last one."""
+    from clean_census_acs_data_spark.sources import rest as R
+
+    slept: list[float] = []
+    monkeypatch.setattr(R.time, "sleep", slept.append)
+    status, _headers, _body, err, attempts = R._get_with_retry(
+        lambda url, params: (500, {}, "boom"), "u", {}, max_attempts=3, backoff_base_s=0.01,
+    )
+    assert (status, err, attempts) == (500, "boom", 3)
+    assert slept == [0.01, 0.02]

@@ -92,3 +92,16 @@ def test_query_matches_oracle(spark, ddb, name):
     ca, cb = canon(sdf), canon(odf)
     assert_dtype_kinds_match(ca, cb, name)
     assert_frames_equal(ca, cb, name)
+
+
+@pytest.mark.parametrize(
+    "argv", [["a", "b", "--sf", "X", "Y"], ["a", "b", "--sf", "X", "--sf", "Y"]]
+)
+def test_parity_one_takes_several_scale_dirs(argv):
+    import importlib.util
+
+    script = os.path.join(os.path.dirname(__file__), "..", "scripts", "parity_one.py")
+    spec = importlib.util.spec_from_file_location("parity_one", script)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    assert mod.parse_args(argv) == (["a", "b"], ["X", "Y"])

@@ -607,9 +607,9 @@ def test_moving_an_unchanged_def_keeps_the_fingerprint(tmp_path):
 
 
 def test_fingerprint_follows_re_exported_names(tmp_path):
-    """``transforms/__init__.py`` binds ``apply_mapping`` only by import;
-    an edit to the def it re-exports changes the fingerprint of the
-    census pipeline entries that call ``T.apply_mapping``."""
+    """``transforms/__init__.py`` binds ``clean_projection`` only by
+    import; an edit to the def it re-exports changes the fingerprint of
+    the census pipeline entries that call ``T.clean_projection``."""
     import shutil
 
     from clean_census_acs_data_spark import rotation as rot
@@ -621,8 +621,8 @@ def test_fingerprint_follows_re_exported_names(tmp_path):
     before = rot.fingerprints(str(tmp_path))
     _edit(
         tmp_path / rot.PKG / "transforms" / "normalize.py",
-        "mapping.get(c, c)) for c in df.columns])",
-        "mapping.get(c, c)) for c in reversed(df.columns)])",
+        "for label in _aligned(list(source), expected):",
+        "for label in reversed(_aligned(list(source), expected)):",
     )
     after = rot.fingerprints(str(tmp_path))
     assert after["census_pipeline_e2e"] != before["census_pipeline_e2e"]

@@ -674,6 +674,19 @@ def test_staged_events_dir_memoizes_per_signature(spark):
     assert c != a and d != a and c != d
 
 
+def test_teardown_deletes_the_staging_dir(spark, sf_dir):
+    """Dropping the staging-dir memo deletes the staged batches."""
+    import os
+
+    from clean_census_acs_data_spark.session import teardown_shared_memos
+    from clean_census_acs_data_spark.streaming import stateful as S
+
+    stage = S.staged_events_dir(spark, sf_dir, 2)
+    assert os.path.isfile(os.path.join(stage, "b0.parquet"))
+    teardown_shared_memos()
+    assert not os.path.exists(stage)
+
+
 def test_teardown_restages_after_a_data_refresh(spark, sf_dir, tmp_path):
     """teardown_shared_memos() is the call to make before a data refresh
     under a memoized sf_dir: after it, the sessionizer stages the new
