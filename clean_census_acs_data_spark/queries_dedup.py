@@ -1816,6 +1816,42 @@ SELECT CAST(3 AS BIGINT), 'near_dup', CAST(n2 AS BIGINT),
 """
 
 
+def _cascade_report(base: DataFrame, pairs: DataFrame) -> DataFrame:
+    """The three-stage report over ``base`` (doc_id, text) and a
+    near-dup pair table (doc_a < doc_b): each stage carries the counts
+    of the stages before it, so one global aggregate emits all four."""
+    s1 = base.groupBy("text").agg(
+        F.min("doc_id").alias("doc_id"), F.count(F.lit(1)).alias("c0")
+    )
+    # two consumers (the keeper semi-join and the final join) in one
+    # query: a lazy cache is filled once, as one table-cache stage
+    s2 = s1.groupBy(F.expr(_CASCADE_NORM).alias("__norm")).agg(
+        F.min("doc_id").alias("doc_id"),
+        F.sum("c0").alias("c0"),
+        F.count(F.lit(1)).alias("c1"),
+    ).transform(tracked_cache)
+    dropped = (
+        pairs.join(s2.select(F.col("doc_id").alias("doc_a")), "doc_a", "left_semi")
+        .select(F.col("doc_b").alias("__dropped"))
+        .distinct()
+    )
+    return (
+        s2.join(dropped, F.col("doc_id") == F.col("__dropped"), "left")
+        .agg(
+            F.coalesce(F.sum("c0"), F.lit(0)).alias("n0"),
+            F.coalesce(F.sum("c1"), F.lit(0)).alias("n1"),
+            F.count(F.lit(1)).alias("n2"),
+            F.count_if(F.col("__dropped").isNull()).alias("n3"),
+        )
+        .selectExpr(
+            "stack(3, 1L, 'exact', n0, n0 - n1, n1, "
+            "2L, 'normalized', n1, n1 - n2, n2, "
+            "3L, 'near_dup', n2, n2 - n3, n3) "
+            "AS (stage, method, docs_in, docs_removed, docs_out)"
+        )
+    )
+
+
 @register("dedup_cascade_report", oracle=_cascade_oracle())
 def dedup_cascade_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """THE production dedup shape as one report: the three-stage
@@ -1834,55 +1870,24 @@ def dedup_cascade_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     a smaller-id surviving partner exists at Jaccard ≥ 0.8) — the
     single-pass greedy form; the transitive-component form is
     dedup_survivor_selection. Scale shape: stages 1-2 are partial-agg
-    groupBys; stage 3 joins the dimension-sized session-cached pair
-    table twice (semi + anti) — no stage rescans text the previous
-    stage already collapsed."""
+    groupBys, and each carries the counts of the stages before it
+    (stage 2's row for a normalized text holds how many input docs
+    and stage-1 survivors it absorbed). Stage 3 semi-joins the
+    dimension-sized session-cached pair table to the stage-2 keepers
+    to get the dropped ids; one left join of stage 2 to them and one
+    global aggregate give all four counts, and ``stack`` turns that
+    row into the three stage rows — no stage rescans text the previous
+    stage already collapsed, and there is no union or cross join."""
     from clean_census_acs_data_spark.operators.dedup import (
         plant_near_dups,
         standard_near_dup_pairs,
     )
 
     base = plant_near_dups(_t(spark, sf_dir, "documents"))
-    # cached: each cascade stage feeds the NEXT stage plus its own
-    # count — uncached, stage N's chain re-ran inside every later
-    # stage's count (the n3 count re-ran the whole cascade)
-    s1 = base.groupBy("text").agg(F.min("doc_id").alias("doc_id")).transform(tracked_cache)
-    s2 = s1.groupBy(F.expr(_CASCADE_NORM).alias("__norm")).agg(
-        F.min("doc_id").alias("doc_id")
-    ).transform(tracked_cache)
-    s1.count(), s2.count()  # eager: sibling subtrees race lazy fills
     pairs = standard_near_dup_pairs(spark, sf_dir, threshold=0.8).select(
         "doc_a", "doc_b"
     )
-    surviving_pairs = pairs.join(
-        s2.select(F.col("doc_id").alias("doc_a")), "doc_a", "left_semi"
-    )
-    s3 = s2.join(
-        surviving_pairs.select(F.col("doc_b").alias("doc_id")),
-        "doc_id",
-        "left_anti",
-    )
-    n0 = base.agg(F.count(F.lit(1)).alias("n0"))
-    n1 = s1.agg(F.count(F.lit(1)).alias("n1"))
-    n2 = s2.agg(F.count(F.lit(1)).alias("n2"))
-    n3 = s3.agg(F.count(F.lit(1)).alias("n3"))
-    counts = (
-        n0.crossJoin(F.broadcast(n1))
-        .crossJoin(F.broadcast(n2))
-        .crossJoin(F.broadcast(n3))
-    )
-    stage = lambda i, m, a, b: counts.select(  # noqa: E731
-        F.lit(i).cast("long").alias("stage"),
-        F.lit(m).alias("method"),
-        F.col(a).cast("long").alias("docs_in"),
-        (F.col(a) - F.col(b)).cast("long").alias("docs_removed"),
-        F.col(b).cast("long").alias("docs_out"),
-    )
-    return (
-        stage(1, "exact", "n0", "n1")
-        .unionAll(stage(2, "normalized", "n1", "n2"))
-        .unionAll(stage(3, "near_dup", "n2", "n3"))
-    )
+    return _cascade_report(base, pairs)
 
 
 # ---------------------------------------------------------------------------

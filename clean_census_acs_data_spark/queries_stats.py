@@ -12,6 +12,7 @@ statistic hash-checkable against DuckDB.
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -3902,6 +3903,32 @@ FROM r WHERE rn = (np + 1) // 2
 """
 
 
+def _walsh_sums(a: np.ndarray) -> np.ndarray:
+    """The pair sums a[i] + a[j] over i ≤ j: the upper triangle of the
+    outer sum, filled row by row into one n(n+1)/2 buffer, so the
+    result is the peak (an n×n outer sum indexed by triu_indices holds
+    about 5× that)."""
+    n = len(a)
+    out = np.empty(n * (n + 1) // 2, dtype=np.int64)
+    off = 0
+    for i in range(n):
+        out[off : off + n - i] = a[i] + a[i:]
+        off += n - i
+    return out
+
+
+def _hl_group(pdf: pd.DataFrame) -> pd.DataFrame:
+    """One nation's Walsh-pair count and lower-median pair sum."""
+    # NULL cents are not observations (collect_list drops them too)
+    a = np.sort(pdf["cents"].dropna().to_numpy(np.int64))
+    if not len(a):
+        return pd.DataFrame({"nk": [], "np": [], "s": []})
+    sums = _walsh_sums(a)
+    k = (len(sums) + 1) // 2
+    s = int(np.partition(sums, k - 1)[k - 1])
+    return pd.DataFrame({"nk": [int(pdf["nk"].iloc[0])], "np": [len(sums)], "s": [s]})
+
+
 @register("hodges_lehmann_location", oracle=_HL_ORACLE)
 def hodges_lehmann_location(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hodges–Lehmann location estimate of customer account balance per
@@ -3930,10 +3957,11 @@ def hodges_lehmann_location(spark: SparkSession, sf_dir: str) -> DataFrame:
     noop rep at sf0.1 for 25 rows of output (~17 µs/element). The
     kernel is now a grouped-map pandas stage (guide §4.2 "hand whole
     batches to vectorized native code"): per nation, numpy builds the
-    upper-triangle outer sum (np.add.outer + triu_indices, self-pairs
-    on the diagonal = the i ≤ j multiset) and np.partition selects the
-    lower median — 0.50–0.59 s per rep (−84%), output verified
-    element-identical to the JVM fold (test pins it). Group count is
+    upper triangle of the outer sum (self-pairs on the diagonal = the
+    i ≤ j multiset) row by row into one n(n+1)/2 buffer, and
+    np.partition selects the lower median — 0.50–0.59 s per rep
+    (−84%), output verified element-identical to the JVM fold (test
+    pins it). Group count is
     |nations| (bounded), so the per-group Python call count is fixed,
     not data-sized. Sums stay int64 end-to-end (cents ≤ ~10⁶; pair
     sums ≤ 2·10⁶ — exact); the single float is the final /2 display
@@ -3946,21 +3974,6 @@ def hodges_lehmann_location(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_nationkey").alias("nk"),
         F.round(F.col("c_acctbal") * 100).cast("long").alias("cents"),
     )
-
-    def _hl_group(pdf):
-        import numpy as np
-        import pandas as pd
-
-        # NULL cents are not observations (collect_list drops them too)
-        a = np.sort(pdf["cents"].dropna().to_numpy(np.int64))
-        if not len(a):
-            return pd.DataFrame({"nk": [], "np": [], "s": []})
-        sums = np.add.outer(a, a)[np.triu_indices(len(a))]
-        k = (len(sums) + 1) // 2
-        s = int(np.partition(sums, k - 1)[k - 1])
-        return pd.DataFrame(
-            {"nk": [int(pdf["nk"].iloc[0])], "np": [len(sums)], "s": [s]}
-        )
 
     g = c.groupBy("nk").applyInPandas(_hl_group, schema="nk int, np long, s long")
     return g.select(

@@ -1,12 +1,17 @@
 """Behavior tests for corpus-hygiene operators: the edge cases the
 parquet fixtures don't exercise (docs shorter than n tokens, zero
-vectors, empty eval sets, exact flag thresholds)."""
+vectors, empty eval sets, exact flag thresholds), and the dedup
+cascade report: its stage-carrying aggregate against the three-branch
+form it replaced, and its job count."""
 
 from __future__ import annotations
 
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from clean_census_acs_data_spark import session as S
 from clean_census_acs_data_spark.operators.corpus import (
     ngram_decontaminate,
     quantize_embeddings_int8,
@@ -202,3 +207,163 @@ def test_text_normalize_idempotent(spark):
     )
     again = once.select("doc_id", F.col("text"), norm2.alias("renorm"))
     assert again.where(F.col("text") != F.col("renorm")).count() == 0
+
+
+# ---------------------------------------------------------------------------
+# dedup_cascade_report
+# ---------------------------------------------------------------------------
+
+
+def three_branch_report(base, pairs):
+    """The form ``_cascade_report`` replaced, kept as the reference:
+    four 1-row count frames crossed, one union branch per stage. Its
+    stage caches and their eager fills are left out; they changed the
+    plan, not the rows."""
+    from clean_census_acs_data_spark.queries_dedup import _CASCADE_NORM
+
+    s1 = base.groupBy("text").agg(F.min("doc_id").alias("doc_id"))
+    s2 = s1.groupBy(F.expr(_CASCADE_NORM).alias("__norm")).agg(F.min("doc_id").alias("doc_id"))
+    surviving_pairs = pairs.join(s2.select(F.col("doc_id").alias("doc_a")), "doc_a", "left_semi")
+    s3 = s2.join(surviving_pairs.select(F.col("doc_b").alias("doc_id")), "doc_id", "left_anti")
+    counts = (
+        base.agg(F.count(F.lit(1)).alias("n0"))
+        .crossJoin(F.broadcast(s1.agg(F.count(F.lit(1)).alias("n1"))))
+        .crossJoin(F.broadcast(s2.agg(F.count(F.lit(1)).alias("n2"))))
+        .crossJoin(F.broadcast(s3.agg(F.count(F.lit(1)).alias("n3"))))
+    )
+
+    def stage(i, m, a, b):
+        return counts.select(
+            F.lit(i).cast("long").alias("stage"),
+            F.lit(m).alias("method"),
+            F.col(a).cast("long").alias("docs_in"),
+            (F.col(a) - F.col(b)).cast("long").alias("docs_removed"),
+            F.col(b).cast("long").alias("docs_out"),
+        )
+
+    return (
+        stage(1, "exact", "n0", "n1")
+        .unionAll(stage(2, "normalized", "n1", "n2"))
+        .unionAll(stage(3, "near_dup", "n2", "n3"))
+    )
+
+
+def _near_dup_pairs(docs, threshold=0.8):
+    """(doc_a, doc_b) with doc_a < doc_b whose word-3-shingle sets have
+    Jaccard ≥ ``threshold``: an exact stand-in for the LSH pair table."""
+    sh = {}
+    for doc_id, text in docs:
+        toks = (text or "").lower().split()
+        sh[doc_id] = {tuple(toks[i : i + 3]) for i in range(len(toks) - 2)}
+    ids = sorted(i for i in sh if sh[i])
+    return [
+        (a, b)
+        for n, a in enumerate(ids)
+        for b in ids[n + 1 :]
+        if len(sh[a] & sh[b]) >= threshold * len(sh[a] | sh[b])
+    ]
+
+
+WORDS = ["alpha", "beta", "gamma", "delta", "eps", "zeta", "eta", "theta", "iota", "kappa"]
+BASE = WORDS[:8]
+
+
+def _variant(kind, i):
+    """A text that stage 1 (exact), stage 2 (case and punctuation) or
+    stage 3 (one token dropped or swapped) collapses into BASE, or not."""
+    toks = list(BASE)
+    if kind == "case":
+        return " ".join(toks).upper()
+    if kind == "punct":
+        return ", ".join(toks) + "!"
+    if kind == "drop":
+        return " ".join(toks[1:])
+    if kind == "swap":
+        return " ".join(toks[:-1] + [WORDS[8 + i % 2]])
+    if kind == "other":
+        return " ".join(WORDS[(i + j * 3) % len(WORDS)] for j in range(8))
+    if kind == "null":
+        return None
+    return " ".join(toks)
+
+
+@st.composite
+def cascade_docs(draw):
+    kinds = draw(
+        st.lists(st.sampled_from(["same", "case", "punct", "drop", "swap", "other", "null"]), max_size=12)
+    )
+    ids = draw(st.lists(st.integers(0, 40), min_size=len(kinds), max_size=len(kinds), unique=True))
+    return [(d, _variant(k, d)) for d, k in zip(ids, kinds)]
+
+
+EMPTY = []
+ALL_IDENTICAL = [(i, " ".join(BASE)) for i in (4, 1, 7)]
+CASE_PUNCT = [(3, " ".join(BASE)), (1, _variant("case", 0)), (2, _variant("punct", 0)), (5, "ALPHA  beta")]
+NULL_TEXT = [(1, None), (2, None), (3, " ".join(BASE)), (4, _variant("drop", 0))]
+NO_PAIR = [(1, "alpha beta gamma delta"), (2, "beta gamma delta alpha"), (3, "one two")]
+
+
+@settings(max_examples=8, deadline=None)
+@given(docs=cascade_docs())
+@example(docs=EMPTY)
+@example(docs=ALL_IDENTICAL)
+@example(docs=CASE_PUNCT)
+@example(docs=NULL_TEXT)
+@example(docs=NO_PAIR)
+def test_cascade_report_equals_three_branch_form(spark, docs):
+    """The stage-carrying single aggregate gives the rows and dtypes of
+    the three-branch form on small corpora: empty, all identical, case
+    and punctuation variants, NULL text, and no pair at 0.8."""
+    from clean_census_acs_data_spark.queries_dedup import _cascade_report
+
+    pair_rows = _near_dup_pairs(docs)
+    base = spark.createDataFrame(docs, "doc_id long, text string")
+    pairs = spark.createDataFrame(pair_rows, "doc_a long, doc_b long")
+    try:
+        got = _cascade_report(base, pairs)
+        ref = three_branch_report(base, pairs)
+        assert got.dtypes == ref.dtypes
+        # exceptAll both ways, as one query: the per-job overhead, not
+        # the data, sets the time of these plans
+        assert got.exceptAll(ref).unionAll(ref.exceptAll(got)).count() == 0
+        rows = sorted(map(tuple, got.collect()))
+        if not docs:
+            assert rows == [(1, "exact", 0, 0, 0), (2, "normalized", 0, 0, 0), (3, "near_dup", 0, 0, 0)]
+        if not pair_rows:
+            assert rows[2][3] == 0
+    finally:
+        S.reap_tracked_caches()
+
+
+# jobs issued by one dedup_cascade_report build + collect from an empty
+# memo at sf0.001 (the shingle, signature and pair fills included), with
+# 8 shuffle partitions: 24 at local[4], local[8] and local[16], 23 at
+# local[2]
+CASCADE_JOBS = 24
+
+
+def test_cascade_report_issues_a_fixed_job_count(spark, sf_dir):
+    """Three consecutive dedup_cascade_report build + collect runs, each
+    from an empty memo, issue the same number of Spark jobs, and no more
+    than CASCADE_JOBS."""
+    from clean_census_acs_data_spark.queries_dedup import dedup_cascade_report
+
+    sc = spark.sparkContext
+    jobs = []
+    try:
+        for i in range(3):
+            S.teardown_shared_memos()
+            S.reap_tracked_caches()
+            group = f"cascade-jobs-{i}"
+            sc.setJobGroup(group, group)
+            try:
+                dedup_cascade_report(spark, sf_dir).collect()
+            finally:
+                for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+                    sc.setLocalProperty(prop, None)
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    finally:
+        S.teardown_shared_memos()
+        S.reap_tracked_caches()
+    assert len(set(jobs)) == 1, jobs
+    assert jobs[0] <= CASCADE_JOBS, jobs

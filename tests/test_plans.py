@@ -140,7 +140,6 @@ def test_no_degenerate_joins_anywhere(plans):
         "ndcg_eval_prefix_retrieval",  # broadcast 1-row dual query-vector frame
         "dsir_importance_select",  # broadcast 1-row LM totals scalars
         "doremi_domain_weights",  # broadcast 1-row LM totals scalars
-        "dedup_cascade_report",  # cross of four 1-row stage-count frames
         "hard_negative_mining",  # inherits knn_join_ivf's broadcast codebook cross
         "contrastive_triplets",  # inherits knn_join_ivf's broadcast codebook cross
         "knn_join_ivf_probe2",  # same broadcast codebook cross, nprobe=2

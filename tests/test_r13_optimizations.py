@@ -80,3 +80,37 @@ def test_hodges_groupedmap_skips_null_cents(spark, tmp_path):
     want = sorted(map(tuple, hl(spark, str(tmp_path / "without")).collect()))
     assert [r[0] for r in want] == [1, 2]
     assert got == want
+
+
+def test_hodges_walsh_triangle_equals_outer_sum():
+    """The Walsh-median kernel builds only the upper triangle of the
+    pair-sum matrix. It holds the same multiset as the full
+    np.add.outer + triu_indices form it replaced, and the kernel selects
+    the same pair count and lower median from it, on n = 1, all-equal
+    values, NULL cents, an all-NULL group and random groups."""
+    import numpy as np
+    import pandas as pd
+
+    from clean_census_acs_data_spark.queries_stats import _hl_group, _walsh_sums
+
+    def outer_form(a):
+        return np.add.outer(a, a)[np.triu_indices(len(a))]
+
+    rng = np.random.default_rng(13)
+    groups = [[5], [7] * 6, [3, None, -2, None, 3], [None, None], [-4, 9]]
+    groups += [rng.integers(-(10**6), 10**6, size=n).tolist() for n in (3, 17, 200, 301)]
+    for i, cents in enumerate(groups):
+        pdf = pd.DataFrame({"nk": [i] * len(cents), "cents": cents})
+        a = np.sort(pdf["cents"].dropna().to_numpy(np.int64))
+        want = outer_form(a)
+        assert np.array_equal(np.sort(_walsh_sums(a)), np.sort(want))
+        got = _hl_group(pdf)
+        if not len(a):
+            assert got.empty
+            continue
+        k = (len(want) + 1) // 2
+        assert got.to_dict("list") == {
+            "nk": [i],
+            "np": [len(want)],
+            "s": [int(np.partition(want, k - 1)[k - 1])],
+        }
