@@ -107,10 +107,6 @@ def compact_small_files(
     )
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every table as a temp view so spark.sql() can address them
     by name (mirrors the driver's DuckDB view registration)."""

@@ -99,13 +99,6 @@ def minhash_lsh_pairs(
     sh_tbl = _shingle_frame(
         docs, id_col=id_col, text_col=text_col, shingle_n=shingle_n
     ).transform(tracked_cache)
-    # materialize the cache NOW: four downstream subtrees (both sides
-    # of the band self-join, both verification probes) consume sh_tbl
-    # inside one job — with a lazy cache their stages run concurrently
-    # and each recomputes the shingle+md5 pass (~4× the dominant
-    # cost). At 100 TB this stage is persisted to storage, not
-    # executor memory.
-    sh_tbl.count()
     sig = _signature_frame(sh_tbl, num_hashes)
     return _lsh_pairs(sh_tbl, sig, num_hashes=num_hashes, bands=bands, threshold=threshold)
 
@@ -262,14 +255,12 @@ def ngram_jaccard_pairs(
     # → ~5 s at sf0.1). Postings are three small ints per row, far
     # smaller than the text they derive from; at 100 TB this is the
     # persisted posting table, same story as minhash_lsh_pairs' shingle
-    # cache. Eager count() for the same reason as there: lazy caches
-    # race when sibling subtrees evaluate inside one job.
+    # cache.
     g = d.select(
         "doc",
         "blk",
         F.explode(F.expr("transform(grams, x -> xxhash64(x))")).alias("gram"),
     ).transform(tracked_cache)
-    g.count()
     # per-doc gram counts FROM the cached postings (one row per distinct
     # gram per doc, so count ≡ size(grams)): the previous
     # d.select(size(grams)) subtree re-ran the whole tokenize +
@@ -406,9 +397,7 @@ def standard_shingle_table(spark, sf_dir: str) -> DataFrame:
     from clean_census_acs_data_spark.io import load_table
 
     docs = plant_near_dups(load_table(spark, sf_dir, "documents"))
-    tbl = _shingle_frame(docs).cache()
-    tbl.count()  # eager: fan-out consumers must not race the fill
-    return tbl
+    return _shingle_frame(docs).cache()
 
 
 @shared_memo
@@ -420,9 +409,7 @@ def standard_minhash_signatures(spark, sf_dir: str) -> DataFrame:
     signatures again after the pair table is already built. Tiny rows
     (one id + 8 longs), so the cache is a fraction of the shingle
     table's."""
-    sig = _signature_frame(standard_shingle_table(spark, sf_dir)).cache()
-    sig.count()
-    return sig
+    return _signature_frame(standard_shingle_table(spark, sf_dir)).cache()
 
 
 def standard_near_dup_pairs(

@@ -223,19 +223,6 @@ def winnow_fingerprint(toks: Column, n: int = 3, mod: int = 8) -> dict[str, Colu
     }
 
 
-def simhash16(toks: Column) -> Column:
-    """16-bit SimHash over the token multiset. For each bit j, sum ±1
-    contributions of every token's hash bit j; bit set iff sum > 0.
-    Pure integer arithmetic → portable. 16 bits keeps the oracle SQL
-    tractable; the Spark operator generalizes via the ``bits`` arg in
-    simhash_bits()."""
-    return simhash_bits(toks, 16)
-
-
-def simhash_bits(toks: Column, bits: int) -> Column:
-    return simhash_from_hashes(F.transform(toks, md5_long), bits)
-
-
 def simhash_from_hashes(hashes: Column, bits: int = 16) -> Column:
     """SimHash from a pre-computed token-hash array column. Project the
     hash array first (``withColumn("hs", transform(tokens, md5_long))``)

@@ -1444,7 +1444,6 @@ def ngram_novelty_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .transform(tracked_cache)
     )
-    grams.count()  # eager: sibling subtrees race a lazy cache fill
     firsts = grams.groupBy("g").agg(F.min("doc_id").alias("first_doc"))
     scored = (
         grams.join(firsts, "g")
@@ -1665,8 +1664,8 @@ def greedy_coverage_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle's GROUP BY over the filtered pair table (a fully-covered
     doc has no qualifying rows there). The argmax is a 1-row
     TakeOrderedAndProject kept AS a DataFrame and broadcast back
-    (never collected); tiny argmax/covered frames are cached eagerly
-    because TakeOrdered subtrees aren't exchange-reused.
+    (never collected); tiny argmax/covered frames are cached because
+    TakeOrdered subtrees aren't exchange-reused.
 
     100-TB shape: one corpus-sized pair shuffle TOTAL (the totals
     aggregate — partial map-side agg), then per round one broadcast
@@ -1697,8 +1696,7 @@ def greedy_coverage_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = F.split(F.lower(F.col("text")), " ")
     grams = d.select(
         "doc_id", F.explode(F.array_distinct(shingles(t, 2))).alias("gram")
-    ).transform(tracked_cache)
-    grams.count()  # eager: scanned by every greedy round
+    ).transform(tracked_cache)  # scanned by every greedy round
 
     # The ONE corpus-sized aggregation: per-doc distinct-gram totals.
     # Round 1's gains are exactly this frame; later rounds subtract
@@ -1707,9 +1705,8 @@ def greedy_coverage_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     totals = (
         grams.groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("total"))
-        .transform(tracked_cache)
+        .transform(tracked_cache)  # probed by every round's gains derivation
     )
-    totals.count()  # eager: probed by every round's gains derivation
 
     picked: DataFrame | None = None  # doc_id frame, grows by 1/round
     covered: DataFrame | None = None  # distinct grams of picked docs
@@ -1741,8 +1738,8 @@ def greedy_coverage_select(spark: SparkSession, sf_dir: str) -> DataFrame:
                 # so the oracle's GROUP BY emits no row for it
                 .where(F.col("marginal_gain") > 0)
             )
+        # referenced by 3 branches below
         pick = gains.orderBy(F.desc("marginal_gain"), "doc_id").limit(1).transform(tracked_cache)
-        pick.count()  # eager: referenced by 3 branches below
         pick_docs = pick.select("doc_id")
         picked = pick_docs if picked is None else picked.union(pick_docs)
         pick_grams = grams.join(F.broadcast(pick_docs), "doc_id").select("gram")

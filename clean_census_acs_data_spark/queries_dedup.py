@@ -803,7 +803,6 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .transform(tracked_cache)
     )
-    win.count()  # eager: sibling subtrees race a lazy cache fill
     rep = (
         win.select("doc_id", "wh")
         .distinct()
@@ -1596,8 +1595,9 @@ def lsh_parameter_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # used to build private plan-identical caches of the shingle and
     # signature tables — cheap-looking only while CacheManager
     # substituted an earlier entry's live copy; per-entry cache reaping
-    # exposed the recompute. The memos are already eagerly materialized,
-    # so the superset self-join below reads, never recomputes.
+    # exposed the recompute. The memos are filled once per session by
+    # their first consumer, so the superset self-join below reads,
+    # never recomputes.
     sh_tbl = D.standard_shingle_table(spark, sf_dir)
     sig = D.standard_minhash_signatures(spark, sf_dir)
     mh_arr = F.array(*[F.col(f"mh{i}") for i in range(8)])
@@ -2361,7 +2361,6 @@ def edjoin_edit_distance_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("bucket", F.expr(f"len DIV {d}"))
         .transform(tracked_cache)  # both block-join sides read it
     )
-    corpus.count()
     left = corpus.select(
         F.col("doc_id").alias("doc_a"),
         F.col("len").alias("la"),

@@ -313,12 +313,11 @@ def hll_partial_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit(_HLLPM_REM + 1))
         .alias("rho"),
     )
-    # THE partial state: |sources| × ≤64 rows. Cached + materialized —
-    # both the per-source estimates and the merged fold consume it, and
-    # uncached each branch would re-run the full corpus scan (the tiny
+    # THE partial state: |sources| × ≤64 rows. Cached — both the
+    # per-source estimates and the merged fold consume it, and uncached
+    # each branch would re-run the full corpus scan (the tiny
     # reused-subtree rule).
     reg = r.groupBy("source", "bucket").agg(F.max("rho").alias("m_j")).transform(tracked_cache)
-    reg.count()
     nr = d.groupBy("source").agg(F.count(F.lit(1)).cast("long").alias("n_rows"))
     p2 = lambda e: F.expr(  # noqa: E731 — exact 2^x as BIGINT
         f"shiftleft(CAST(1 AS BIGINT), CAST({e} AS INT))"
@@ -547,7 +546,6 @@ def quantile_log2_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("cnt"))
         .transform(tracked_cache)
     )
-    hist.count()  # eager: sibling subtrees race a lazy cache fill
     cum = hist.select(
         "bucket",
         F.sum("cnt").over(Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)).alias("cum_cnt"),

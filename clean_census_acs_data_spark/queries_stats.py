@@ -483,7 +483,6 @@ def mad_robust_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         "median_cents",
     ).transform(tracked_cache)
-    d.count()  # eager: sibling subtrees race a lazy cache fill
     w2 = Window.partitionBy("prio").orderBy("dev", "o_orderkey")
     r2 = d.select(
         "prio",

@@ -902,7 +902,6 @@ def lm_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "p.w1", "p.w2")
         .transform(tracked_cache)
     )
-    bg.count()  # eager: sibling subtrees race a lazy cache fill
     cb = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
     cu = (
         d.select(F.explode("t").alias("w"))
@@ -1465,7 +1464,6 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
             .limit(1)
             .transform(tracked_cache)  # feeds the rewrite AND the output row
         )
-        top.count()
         pat = F.concat(
             F.lit("(?<![^ ])\\Q"),
             F.col("l"),
@@ -1721,7 +1719,6 @@ def kn_bigram_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # follower aggregate and the predecessor aggregate — uncached, the
     # zip_with bigram explode + count shuffle ran three times
     cab = big.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c_ab")).transform(tracked_cache)
-    cab.count()  # eager: sibling subtrees race a lazy cache fill
     ca = cab.groupBy("w1").agg(
         F.sum("c_ab").alias("c_a"), F.count(F.lit(1)).alias("n_follow_a")
     )

@@ -1045,7 +1045,6 @@ def tpch_q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS")
         ).alias("is_late"),
     ).transform(tracked_cache)
-    lines.count()  # eager: sibling subtrees race a lazy cache fill
     l1 = lines.where(F.col("is_late"))
     l2 = lines.select(
         F.col("l_orderkey").alias("r_orderkey"), F.col("l_suppkey").alias("r_suppkey")

@@ -421,7 +421,6 @@ def embedding_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = e.select("vec_id", F.explode(F.array(*subs)).alias("bs")).select(
         "vec_id", F.col("bs.b").alias("b"), F.col("bs.sub").alias("sub")
     ).transform(tracked_cache)
-    ev.count()  # eager: sibling subtrees race a lazy cache fill
     cent = ev.where(F.col("vec_id") < _PQ_K).select(
         F.col("vec_id").alias("c"), "b", F.col("sub").alias("csub")
     )
@@ -436,7 +435,6 @@ def embedding_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     sc = ev.join(F.broadcast(cent), "b").select(
         "vec_id", "b", "c", dist.alias("d")
     ).transform(tracked_cache)
-    sc.count()
     md = sc.groupBy("vec_id", "b").agg(F.min("d").alias("md"))
     best = (
         sc.join(md, ["vec_id", "b"])
@@ -537,7 +535,6 @@ def kmeans_lloyd_int(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("v"),
         F.posexplode("q").alias("j0", "x"),
     ).select("v", (F.col("j0") + 1).alias("j"), "x").transform(tracked_cache)
-    d.count()  # eager: sibling subtrees race a lazy cache fill
     cent = d.where(F.col("v") < _KMEANS_K).select(
         F.col("v").alias("c"), "j", F.col("x").alias("cx")
     )
@@ -988,7 +985,6 @@ def _pq_encoded(emb: DataFrame):
     ev = e.select("vec_id", F.explode(F.array(*subs)).alias("bs")).select(
         "vec_id", F.col("bs.b").alias("b"), F.col("bs.sub").alias("sub")
     ).transform(tracked_cache)
-    ev.count()
     cent = ev.where(F.col("vec_id") < _PQ_K).select(
         F.col("vec_id").alias("c"), "b", F.col("sub").alias("csub")
     )
@@ -1000,7 +996,6 @@ def _pq_encoded(emb: DataFrame):
     scored = ev.join(F.broadcast(cent), "b").select(
         "vec_id", "b", "c", dist.alias("d")
     ).transform(tracked_cache)
-    scored.count()
     mind = scored.groupBy("vec_id", "b").agg(F.min("d").alias("md"))
     codes = (
         scored.join(mind, ["vec_id", "b"])
@@ -1177,7 +1172,6 @@ def _ivf_stages(
     sel = ranked.where(F.col("rn") <= probes).select(
         "vec_id", "__q", "__n2", "centroid_id", "rn"
     ).cache()
-    sel.count()  # eager: the two consumers race a lazy cache fill
     probe_rows = sel.select("vec_id", "__q", "__n2", "centroid_id")
     assigned = sel.where(F.col("rn") == 1).select(
         "vec_id", "__q", "__n2", "centroid_id"
@@ -1483,10 +1477,8 @@ def mmr_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the greedy tail references cand from ~6 plan branches (p1/s1/p2/
     # s2/p3 × the 3-way union) and TakeOrderedAndProject subtrees are
     # not exchange-reused — uncached, the CORPUS scan reruns per
-    # branch. 8 rows; eager count so sibling branches can't race a
-    # lazy cache inside one job (the lsh_parameter_sweep discipline).
+    # branch. 8 rows.
     cand = cand.transform(tracked_cache)
-    cand.count()
     p1 = cand.orderBy(F.desc("rel"), F.asc("vec_id")).limit(1)
     s1 = (
         cand.crossJoin(
@@ -1750,10 +1742,9 @@ def contrastive_triplets(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     # the pos and neg branches both consume the full kNN subtree; the
-    # output is ≤ 3n tiny rows — cache + eager count so the bounded-
-    # list pair join runs once, not twice
+    # output is ≤ 3n tiny rows — cached so the bounded-list pair join
+    # runs once, not twice
     knn = knn_join_ivf(spark, sf_dir).transform(tracked_cache)
-    knn.count()
     w = Window.partitionBy("vec_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     pos = (
         knn.where(F.col("cosine") > float(_HARDNEG_DUP_T))

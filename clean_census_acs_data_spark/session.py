@@ -305,6 +305,13 @@ def register_python_datasource(spark: SparkSession, ds_cls) -> None:
 # and land in a registry; harnesses that run many entries in sequence
 # (bench.py) call reap_tracked_caches() after each entry's terminal
 # action. Session-SHARED results go through shared_memo() instead.
+#
+# One fill rule for both: a cache is filled by the first query that
+# reads it, never by a discarded-result action of its own. When several
+# subtrees of that query read the cache, each cached partition is still
+# computed once: the block manager writes it under a lock that the other
+# readers wait on (tests/test_cache_lifecycle.py pins this). An eager
+# ``count()`` would only add one more job with its fixed cost.
 
 _TRACKED_CACHES: list = []
 
@@ -312,9 +319,9 @@ _TRACKED_CACHES: list = []
 def tracked_cache(df):
     """``df.cache()`` + register the handle for end-of-entry reaping.
 
-    Returns the cached DataFrame. Materialization stays the caller's
-    choice (most sites follow with an eager ``count()`` so concurrent
-    consumers don't race a lazy fill)."""
+    Returns the cached DataFrame, still unfilled: the first query that
+    reads it fills it, and every other consumer in that query and after
+    reads the blocks (the fill rule in the comment block above)."""
     df = df.cache()
     _TRACKED_CACHES.append(df)
     return df

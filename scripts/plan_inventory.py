@@ -45,6 +45,29 @@ def count_nodes(plan: str, node: str) -> int:
     return len(re.findall(rf"\(\d+\) {re.escape(node)}\b", plan))
 
 
+def plan_row(spark, name: str) -> dict[str, int] | None:
+    """Operator counts of entry ``name``'s physical plan, or None for a
+    streaming entry. Shared memos and tracked caches are dropped first,
+    so the row does not depend on which entries were planned before."""
+    from clean_census_acs_data_spark.queries import QUERIES
+    from clean_census_acs_data_spark.session import reap_tracked_caches, teardown_shared_memos
+
+    if name.startswith("streaming"):
+        return None
+    teardown_shared_memos()
+    reap_tracked_caches()
+    df = QUERIES[name](spark, SF)
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    buf = io.StringIO()
+    try:
+        with redirect_stdout(buf):
+            df.explain(mode="formatted")
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+    p = buf.getvalue()
+    return {k: count_nodes(p, v) for k, v in NODES.items()}
+
+
 def main() -> None:
     from clean_census_acs_data_spark.queries import QUERIES
     from clean_census_acs_data_spark.session import get_spark
@@ -52,25 +75,15 @@ def main() -> None:
     spark = get_spark(app_name="plan-inventory", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
 
-    rows = []
-    for name in sorted(QUERIES):
-        if name.startswith("streaming"):
-            rows.append((name, None))
-            continue
-        df = QUERIES[name](spark, SF)
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain(mode="formatted")
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-        p = buf.getvalue()
-        rows.append((name, {k: count_nodes(p, v) for k, v in NODES.items()}))
+    rows = [(name, plan_row(spark, name)) for name in sorted(QUERIES)]
 
     out = [
         "# PLANS — physical-plan fingerprints (machine-generated)",
         "",
         "Generated by `scripts/plan_inventory.py` at sf0.001 with AQE",
-        "disabled for deterministic node counts. Columns: data shuffles",
+        "disabled for deterministic node counts, each entry from an empty",
+        "session (shared memos and tracked caches dropped, its own caches",
+        "not yet filled). Columns: data shuffles",
         "(Exch), broadcast-hash joins (BHJ), sort-merge joins (SMJ),",
         "broadcast-nested-loop joins (BNLJ — legitimate only for the",
         "documented 1-row/tiny-frame crosses), cartesian products (0",

@@ -69,6 +69,45 @@ def test_entry_with_tracked_cache_still_correct(spark):
     assert a == b and len(a) > 0
 
 
+def _consumers(c, n: int):
+    """One query that reads all of the cached frame ``c`` from ``n``
+    subtrees that share no exchange: one aggregate, a join of the frame
+    to its own per-key aggregate, or four different aggregates under a
+    union. Uncached, each subtree evaluates the input again."""
+    if n == 2:
+        return c.join(c.groupBy("k").agg(F.max("v").alias("m")), "k")
+    aggs = [F.sum("v"), F.max("v"), F.min("v"), F.count("v")][:n]
+    out = c.agg(aggs[0].alias("s"))
+    for a in aggs[1:]:
+        out = out.unionAll(c.agg(a.alias("s")))
+    return out
+
+
+@pytest.mark.parametrize("n", [1, 2, 4])
+def test_lazy_cache_fills_once_for_sibling_consumers(spark, n):
+    """The engine property session.py's fill rule rests on: a lazily
+    filled tracked_cache frame read by several subtrees of ONE query
+    evaluates its input exactly once per row, so sibling consumers do
+    not race its fill into recomputing it. A Python UDF feeding an
+    accumulator counts the evaluations of the cached input."""
+    n_rows = 20_000
+    acc = spark.sparkContext.accumulator(0)
+
+    def tick(x):
+        acc.add(1)
+        return x
+
+    probe = F.udf(tick, "long")
+    c = S.tracked_cache(
+        spark.range(n_rows, numPartitions=4).select(F.col("id").alias("k"), probe("id").alias("v"))
+    )
+    try:
+        _consumers(c, n).collect()
+        assert acc.value == n_rows
+    finally:
+        S.reap_tracked_caches()
+
+
 def test_median_ratio_vs_prev_gauge():
     import importlib.util
     import os

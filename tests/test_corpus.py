@@ -336,10 +336,10 @@ def test_cascade_report_equals_three_branch_form(spark, docs):
 
 
 # jobs issued by one dedup_cascade_report build + collect from an empty
-# memo at sf0.001 (the shingle, signature and pair fills included), with
-# 8 shuffle partitions: 24 at local[4], local[8] and local[16], 23 at
-# local[2]
-CASCADE_JOBS = 24
+# memo at sf0.001 (the shingle, signature and pair fills included, all
+# inside the collect), with 8 shuffle partitions: 21 at local[2],
+# local[4], local[8] and local[32]
+CASCADE_JOBS = 21
 
 
 def test_cascade_report_issues_a_fixed_job_count(spark, sf_dir):

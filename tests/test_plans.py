@@ -664,3 +664,28 @@ def test_clustering_coeff_no_cartesian(plans):
     p = plans["graph_clustering_coeff"]
     assert "CartesianProduct" not in p
     assert "Generate" in p
+
+
+def test_plan_inventory_row_ignores_session_history(spark):
+    """A PLANS.md row is a property of its entry alone: the row of
+    dedup_cascade_report is the same whether it is planned first or
+    right after dedup_components, whose build fills the shared dedup
+    memos that the cascade's plan reads."""
+    import importlib.util
+    import os
+
+    from clean_census_acs_data_spark import session as S
+
+    spec = importlib.util.spec_from_file_location(
+        "plan_inventory_mod",
+        os.path.join(os.path.dirname(__file__), "..", "scripts", "plan_inventory.py"),
+    )
+    inv = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(inv)
+    try:
+        first = inv.plan_row(spark, "dedup_cascade_report")
+        inv.plan_row(spark, "dedup_components")
+        assert inv.plan_row(spark, "dedup_cascade_report") == first
+    finally:
+        S.teardown_shared_memos()
+        S.reap_tracked_caches()

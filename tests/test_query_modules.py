@@ -1,5 +1,6 @@
 """The query layer's import graph: every query module imports first in a
-fresh interpreter, and the registry imports no entry module."""
+fresh interpreter, and the registry imports no entry module. And the fill
+rule: no package statement drops a ``count()`` result."""
 
 from __future__ import annotations
 
@@ -60,4 +61,28 @@ def test_no_def_imports_its_own_module():
                     isinstance(node, ast.Import) and any(a.name == own for a in node.names)
                 ):
                     found.append(f"{module}.{fn.name}:{node.lineno}")
+    assert not found, found
+
+
+def test_no_discarded_count_fills():
+    """No package statement is a bare ``x.count()`` whose result is
+    dropped: a cache is filled by the first query that reads it (the
+    fill rule in session.py), so a discarded count is only one more
+    job. A count whose result is used is data and stays."""
+    import ast
+
+    found = []
+    for path in sorted(glob.glob(os.path.join(REPO, PKG, "**", "*.py"), recursive=True)):
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        for node in ast.walk(tree):
+            call = node.value if isinstance(node, ast.Expr) else None
+            if (
+                isinstance(call, ast.Call)
+                and isinstance(call.func, ast.Attribute)
+                and call.func.attr == "count"
+                and not call.args
+                and not call.keywords
+            ):
+                found.append(f"{os.path.relpath(path, REPO)}:{node.lineno}")
     assert not found, found

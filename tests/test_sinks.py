@@ -11,8 +11,8 @@ from clean_census_acs_data_spark import transforms as T
 
 def test_csv_roundtrip_empty_as_null(spark, tmp_path):
     """CSV loses the empty-string/NULL distinction; the engine's read
-    path (nullValue='' + blank_to_null cleanup) reproduces Redshift
-    COPY EMPTYASNULL BLANKSASNULL."""
+    path (nullValue='' + a nullif(trim(v), '') cleanup) reproduces
+    Redshift COPY EMPTYASNULL BLANKSASNULL."""
     df = spark.createDataFrame(
         [("1", "a"), ("2", ""), ("3", "  "), ("4", None)], ["id", "v"]
     )
